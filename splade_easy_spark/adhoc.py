@@ -20,6 +20,7 @@ from splade_easy_spark.config import BM25Params, AnalyzerConfig, IndexConfig
 from splade_easy_spark.functions.bm25 import bm25_weight_expr, idf_expr
 from splade_easy_spark.functions.text import tokenize
 from splade_easy_spark.query.searcher import analyze_query
+from splade_easy_spark.session import local_frame
 
 
 def doc_term_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -92,8 +93,8 @@ def bm25_topk(
     """
     terms = analyze_query(query_text, IndexConfig(bm25=params or BM25Params()))
     if not terms:
-        return spark.createDataFrame([], "id STRING, score DOUBLE")
-    qdf = spark.createDataFrame(terms, "term STRING, qweight DOUBLE")
+        return local_frame(spark, [], "id STRING, score DOUBLE")
+    qdf = local_frame(spark, terms, "term STRING, qweight DOUBLE")
     w = bm25_weights(docs, id_col, text_col, params)
     scored = w.join(F.broadcast(qdf), "term").groupBy("id").agg(
         F.sum(F.col("weight") * F.col("qweight")).alias("score")
@@ -138,8 +139,8 @@ def bm25_topk_multi(
         for term, qw in analyze_query(q["text"])
     ]
     if not rows:
-        return spark.createDataFrame([], "query_id STRING, rank INT, id STRING, score DOUBLE")
-    qdf = spark.createDataFrame(rows, "query_id STRING, term STRING, qweight DOUBLE")
+        return local_frame(spark, [], "query_id STRING, rank INT, id STRING, score DOUBLE")
+    qdf = local_frame(spark, rows, "query_id STRING, term STRING, qweight DOUBLE")
     w = bm25_weights(docs, id_col, text_col)
     scored = (
         w.join(F.broadcast(qdf), "term")
@@ -174,8 +175,8 @@ def facet_counts(
     and the facet agg is a tiny post-join hash agg (|facets| ≪ |docs|)."""
     terms = analyze_query(query_text, IndexConfig(bm25=params or BM25Params()))
     if not terms:
-        return spark.createDataFrame([], "facet STRING, n_docs BIGINT")
-    qdf = spark.createDataFrame(terms, "term STRING, qweight DOUBLE")
+        return local_frame(spark, [], "facet STRING, n_docs BIGINT")
+    qdf = local_frame(spark, terms, "term STRING, qweight DOUBLE")
     w = bm25_weights(docs, id_col, text_col, params)
     matched = (
         w.join(F.broadcast(qdf), "term")
@@ -257,9 +258,9 @@ def phrase_search(
     )
     ordered = _phrase_tokens(phrase, cfg)
     if not ordered:
-        return spark.createDataFrame([], "id STRING, score DOUBLE")
+        return local_frame(spark, [], "id STRING, score DOUBLE")
     distinct = sorted(set(ordered))
-    qdf = spark.createDataFrame([(t,) for t in distinct], "term STRING")
+    qdf = local_frame(spark, [(t,) for t in distinct], "term STRING")
     w = bm25_weights(docs, id_col, text_col, params, analyzer)
     cand = (
         w.join(F.broadcast(qdf), "term")
@@ -440,9 +441,9 @@ def boolean_search(
     n = sorted({t for t, _ in analyze_query(" ".join(must_not or []), cfg)})
     scored_terms = m + s_extra
     if not scored_terms:
-        return spark.createDataFrame([], "id STRING, score DOUBLE")
+        return local_frame(spark, [], "id STRING, score DOUBLE")
     w = bm25_weights(docs, id_col, text_col, params)
-    qdf = spark.createDataFrame([(t,) for t in scored_terms], "term STRING")
+    qdf = local_frame(spark, [(t,) for t in scored_terms], "term STRING")
     scored = (
         w.join(F.broadcast(qdf), "term")
         .groupBy("id")
@@ -456,7 +457,7 @@ def boolean_search(
         .select("id", "score")
     )
     if n:
-        ndf = spark.createDataFrame([(t,) for t in n], "term STRING")
+        ndf = local_frame(spark, [(t,) for t in n], "term STRING")
         excluded = (
             w.join(F.broadcast(ndf), "term").select("id").distinct()
         )
@@ -561,7 +562,7 @@ def near_search(
     )
     hits = pa.join(pb, "id").where(gap).select("id").distinct()
     w = bm25_weights(docs, id_col, text_col, params, analyzer)
-    qdf = spark.createDataFrame([(t,) for t in sorted({ta, tb})], "term STRING")
+    qdf = local_frame(spark, [(t,) for t in sorted({ta, tb})], "term STRING")
     return (
         w.join(F.broadcast(qdf), "term")
         .join(hits, "id", "left_semi")

@@ -10,7 +10,7 @@ under-split inputs is to repartition immediately after the read
 (optimization guide §2.5 "input skew").
 
 ``ensure_min_parallelism`` does that ADAPTIVELY: it inspects the frame's
-actual scan partitioning (plan-side, no job) and round-robins up to the
+planned scan partitioning and round-robins up to the
 session's default parallelism only when the scan is narrower — at real
 scale a table yields far more splits than cores and this is a no-op, so no
 shuffle is ever added to a properly-split input.  Use it on inputs whose
@@ -26,8 +26,10 @@ from pyspark.sql import DataFrame
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin ``df`` up to ``min_parts`` (default: the session's
     ``defaultParallelism``) when its current partitioning is narrower;
-    returns ``df`` unchanged otherwise.  The partition count comes from the
-    physical plan (no Spark job)."""
+    returns ``df`` unchanged otherwise.  The partition count comes from
+    ``df.rdd``, so every call plans the frame in full and builds its RDD
+    on the driver: no Spark job on a plain scan, but planning work that a
+    hot path pays on each call."""
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

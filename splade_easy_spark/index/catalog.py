@@ -28,6 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.index.manifest import Manifest
@@ -91,15 +92,23 @@ class IndexCatalog:
     def table_dir(self, name: str) -> str:
         return str(self.index_dir / name)
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.table_dir(name))
+    def read(
+        self, spark: SparkSession, name: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """Table ``name``.  Without ``schema`` Spark infers it from a parquet
+        footer, which costs a Spark job; with it the read only lists the
+        table's files, afresh on every call."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.table_dir(name))
+
+    def has_deleted(self) -> bool:
+        """Whether any delete has ever happened (a driver listing)."""
+        p = Path(self.table_dir("deleted"))
+        return p.exists() and any(p.rglob("*.parquet"))
 
     def read_deleted(self, spark: SparkSession) -> DataFrame | None:
         """Tombstones, or None when no delete has ever happened."""
-        p = Path(self.table_dir("deleted"))
-        if not any(p.rglob("*.parquet")) if p.exists() else True:
-            return None
-        return spark.read.parquet(str(p))
+        return self.read(spark, "deleted") if self.has_deleted() else None
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
         w = df.write.mode(mode)

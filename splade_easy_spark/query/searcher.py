@@ -21,6 +21,17 @@ table join for metadata/text happens *after* the limit, on k rows only.
 Tie-break is pinned to (score DESC, doc_id ASC) — the reference leaves tie
 order arbitrary (``src/splade_easy/retriever.py:122,202``), so the parity
 harness compares tie groups as sets (SURVEY.md §7).
+
+Per-call job shape (a warm searcher, no tombstones): the query table is
+a ``LocalRelation`` built through Arrow (``session.local_frame``), so its
+broadcast is a small JVM-only job with no Python worker; the tables read
+on every call (``postings``, ``term_stats``, ``deleted``) are read with
+the schema pinned at open, so no footer-inference job runs, while their
+files are still listed afresh on each call (see ``_postings``); and the
+docs join ends in sort+limit, a TakeOrderedAndProject over at most k
+rows rather than a sampled range sort.  ``search`` is then four jobs on
+the SQL path (query broadcast, scoring map stage, top-k, docs join) and
+three on the WAND path (postings exchange, kernel top-k, docs join).
 """
 
 from __future__ import annotations
@@ -28,12 +39,20 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from splade_easy_spark.config import IndexConfig
-from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr
+from splade_easy_spark.index.catalog import IndexCatalog
+from splade_easy_spark.session import local_frame
+
+#: columns of a ``search_many`` result
+_MANY_SCHEMA = (
+    "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT"
+)
 
 
 def analyze_query(
@@ -93,7 +112,10 @@ class Searcher:
         # no-op in the common case) before opening any table
         from splade_easy_spark.index.maintenance import heal_interrupted_swaps
 
-        heal_interrupted_swaps(index_dir)
+        #: partition dirs this open restored or removed (usually empty)
+        self.healed: list[str] = heal_interrupted_swaps(index_dir)
+        #: per-call tables' schemas, pinned at their first read (see _read)
+        self._schemas: dict[str, StructType] = {}
         # SNAPSHOT BOUND: this searcher serves the index as of open.
         # doc_ints are assigned densely from the manifest's next_doc_int
         # watermark, so every doc_int ≥ the watermark at open belongs to a
@@ -135,6 +157,9 @@ class Searcher:
                 "term_id_seed", self.config.term_id_seed
             )
         )
+        for name in ("postings", "term_stats"):
+            if Path(self.cat.table_dir(name)).exists():
+                self._read(name)
         self.mode = mode
         #: driver-side {term: global doc-weight upper bound}; "unset" until
         #: the first batch search materializes it (see ``_term_bounds``)
@@ -146,14 +171,24 @@ class Searcher:
             self.docs.count()
 
     # ------------------------------------------------------------------
-    def _query_df(self, terms: list[tuple[str, float]]) -> DataFrame:
-        return self.spark.createDataFrame(terms, "term STRING, qweight DOUBLE")
+    def _read(self, name: str) -> DataFrame:
+        """A table read on every call, with its schema pinned.
+
+        The first read infers the schema (a Spark job over a parquet
+        footer): at open for ``postings`` and ``term_stats``, at the first
+        delete for ``deleted``.  Later reads pass the pinned schema, so
+        they start no job but still list the table's files afresh."""
+        if name not in self._schemas:
+            df = self.cat.read(self.spark, name)
+            self._schemas[name] = df.schema
+            return df
+        return self.cat.read(self.spark, name, self._schemas[name])
 
     def _deleted(self) -> DataFrame | None:
-        return self.cat.read_deleted(self.spark)
+        return self._read("deleted") if self.cat.has_deleted() else None
 
     def _postings(self) -> DataFrame:
-        post = self.cat.read(self.spark, "postings")
+        post = self._read("postings")
         if self._snapshot_max is not None:
             # the snapshot bound at block grain, ROW-EXACT overall: drop
             # blocks whose every doc is post-watermark (`doc_min >= W` —
@@ -210,7 +245,7 @@ class Searcher:
         if self.cat.table_rows("term_stats") > self.TERM_BOUNDS_MAX_VOCAB:
             self._tb_cache = None
             return None
-        ts = self.cat.read(self.spark, "term_stats")
+        ts = self._read("term_stats")
         p = self.config.bm25
         loose = F.lit(p.k1 + 1.0)  # tf→∞ limit: always an upper bound
         if "max_tf" in ts.columns:
@@ -248,12 +283,11 @@ class Searcher:
 
     def _scores(self, terms: list[tuple[str, float]], use_cosine: bool) -> DataFrame:
         """(doc_int, score) for all docs sharing ≥1 query term."""
-        qdf = self._query_df(terms)
+        qdf = local_frame(self.spark, terms, "term STRING, qweight DOUBLE")
         dt = self._pruned_doc_terms([t for t, _ in terms])
         joined = dt.join(F.broadcast(qdf), "term")
         if use_cosine:
-            qnorm_row = qdf.agg(F.sqrt(F.sum(F.col("qweight") ** 2)).alias("n")).collect()[0]
-            qnorm = float(qnorm_row["n"] or 0.0)
+            qnorm = sum(qw * qw for _, qw in terms) ** 0.5
             scores = joined.groupBy("doc_int").agg(
                 (F.sum(F.col("weight") * F.col("qweight"))).alias("dot"),
                 F.first("norm").alias("norm"),
@@ -272,7 +306,15 @@ class Searcher:
             )
         return scores.where(F.col("score") > 0)  # cf. retriever.py:186
 
-    def _attach_docs(self, topk: DataFrame, return_text: bool) -> DataFrame:
+    def _top_hits(
+        self, scores: DataFrame, top_k: int, return_text: bool = False
+    ) -> DataFrame:
+        """The ``top_k`` best (doc_int, score) rows with their docs columns.
+
+        Both ends are sort+limit, so both plan as TakeOrderedAndProject:
+        the cut before the docs join, and the final (score DESC, doc_id
+        ASC) order over at most k joined rows.  A bare ``orderBy`` there
+        would plan a range-partition sampling job plus a shuffle."""
         # transcript-mode docs carry (conv_id..ts); vector-mode docs carry
         # (metadata) — project whatever exists (reference SearchResult shape:
         # doc_id, score, metadata, text?, retriever.py:20-25)
@@ -282,11 +324,18 @@ class Searcher:
         ]
         if return_text and "text" in available:
             cols.append("text")
+        topk = scores.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
         return (
             topk.join(self.docs, "doc_int")
             .select(*cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(top_k)
         )
+
+    def _no_hits(self, return_text: bool = False) -> DataFrame:
+        """An empty result with the search result columns."""
+        empty = local_frame(self.spark, [], "doc_int LONG, score DOUBLE")
+        return self._top_hits(empty, 0, return_text)
 
     # ------------------------------------------------------------------
     def search(
@@ -324,9 +373,7 @@ class Searcher:
         """
         terms = analyze_query(query, self.config) if isinstance(query, str) else query
         if not terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), return_text
-            )
+            return self._no_hits(return_text)
         deleted = self._deleted()
         if method == "wand":
             from splade_easy_spark.query.wand import wand_search_scores
@@ -356,10 +403,7 @@ class Searcher:
                 # queries: one short IN-list isn't worth a vocab collect.
                 scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
             if not scan_terms:
-                return self._attach_docs(
-                    self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"),
-                    return_text,
-                )
+                return self._no_hits(return_text)
             # tombstones stay distributed: packed rows ride the postings'
             # seg exchange into the kernel (never a driver collect), which
             # masks them BEFORE the pruning threshold is computed
@@ -395,8 +439,7 @@ class Searcher:
                 scores = scores.join(
                     self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
                 )
-        topk = scores.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
-        return self._attach_docs(topk, return_text)
+        return self._top_hits(scores, top_k, return_text)
 
     def search_many(
         self,
@@ -447,9 +490,7 @@ class Searcher:
             for term, qw in analyze_query(q["text"], self.config):
                 rows.append((q["query_id"], term, qw))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT"
-            )
+            return local_frame(self.spark, [], _MANY_SCHEMA)
         deleted0 = self._deleted()
         if method in ("wand", "wand_nox"):
             from splade_easy_spark.query.wand import (
@@ -501,10 +542,7 @@ class Searcher:
                         pruned_qt[qid] = kept
                 qt = pruned_qt
             if not qt:
-                return self.spark.createDataFrame(
-                    [],
-                    "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT",
-                )
+                return local_frame(self.spark, [], _MANY_SCHEMA)
             seg_docs = int(
                 self.cat.manifest.data.get("layout", {}).get(
                     "segment_docs", self.config.segment_docs
@@ -540,7 +578,7 @@ class Searcher:
                     (qid, sum(qw * qw for _, qw in ts) ** 0.5)
                     for qid, ts in qt_full.items()
                 ]
-                qn = self.spark.createDataFrame(qnorms, "query_id STRING, _qn DOUBLE")
+                qn = local_frame(self.spark, qnorms, "query_id STRING, _qn DOUBLE")
                 cand = (
                     cand.join(F.broadcast(qn), "query_id")
                     .where(F.col("_qn") > 0)
@@ -562,7 +600,7 @@ class Searcher:
                 .orderBy("query_id", "rank")
             )
 
-        qdf = self.spark.createDataFrame(rows, "query_id STRING, term STRING, qweight DOUBLE")
+        qdf = local_frame(self.spark, rows, "query_id STRING, term STRING, qweight DOUBLE")
         dt = self._pruned_doc_terms(sorted({r[1] for r in rows}))
         joined = dt.join(F.broadcast(qdf), "term")
         if use_cosine:
@@ -657,9 +695,7 @@ class Searcher:
             )
         ordered = _phrase_tokens(phrase, self.config)
         if not ordered:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         distinct = sorted(set(ordered))
         dt = self._pruned_doc_terms(distinct)
         cand = (
@@ -691,8 +727,7 @@ class Searcher:
             .where(F.instr(hay, needle) > 0)
             .select("doc_int", "score")
         )
-        topk = verified.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
-        return self._attach_docs(topk, False)
+        return self._top_hits(verified, top_k)
 
     def boolean_search(
         self,
@@ -705,10 +740,11 @@ class Searcher:
         """Lucene BooleanQuery over the index: a hit contains EVERY
         ``must`` term, gains score from ``should`` terms, and is excluded
         by ANY ``must_not`` term.  Score = Σ weight over the doc's
-        (must ∪ should) terms.  One bucket-pruned doc_terms scan serves
-        all three clauses (the conjunction rides the scoring agg as a
-        count-distinct; the exclusion is an anti-join on the must_not
-        postings) — same semantics as ``adhoc.boolean_search``."""
+        (must ∪ should) terms.  One bucket-pruned doc_terms scan and one
+        aggregate serve all three clauses (the conjunction is a
+        count-distinct over must terms, the exclusion a count of must_not
+        rows that has to be 0) — same semantics as
+        ``adhoc.boolean_search``."""
         cfg = self.config
         m = sorted({t for t, _ in analyze_query(" ".join(must or []), cfg)})
         s_extra = sorted(
@@ -717,29 +753,25 @@ class Searcher:
         n = sorted({t for t, _ in analyze_query(" ".join(must_not or []), cfg)})
         scored_terms = m + s_extra
         if not scored_terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         all_terms = sorted(set(scored_terms) | set(n))
         dt = self._pruned_doc_terms(all_terms)
         scored = (
-            dt.where(F.col("term").isin(scored_terms))
-            .groupBy("doc_int")
+            dt.groupBy("doc_int")
             .agg(
-                F.sum("weight").alias("score"),
+                F.sum(
+                    F.when(F.col("term").isin(scored_terms), F.col("weight"))
+                ).alias("score"),
                 F.count_distinct(
                     F.when(F.col("term").isin(m), F.col("term"))
                 ).alias("_nm"),
+                F.count(F.when(F.col("term").isin(n), 1)).alias("_nn"),
             )
-            .where((F.col("_nm") == len(m)) & (F.col("score") > 0))
+            .where(
+                (F.col("_nm") == len(m)) & (F.col("score") > 0) & (F.col("_nn") == 0)
+            )
             .select("doc_int", "score")
         )
-        if n:
-            scored = scored.join(
-                dt.where(F.col("term").isin(n)).select("doc_int").distinct(),
-                "doc_int",
-                "left_anti",
-            )
         deleted = self._deleted()
         if deleted is not None:
             scored = scored.join(
@@ -749,8 +781,7 @@ class Searcher:
             scored = scored.join(
                 self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
             )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
-        return self._attach_docs(topk, False)
+        return self._top_hits(scored, top_k)
 
     def fuzzy_search(
         self,
@@ -775,9 +806,7 @@ class Searcher:
         # against a case-preserving analyzer would inflate every distance
         terms = self._fuzzy_expansions(query_term, max_dist, max_expansions)
         if not terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             terms, top_k=top_k, use_cosine=use_cosine, method=method,
             doc_filter=doc_filter,
@@ -795,7 +824,7 @@ class Searcher:
         q = query_term.lower() if self.config.analyzer.lowercase else query_term
         lq = len(q)
         exp = (
-            self.cat.read(self.spark, "term_stats")
+            self._read("term_stats")
             .where(F.length("term").between(lq - max_dist, lq + max_dist))
             .withColumn("dist", F.levenshtein(F.col("term"), F.lit(q)))
             .where(F.col("dist") <= max_dist)
@@ -817,9 +846,10 @@ class Searcher:
         filters, fuzzy~N, prefix*).  Composition of the engine's
         primitives in ONE plan: one bucket-pruned doc_terms scan scores
         every clause's terms (must-conjunction as a count-distinct inside
-        the scoring agg, exclusions as an anti-join), field filters land
-        on the pushed docs scan with full-corpus idf, and phrase
-        constraints verify token sequences on candidate rows only."""
+        the scoring agg, exclusions as a must_not row count of 0 in the
+        same agg), field filters land on the pushed docs scan with
+        full-corpus idf, and phrase constraints verify token sequences on
+        candidate rows only."""
         from splade_easy_spark.adhoc import _phrase_tokens
         from splade_easy_spark.functions.text import tokenize
         from splade_easy_spark.query.parser import parse_query
@@ -855,32 +885,28 @@ class Searcher:
             cond = F.col(name) == rhs
             flt = cond if flt is None else (flt & cond)
         if not weights:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         dt = self._pruned_doc_terms(sorted(set(weights) | set(must_not)))
-        qdf = self.spark.createDataFrame(
-            sorted(weights.items()), "term STRING, qweight DOUBLE"
-        )
+        qdf = local_frame(self.spark, sorted(weights.items()), "term STRING, qweight DOUBLE")
+        # left join: must_not rows keep a null qweight, so they add nothing
+        # to the score but still count toward the exclusion
         scored = (
-            dt.where(F.col("term").isin(list(weights)))
-            .join(F.broadcast(qdf), "term")
+            dt.join(F.broadcast(qdf), "term", "left")
             .groupBy("doc_int")
             .agg(
                 F.sum(F.col("weight") * F.col("qweight")).alias("score"),
                 F.count_distinct(
                     F.when(F.col("term").isin(must_set), F.col("term"))
                 ).alias("_nm"),
+                F.count(F.when(F.col("term").isin(must_not), 1)).alias("_nn"),
             )
-            .where((F.col("_nm") == len(must_set)) & (F.col("score") > 0))
+            .where(
+                (F.col("_nm") == len(must_set))
+                & (F.col("score") > 0)
+                & (F.col("_nn") == 0)
+            )
             .select("doc_int", "score")
         )
-        if must_not:
-            scored = scored.join(
-                dt.where(F.col("term").isin(must_not)).select("doc_int").distinct(),
-                "doc_int",
-                "left_anti",
-            )
         deleted = self._deleted()
         if deleted is not None:
             scored = scored.join(
@@ -905,8 +931,7 @@ class Searcher:
                 .where(cond)
                 .select("doc_int", "score")
             )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
-        return self._attach_docs(topk, False)
+        return self._top_hits(scored, top_k)
 
     def suggest_terms(self, prefix: str, n: int = 10) -> DataFrame:
         """(term, df) — autocomplete off the index's term dictionary:
@@ -914,7 +939,7 @@ class Searcher:
         term_stats scan, ranked df desc / term asc via
         TakeOrderedAndProject (no dictionary collect)."""
         return (
-            self.cat.read(self.spark, "term_stats")
+            self._read("term_stats")
             .where(F.col("term").startswith(prefix))
             .select("term", "df")
             .orderBy(F.desc("df"), F.asc("term"))
@@ -939,9 +964,7 @@ class Searcher:
         prefix-pruned term_stats scan."""
         exp = [r["term"] for r in self.suggest_terms(prefix, max_expansions).collect()]
         if not exp:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
             method=method, doc_filter=doc_filter,
@@ -1015,8 +1038,7 @@ class Searcher:
         )
         near_ids = pa.join(pb, "doc_int").where(gap).select("doc_int").distinct()
         verified = cand.join(near_ids, "doc_int", "left_semi")
-        topk = verified.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
-        return self._attach_docs(topk, False)
+        return self._top_hits(verified, top_k)
 
     def regex_search(
         self,
@@ -1035,7 +1057,7 @@ class Searcher:
         Lucene makes when a pattern's automaton has no literal prefix."""
         exp = [
             r["term"]
-            for r in self.cat.read(self.spark, "term_stats")
+            for r in self._read("term_stats")
             .where(F.col("term").rlike(f"^(?:{pattern})$"))
             .orderBy(F.desc("df"), F.asc("term"))
             .limit(max_expansions)
@@ -1043,9 +1065,7 @@ class Searcher:
             .collect()
         ]
         if not exp:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
             method=method, doc_filter=doc_filter,
@@ -1065,7 +1085,7 @@ class Searcher:
         one doc-grain join — the same work as a search without the top-k."""
         terms = analyze_query(query, self.config) if isinstance(query, str) else query
         if not terms:
-            return self.spark.createDataFrame([], "facet STRING, n_docs BIGINT")
+            return local_frame(self.spark, [], "facet STRING, n_docs BIGINT")
         scores = self._scores(terms, use_cosine=False)
         deleted = self._deleted()
         if deleted is not None:
@@ -1073,11 +1093,14 @@ class Searcher:
                 F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
             )
         d = self.docs.where(doc_filter) if doc_filter is not None else self.docs
+        # the counts are one row per facet value: sort them in one task
+        # (a global orderBy would add a range-sampling job and a shuffle)
         return (
             scores.join(d.select("doc_int", F.col(facet_col).alias("facet")), "doc_int")
             .groupBy("facet")
             .agg(F.count("*").alias("n_docs"))
-            .orderBy(F.desc("n_docs"), F.asc("facet"))
+            .coalesce(1)
+            .sortWithinPartitions(F.desc("n_docs"), F.asc("facet"))
         )
 
     def more_like_this(
@@ -1129,7 +1152,7 @@ class Searcher:
             .groupBy("term")
             .agg(F.count("*").cast("int").alias("tf"), F.first("doc_len").alias("_dl"))
         )
-        ts = self.cat.read(self.spark, "term_stats").select("term", "idf")
+        ts = self._read("term_stats").select("term", "idf")
         picked = (
             ts.join(F.broadcast(tfdf), "term")
             .select(
@@ -1150,9 +1173,7 @@ class Searcher:
             # disambiguate on the rare path only
             if src.count() == 0:
                 raise KeyError(f"doc_id not in index: {doc_id!r}")
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         # overfetch by one: the source doc itself is typically the top hit
         out = self.search(
             terms, top_k=top_k + 1, use_cosine=use_cosine, method=method,
@@ -1225,6 +1246,7 @@ class Searcher:
             )
             .select(*keep, "pos", "snippet")
             .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(top_k)
         )
 
     def get(self, doc_id: str, load_text: bool = True) -> dict | None:

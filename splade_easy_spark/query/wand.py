@@ -69,6 +69,7 @@ from splade_easy_spark.index.catalog import (
     term_id_py,
 )
 from splade_easy_spark.index.postings import unpack_block, varbyte_encode
+from splade_easy_spark.session import local_frame
 
 #: schema of the pruned frame entering the kernels (and of the packed
 #: tombstone rows unioned into it).  The term key is the 60-bit content
@@ -335,8 +336,17 @@ def _score_segment(
                 blocks_decoded += 1
                 idx = d - seg_base
                 acc[idx] += qw * w
-            # retire this term's per-candidate bound, tighten θ, re-filter
-            rem_ub = rem_ub - covering_ub(bmin, bmax, bubs, candidates)
+            # retire this term's per-candidate bound, tighten θ, re-filter.
+            # Repeated subtraction leaves a float residue that can be
+            # slightly negative, and `cs + rem_ub >= θ` would then drop the
+            # candidate whose score IS θ: clamp at 0, and exactly 0 once no
+            # term remains
+            if i + 1 < len(terms):
+                rem_ub = np.maximum(
+                    rem_ub - covering_ub(bmin, bmax, bubs, candidates), 0.0
+                )
+            else:
+                rem_ub = np.zeros(len(candidates), dtype=np.float64)
             cs = acc[candidates]
             if len(cs) >= top_k:
                 kth = np.partition(cs, len(cs) - top_k)[len(cs) - top_k]
@@ -916,9 +926,7 @@ def wand_search_many_scores_nox(
             F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
         )
     scores = scores.select("q", "doc_int", "score")
-    qmap = spark.createDataFrame(
-        list(enumerate(qids)), "q INT, query_id STRING"
-    )
+    qmap = local_frame(spark, list(enumerate(qids)), "q INT, query_id STRING")
 
     # partial per-partition top-k before the caller's global window — the
     # summed frame still holds EVERY matched doc per query (no per-segment

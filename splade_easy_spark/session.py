@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -51,3 +51,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-built table (query terms, query ids) as a ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` parallelizes the rows as a pickled
+    Python RDD, so broadcasting even a three-row query table starts Python
+    workers.  An Arrow table crosses to the JVM once and plans as a
+    ``LocalTableScan``: no Python worker, and its broadcast is a small
+    JVM-only job (empty ``rows`` included: an empty relation folds away).
+    ``schema`` is a DDL string such as ``"term STRING, qweight DOUBLE"``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

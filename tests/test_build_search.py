@@ -655,3 +655,57 @@ def test_regex_search_matches_bruteforce(corpus, spark):
     assert_topk_matches(got, scored[:30], 10, tol=1e-6)
     # no-match pattern returns empty, not an error
     assert s.regex_search("zz[0-9]{9}", top_k=5).count() == 0
+
+
+def test_query_tables_are_local_relations(corpus, spark):
+    """Driver-built query tables reach the plan as a LocalRelation, never a
+    LogicalRDD: a parallelized Python list costs a Spark job with Python
+    workers each time it is broadcast."""
+    from splade_easy_spark import adhoc
+
+    idx_dir, _, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    qs = generate_query_set()[:3]
+    many = [{"query_id": f"q{i}", "text": q["text"]} for i, q in enumerate(qs)]
+    text = qs[0]["text"]
+    frames = {
+        "search": s.search(text, top_k=5),
+        "search cosine": s.search(text, top_k=5, use_cosine=True),
+        "search empty": s.search("", top_k=5),
+        "search_many sql": s.search_many(many, top_k=5, method="sql"),
+        "search_many sql cosine": s.search_many(many, top_k=5, method="sql", use_cosine=True),
+        "query": s.query(text, top_k=5),
+        "facet_counts": s.facet_counts(text, "role"),
+        "adhoc.bm25_topk_multi": adhoc.bm25_topk_multi(
+            spark, s.docs.select("doc_id", "text"), many, top_k=5
+        ),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, f"{name}:\n{plan}"
+
+
+#: Spark jobs one warm call may start on an index without tombstones.
+#: search(sql): query-table broadcast, scoring map stage, top-k, docs
+#: join; search(wand): postings exchange, kernel top-k, docs join;
+#: suggest_terms: one TakeOrderedAndProject over the term_stats scan.
+JOB_BUDGET = {"search_sql": 4, "search_wand": 3, "suggest_terms": 1}
+
+
+def test_warm_call_job_budget(corpus, spark, spark_jobs):
+    """Per-call job counts on a warm searcher: no schema-inference job on
+    the per-call reads, no job for the query table, and the docs join
+    ends in a TakeOrderedAndProject rather than a sampled sort."""
+    idx_dir, _, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    text = generate_query_set()[0]["text"]
+    calls = {
+        "search_sql": lambda: s.search(text, top_k=10).collect(),
+        "search_wand": lambda: s.search(text, top_k=10, method="wand").collect(),
+        "suggest_terms": lambda: s.suggest_terms(text[:2], 5).collect(),
+    }
+    for name, call in calls.items():
+        call()  # warm: Python workers up, code paths loaded
+        n, rows = spark_jobs(call)
+        assert rows, name
+        assert n <= JOB_BUDGET[name], f"{name} started {n} jobs"

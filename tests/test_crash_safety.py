@@ -178,6 +178,7 @@ def test_optimize_swap_crash_is_healed(spark, tmp_path):
     # until healed; Searcher heals on open
     s = Searcher(spark, idx, cfg)
     assert seg0.exists(), "searcher open did not heal the interrupted swap"
+    assert s.healed == [str(seg0.with_name(seg0.name + "__old"))]
     assert _snapshot(spark, idx) == before
 
     # staging is still around; the next maintenance run GCs it safely

@@ -197,6 +197,24 @@ def test_kernel_keeps_kth_ties():
     assert [round(float(x), 6) for x in s] == [2.0, 1.0, 1.0, 1.0]
 
 
+def test_kernel_keeps_theta_doc_after_last_term():
+    """The candidate whose score IS θ must survive the last term.
+
+    Term a alone sets θ above the four light terms' bound sum, so the
+    kernel freezes doc 0 as the only candidate and then retires the light
+    terms' bounds one by one.  Subtracting 0.3, 0.2, 0.2, 0.2 from their
+    float sum leaves a negative residue, which used to make
+    ``score + remaining bound < θ`` and return no hit at all."""
+    g = _mk_rows(
+        {"a": [(0, 1.0)], "b": [(0, 0.3)], "c": [(0, 0.2)], "d": [(0, 0.2)], "e": [(0, 0.2)]}
+    )
+    qw = {t: 1.0 for t in "abcde"}
+    d, s, _, _ = _score_segment(g, qw, 0, 4, 1, None)
+    assert list(d) == [0]
+    expect = 1.0 + float(np.float32(0.3)) + 3 * float(np.float32(0.2))
+    assert abs(float(s[0]) - expect) < 1e-9
+
+
 def test_wand_profile_blocks_skipped(corpus, spark):
     """The instrumented kernel must report real pruning on a skewed corpus
     and stay exact (wand_profile shares _score_segment with the live path)."""
