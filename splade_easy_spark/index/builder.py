@@ -16,7 +16,7 @@ acknowledged bottleneck) with three bulk Spark jobs:
   stage postings: tf rows ⨝ term_stats (broadcast when small) → BM25
                   weights → hot-term-salted repartition for the tb-bucketed
                   doc_terms write (norm denormalized in) + seg repartition
-                  into the streaming mapInPandas block packer → postings
+                  into the streaming mapInArrow block packer → postings
 
 Shuffle budget at scale: one doc-id shuffle, one term-stats agg, one
 term-keyed exchange for posting grouping (salted for hot terms), one

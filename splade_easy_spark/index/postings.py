@@ -7,7 +7,7 @@ FlatBuffers shards and scans *all* of them per query
 scale path: for each term, doc ids (dense ints, ascending) are delta-encoded
 and varbyte-compressed into blocks of ``block_size`` postings, each block
 carrying ``max_weight`` — the block-max WAND pruning bound.  All kernels are
-vectorized NumPy, invoked from ``applyInPandas`` groups during the build and
+vectorized NumPy, invoked from ``mapInArrow`` batches during the build and
 ``mapInPandas`` during queries — Arrow-batched, never per-row Python.
 
 Varbyte: little-endian base-128; 7 payload bits per byte, high bit = more.
@@ -119,9 +119,25 @@ def pack_postings(
     return blocks
 
 
+def unpack_blocks(docs_bufs, wts_bufs, ns) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``pack_postings`` for a run of blocks → (doc_ints int64,
+    weights float64), concatenated in block order.
+
+    Varbyte is self-delimiting, so the joined doc buffers decode in ONE
+    ``varbyte_decode`` call; each block's first value is absolute, so the
+    delta cumsum restarts there: subtract, per block, the running sum just
+    before its first value.  The cumsum runs in uint64, whose wraparound is
+    exact modular arithmetic, so large absolute ids cannot overflow it."""
+    ns = np.asarray(ns, dtype=np.int64)
+    deltas = varbyte_decode(b"".join(docs_bufs), int(ns.sum()))
+    csum = np.cumsum(deltas, dtype=np.uint64)
+    if len(ns) > 1:
+        before = np.concatenate((np.zeros(1, np.uint64), csum))[np.cumsum(ns) - ns]
+        csum -= np.repeat(before, ns)
+    weights = np.frombuffer(b"".join(wts_bufs), dtype=np.float32).astype(np.float64)
+    return csum.astype(np.int64), weights
+
+
 def unpack_block(docs_buf: bytes, wts_buf: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of ``pack_postings`` for one block → (doc_ints int64, weights float64)."""
-    deltas = varbyte_decode(docs_buf, n)
-    doc_ints = np.cumsum(deltas.astype(np.int64))
-    weights = np.frombuffer(wts_buf, dtype=np.float32).astype(np.float64)
-    return doc_ints, weights
+    """Inverse of ``pack_postings`` for one block (``unpack_blocks`` of one)."""
+    return unpack_blocks((docs_buf,), (wts_buf,), (n,))

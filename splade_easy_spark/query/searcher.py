@@ -337,6 +337,32 @@ class Searcher:
         empty = local_frame(self.spark, [], "doc_int LONG, score DOUBLE")
         return self._top_hits(empty, 0, return_text)
 
+    def _ranked_many(self, scores: DataFrame, top_k: int) -> DataFrame:
+        """The batch tail shared by every ``search_many`` path: the
+        ``top_k`` best (query_id, doc_int, score) rows per query, ranked
+        (score DESC, doc_int ASC), joined to their docs columns and sorted
+        by (query_id, rank).
+
+        A row_number filter of ``rank <= top_k`` lets Spark's
+        ``InferWindowGroupLimit`` plan a partial ``WindowGroupLimit`` below
+        the query_id exchange, so at most (partitions × k) rows per query
+        are shuffled (the rule applies while ``top_k`` ≤
+        ``spark.sql.optimizer.windowGroupLimitThreshold``, default 1000).
+        The final sort runs in one task over at most Q·k rows: a global
+        ``orderBy`` would plan a range-partition sampling job for them."""
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
+        topk = scores.withColumn("rank", F.row_number().over(w)).where(
+            F.col("rank") <= top_k
+        )
+        return (
+            topk.join(self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int")
+            .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
+            .repartition(1)
+            .sortWithinPartitions("query_id", "rank")
+        )
+
     # ------------------------------------------------------------------
     def search(
         self,
@@ -586,19 +612,7 @@ class Searcher:
                         "query_id", "doc_int", (F.col("score") / F.col("_qn")).alias("score")
                     )
                 )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
-            topk = cand.withColumn("rank", F.row_number().over(w)).where(
-                F.col("rank") <= top_k
-            )
-            return (
-                topk.join(
-                    self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int"
-                )
-                .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
-                .orderBy("query_id", "rank")
-            )
+            return self._ranked_many(cand, top_k)
 
         qdf = local_frame(self.spark, rows, "query_id STRING, term STRING, qweight DOUBLE")
         dt = self._pruned_doc_terms(sorted({r[1] for r in rows}))
@@ -632,43 +646,12 @@ class Searcher:
                 F.broadcast(deleted0.select("doc_int")), "doc_int", "left_anti"
             )
         if doc_filter is not None:
-            # BEFORE the partial top-k: heads taken over ineligible docs
-            # would evict eligible ones (the mask must precede any cut)
+            # before the window's per-query cut: a cut taken over ineligible
+            # docs would evict eligible ones (the mask must precede any cut)
             scores = scores.join(
                 self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
             )
-
-        # Partial per-partition top-k before the global window — the batch
-        # analog of TakeOrderedAndProject: the final sort then sees at most
-        # (partitions × k) rows per query instead of every scored doc (a hot
-        # query term scores a large fraction of the corpus).
-        import pandas as pd
-
-        def partial_topk(batches):
-            parts = []
-            for pdf in batches:
-                if len(pdf):
-                    parts.append(pdf)
-            if not parts:
-                return
-            allp = pd.concat(parts, ignore_index=True)
-            allp = allp.sort_values(
-                ["query_id", "score", "doc_int"], ascending=[True, False, True]
-            )
-            yield allp.groupby("query_id", sort=False).head(top_k)
-
-        scores = scores.mapInPandas(
-            partial_topk, schema="query_id STRING, doc_int LONG, score DOUBLE"
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
-        topk = scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= top_k)
-        return (
-            topk.join(self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int")
-            .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
-            .orderBy("query_id", "rank")
-        )
+        return self._ranked_many(scores, top_k)
 
     # ------------------------------------------------------------------
     def phrase_search(

@@ -68,7 +68,11 @@ from splade_easy_spark.index.catalog import (
     term_id_expr,
     term_id_py,
 )
-from splade_easy_spark.index.postings import unpack_block, varbyte_encode
+from splade_easy_spark.index.postings import (
+    unpack_block,
+    unpack_blocks,
+    varbyte_encode,
+)
 from splade_easy_spark.session import local_frame
 
 #: schema of the pruned frame entering the kernels (and of the packed
@@ -176,10 +180,55 @@ def _dead_local(tomb: pd.DataFrame | None, seg: int, seg_base: int) -> np.ndarra
     tg = tomb[tomb["seg"] == seg]
     if not len(tg):
         return None
-    parts = [
-        unpack_block(b, b"", int(n))[0] for b, n in zip(tg["docs"], tg["n"])
-    ]
-    return np.unique(np.concatenate(parts)) - seg_base
+    return np.unique(unpack_blocks(tg["docs"], (), tg["n"])[0]) - seg_base
+
+
+class _TermIndex:
+    """One segment's posting blocks as numpy columns, shared by both
+    kernels: the frame's columns are pulled out once and lexsorted by
+    ``(term_id, doc_min)``, so term ``i``'s blocks are the run
+    ``starts[i]:ends[i]`` between two ``term_id`` changes, doc_min
+    ascending.  Block ranges within a term never overlap (pack_postings
+    emits consecutive sorted runs; appended runs start past the previous
+    max doc_int), so searchsorted over a run's ``bmin``/``bmax`` is sound.
+
+    The sort matters: rows arrive through a ``repartition(seg)`` shuffle
+    and, on appended indexes, from several parquet files read in an order
+    Spark picks by size, so raw partition order is NOT ascending.
+
+    ``terms`` are the run keys in key order (the kernels' deterministic
+    tiebreak); ``tmax`` is each term's max block weight (one
+    ``np.maximum.reduceat``); ``bmin``/``bmax`` are segment-local."""
+
+    def __init__(self, g: pd.DataFrame, base: int, wcol: str, mcol: str):
+        term = g["term_id"].to_numpy()
+        dmin = g["doc_min"].to_numpy(dtype=np.int64)
+        order = np.lexsort((dmin, term))
+        term = term[order]
+        change = np.concatenate(([len(term) > 0], term[1:] != term[:-1]))
+        self.starts = np.flatnonzero(change)
+        self.ends = np.append(self.starts[1:], len(term))
+        self.terms = term[self.starts].tolist()
+        self.bmin = dmin[order] - base
+        self.bmax = g["doc_max"].to_numpy(dtype=np.int64)[order] - base
+        self.bmw = g[mcol].to_numpy(dtype=np.float64)[order]
+        self.tmax = np.maximum.reduceat(self.bmw, self.starts)
+        self.docs = g["docs"].to_numpy()[order]
+        self.wts = g[wcol].to_numpy()[order]
+        self.ns = g["n"].to_numpy(dtype=np.int64)[order]
+        self.base = base
+
+    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """Term ``i``'s whole posting list (local idx ascending, weights)
+        in one vectorized decode."""
+        s, e = self.starts[i], self.ends[i]
+        d, w = unpack_blocks(self.docs[s:e], self.wts[s:e], self.ns[s:e])
+        return d - self.base, w
+
+    def decode_block(self, j: int) -> tuple[np.ndarray, np.ndarray]:
+        """Block row ``j`` alone (local idx, weights)."""
+        d, w = unpack_block(self.docs[j], self.wts[j], int(self.ns[j]))
+        return d - self.base, w
 
 
 def _alive_mask(
@@ -256,20 +305,18 @@ def _score_segment(
     # allowed docs), so the exactness invariant below is unchanged
     alive = _alive_mask(seg_docs, dead_local, wm_local, allow_local, allow_active)
 
-    # per term: blocks sorted by doc_min (non-overlapping ascending ranges —
-    # pack_postings emits consecutive sorted runs; appended runs start past
-    # the previous max doc_int)
+    ti = _TermIndex(g, seg_base, wcol, mcol)
+    qws = np.array([qw_map[t] for t in ti.terms], dtype=np.float64)
+    # per-block score bounds qw·max_weight, one multiply for the segment
+    bubs_all = ti.bmw * np.repeat(qws, ti.ends - ti.starts)
     terms = []
-    blocks_total = 0
-    for term, tg in g.groupby("term_id", sort=False):
-        qw = qw_map[term]
-        tg = tg.sort_values("doc_min", kind="stable")
-        bmin = tg["doc_min"].to_numpy(dtype=np.int64) - seg_base
-        bmax = tg["doc_max"].to_numpy(dtype=np.int64) - seg_base
-        bubs = qw * tg[mcol].to_numpy(dtype=np.float64)
-        bufs = list(zip(tg["docs"], tg[wcol], tg["n"].astype(int)))
-        terms.append((float(bubs.max()), term, qw, bmin, bmax, bubs, bufs))
-        blocks_total += len(bufs)
+    for i, term in enumerate(ti.terms):
+        s, e = ti.starts[i], ti.ends[i]
+        terms.append(
+            (float(qws[i] * ti.tmax[i]), term, float(qws[i]),
+             ti.bmin[s:e], ti.bmax[s:e], bubs_all[s:e], int(s))
+        )
+    blocks_total = len(ti.ns)
     # descending upper bound; term as tiebreak for determinism
     terms.sort(key=lambda t: (-t[0], t[1]))
     ubs = np.array([t[0] for t in terms], dtype=np.float64)
@@ -291,17 +338,16 @@ def _score_segment(
         out[cov] = bubs_t[pos[cov]]
         return out
 
-    for i, (ub, term, qw, bmin, bmax, bubs, bufs) in enumerate(terms):
+    for i, (ub, term, qw, bmin, bmax, bubs, row0) in enumerate(terms):
         remaining_after = float(suffix[i + 1])
         if candidates is None:
-            for j, (dbuf, wbuf, n) in enumerate(bufs):
+            for j in range(len(bmin)):
                 if theta_set:
                     lo, hi = int(bmin[j]), int(bmax[j]) + 1
                     if acc[lo:hi].max() + bubs[j] + remaining_after < theta:
                         continue  # block-max skip (phase-1)
-                d, w = unpack_block(dbuf, wbuf, int(n))
+                idx, w = ti.decode_block(row0 + j)
                 blocks_decoded += 1
-                idx = d - seg_base
                 acc[idx] += qw * w
                 if alive is None:
                     touched[idx] = True
@@ -331,10 +377,8 @@ def _score_segment(
             needed = has_c.copy()
             needed[has_c] = candidates[pos_lo[has_c]] <= bmax[has_c]
             for j in np.flatnonzero(needed):
-                dbuf, wbuf, n = bufs[j]
-                d, w = unpack_block(dbuf, wbuf, int(n))
+                idx, w = ti.decode_block(row0 + int(j))
                 blocks_decoded += 1
-                idx = d - seg_base
                 acc[idx] += qw * w
             # retire this term's per-candidate bound, tighten θ, re-filter.
             # Repeated subtraction leaves a float residue that can be
@@ -571,65 +615,40 @@ def _batch_segment(
 
     Returns (query_ids, doc_ints, scores, blocks_total, blocks_decoded).
 
-    Decode policy is **once per term, whole list** (round-4 measurement):
-    round 3 decoded blocks lazily through a per-block cache with block-max
-    probes, betting that a batch would leave many blocks packed.  Measured
-    across the regimes that matter — 5k and 50k vocabularies, 2–7-term and
-    SPLADE-like 24-term queries, 100–500-query batches — the batch decode
-    ratio never left 0.97–1.00: rare terms carry the HIGHEST idf, so every
-    query scatters its rare (thin) terms first and cuts its common (fat)
-    ones, and across even a modest batch some query always ends up needing
-    each matched term.  The per-block probes were pure overhead at batch
-    scale (a 500-query run was ~40% slower before the round-3 fast path
-    papered over them), so the cache is gone: a term's posting list is
-    decoded in full the first time ANY query scatters it or repairs
-    through it, then every later use is one vectorized scatter/gather.
+    Decode policy is **one vectorized call per term, on first use**: a
+    term's blocks are decoded together (``unpack_blocks``: one varbyte
+    decode over the joined buffers, one segmented cumsum) the first time
+    ANY query scatters it or repairs through it, then every later use is
+    one vectorized scatter/gather.  Block-level laziness does not pay at
+    batch scale: rare terms carry the highest idf, so every query scatters
+    its rare (thin) terms first and cuts its common (fat) ones, and across
+    even a modest batch some query ends up needing each matched term.
 
     What still stays packed: terms MaxScore-cut by every query that
     carries them whose block ranges (checked against candidate doc ids
     with metadata only — searchsorted over bmin/bmax, no decode) never
-    cover a surviving candidate.  Single queries keep real block-level
-    skipping in ``_score_segment`` (skip ratio ~0.6 on the bench corpus);
-    that is the right tool for k≈1–5 queries, this kernel is the right
-    tool for batches.
+    cover a surviving candidate.  Single queries keep block-level skipping
+    in ``_score_segment``; that is the right tool for k≈1–5 queries, this
+    kernel is the right tool for batches.
 
-    Each term's block rows are sorted by ``doc_min`` before use — rows
-    arrive through a ``repartition(seg)`` shuffle and, on appended indexes,
-    from multiple parquet files whose read order Spark picks by size, so
-    raw partition order is NOT ascending (the round-2 batch kernel assumed
-    it was, corrupting the searchsorted repair on appended indexes).
+    Block rows may arrive in any order; ``_TermIndex`` sorts them.
     """
     alive = _alive_mask(segment_docs, dead, wm_local, allow, allow_active)
 
-    # per-term: block ranges (doc_min ascending, non-overlapping — see
-    # _score_segment), packed buffers, decode slot, score upper bound
-    meta: dict[int, list] = {}
-    blocks_total = 0
-    for term, tg in g.groupby("term_id", sort=False):
-        tg = tg.sort_values("doc_min", kind="stable")
-        bmin = tg["doc_min"].to_numpy(dtype=np.int64) - base
-        bmax = tg["doc_max"].to_numpy(dtype=np.int64) - base
-        bufs = list(zip(tg["docs"], tg[wcol], tg["n"].astype(int)))
-        # slots: 0=bmin 1=bmax 2=bufs 3=decoded (idx, wts) 4=max weight
-        meta[term] = [bmin, bmax, bufs, None, float(tg[mcol].max())]
-        blocks_total += len(bufs)
-
+    ti = _TermIndex(g, base, wcol, mcol)
+    slot = {t: i for i, t in enumerate(ti.terms)}
+    tmax = ti.tmax.tolist()
+    blocks_total = len(ti.ns)
+    decoded: list[tuple[np.ndarray, np.ndarray] | None] = [None] * len(tmax)
     n_decoded = 0
 
-    def full(tm: list) -> tuple[np.ndarray, np.ndarray]:
-        """The term's whole posting list (idx ascending), decoded once."""
+    def full(i: int) -> tuple[np.ndarray, np.ndarray]:
+        """Term ``i``'s whole posting list (idx ascending), decoded once."""
         nonlocal n_decoded
-        if tm[3] is None:
-            parts = [unpack_block(d, w, int(n)) for d, w, n in tm[2]]
-            if len(parts) == 1:
-                tm[3] = (parts[0][0] - base, parts[0][1])
-            else:
-                tm[3] = (
-                    np.concatenate([p[0] for p in parts]) - base,
-                    np.concatenate([p[1] for p in parts]),
-                )
-            n_decoded += len(tm[2])
-        return tm[3]
+        if decoded[i] is None:
+            decoded[i] = ti.decode(i)
+            n_decoded += int(ti.ends[i] - ti.starts[i])
+        return decoded[i]
 
     acc = np.zeros(segment_docs, dtype=np.float64)
     out_q: list[str] = []
@@ -641,13 +660,14 @@ def _batch_segment(
         # the final kth score, STOP scattering — docs not yet touched
         # cannot enter the top-k, and the skipped terms' contributions to
         # surviving candidates are repaired exactly afterwards.
-        present = [
-            (qw * meta[t][4], t, qw)
-            for t, qw in qterms
-            if t in meta and meta[t][4] > 0.0
-        ]
+        present = []
+        for t, qw in qterms:
+            i = slot.get(t)
+            if i is not None and tmax[i] > 0.0:
+                present.append((qw * tmax[i], i, qw))
         if not present:
             continue
+        # slot order is term order: the same deterministic tiebreak
         present.sort(key=lambda x: (-x[0], x[1]))
         ubs = np.array([p[0] for p in present])
         suffix = np.concatenate((np.cumsum(ubs[::-1])[::-1], [0.0]))
@@ -655,11 +675,11 @@ def _batch_segment(
         theta = 0.0
         theta_set = False
         cut = len(present)
-        for i, (_ub, term, qw) in enumerate(present):
+        for i, (_ub, j, qw) in enumerate(present):
             if theta_set and suffix[i] < theta:
                 cut = i  # remaining terms cannot create new top-k docs
                 break
-            sidx, swts = full(meta[term])
+            sidx, swts = full(j)
             acc[sidx] += qw * swts
             # cheap θ lower bound: kth largest of the LIVE accs on the
             # postings scattered so far (a subset's kth is ≤ the global
@@ -684,16 +704,16 @@ def _batch_segment(
             # contains a surviving candidate is never decoded at all.
             rem = float(suffix[cut])
             live = live[acc[live] + rem >= theta]
-            for _, term, qw in present[cut:]:
-                tm = meta[term]
-                if tm[3] is None:
-                    bmin, bmax = tm[0], tm[1]
+            for _, j, qw in present[cut:]:
+                if decoded[j] is None:
+                    s, e = ti.starts[j], ti.ends[j]
+                    bmin, bmax = ti.bmin[s:e], ti.bmax[s:e]
                     pos = np.searchsorted(bmin, live, side="right") - 1
                     cov = pos >= 0
                     cov[cov] = live[cov] <= bmax[pos[cov]]
                     if not cov.any():
                         continue  # no candidate in any block range: skip
-                fidx, fwts = full(tm)
+                fidx, fwts = full(j)
                 p = np.searchsorted(fidx, live)
                 ok = p < len(fidx)
                 ok[ok] = fidx[p[ok]] == live[ok]
@@ -870,21 +890,9 @@ def wand_search_many_scores_nox(
             # decode each term's blocks present in THIS task once, then
             # scatter per carrying query into a dense per-segment acc
             decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-            for term, tg in g.groupby("term_id", sort=False):
-                parts = [
-                    unpack_block(d, w, int(n))
-                    for d, w, n in zip(tg["docs"], tg[wcol], tg["n"])
-                ]
-                idx = (
-                    np.concatenate([p[0] for p in parts])
-                    if len(parts) > 1
-                    else parts[0][0]
-                ) - base
-                wts = (
-                    np.concatenate([p[1] for p in parts])
-                    if len(parts) > 1
-                    else parts[0][1]
-                )
+            ti = _TermIndex(g, base, wcol, mcol)
+            for i, term in enumerate(ti.terms):
+                idx, wts = ti.decode(i)
                 if wm is not None and wm < segment_docs:
                     keep = idx < max(wm, 0)
                     idx, wts = idx[keep], wts[keep]

@@ -683,13 +683,22 @@ def test_query_tables_are_local_relations(corpus, spark):
     for name, df in frames.items():
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "LogicalRDD" not in plan, f"{name}:\n{plan}"
+    # the SQL batch path's per-query cut is Spark's own WindowGroupLimit,
+    # not a Python hop over every scored row
+    plan = frames["search_many sql"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "WindowGroupLimit" in plan and "MapInPandas" not in plan, plan
 
 
 #: Spark jobs one warm call may start on an index without tombstones.
 #: search(sql): query-table broadcast, scoring map stage, top-k, docs
 #: join; search(wand): postings exchange, kernel top-k, docs join;
-#: suggest_terms: one TakeOrderedAndProject over the term_stats scan.
-JOB_BUDGET = {"search_sql": 4, "search_wand": 3, "suggest_terms": 1}
+#: suggest_terms: one TakeOrderedAndProject over the term_stats scan;
+#: search_many: the same scoring jobs, then the per-query window, the docs
+#: join and a one-task final sort (no range-sampling job).
+JOB_BUDGET = {
+    "search_sql": 4, "search_wand": 3, "suggest_terms": 1,
+    "search_many_sql": 6, "search_many_wand": 5,
+}
 
 
 def test_warm_call_job_budget(corpus, spark, spark_jobs):
@@ -698,11 +707,15 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
     ends in a TakeOrderedAndProject rather than a sampled sort."""
     idx_dir, _, _ = corpus
     s = Searcher(spark, idx_dir, CFG)
-    text = generate_query_set()[0]["text"]
+    qs = generate_query_set()[:4]
+    text = qs[0]["text"]
+    many = [{"query_id": f"q{i}", "text": q["text"]} for i, q in enumerate(qs)]
     calls = {
         "search_sql": lambda: s.search(text, top_k=10).collect(),
         "search_wand": lambda: s.search(text, top_k=10, method="wand").collect(),
         "suggest_terms": lambda: s.suggest_terms(text[:2], 5).collect(),
+        "search_many_sql": lambda: s.search_many(many, top_k=10, method="sql").collect(),
+        "search_many_wand": lambda: s.search_many(many, top_k=10, method="wand").collect(),
     }
     for name, call in calls.items():
         call()  # warm: Python workers up, code paths loaded

@@ -7,8 +7,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from splade_easy_spark.index.postings import (
+    BLOCK_SIZE_DEFAULT,
     pack_postings,
     unpack_block,
+    unpack_blocks,
     varbyte_decode,
     varbyte_encode,
 )
@@ -77,3 +79,57 @@ def test_block_structure():
     # blocks ordered by doc ranges
     for a, b in zip(blocks, blocks[1:]):
         assert a["doc_max"] < b["doc_min"]
+
+
+#: one generated block: absolute first doc_int, posting count, varbyte
+#: width (1–5 bytes) of its deltas, and a seed for the values
+_block_spec = st.tuples(
+    st.one_of(st.integers(0, 2**20), st.integers(2**32, 2**45)),
+    st.integers(1, BLOCK_SIZE_DEFAULT),
+    st.integers(1, 5),
+    st.integers(0, 2**32 - 1),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_block_spec, max_size=6))
+def test_unpack_blocks_equals_per_block_decodes(specs):
+    """One joined decode of a run of blocks == the per-block decodes
+    concatenated == the packed input, for any block sizes, delta widths
+    and absolute first ids (including ids past 2^32)."""
+    blocks, want_d, want_w = [], [], []
+    for first, n, width, seed in specs:
+        rng = np.random.default_rng(seed)
+        lo = 1 if width == 1 else 1 << (7 * (width - 1))
+        deltas = rng.integers(lo, 1 << (7 * width), size=n - 1)
+        docs = first + np.concatenate(([0], np.cumsum(deltas))).astype(np.int64)
+        wts = rng.uniform(0.001, 50.0, size=n)
+        (b,) = pack_postings(docs, wts, block_size=n)
+        blocks.append(b)
+        want_d.append(docs)
+        want_w.append(wts.astype(np.float32).astype(np.float64))
+    d, w = unpack_blocks(
+        [b["docs"] for b in blocks], [b["wts"] for b in blocks], [b["n"] for b in blocks]
+    )
+    assert d.dtype == np.int64 and w.dtype == np.float64
+    per_block = [unpack_block(b["docs"], b["wts"], b["n"]) for b in blocks]
+    if blocks:
+        assert (d == np.concatenate([p[0] for p in per_block])).all()
+        assert (w == np.concatenate([p[1] for p in per_block])).all()
+        assert (d == np.concatenate(want_d)).all()
+        assert (w == np.concatenate(want_w)).all()
+    else:
+        assert len(d) == 0 and len(w) == 0
+
+
+def test_unpack_blocks_empty_and_ids_past_2_32():
+    d, w = unpack_blocks([], [], [])
+    assert len(d) == 0 and len(w) == 0
+    docs = np.array([2**40, 2**40 + 1, 2**40 + 2**34], dtype=np.int64)
+    blocks = pack_postings(docs, np.ones(3), block_size=2) + pack_postings(
+        docs[:1] - 2**39, np.ones(1), block_size=2
+    )
+    d, _ = unpack_blocks(
+        [b["docs"] for b in blocks], [b["wts"] for b in blocks], [b["n"] for b in blocks]
+    )
+    assert d.tolist() == docs.tolist() + [2**40 - 2**39]

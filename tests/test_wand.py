@@ -282,12 +282,22 @@ def test_batch_wand_prune_repair_exact(corpus, spark):
 
 
 def test_batch_segment_unsorted_rows_exact():
+    _check_unsorted_rows("reversed")
+
+
+def test_batch_segment_shuffled_rows_exact():
+    _check_unsorted_rows("shuffled")
+
+
+def _check_unsorted_rows(order):
     """Regression (round-2 ADVICE, high): the batch kernel must sort each
     term's block rows by doc_min before use — after the seg shuffle (and on
     appended multi-file indexes) rows arrive in arbitrary order, and an
     unsorted concatenation corrupts the searchsorted repair whenever the
-    MaxScore cut fires.  Feed deliberately REVERSED block order and force
-    the cut with a skewed-ub term tail; compare against brute force."""
+    MaxScore cut fires.  Feed deliberately REVERSED block order within
+    each term, or a full shuffle that interleaves the terms, and force the
+    cut with a skewed-ub term tail; compare against brute force.  The
+    single-query kernel gets the same frame."""
     from splade_easy_spark.query.wand import _batch_segment
 
     rng = np.random.default_rng(3)
@@ -317,6 +327,8 @@ def test_batch_segment_unsorted_rows_exact():
             )
         frames.append(pd.DataFrame(rows).iloc[::-1])  # REVERSED block order
     g = pd.concat(frames, ignore_index=True)
+    if order == "shuffled":
+        g = g.iloc[rng.permutation(len(g))].reset_index(drop=True)
     queries = [
         ("q0", sorted(qw_map.items())),  # all terms: skewed ub forces the cut
         ("q1", [("t1", qw_map["t1"]), ("t2", qw_map["t2"])]),
@@ -335,6 +347,57 @@ def test_batch_segment_unsorted_rows_exact():
         rows = sorted(got[qid], key=lambda r: (-r[1], r[0]))
         assert [d for d, _ in rows][: len(expect)] == expect, qid
         assert np.allclose([s for _, s in rows][: len(expect)], total[expect], rtol=1e-7)
+    total = np.sum(list(truth.values()), axis=0)
+    expect = [int(i) for i in np.lexsort((np.arange(seg_docs), -total))[:5]]
+    d, s, bt, bd = _score_segment(g, qw_map, 0, seg_docs, 5, None)
+    assert bd <= bt
+    assert [int(x) for x in d][:5] == expect
+    assert np.allclose(s[:5], total[expect], rtol=1e-7)
+
+
+def test_kernels_no_per_term_pandas(monkeypatch):
+    """Per-term overhead guard: the batch kernel decodes each term it
+    needs with ONE varbyte call however many blocks the term has, and
+    neither kernel groups or sorts a pandas frame (both read one lexsorted
+    numpy term index)."""
+    from splade_easy_spark.index import postings
+    from splade_easy_spark.query.wand import _batch_segment
+
+    rng = np.random.default_rng(11)
+    seg_docs, n_terms = 512, 24
+    posts = {}
+    for t in range(n_terms):
+        docs = np.sort(rng.choice(seg_docs, size=int(rng.integers(40, 200)), replace=False))
+        posts[f"t{t:02d}"] = list(zip(docs.tolist(), rng.uniform(0.01, 3.0, len(docs)).tolist()))
+    g = _mk_rows(posts, block_size=16)  # every term spans 3-13 blocks
+    assert g.groupby("term_id").size().min() > 1
+    terms = sorted(posts)
+    queries = [
+        ("q0", [(t, 1.0) for t in terms[:16]]),
+        ("q1", [(t, 0.5) for t in terms[8:]]),
+    ]
+
+    calls = []
+    decode = postings.varbyte_decode
+
+    def counting(buf, count):
+        calls.append(count)
+        return decode(buf, count)
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("per-term pandas call inside a WAND kernel")
+
+    monkeypatch.setattr(postings, "varbyte_decode", counting)
+    monkeypatch.setattr(pd.DataFrame, "groupby", forbidden)
+    monkeypatch.setattr(pd.DataFrame, "sort_values", forbidden)
+    # k = seg_docs: no MaxScore cut, so every term is scattered
+    out_q, out_d, out_s, bt, bd = _batch_segment(
+        g, queries, 0, seg_docs, seg_docs, None, "wts", "max_weight"
+    )
+    assert bd == bt == len(g)
+    assert len(calls) <= n_terms, f"{len(calls)} decodes for {n_terms} terms"
+    d, s, bt1, _ = _score_segment(g, {t: 1.0 for t in terms}, 0, seg_docs, 10, None)
+    assert bt1 == len(g) and len(d) >= 10
 
 
 def test_batch_wand_appended_multifile_index(spark, tmp_path):
