@@ -2,12 +2,16 @@
 program over any ``(id, text)`` corpus — no materialized index.
 
 This is the same logical algebra as the persisted path (builder.py +
-searcher.py); Catalyst sees one plan: scan → map-side tf → df/stats aggs →
-weight → broadcast query join → hash agg → TakeOrderedAndProject.  Used by
-the driver correctness gate (``__spark_entry__.py``) where every query must
-be mirrored by a DuckDB SQL oracle, and handy interactively for one-off
-corpora.  Double precision end to end (unlike the packed float32 postings),
-so results are comparable to the SQL oracle at 1e-9.
+searcher.py); Catalyst sees one plan: scan → map-side tf (restricted to
+the query's terms when they are known) → df window and stats agg →
+weight → broadcast query join → hash agg → TakeOrderedAndProject.  The
+tf kernel is the plan's only Python stage and runs once per weights
+frame: df is a ``count(*)`` window over the same frame, not a second
+branch.  Used by the driver correctness gate (``__spark_entry__.py``)
+where every query must be mirrored by a DuckDB SQL oracle, and handy
+interactively for one-off corpora.  Double precision end to end (unlike
+the packed float32 postings), so results are comparable to the SQL
+oracle at 1e-9.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from pyspark.sql.window import Window
 
 from splade_easy_spark.config import BM25Params, AnalyzerConfig, IndexConfig
 from splade_easy_spark.functions.bm25 import bm25_weight_expr, idf_expr
+from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.functions.text import tokenize
 from splade_easy_spark.query.searcher import analyze_query
 from splade_easy_spark.session import local_frame
@@ -30,11 +35,12 @@ def doc_term_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     (functions.text.term_tf_frame)."""
     from splade_easy_spark.functions.text import term_tf_frame
 
-    # NB: no scan-parallelism floor here — the adhoc BM25 plans reference
-    # this frame from several subtrees (stats/dfs/weights), so an injected
-    # round-robin exchange executes once PER SUBTREE and measured 3x slower
-    # than the narrow scan on the 5k-doc gate corpus; the floor belongs in
-    # ops whose expensive projection runs exactly once (see ops.dedup).
+    # NB: no scan-parallelism floor here — some adhoc plans reference
+    # this frame from several subtrees (cosine norms, MLT's source and
+    # corpus sides), so an injected round-robin exchange executes once PER
+    # SUBTREE and measured 3x slower than the narrow scan on the 5k-doc
+    # gate corpus; the floor belongs in ops whose expensive projection runs
+    # exactly once (see ops.dedup).
     base = docs.select(
         F.col(id_col).alias("id"),
         F.size(tokenize(F.col(text_col), analyzer)).alias("doc_len"),
@@ -45,18 +51,27 @@ def doc_term_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
 def bm25_weights(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                  params: BM25Params | None = None,
-                 analyzer: AnalyzerConfig | None = None) -> DataFrame:
+                 analyzer: AnalyzerConfig | None = None,
+                 terms: list[str] | None = None) -> DataFrame:
     """(id, term, tf, doc_len, weight): full corpus-statistics BM25 doc-side
-    weights, computed with scalar-subquery stats (stays one lazy plan)."""
+    weights, computed with scalar-subquery stats (stays one lazy plan).
+
+    ``doc_term_tf`` runs once: ``df`` is ``count(*) over (partition by
+    term)`` on the same (id, term, tf) frame, so no second tf branch feeds
+    a df aggregate.  ``terms`` keeps only those terms' rows, before the
+    count: a term's df counts only its own rows, so every kept weight is
+    unchanged, and the window shuffles the query's rows instead of the
+    whole corpus's.  ``n_docs``/``avgdl`` always cover the whole corpus."""
     p = params or BM25Params()
     tt = doc_term_tf(docs, id_col, text_col, analyzer)
+    if terms is not None:
+        tt = tt.where(in_list("term", sorted(set(terms))))
     toks_len = F.size(tokenize(F.col(text_col), analyzer))
     stats = docs.agg(
         F.count("*").alias("n_docs"), F.avg(toks_len).alias("avgdl")
     )
-    dfs = tt.groupBy("term").agg(F.count("*").alias("df"))
     return (
-        tt.join(F.broadcast(dfs), "term")
+        tt.withColumn("df", F.count("*").over(Window.partitionBy("term")))
         .crossJoin(F.broadcast(stats))
         .select(
             "id",
@@ -90,12 +105,16 @@ def bm25_topk(
     predicate pushes down to the docs scan and the restriction is a
     doc-grain semi-join on the already term-pruned candidates, so the
     filter costs one pruned column scan — never a rescore.
+
+    The weights are computed for the query's terms only; cosine norms
+    need each matched doc's whole vector, so they come from a second,
+    unrestricted ``bm25_weights``.
     """
     terms = analyze_query(query_text, IndexConfig(bm25=params or BM25Params()))
     if not terms:
         return local_frame(spark, [], "id STRING, score DOUBLE")
     qdf = local_frame(spark, terms, "term STRING, qweight DOUBLE")
-    w = bm25_weights(docs, id_col, text_col, params)
+    w = bm25_weights(docs, id_col, text_col, params, terms=[t for t, _ in terms])
     scored = w.join(F.broadcast(qdf), "term").groupBy("id").agg(
         F.sum(F.col("weight") * F.col("qweight")).alias("score")
     )
@@ -129,7 +148,14 @@ def bm25_topk_multi(
     text_col: str = "text",
     doc_filter: Column | None = None,
 ) -> DataFrame:
-    """(query_id, rank, id, score): batch top-k, one job for all queries.
+    """(query_id, rank, id, score): batch top-k for all queries in one
+    plan, sorted by (query_id, rank).
+
+    The weights are computed for the union of the queries' terms only
+    (see :func:`bm25_weights`), so the tf kernel runs once.  The final
+    sort runs in one task over at most Q·k rows, as in
+    ``Searcher._ranked_many``: a global ``orderBy`` would plan a
+    range-partition sampling job for them.
 
     ``doc_filter`` as in :func:`bm25_topk` — candidate restriction with
     full-corpus statistics, applied once before the per-query window."""
@@ -141,7 +167,7 @@ def bm25_topk_multi(
     if not rows:
         return local_frame(spark, [], "query_id STRING, rank INT, id STRING, score DOUBLE")
     qdf = local_frame(spark, rows, "query_id STRING, term STRING, qweight DOUBLE")
-    w = bm25_weights(docs, id_col, text_col)
+    w = bm25_weights(docs, id_col, text_col, terms=[r[1] for r in rows])
     scored = (
         w.join(F.broadcast(qdf), "term")
         .groupBy("query_id", "id")
@@ -155,7 +181,8 @@ def bm25_topk_multi(
     return (
         scored.withColumn("rank", F.row_number().over(win))
         .where(F.col("rank") <= top_k)
-        .orderBy("query_id", "rank")
+        .repartition(1)
+        .sortWithinPartitions("query_id", "rank")
     )
 
 
@@ -177,7 +204,7 @@ def facet_counts(
     if not terms:
         return local_frame(spark, [], "facet STRING, n_docs BIGINT")
     qdf = local_frame(spark, terms, "term STRING, qweight DOUBLE")
-    w = bm25_weights(docs, id_col, text_col, params)
+    w = bm25_weights(docs, id_col, text_col, params, terms=[t for t, _ in terms])
     matched = (
         w.join(F.broadcast(qdf), "term")
         .groupBy("id")
@@ -261,7 +288,7 @@ def phrase_search(
         return local_frame(spark, [], "id STRING, score DOUBLE")
     distinct = sorted(set(ordered))
     qdf = local_frame(spark, [(t,) for t in distinct], "term STRING")
-    w = bm25_weights(docs, id_col, text_col, params, analyzer)
+    w = bm25_weights(docs, id_col, text_col, params, analyzer, terms=distinct)
     cand = (
         w.join(F.broadcast(qdf), "term")
         .groupBy("id")
@@ -442,7 +469,7 @@ def boolean_search(
     scored_terms = m + s_extra
     if not scored_terms:
         return local_frame(spark, [], "id STRING, score DOUBLE")
-    w = bm25_weights(docs, id_col, text_col, params)
+    w = bm25_weights(docs, id_col, text_col, params, terms=scored_terms + n)
     qdf = local_frame(spark, [(t,) for t in scored_terms], "term STRING")
     scored = (
         w.join(F.broadcast(qdf), "term")
@@ -450,7 +477,7 @@ def boolean_search(
         .agg(
             F.sum("weight").alias("score"),
             F.count_distinct(
-                F.when(F.col("term").isin(m), F.col("term"))
+                F.when(in_list("term", m), F.col("term"))
             ).alias("_nm"),
         )
         .where((F.col("_nm") == len(m)) & (F.col("score") > 0))
@@ -552,7 +579,7 @@ def near_search(
     pos = docs.select(
         F.col(id_col).alias("id"),
         F.posexplode(tokenize(F.col(text_col), analyzer)).alias("pos", "tok"),
-    ).where(F.col("tok").isin([ta, tb]))
+    ).where(in_list("tok", [ta, tb]))
     pa = pos.where(F.col("tok") == ta).select("id", F.col("pos").alias("pa"))
     pb = pos.where(F.col("tok") == tb).select("id", F.col("pos").alias("pb"))
     gap = (
@@ -561,7 +588,7 @@ def near_search(
         else F.abs(F.col("pa") - F.col("pb")).between(1, slop)
     )
     hits = pa.join(pb, "id").where(gap).select("id").distinct()
-    w = bm25_weights(docs, id_col, text_col, params, analyzer)
+    w = bm25_weights(docs, id_col, text_col, params, analyzer, terms=[ta, tb])
     qdf = local_frame(spark, [(t,) for t in sorted({ta, tb})], "term STRING")
     return (
         w.join(F.broadcast(qdf), "term")

@@ -49,7 +49,15 @@ def quantize_embeddings(
     0.9s for this kernel.  Bit-identical by construction: every step is the
     same IEEE-754 float64 op sequence (widen → mul/div → floor-half-up;
     ``cumsum`` is the same left-to-right sse fold), pinned by the DuckDB
-    oracle gate."""
+    oracle gate.
+
+    A null element inside a non-null vector gets a null code, the row's
+    max skips it (as ``array_max`` does), its error is null, so
+    ``max_abs_err`` skips it too and the row's ``mse`` is null (the HOF
+    ``aggregate`` fold propagates a null).  A row whose every element is
+    null has a null scale and null codes.  One case differs from the HOF
+    form: an empty vector's mse is NaN here, where the HOF form's 0/0
+    raises under ANSI mode."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -72,25 +80,35 @@ def quantize_embeddings(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64)
             )
-            v = pc.list_flatten(col).to_numpy(zero_copy_only=False).astype(np.float64)
+            flat = pc.list_flatten(col)
+            # element validity: a null element maps to NaN in `v` and is
+            # kept out of every reduction below
+            ev = pc.is_valid(flat).to_numpy(zero_copy_only=False)
+            v = flat.to_numpy(zero_copy_only=False).astype(np.float64)
             starts = np.zeros(n, dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
             nonempty = lens > 0
             m = np.zeros(n, dtype=np.float64)
+            no_nulls = np.ones(n, dtype=bool)
             if nonempty.any():
-                m[nonempty] = np.maximum.reduceat(np.abs(v), starts[nonempty])
+                st = starts[nonempty]
+                m[nonempty] = np.maximum.reduceat(np.where(ev, np.abs(v), -1.0), st)
+                no_nulls[nonempty] = np.logical_and.reduceat(ev, st)
+            # rows with >=1 non-null element (m is -1 for the others)
+            seen = nonempty & ~(m < 0.0)
+            m[~seen] = 0.0
             m_row = np.repeat(m, lens)
             with np.errstate(divide="ignore", invalid="ignore"):
                 q = np.floor(v * 127.0 / m_row + 0.5)
-            q = np.where(m_row == 0.0, 0.0, q).astype(np.int32)
+            q = np.where((m_row == 0.0) | ~ev, 0.0, q).astype(np.int32)
             # null input rows stay null (null offset ⇒ null list entry);
             # empty-but-present rows stay empty lists — as in the HOF form
             off = np.concatenate((starts, [len(v)])).astype(np.int32)
             off_pa = pa.array(off, mask=np.concatenate((~valid, [False])))
-            q_arr = pa.ListArray.from_arrays(off_pa, pa.array(q))
-            # array_max(transform(…)) of a null/empty vector is NULL,
-            # so scale is NULL exactly when the row has no elements
-            scale = pa.array(m / 127.0, mask=~nonempty)
+            q_arr = pa.ListArray.from_arrays(off_pa, pa.array(q, mask=~ev))
+            # array_max(transform(…)) of a null/empty/all-null vector is
+            # NULL, so scale is NULL exactly when no element is non-null
+            scale = pa.array(m / 127.0, mask=~seen)
             cols = [rb.column(0), scale, q_arr]
             names = [rb.schema.names[0], "scale", "q_emb"]
             if with_error:
@@ -98,8 +116,10 @@ def quantize_embeddings(
                 mx = np.zeros(n, dtype=np.float64)
                 sse = np.zeros(n, dtype=np.float64)
                 if nonempty.any():
-                    mx[nonempty] = np.maximum.reduceat(err, starts[nonempty])
-                    e2 = err * err
+                    mx[nonempty] = np.maximum.reduceat(
+                        np.where(ev, err, -np.inf), starts[nonempty]
+                    )
+                    e2 = np.where(ev, err * err, 0.0)
                     dims = np.unique(lens[nonempty])
                     if len(dims) == 1:
                         # fixed-dim fast path: a column-by-column running
@@ -121,8 +141,8 @@ def quantize_embeddings(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     mse = sse / lens  # 0.0/0 → NaN, matching double div
                 cols += [
-                    pa.array(mx, mask=~nonempty),
-                    pa.array(mse, mask=~valid),
+                    pa.array(mx, mask=~seen),
+                    pa.array(mse, mask=~valid | ~no_nulls),
                 ]
                 names += ["max_abs_err", "mse"]
             yield pa.RecordBatch.from_arrays(cols, names=names)

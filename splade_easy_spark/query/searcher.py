@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from splade_easy_spark.config import IndexConfig
+from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.session import local_frame
 
@@ -277,9 +278,7 @@ class Searcher:
         buckets = sorted(
             {zlib.crc32(t.encode()) % self.config.term_buckets for t in terms}
         )
-        return self.doc_terms.where(
-            F.col("tb").isin(buckets) & F.col("term").isin(terms)
-        )
+        return self.doc_terms.where(in_list("tb", buckets) & in_list("term", terms))
 
     def _scores(self, terms: list[tuple[str, float]], use_cosine: bool) -> DataFrame:
         """(doc_int, score) for all docs sharing ≥1 query term."""
@@ -390,11 +389,13 @@ class Searcher:
         what the corpus is).  On the SQL path it is a doc-grain semi-join
         between the scored candidates and the pushed-down filtered docs
         scan — right-sized for BROAD filters.  On the WAND path the
-        allowed doc_ints are packed and shipped to the kernels like
-        tombstones and masked BEFORE the pruning threshold (block-max
-        bounds stay conservative over the allowed subset, so exactness is
-        unchanged; see wand._alive_mask) — pack cost ∝ |allowed|, so this
-        is the path for SELECTIVE filters, where the mask is tiny and the
+        allowed doc_ints reach the kernel like tombstones, as mask rows
+        (one JVM-projected row per id, about 14 shuffle bytes each, no
+        Python stage besides the kernel; see wand._tombstone_blocks), and
+        are masked BEFORE the pruning threshold (block-max bounds stay
+        conservative over the allowed subset, so exactness is unchanged;
+        see wand._alive_mask).  The mask grows with |allowed|, so this is
+        the path for SELECTIVE filters, where the mask is small and the
         kernel's pruning does proportionally less work.
         """
         terms = analyze_query(query, self.config) if isinstance(query, str) else query
@@ -430,9 +431,9 @@ class Searcher:
                 scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
             if not scan_terms:
                 return self._no_hits(return_text)
-            # tombstones stay distributed: packed rows ride the postings'
-            # seg exchange into the kernel (never a driver collect), which
-            # masks them BEFORE the pruning threshold is computed
+            # tombstones stay distributed: one mask row per id rides the
+            # postings' seg exchange into the kernel (never a driver
+            # collect), which masks them BEFORE the pruning threshold
             allowed = (
                 None
                 if doc_filter is None
@@ -476,9 +477,15 @@ class Searcher:
         prune_below: float = 0.0,
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """Batch evaluation of many queries in ONE Spark job (the bulk
-        path the reference lacks entirely): explode all query terms, join
-        postings once, window top-k per query_id.
+        """Batch evaluation of many queries in one plan (the bulk path
+        the reference lacks entirely): explode all query terms, join
+        postings once, window top-k per query_id.  A warm call runs a
+        handful of Spark jobs (about 5 on the WAND path, 6 on SQL: the
+        query-table broadcast, the scoring stages, the window, the docs
+        join and a one-task final sort), one Python stage at most (the
+        WAND kernel), and a number of py4j round trips that does not grow
+        with the batch's terms (``functions.in_list``).  Each query is
+        analyzed once.
 
         ``queries``: [{"query_id": ..., "text": ...}, ...]
         Returns (query_id, rank, doc_id, score, conv_id, turn_idx).
@@ -504,17 +511,16 @@ class Searcher:
 
         ``doc_filter`` as in :func:`search` — candidate restriction with
         full-corpus statistics.  SQL path: one semi-join for the whole
-        batch.  WAND path: ONE packed inclusion mask shipped to the batch
-        kernel and applied before every query's pruning threshold.  The
+        batch.  WAND path: one set of mask rows (one per allowed id,
+        JVM-projected, see ``search``) shipped to the batch kernel and
+        applied before every query's pruning threshold.  The
         exchange-free ``wand_nox`` variant falls back to SQL (its
         post-kernel groupBy-sum has no mask seam).
         """
         if doc_filter is not None and method == "wand_nox":
             method = "sql"
-        rows = []
-        for q in queries:
-            for term, qw in analyze_query(q["text"], self.config):
-                rows.append((q["query_id"], term, qw))
+        analyzed = [(q["query_id"], analyze_query(q["text"], self.config)) for q in queries]
+        rows = [(qid, term, qw) for qid, ts in analyzed for term, qw in ts]
         if not rows:
             return local_frame(self.spark, [], _MANY_SCHEMA)
         deleted0 = self._deleted()
@@ -531,10 +537,7 @@ class Searcher:
             ):
                 method = "sql"  # no normalized stream: cosine via SQL path
         if method in ("wand", "wand_nox"):
-            qt = {
-                q["query_id"]: analyze_query(q["text"], self.config) for q in queries
-            }
-            qt = {k: v for k, v in qt.items() if v}
+            qt = {k: v for k, v in dict(analyzed).items() if v}
             # cosine query norms are over the FULL analyzed term list —
             # the SQL path's norm includes OOV terms (they contribute to
             # ‖q‖ though never to the dot), so pruning must not touch it
@@ -743,12 +746,12 @@ class Searcher:
             dt.groupBy("doc_int")
             .agg(
                 F.sum(
-                    F.when(F.col("term").isin(scored_terms), F.col("weight"))
+                    F.when(in_list("term", scored_terms), F.col("weight"))
                 ).alias("score"),
                 F.count_distinct(
-                    F.when(F.col("term").isin(m), F.col("term"))
+                    F.when(in_list("term", m), F.col("term"))
                 ).alias("_nm"),
-                F.count(F.when(F.col("term").isin(n), 1)).alias("_nn"),
+                F.count(F.when(in_list("term", n), 1)).alias("_nn"),
             )
             .where(
                 (F.col("_nm") == len(m)) & (F.col("score") > 0) & (F.col("_nn") == 0)
@@ -879,9 +882,9 @@ class Searcher:
             .agg(
                 F.sum(F.col("weight") * F.col("qweight")).alias("score"),
                 F.count_distinct(
-                    F.when(F.col("term").isin(must_set), F.col("term"))
+                    F.when(in_list("term", must_set), F.col("term"))
                 ).alias("_nm"),
-                F.count(F.when(F.col("term").isin(must_not), 1)).alias("_nn"),
+                F.count(F.when(in_list("term", must_not), 1)).alias("_nn"),
             )
             .where(
                 (F.col("_nm") == len(must_set))
@@ -1010,7 +1013,7 @@ class Searcher:
                     "pos", "tok"
                 ),
             )
-            .where(F.col("tok").isin(distinct))
+            .where(in_list("tok", distinct))
         )
         pa = pos.where(F.col("tok") == ta).select("doc_int", F.col("pos").alias("pa"))
         pb = pos.where(F.col("tok") == tb).select("doc_int", F.col("pos").alias("pb"))
@@ -1261,7 +1264,7 @@ class Searcher:
         cols = ["doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "doc_len"]
         if load_text:
             cols.append("text")
-        out = self.docs.where(F.col("doc_id").isin(doc_ids)).select(*cols)
+        out = self.docs.where(in_list("doc_id", doc_ids)).select(*cols)
         deleted = self._deleted()
         if deleted is not None:
             out = out.join(F.broadcast(deleted.select("doc_id")), "doc_id", "left_anti")

@@ -33,9 +33,15 @@ hybrid, exact by construction:
   candidate are decoded, and θ keeps rising from the candidates' exact
   partial scores.
 
-Tombstones never pass through the driver: the ``deleted`` table is packed
-into varbyte tombstone rows (``term_id = TOMB_TERM_ID``) that ride the same
-seg-colocation exchange as the postings, and the kernel masks dead docs
+Tombstones never pass through the driver: the ``deleted`` table becomes
+mask rows, one per doc_int (``term_id = TOMB_TERM_ID``, ``doc_min =
+doc_max = doc_int``, ``n = 1``, null binaries), projected JVM-side, that
+ride the same seg-colocation exchange as the postings; a filter's allowed
+ids ride the same way under ``ALLOW_TERM_ID``.  The kernel is the call's
+only Python stage.  A mask row costs about 14 more compressed shuffle
+bytes per id than a varbyte-packed id list would; that is bounded by
+``compact`` for tombstones and small for the selective filters the allow
+path serves (see ``_tombstone_blocks``).  The kernel masks dead docs
 *before* θ / candidate computation, so deletes can never inflate the
 pruning threshold (they are invisible to it) and results equal a
 rebuilt-without-them index's.
@@ -62,30 +68,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.index.catalog import (
     ALLOW_TERM_ID,
     TOMB_TERM_ID,
     term_id_expr,
     term_id_py,
 )
-from splade_easy_spark.index.postings import (
-    unpack_block,
-    unpack_blocks,
-    varbyte_encode,
-)
+from splade_easy_spark.index.postings import unpack_block, unpack_blocks
 from splade_easy_spark.session import local_frame
-
-#: schema of the pruned frame entering the kernels (and of the packed
-#: tombstone rows unioned into it).  The term key is the 60-bit content
-#: hash (``catalog.term_id_py``) — the postings table stores it natively
-#: (round-4 layout) and the legacy string layout projects it JVM-side
-#: after its term filter, so the seg exchange, the Arrow hop and the
-#: kernel groupby always run over an int64, never a string column.
-_PRUNED_SCHEMA = (
-    "seg LONG, term_id LONG, block_id INT, n INT, doc_min LONG, "
-    "doc_max LONG, max_weight DOUBLE, docs BINARY, wts BINARY, "
-    "max_nweight DOUBLE, nwts BINARY"
-)
 
 
 def _query_term_ids(terms: list[str], seed: int) -> dict[str, int]:
@@ -108,50 +99,37 @@ def _query_term_ids(terms: list[str], seed: int) -> dict[str, int]:
 def _tombstone_blocks(
     deleted: DataFrame, segment_docs: int, sentinel: int = TOMB_TERM_ID
 ) -> DataFrame:
-    """Pack a doc_int set into postings-schema rows so it rides the
-    postings' seg-colocation exchange to its segment's kernel — fully
-    distributed (the round-1 driver ``collect()`` of tombstones would
+    """Mask rows for a doc_int set, in the postings schema, so the set
+    rides the postings' seg-colocation exchange to its segment's kernel —
+    fully distributed (the round-1 driver ``collect()`` of tombstones would
     funnel a heavily-deleted index's millions of ids through the driver per
-    query).  Multiple rows per seg are fine; the kernel concatenates.
+    query).
+
+    One row per doc_int: ``doc_min = doc_max = doc_int``, ``n = 1``, null
+    ``docs``/weight binaries.  It is a plain JVM projection, so masking
+    adds no Python stage to the call: the WAND kernel is the only one.
+    The rows are wider than a packed per-segment id list: about 14 more
+    compressed shuffle bytes per id (measured: +9.9 KB for 695 allowed
+    ids on a 2,000-turn index, +8.0 KB for 566 on a 1,600-turn one).
+    That stays small on both paths that use them: ``compact`` bounds the
+    number of tombstones, and the allow path serves selective filters.
 
     ``sentinel`` selects the row kind: TOMB_TERM_ID for an EXCLUSION set
     (deletes, masked out), ALLOW_TERM_ID for the filtered-retrieval
     INCLUSION set (only these doc_ints may score)."""
-    dels = deleted.select(
-        (F.col("doc_int") / F.lit(segment_docs)).cast("long").alias("seg"),
-        "doc_int",
+    return deleted.selectExpr(
+        f"CAST(doc_int DIV {int(segment_docs)} AS BIGINT) AS seg",
+        f"CAST({int(sentinel)} AS BIGINT) AS term_id",
+        "0 AS block_id",
+        "1 AS n",
+        "CAST(doc_int AS BIGINT) AS doc_min",
+        "CAST(doc_int AS BIGINT) AS doc_max",
+        "0.0D AS max_weight",
+        "CAST(NULL AS BINARY) AS docs",
+        "CAST(NULL AS BINARY) AS wts",
+        "0.0D AS max_nweight",
+        "CAST(NULL AS BINARY) AS nwts",
     )
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "seg", "term_id", "block_id", "n", "doc_min", "doc_max",
-                    "max_weight", "docs", "wts", "max_nweight", "nwts",
-                )
-            }
-            for seg, g in pdf.groupby("seg", sort=False):
-                ids = np.unique(g["doc_int"].to_numpy().astype(np.int64))
-                deltas = np.empty(len(ids), dtype=np.uint64)
-                deltas[0] = ids[0]
-                deltas[1:] = np.diff(ids).astype(np.uint64)
-                out["seg"].append(int(seg))
-                out["term_id"].append(sentinel)
-                out["block_id"].append(0)
-                out["n"].append(int(len(ids)))
-                out["doc_min"].append(int(ids[0]))
-                out["doc_max"].append(int(ids[-1]))
-                out["max_weight"].append(0.0)
-                out["docs"].append(varbyte_encode(deltas))
-                out["wts"].append(b"")
-                out["max_nweight"].append(0.0)
-                out["nwts"].append(b"")
-            yield pd.DataFrame(out)
-
-    return dels.mapInPandas(pack, schema=_PRUNED_SCHEMA)
 
 
 def _split_tombstones(
@@ -173,14 +151,15 @@ def _split_tombstones(
 
 
 def _dead_local(tomb: pd.DataFrame | None, seg: int, seg_base: int) -> np.ndarray | None:
-    """Segment-local indices of one packed-id frame (tombstones OR allow
-    rows — the wire format is identical)."""
+    """Segment-local indices of one mask-row frame (tombstones OR allow
+    rows — the wire format is identical: one row per doc_int, the id in
+    ``doc_min``)."""
     if tomb is None:
         return None
     tg = tomb[tomb["seg"] == seg]
     if not len(tg):
         return None
-    return np.unique(unpack_blocks(tg["docs"], (), tg["n"])[0]) - seg_base
+    return np.unique(tg["doc_min"].to_numpy(dtype=np.int64)) - seg_base
 
 
 class _TermIndex:
@@ -431,15 +410,18 @@ def _pruned_with_tombstones(
 ) -> DataFrame:
     """Term filter FIRST (parquet predicate pushdown — only the query's
     posting lists are read), prune to the columns THIS score mode's kernel
-    reads, union the packed tombstones, then colocate each segment's
-    surviving blocks in one partition.  The kernel needs a segment's blocks
+    reads, union the mask rows (tombstones, a filter's allowed ids; one
+    JVM-projected row per doc_int, see ``_tombstone_blocks``), then
+    colocate each segment's surviving blocks in one partition.  The kernel needs a segment's blocks
     together to produce complete document scores; this repartition moves
     only the query's postings (same volume the SQL path shuffles into its
     join).
 
     On the round-4 layout the filter is ``term_id IN (...)`` — an int64
     predicate against the natively-stored hash, pushed to parquet row-group
-    stats exactly like the string filter was.  On a legacy index
+    stats exactly like the string filter was.  Both filters are built by
+    ``functions.in_list``: one expression string, so the py4j round trips
+    do not grow with the number of query terms.  On a legacy index
     (``qterms_legacy`` given) the string filter still pushes down and the
     hash is projected JVM-side above the scan, so the exchange/hop/kernel
     see the identical int64-keyed frame either way.
@@ -455,20 +437,21 @@ def _pruned_with_tombstones(
     cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
     if qterms_legacy is not None:
         pruned = (
-            postings.where(F.col("term").isin(qterms_legacy))
+            postings.where(in_list("term", qterms_legacy))
             .withColumn("term_id", term_id_expr(F.col("term"), term_id_seed))
             .select(*cols)
         )
     else:
-        pruned = postings.where(F.col("term_id").isin(qterm_ids)).select(*cols)
+        pruned = postings.where(in_list("term_id", qterm_ids)).select(*cols)
     if deleted is not None:
         pruned = pruned.unionByName(
             _tombstone_blocks(deleted, segment_docs).select(*cols)
         )
     if allowed is not None:
-        # the filtered-retrieval inclusion set rides the identical packed
-        # wire format under its own sentinel; pack cost ∝ |allowed| — the
-        # selective-filter case this path exists for keeps it tiny
+        # the filtered-retrieval inclusion set rides the identical mask-row
+        # wire format under its own sentinel; its shuffle bytes grow with
+        # |allowed| — the selective-filter case this path exists for keeps
+        # them small
         pruned = pruned.unionByName(
             _tombstone_blocks(allowed, segment_docs, ALLOW_TERM_ID).select(*cols)
         )
@@ -491,11 +474,13 @@ def wand_search_scores(
     kernel, global merge left to the caller's orderBy/limit.
 
     ``allowed``: filtered retrieval — a (doc_int) frame of the docs a
-    filter permits.  Packed and shipped like tombstones, masked in the
-    kernel BEFORE θ (block-max bounds stay conservative upper bounds over
-    the allowed subset, so exactness is unchanged); segments none of whose
-    docs are allowed are skipped outright.  Pack cost ∝ |allowed| — use
-    this path for selective filters, the SQL path for broad ones.
+    filter permits.  Shipped like tombstones, as one JVM-projected mask
+    row per allowed id, masked in the kernel BEFORE θ (block-max bounds
+    stay conservative upper bounds over the allowed subset, so exactness
+    is unchanged); segments none of whose docs are allowed are skipped
+    outright.  The kernel stays the call's only Python stage; the mask
+    rows cost about 14 shuffle bytes per allowed id — use this path for
+    selective filters, the SQL path for broad ones.
 
     ``snapshot_max``: the reader's as-of-open watermark — docs with
     ``doc_int >= snapshot_max`` are masked exactly in the kernel (blocks
@@ -773,8 +758,8 @@ def wand_search_many_scores(
     candidates for EVERY query in one pass.
 
     ``allowed`` is the filtered-retrieval inclusion set, shared by every
-    query in the batch (see ``wand_search_scores`` — same wire format,
-    same exactness argument, ONE pack for the whole batch).
+    query in the batch (see ``wand_search_scores`` — same mask rows, same
+    exactness argument, shipped once for the whole batch).
 
     The SQL batch path multiplies each posting row by every query sharing
     its term (a Zipfian head term × 100 queries → 10^8 joined rows).  Here
@@ -868,11 +853,11 @@ def wand_search_many_scores_nox(
     cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
     if "term_id" in postings.columns:
         pruned = postings.where(
-            F.col("term_id").isin([ids[t] for t in all_terms])
+            in_list("term_id", [ids[t] for t in all_terms])
         ).select(*cols)
     else:
         pruned = (
-            postings.where(F.col("term").isin(all_terms))
+            postings.where(in_list("term", all_terms))
             .withColumn("term_id", term_id_expr(F.col("term"), term_id_seed))
             .select(*cols)
         )

@@ -38,6 +38,34 @@ def spark_jobs(spark):
 
 
 @pytest.fixture()
+def py4j_calls(spark):
+    """``py4j_calls(fn) -> (n_commands, fn())``: the py4j commands the
+    driver sends to the JVM while ``fn`` runs.  Meant for building a frame,
+    not collecting it: a collect adds the commands of its own execution.
+    Releases of garbage-collected JVM references (py4j's memory commands)
+    are not counted: they follow Python's collector, not the call."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def run(fn):
+        n = 0
+
+        def counting(command, *args, **kwargs):
+            nonlocal n
+            n += not command.startswith("m\n")
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            del client.send_command  # back to the class's method
+        return n, out
+
+    return run
+
+
+@pytest.fixture()
 def tmp_index(tmp_path):
     d = tmp_path / "index"
     yield str(d)

@@ -694,10 +694,13 @@ def test_query_tables_are_local_relations(corpus, spark):
 #: join; search(wand): postings exchange, kernel top-k, docs join;
 #: suggest_terms: one TakeOrderedAndProject over the term_stats scan;
 #: search_many: the same scoring jobs, then the per-query window, the docs
-#: join and a one-task final sort (no range-sampling job).
+#: join and a one-task final sort (no range-sampling job); a filter's
+#: allowed ids join the WAND postings exchange as JVM-projected mask rows;
+#: bm25_topk_multi runs its tf kernel once (df is a window over it).
 JOB_BUDGET = {
     "search_sql": 4, "search_wand": 3, "suggest_terms": 1,
     "search_many_sql": 6, "search_many_wand": 5,
+    "search_many_wand_filtered": 5, "bm25_topk_multi": 8,
 }
 
 
@@ -705,6 +708,8 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
     """Per-call job counts on a warm searcher: no schema-inference job on
     the per-call reads, no job for the query table, and the docs join
     ends in a TakeOrderedAndProject rather than a sampled sort."""
+    from splade_easy_spark import adhoc
+
     idx_dir, _, _ = corpus
     s = Searcher(spark, idx_dir, CFG)
     qs = generate_query_set()[:4]
@@ -716,9 +721,97 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
         "suggest_terms": lambda: s.suggest_terms(text[:2], 5).collect(),
         "search_many_sql": lambda: s.search_many(many, top_k=10, method="sql").collect(),
         "search_many_wand": lambda: s.search_many(many, top_k=10, method="wand").collect(),
+        "search_many_wand_filtered": lambda: s.search_many(
+            many, top_k=10, method="wand", doc_filter=F.col("role") == "user"
+        ).collect(),
+        "bm25_topk_multi": lambda: adhoc.bm25_topk_multi(
+            spark, s.docs.select("doc_id", "text"), many, top_k=10
+        ).collect(),
     }
     for name, call in calls.items():
         call()  # warm: Python workers up, code paths loaded
         n, rows = spark_jobs(call)
         assert rows, name
         assert n <= JOB_BUDGET[name], f"{name} started {n} jobs"
+
+
+def _many(texts):
+    return [{"query_id": f"q{i:03d}", "text": t} for i, t in enumerate(texts)]
+
+
+def test_plan_build_round_trips_flat(corpus, spark, py4j_calls):
+    """Building a batch plan sends as many py4j commands for ~100 queries
+    as for 4: every query-derived IN-list is one expression string
+    (``functions.in_list``), not one JVM literal per value."""
+    from splade_easy_spark import adhoc
+
+    idx_dir, _, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    vocab = [r["term"] for r in s._read("term_stats").select("term").orderBy("term").collect()]
+    assert len(vocab) >= 300, len(vocab)
+    texts = [" ".join(vocab[3 * i : 3 * i + 3]) for i in range(100)]
+    docs = s.docs.select("doc_id", "text")
+    pred = F.col("role") == "user"
+    builds = {
+        "search_many wand": lambda qs: s.search_many(qs, top_k=5, method="wand"),
+        "search_many wand filtered": lambda qs: s.search_many(
+            qs, top_k=5, method="wand", doc_filter=pred
+        ),
+        "search_many sql": lambda qs: s.search_many(qs, top_k=5, method="sql"),
+        "adhoc.bm25_topk_multi": lambda qs: adhoc.bm25_topk_multi(spark, docs, qs, top_k=5),
+    }
+    for name, build in builds.items():
+        build(_many(texts[:4]))  # warm: term bounds loaded, modules imported
+        small, _ = py4j_calls(lambda: build(_many(texts[:4])))
+        large, df = py4j_calls(lambda: build(_many(texts)))
+        assert large - small <= 10, f"{name}: {small} -> {large} py4j commands"
+        # the IN-list still reaches the scan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if name.startswith("search_many wand"):
+            assert "In(term_id," in plan or "InSet(term_id," in plan, plan
+
+
+def _final_plan(df) -> str:
+    """The physical plan ``df`` ran with: AQE's final plan, every query
+    stage's subtree included."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    return plan.toString()
+
+
+def test_one_python_stage_per_wand_call(corpus, spark, tmp_path):
+    """A WAND call runs one Python stage, its kernel: a filter's allowed
+    ids and the tombstones reach it as JVM-projected mask rows.  The adhoc
+    batch runs its tf kernel once: df is a window over the same frame."""
+    import shutil
+
+    from splade_easy_spark import adhoc
+    from splade_easy_spark.index.maintenance import delete
+
+    idx_dir, _, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    qs = generate_query_set()[:4]
+    text = qs[0]["text"]
+    many = _many([q["text"] for q in qs])
+    pred = F.col("role") == "user"
+    frames = {
+        "search filtered": s.search(text, top_k=5, method="wand", doc_filter=pred),
+        "search_many filtered": s.search_many(many, top_k=5, method="wand", doc_filter=pred),
+    }
+    # tombstones go on a copy: the module index stays delete-free
+    copy = str(tmp_path / "index")
+    shutil.copytree(idx_dir, copy)
+    victim = s.search(text, top_k=1).collect()[0]["doc_id"]
+    assert delete(spark, copy, [victim]) == 1
+    frames["search after delete"] = Searcher(spark, copy, CFG).search(
+        text, top_k=5, method="wand"
+    )
+    for name, df in frames.items():
+        plan = _final_plan(df)
+        assert plan.count("MapInPandas") == 1, f"{name}:\n{plan}"
+    assert victim not in {r["doc_id"] for r in frames["search after delete"].collect()}
+    multi = adhoc.bm25_topk_multi(spark, s.docs.select("doc_id", "text"), many, top_k=5)
+    plan = _final_plan(multi)
+    assert plan.count("MapInArrow") == 1, plan

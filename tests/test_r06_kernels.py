@@ -75,6 +75,60 @@ def test_quantize_null_and_empty_rows(spark):
     assert got[3]["max_abs_err"] is None and math.isnan(got[3]["mse"])
 
 
+def _quantize_hof(df):
+    """The all-Catalyst higher-order-function form the kernel replaced.
+    One change: its all-zero branch keeps a null element null (it mapped
+    every element to 0)."""
+    v = F.col("embedding")
+    m = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
+    q = F.when(
+        m == 0.0, F.transform(v, lambda x: F.when(x.isNotNull(), F.lit(0)))
+    ).otherwise(
+        F.transform(
+            v, lambda x: F.floor(x.cast("double") * F.lit(127.0) / m + F.lit(0.5)).cast("int")
+        )
+    )
+    out = df.select("vec_id", (m / F.lit(127.0)).alias("scale"), q.alias("q_emb"), v.alias("_v"))
+    err = F.zip_with(
+        "q_emb", "_v", lambda qi, vi: F.abs(qi.cast("double") * F.col("scale") - vi.cast("double"))
+    )
+    return out.select(
+        "vec_id",
+        "scale",
+        "q_emb",
+        F.array_max(err).alias("max_abs_err"),
+        (F.aggregate(err, F.lit(0.0), lambda acc, e: acc + e * e) / F.size("q_emb")).alias("mse"),
+    )
+
+
+@pytest.mark.parametrize("ragged", [False, True])
+def test_quantize_null_elements_match_hof(spark, ragged):
+    """A null element inside a vector gets a null code and is skipped by
+    the row's max (``array_max`` semantics), its error is null, and the
+    row's mse is null — exactly the HOF form's output, on fixed-dimension
+    and ragged batches."""
+    import random
+
+    rng = random.Random(17 + ragged)
+    rows = [
+        (1, [0.5, None, -1.0, 0.25]),
+        (2, [None, None, None, None]),
+        (3, [0.0, None, 0.0, 0.0]),
+        (4, [None, 0.25, 0.0, -0.125]),
+        (5, [0.3, -0.7, 0.1, 0.9]),
+        (6, None),
+    ]
+    for i in range(7, 40):
+        dim = rng.randint(1, 6) if ragged else 4
+        rows.append(
+            (i, [None if rng.random() < 0.2 else rng.uniform(-2, 2) for _ in range(dim)])
+        )
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>").coalesce(1)
+    want = {r["vec_id"]: r.asDict() for r in _quantize_hof(df).collect()}
+    got = {r["vec_id"]: r.asDict() for r in quantize_embeddings(df).collect()}
+    assert got == want
+
+
 def test_term_tf_rows_doc_contiguous(spark):
     """The Arrow term-tf kernel keeps each doc's rows contiguous (the
     contract attach_doc_norm-style streaming consumers rely on)."""

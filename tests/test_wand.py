@@ -919,3 +919,81 @@ def test_kernel_allow_mask_composes_with_deletes_and_watermark():
         g, qw_map, 0, seg_docs, 10, None, allow_local=None, allow_active=True
     )
     assert len(d2) == 0
+
+
+def test_mask_rows_generated_cases(spark, tmp_path):
+    """Seeded generated cases for the per-id mask rows that carry
+    tombstones and a filter's allowed ids into the WAND kernels.  Deletes
+    straddle every segment boundary, the filter is drawn at random, and
+    WAND (dot and cosine, ``search`` and ``search_many``) equals SQL under
+    (score desc, doc_id asc).  The rows themselves are pinned: one per
+    doc_int, ``doc_min = doc_max``, ``n = 1``, null binaries."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from splade_easy_spark.index.catalog import TOMB_TERM_ID
+    from splade_easy_spark.index.maintenance import delete
+    from splade_easy_spark.query.wand import _tombstone_blocks
+
+    seg_docs = 64
+    cfg = IndexConfig(
+        build_partitions=4, term_buckets=8, segment_docs=seg_docs, block_size=16
+    )
+    seed = 31
+    rng = random.Random(seed)
+    idx = str(tmp_path / "index")
+    build_index(spark, generate_transcripts(spark, num_convs=8, seed=seed), idx, cfg)
+    s = Searcher(spark, idx, cfg)
+    ids = {r["doc_int"]: r["doc_id"] for r in s.docs.select("doc_int", "doc_id").collect()}
+    top = max(ids)
+    assert top // seg_docs + 1 >= 3, "the corpus must span at least 3 segments"
+    dead = {
+        d
+        for b in range(seg_docs, top + 1, seg_docs)
+        for d in range(b - 3, b + 3)
+        if d in ids and rng.random() < 0.6
+    } | set(rng.sample(sorted(ids), 8))
+    delete(spark, idx, [ids[d] for d in sorted(dead)])
+
+    rows = _tombstone_blocks(s._deleted(), seg_docs).collect()
+    assert sorted(r["doc_min"] for r in rows) == sorted(dead)
+    for r in rows:
+        assert (r["seg"], r["term_id"], r["n"], r["doc_max"]) == (
+            r["doc_min"] // seg_docs, TOMB_TERM_ID, 1, r["doc_min"]
+        )
+        assert r["docs"] is None and r["wts"] is None and r["nwts"] is None
+
+    def same(a, b, key):
+        assert [key(r) for r in a] == [key(r) for r in b]
+        for x, y in zip(a, b):
+            assert abs(x["score"] - y["score"]) <= 1e-5 * max(1.0, abs(y["score"]))
+
+    preds = [
+        lambda: F.col("turn_idx") % rng.randint(2, 3) == rng.randint(0, 1),
+        lambda: F.col("role") == rng.choice(["user", "assistant"]),
+        lambda: F.col("doc_len") > rng.randint(4, 12),
+    ]
+    queries = [
+        {"query_id": q["query_id"], "text": q["text"]}
+        for q in generate_query_set(6, seed=seed)
+    ]
+    for use_cosine in (False, True):
+        pred = rng.choice(preds)()
+        for q in queries[:2]:
+            got = {
+                m: s.search(
+                    q["text"], top_k=5, method=m, use_cosine=use_cosine, doc_filter=pred
+                ).collect()
+                for m in ("wand", "sql")
+            }
+            same(got["wand"], got["sql"], lambda r: r["doc_id"])
+        got = {
+            m: s.search_many(
+                queries, top_k=5, method=m, use_cosine=use_cosine, doc_filter=pred
+            ).collect()
+            for m in ("wand", "sql")
+        }
+        assert got["sql"], "the filter must leave hits"
+        same(got["wand"], got["sql"], lambda r: (r["query_id"], r["rank"], r["doc_id"]))
+        assert not {r["doc_id"] for r in got["wand"]} & {ids[d] for d in dead}
