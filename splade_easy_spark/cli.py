@@ -14,7 +14,7 @@ points (``pyproject.toml:15-18``: ``ingest-dataset``, ``reshard``,
     python -m splade_easy_spark.cli curate  --input docs.parquet --output kept.parquet
     python -m splade_easy_spark.cli decontaminate --input docs.parquet \
         --reference evalset.parquet --output clean.parquet
-    python -m splade_easy_spark.cli migrate --index ./idx   # legacy layout → term ids
+    python -m splade_easy_spark.cli migrate --index ./idx   # upgrade an older index format
 """
 
 from __future__ import annotations
@@ -270,7 +270,11 @@ def cmd_console(args) -> int:
             top_k = int(line.split()[1])
             continue
         if line.startswith(":mode"):
-            method = line.split()[1]
+            mode = line.split()[1]
+            if mode in ("sql", "wand"):
+                method = mode
+            else:
+                print("modes: sql, wand")
             continue
         if line == ":cosine":
             cosine = not cosine
@@ -563,7 +567,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     bs.add_argument("--top-k", type=int, default=10)
     bs.add_argument("--cosine", action="store_true")
-    bs.add_argument("--method", default="wand", choices=["sql", "wand", "wand_nox"])
+    bs.add_argument("--method", default="wand", choices=["sql", "wand"])
     bs.add_argument(
         "--filter",
         help="SQL predicate over stored doc columns (candidate restriction, "

@@ -88,6 +88,18 @@ class IndexConfig:
     #: term-id collision, which rehashing with a new seed resolves.
     term_id_seed: int = 0
 
+    def layout(self) -> dict:
+        """The physical layout a build records in its manifest
+        (``Manifest.stamp_current``); rewrites read it back from there."""
+        return {
+            "segment_docs": self.segment_docs,
+            "block_size": self.block_size,
+            "term_buckets": self.term_buckets,
+            "build_partitions": self.build_partitions,
+            "pack_cosine": self.pack_cosine,
+            "term_id_seed": self.term_id_seed,
+        }
+
     def identity(self) -> dict:
         return {
             "analyzer": asdict(self.analyzer),

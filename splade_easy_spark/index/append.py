@@ -70,9 +70,10 @@ from pyspark.sql import functions as F
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.functions.bm25 import bm25_weight_expr, idf_expr
 from splade_easy_spark.functions.text import doc_id_expr, tokenize
-from splade_easy_spark.index.builder import _term_tf, pack_doc_terms
-from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr
+from splade_easy_spark.index.builder import _term_tf, pack_for
+from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr, term_id_expr
 from splade_easy_spark.index.docids import assign_doc_ints
+from splade_easy_spark.index.maintenance import writer_prologue
 
 
 def _assert_no_append_collisions(
@@ -107,6 +108,34 @@ def _assert_no_append_collisions(
             f"{pairs or 'within batch-new terms'}; rebuild with a "
             f"different IndexConfig.term_id_seed"
         )
+
+
+def _register_new_terms(
+    spark: SparkSession, cat: IndexCatalog, new_terms: DataFrame, id_seed: int
+) -> int:
+    """Append a batch's new vocabulary to ``term_stats`` behind the
+    collision gate; returns how many terms it registered."""
+    n = new_terms.count()
+    if n:
+        _assert_no_append_collisions(spark, cat, new_terms, id_seed)
+        new_terms.write.mode("append").parquet(cat.table_dir("term_stats"))
+    return n
+
+
+def _record_append(man, next_int: int, n_new: int, n_new_terms: int, t0: float) -> dict:
+    """Close a committed batch in the manifest, for both appenders: clear
+    the journal, advance the watermark, log the append with its ``seq``
+    (``maintenance._fresh_lineage`` orders appends against stage commits
+    by it), save.  Returns the appender's result."""
+    elapsed = round(time.time() - t0, 3)
+    man.data.pop("pending_append", None)
+    man.data["next_doc_int"] = next_int + n_new
+    man.data.setdefault("appends", []).append(
+        {"docs": n_new, "new_terms": n_new_terms, "at": time.time(),
+         "seq": man.next_seq(), "elapsed_sec": elapsed}
+    )
+    man.save()
+    return {"appended_docs": n_new, "new_terms": n_new_terms, "elapsed_sec": elapsed}
 
 
 def _commit_docs(cat: IndexCatalog, new_docs: DataFrame) -> None:
@@ -206,37 +235,13 @@ def append_documents(
     — never a scan of the existing index tables (except the column-pruned
     doc_id anti-join when ``dedupe=True``)."""
     cat = IndexCatalog(index_dir, config)
-    cfg = cat.config
     man = cat.manifest
     t0 = time.time()
-    # Settle crashed-swap dirs BEFORE anything reads or writes table dirs:
-    # a maintenance op killed between live.rename(__old) and
-    # staged.rename(live) leaves the live dir missing — without this,
-    # the migration heal below would see "no postings dir" and the
-    # append's write would recreate the table with only this batch's
-    # blocks (the one remaining copy sits in __old until a later GC
-    # deletes it).  Writer-side is the right side under the
-    # single-writer contract.
-    from splade_easy_spark.index.maintenance import (
-        heal_interrupted_migration,
-        heal_interrupted_swaps,
-    )
-
-    heal_interrupted_swaps(cat.index_dir)
-    _repair_pending(spark, cat)
-    # a migrate_postings that crashed between its dir swap and its stage
-    # commit leaves postings physically term_id-keyed while the layout
-    # flag below still says string keys — packing by the stale flag would
-    # write mixed-schema blocks whose docs never match the term_id-
-    # filtered scan.  Heal (journal-witnessed) or raise before packing.
-    heal_interrupted_migration(spark, cat)
+    writer_prologue(spark, cat)
+    cfg = cat.config
     stats = cat.corpus_stats(spark)
     n_docs_frozen, avgdl = int(stats["n_docs"]), float(stats["avgdl"] or 1.0)
-    next_int = man.data.get("next_doc_int")
-    if next_int is None:  # pre-tracking index: one-time max lookup
-        next_int = (
-            cat.read(spark, "docs").agg(F.max("doc_int").alias("m")).collect()[0]["m"] or -1
-        ) + 1
+    next_int = int(man.data["next_doc_int"])
 
     base = transcripts.select(
         doc_id_expr().alias("doc_id"),
@@ -331,41 +336,20 @@ def append_documents(
     ).write.mode("append").partitionBy("tb").parquet(cat.table_dir("doc_terms"))
 
     # pack postings straight from the in-flight frame (round 1 re-read the
-    # whole doc_terms table here — O(index) per batch).  The pack follows
-    # the INDEX's recorded layout, not the caller's config: appending
-    # term_id-keyed blocks into a legacy string-keyed table (or vice versa)
-    # would split every posting list across two incompatible schemas.
-    layout = cat.manifest.data.get("layout", {})
-    term_ids = bool(layout.get("postings_term_ids"))
-    id_seed = int(layout.get("term_id_seed", cfg.term_id_seed))
-    packed = pack_doc_terms(
-        with_norm.select("term", "doc_int", "weight", "norm"),
-        cfg.segment_docs,
-        cfg.block_size,
-        pack_cosine=layout.get("pack_cosine", cfg.pack_cosine),
-        term_ids=term_ids,
-        term_id_seed=id_seed,
-    )
+    # whole doc_terms table here — O(index) per batch)
+    packed = pack_for(with_norm.select("term", "doc_int", "weight", "norm"), cfg)
     packed.write.mode("append").partitionBy("seg").parquet(cat.table_dir("postings"))
 
     # register batch-new terms so query-time idf exists for them
-    from splade_easy_spark.index.catalog import term_id_expr
-
-    new_cols = [
+    new_terms = idf_map.where(F.col("is_new_term")).select(
         F.col("term"),
         F.col("batch_df").alias("df"),
         F.lit(None).cast("int").alias("max_tf"),
         F.col("idf"),
         term_bucket_expr(F.col("term"), cfg.term_buckets).alias("tb"),
-    ]
-    if term_ids:
-        new_cols.append(term_id_expr(F.col("term"), id_seed).alias("term_id"))
-    new_terms = idf_map.where(F.col("is_new_term")).select(*new_cols)
-    n_new_terms = new_terms.count()
-    if n_new_terms:
-        if term_ids:
-            _assert_no_append_collisions(spark, cat, new_terms, id_seed)
-        new_terms.write.mode("append").parquet(cat.table_dir("term_stats"))
+        term_id_expr(F.col("term"), cfg.term_id_seed).alias("term_id"),
+    )
+    n_new_terms = _register_new_terms(spark, cat, new_terms, cfg.term_id_seed)
     # COMMIT POINT: docs last — the batch becomes visible to the dedupe
     # anti-join (and thus "exists") only once every other table is durable
     _commit_docs(cat, new_docs)
@@ -374,15 +358,7 @@ def append_documents(
     idf_map.unpersist()
     new_docs.unpersist()  # releases the localCheckpoint blocks
 
-    man.data.pop("pending_append", None)
-    man.data["next_doc_int"] = int(next_int) + n_new
-    appended = man.data.setdefault("appends", [])
-    appended.append(
-        {"docs": n_new, "new_terms": n_new_terms, "at": time.time(),
-         "seq": man.next_seq(), "elapsed_sec": round(time.time() - t0, 3)}
-    )
-    man.save()
-    return {"appended_docs": n_new, "new_terms": n_new_terms, "elapsed_sec": round(time.time() - t0, 3)}
+    return _record_append(man, next_int, n_new, n_new_terms, t0)
 
 
 def refresh_stats(spark: SparkSession, index_dir: str, config: IndexConfig | None = None) -> dict:
@@ -392,10 +368,10 @@ def refresh_stats(spark: SparkSession, index_dir: str, config: IndexConfig | Non
     from splade_easy_spark.index.builder import _stage_postings, _stage_stats, _STAGE_TABLES
 
     cat = IndexCatalog(index_dir, config)
-    # writer-side op: heal a crashed append first — rebuilding postings
-    # over a journaled range would pack blocks spanning it and defeat the
-    # reader-side exclusion predicate (see maintenance._repair_pending_for_maintenance)
-    _repair_pending(spark, cat)
+    # heal a crashed append first — rebuilding postings over a journaled
+    # range would pack blocks spanning it and defeat the reader-side
+    # exclusion predicate (see maintenance._settle_journals)
+    writer_prologue(spark, cat)
     t0 = time.time()
     m1 = _stage_stats(spark, cat)
     cat.manifest.record_stage("stats", {t: t for t in _STAGE_TABLES["stats"]}, m1)
@@ -405,11 +381,5 @@ def refresh_stats(spark: SparkSession, index_dir: str, config: IndexConfig | Non
     for t in ["doc_terms", "postings", "doc_norms"]:
         shutil.rmtree(cat.table_dir(t), ignore_errors=True)
     m2 = _stage_postings(spark, cat)
-    # the rewritten postings use the current layout (term_id keys) even if
-    # the index predated it — record that, or later appends would pack
-    # legacy string-keyed blocks into a term_id-keyed table
-    lay = cat.manifest.data.setdefault("layout", {})
-    lay["postings_term_ids"] = True
-    lay["term_id_seed"] = cat.config.term_id_seed
     cat.manifest.record_stage("postings", {t: t for t in _STAGE_TABLES["postings"]}, m2)
     return {"elapsed_sec": round(time.time() - t0, 3), **m1}

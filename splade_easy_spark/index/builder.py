@@ -30,6 +30,7 @@ doc-int assigner needs no range-sampling pass.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass
 
@@ -41,6 +42,7 @@ from splade_easy_spark.functions.bm25 import bm25_weight_expr, idf_expr
 from splade_easy_spark.functions.text import doc_id_expr, term_tf_frame, tokenize
 from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr
 from splade_easy_spark.index.docids import assign_doc_ints
+from splade_easy_spark.index.manifest import FORMAT_VERSION
 
 #: packed postings block schema.  The term key is a 60-bit content hash
 #: (``catalog.term_id_py``) rather than the term string: a block row is a
@@ -55,9 +57,6 @@ POSTINGS_SCHEMA = (
     "doc_max LONG, max_weight DOUBLE, docs BINARY, wts BINARY, "
     "max_nweight DOUBLE, nwts BINARY"
 )
-#: pre-round-4 layout (term string per block row) — still packable so
-#: appends to an existing legacy index keep its schema consistent.
-POSTINGS_SCHEMA_LEGACY = POSTINGS_SCHEMA.replace("term_id LONG", "term STRING")
 
 
 @dataclass
@@ -278,29 +277,25 @@ def attach_doc_norm(weighted: DataFrame) -> DataFrame:
     return weighted.mapInArrow(kernel, schema=schema)
 
 
-_POSTINGS_PA_SCHEMAS: dict[bool, "object"] = {}
+@functools.cache
+def _postings_pa_schema():
+    import pyarrow as pa
 
-
-def _postings_pa_schema(term_ids: bool = True):
-    if term_ids not in _POSTINGS_PA_SCHEMAS:
-        import pyarrow as pa
-
-        _POSTINGS_PA_SCHEMAS[term_ids] = pa.schema(
-            [
-                ("seg", pa.int64()),
-                ("term_id", pa.int64()) if term_ids else ("term", pa.string()),
-                ("block_id", pa.int32()),
-                ("n", pa.int32()),
-                ("doc_min", pa.int64()),
-                ("doc_max", pa.int64()),
-                ("max_weight", pa.float64()),
-                ("docs", pa.binary()),
-                ("wts", pa.binary()),
-                ("max_nweight", pa.float64()),
-                ("nwts", pa.binary()),
-            ]
-        )
-    return _POSTINGS_PA_SCHEMAS[term_ids]
+    return pa.schema(
+        [
+            ("seg", pa.int64()),
+            ("term_id", pa.int64()),
+            ("block_id", pa.int32()),
+            ("n", pa.int32()),
+            ("doc_min", pa.int64()),
+            ("doc_max", pa.int64()),
+            ("max_weight", pa.float64()),
+            ("docs", pa.binary()),
+            ("wts", pa.binary()),
+            ("max_nweight", pa.float64()),
+            ("nwts", pa.binary()),
+        ]
+    )
 
 
 def _group_starts(rb) -> "object":
@@ -315,8 +310,7 @@ def _group_starts(rb) -> "object":
 
 
 def _pack_batch(
-    rb, block_size: int, segment_docs: int, pack_cosine: bool,
-    term_ids: bool = True, term_id_seed: int = 0,
+    rb, block_size: int, segment_docs: int, pack_cosine: bool, term_id_seed: int = 0
 ):
     """Pack an Arrow batch of (term_first, doc_int, weight[, nweight]) rows
     SORTED by (seg, term, doc_int) into block records.  The batch carries
@@ -325,9 +319,9 @@ def _pack_batch(
     first row and is null elsewhere, so the posting-grain Arrow hop ships
     ~4 bytes/row of string offsets instead of a full string per posting —
     the hop's bytes were the measured cap on build scaling (round 2).
-    Term strings materialize once per GROUP (``.as_py()``), never per row;
-    with ``term_ids`` the emitted key is the 60-bit content hash
-    (``catalog.term_id_py``), likewise computed once per group.
+    Term strings materialize once per GROUP (``.as_py()``), never per row,
+    and so does the emitted key, the 60-bit content hash
+    (``catalog.term_id_py``).
     With ``pack_cosine``, ``nweight`` = weight/‖doc‖ rides along so cosine
     scoring is the same dot-product kernel over the normalized stream (its
     block max is the cosine block-max bound); otherwise the nwts columns
@@ -338,7 +332,6 @@ def _pack_batch(
     from splade_easy_spark.index.catalog import term_id_py
     from splade_easy_spark.index.postings import varbyte_encode_with_sizes
 
-    tkey = "term_id" if term_ids else "term"
     term_col = rb.column("term_first")
     doc = rb.column("doc_int").to_numpy(zero_copy_only=False).astype(np.int64)
     wt = rb.column("weight").to_numpy(zero_copy_only=False).astype(np.float64)
@@ -352,9 +345,7 @@ def _pack_batch(
     gends = np.concatenate((change, [rb.num_rows]))
 
     # one term materialization per GROUP (never per row or per block)
-    tvals = [term_col[int(s)].as_py() for s in gstarts]
-    if term_ids:
-        tvals = [term_id_py(t, term_id_seed) for t in tvals]
+    tvals = [term_id_py(term_col[int(s)].as_py(), term_id_seed) for s in gstarts]
 
     # block tiling of the batch: every group [s, e) splits at s, s+bs, …;
     # consecutive block starts tile the whole batch, so every per-block
@@ -382,10 +373,6 @@ def _pack_batch(
     w32 = wt.astype(np.float32).tobytes()
     maxw = np.maximum.reduceat(wt, bstarts)
     segs = np.repeat(doc[gstarts] // segment_docs, nblk)
-    if term_ids:
-        tcol: object = pa.array(np.repeat(np.asarray(tvals, dtype=np.int64), nblk))
-    else:
-        tcol = pa.array(np.repeat(np.asarray(tvals, dtype=object), nblk))
     if nwt is not None:
         max_nw = np.maximum.reduceat(nwt, bstarts)
         n32 = nwt.astype(np.float32).tobytes()
@@ -395,7 +382,7 @@ def _pack_batch(
         nwts = [b""] * len(bstarts)
     arrays = [
         pa.array(segs),
-        tcol,
+        pa.array(np.repeat(np.asarray(tvals, dtype=np.int64), nblk)),
         pa.array(block_id.astype(np.int32)),
         pa.array((bends - bstarts).astype(np.int32)),
         pa.array(doc[bstarts]),
@@ -406,7 +393,7 @@ def _pack_batch(
         pa.array(max_nw),
         pa.array(nwts),
     ]
-    return pa.RecordBatch.from_arrays(arrays, schema=_postings_pa_schema(term_ids))
+    return pa.RecordBatch.from_arrays(arrays, schema=_postings_pa_schema())
 
 
 def pack_doc_terms(
@@ -439,8 +426,15 @@ def pack_doc_terms(
       sort the packer needs anyway — no extra exchange, no extra sort);
     * ``seg`` is not shipped at all (derived in-kernel from ``doc_int``);
     * ``nweight`` ships only when ``pack_cosine`` is on.
+
+    ``term_ids`` stays in the signature for callers that pass
+    ``term_id_seed`` positionally; postings keyed by the term string are a
+    retired layout (``maintenance.migrate_postings``), so it must be True.
     """
     import pyarrow as pa
+
+    if not term_ids:
+        raise ValueError("string-keyed postings are a retired layout: term_ids must be True")
     from pyspark.sql.window import Window
 
     cols = [
@@ -492,16 +486,19 @@ def pack_doc_terms(
                 continue
             last_start = int(idx[-1])
             complete, carry = rb.slice(0, last_start), rb.slice(last_start)
-            yield _pack_batch(
-                complete, block_size, segment_docs, pack_cosine, term_ids, term_id_seed
-            )
+            yield _pack_batch(complete, block_size, segment_docs, pack_cosine, term_id_seed)
         if carry is not None and carry.num_rows:
-            yield _pack_batch(
-                carry, block_size, segment_docs, pack_cosine, term_ids, term_id_seed
-            )
+            yield _pack_batch(carry, block_size, segment_docs, pack_cosine, term_id_seed)
 
-    return slim.mapInArrow(
-        packer, schema=POSTINGS_SCHEMA if term_ids else POSTINGS_SCHEMA_LEGACY
+    return slim.mapInArrow(packer, schema=POSTINGS_SCHEMA)
+
+
+def pack_for(dt: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """``pack_doc_terms`` with ``cfg``'s layout (writers pass the recorded
+    one, ``Manifest.layout_config``)."""
+    return pack_doc_terms(
+        dt, cfg.segment_docs, cfg.block_size,
+        pack_cosine=cfg.pack_cosine, term_id_seed=cfg.term_id_seed,
     )
 
 
@@ -541,17 +538,8 @@ def _stage_postings(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = N
         term_tf = _term_tf(docs, cfg)
 
     # Hot-term df threshold: observed during the stats stage's term_stats
-    # write (Zipfian head — roles/tool names by construction); the
-    # approxQuantile fallback only fires for indexes built before the
-    # threshold was recorded.
-    df_threshold = (
-        cat.manifest.data.get("stages", {})
-        .get("stats", {})
-        .get("metrics", {})
-        .get("hot_df_threshold")
-    )
-    if df_threshold is None:
-        df_threshold = tstats.approxQuantile("df", [cfg.hot_term_df_quantile], 0.001)[0]
+    # write (Zipfian head — roles/tool names by construction)
+    df_threshold = cat.manifest.data["stages"]["stats"]["metrics"]["hot_df_threshold"]
     tstats_sel = tstats.select("term", "df", "idf")
     small_vocab = stats["n_terms"] < 2_000_000
     tstats_b = F.broadcast(tstats_sel) if small_vocab else tstats_sel
@@ -626,12 +614,8 @@ def _stage_postings(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = N
     # carries norm (for the cosine-mode normalized weights), so it reuses
     # the same norms agg + SHUFFLE_HASH join the doc_terms write ran.
     def _write_postings() -> None:
-        packed = pack_doc_terms(
-            with_norm.select("term", "doc_int", "weight", "norm"),
-            cfg.segment_docs,
-            cfg.block_size,
-            pack_cosine=cfg.pack_cosine,
-            term_id_seed=cfg.term_id_seed,
+        packed = pack_for(
+            with_norm.select("term", "doc_int", "weight", "norm"), cfg
         ).sortWithinPartitions("term_id", "block_id")
         cat.write(packed, "postings", partition_by=["seg"])
 
@@ -688,6 +672,13 @@ def build_index(
     """
     cat = IndexCatalog(index_dir, config or IndexConfig())
     man = cat.manifest
+    if resume and man.path.exists():
+        from splade_easy_spark.index.maintenance import writer_prologue
+
+        writer_prologue(spark, cat)
+    else:
+        # a full build rewrites every table in the current format
+        man.data["format_version"] = FORMAT_VERSION
     man.set_identity(cat.config.identity())
     t0 = time.time()
     run, skipped = [], []
@@ -706,15 +697,7 @@ def build_index(
         metrics["elapsed_sec"] = round(time.time() - s0, 3)
         man.record_stage(stage, {t: t for t in _STAGE_TABLES[stage]}, metrics)
         run.append(stage)
-    man.data["layout"] = {
-        "segment_docs": cat.config.segment_docs,
-        "block_size": cat.config.block_size,
-        "term_buckets": cat.config.term_buckets,
-        "build_partitions": cat.config.build_partitions,
-        "pack_cosine": cat.config.pack_cosine,
-        "postings_term_ids": True,
-        "term_id_seed": cat.config.term_id_seed,
-    }
+    man.stamp_current(cat.config)
     stats = cat.corpus_stats(spark)
     # appends continue after the densely-assigned build ids (0..n_docs-1);
     # when the docs stage was skipped (resume), keep the appended watermark

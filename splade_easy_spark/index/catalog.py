@@ -12,9 +12,11 @@ touching the build or query code (SURVEY.md §1.4).  Table names are fixed:
 - ``postings``     packed blocks, hive-partitioned by doc segment:
                    seg, term_id (60-bit content hash, see ``term_id_py``),
                    block_id, n, doc_min, doc_max, max_weight,
-                   docs BINARY (varbyte deltas), wts BINARY (float32 LE)
-                   (WAND path; pre-round-4 indexes carry ``term`` STRING
-                   instead — readers detect the layout from the columns)
+                   docs BINARY (varbyte deltas), wts BINARY (float32 LE),
+                   max_nweight, nwts BINARY (the cosine stream; empty
+                   without ``pack_cosine``) — the WAND path
+                   (``manifest.FORMAT_VERSION`` names this layout; older
+                   ones are upgraded by ``maintenance.migrate_postings``)
 - ``term_stats``   term, df, max_tf, idf, tb, term_id
 - ``corpus_stats`` single row: n_docs, avgdl, total_tokens, n_terms
 - ``deleted``      doc_id, doc_int (tombstones; analog of deleted_ids.txt,
@@ -74,7 +76,7 @@ def term_id_py(term: str, seed: int = 0) -> int:
 
 def term_id_expr(term_col, seed: int = 0):
     """JVM-side ``term_id_py`` (same md5-prefix value, codegen'd — used by
-    the build pipeline and by the legacy-layout read path's projection)."""
+    the build, append and migrate to key ``term_stats``)."""
     src = (
         term_col.cast("string")
         if seed == 0

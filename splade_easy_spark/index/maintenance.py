@@ -19,16 +19,18 @@ next maintenance run).
 
 from __future__ import annotations
 
+import dataclasses
 import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
-from splade_easy_spark.index.builder import pack_doc_terms
+from splade_easy_spark.index.builder import pack_for
 from splade_easy_spark.index.catalog import IndexCatalog
+from splade_easy_spark.index.manifest import FORMAT_VERSION
 
 
 def _swap_in(cat: IndexCatalog, name: str, keep_old: bool = False) -> None:
@@ -252,115 +254,32 @@ def _fresh_lineage(cat: IndexCatalog, name: str) -> list[dict] | None:
     return info["files"]
 
 
-def _pack_layout(cat: IndexCatalog) -> tuple[dict, str]:
-    """(pack_doc_terms kwargs, postings term-key column) from the index's
-    recorded layout — maintenance rewrites must reproduce the layout the
-    index was built with (term_id vs legacy string keys, cosine stream
-    present or not), never the caller's config defaults."""
-    lay = cat.manifest.data.get("layout", {})
-    term_ids = bool(lay.get("postings_term_ids"))
-    return (
-        {
-            "pack_cosine": lay.get("pack_cosine", cat.config.pack_cosine),
-            "term_ids": term_ids,
-            "term_id_seed": int(lay.get("term_id_seed", cat.config.term_id_seed)),
-        },
-        "term_id" if term_ids else "term",
-    )
+def writer_prologue(spark: SparkSession, cat: IndexCatalog) -> None:
+    """The one prologue every writer entry point runs before it reads or
+    writes a table (append, delete, compact, reshard, optimize,
+    refresh_stats, a resumed build): settle crashed-swap dirs first, so
+    everything below sees final state (a live dir renamed away mid-swap
+    would otherwise be recreated holding only this writer's rows), then
+    the format gate, then the crashed-append and crashed-maintenance
+    journals (``_settle_journals``).  ``cat.config`` then carries the
+    index's recorded physical layout, so the writer packs and buckets the
+    way the index was built."""
+    heal_interrupted_swaps(cat.index_dir)
+    cat.manifest.require_current()
+    cat.config = cat.manifest.layout_config(cat.config)
+    _settle_journals(spark, cat)
 
 
-def _journal_maintenance(
-    man, op: str, tables: list[str], extra: dict | None = None
-) -> int:
-    """Durable journal entry that a maintenance op is about to swap the
-    named tables' dirs in.  A crash AFTER a swap lands but BEFORE
-    ``record_stage`` re-records lineage leaves the manifest's per-file
-    lineage describing the pre-rewrite files with no append entry to mark
-    it stale — ``stats()`` would report just-compacted rows and
-    ``optimize_postings`` would size partitions from ghosts (round-5
-    ADVICE low).  ``_fresh_lineage`` treats a table's presence in any
-    entry as lineage-stale, mirroring ``pending_append``; a table leaves
-    the journal only when a later stage commit records its CURRENT
-    lineage (``record_stage``) or the owning op withdraws its entry after
-    skipping every swap — so a different op completing cannot launder a
-    crashed op's stale tables (round-5 review finding).  Returns the
-    entry seq (the owner's withdrawal handle).  ``extra`` (dict) rides the
-    entry for parameters a crash-heal must reproduce exactly."""
-    return man.journal_maintenance(op, tables, extra)
-
-
-def heal_interrupted_migration(spark: SparkSession, cat: IndexCatalog) -> bool:
-    """Detect and finish a ``migrate_postings`` whose dir swaps landed but
-    whose stage commit did not (round-5 review finding): the postings are
-    physically ``term_id``-keyed while the recorded layout still claims
-    string keys, so the NEXT append would pack string-keyed blocks into
-    the term_id table — mixed schemas, and every appended doc's postings
-    silently unmatched by the term_id-filtered WAND scan.  The pending
-    ``migrate_postings`` journal entry is the witness that the swapped
-    files are a completed, collision-gated rewrite; healing = finishing
-    the layout flip + stage commit exactly as migrate would have.  A
-    physical/recorded mismatch WITHOUT that witness is unknown state and
-    raises instead of guessing.  Returns True when it healed."""
-    man = cat.manifest
-    lay = man.data.setdefault("layout", {})
-    flag = bool(lay.get("postings_term_ids"))
-    pdir = Path(cat.table_dir("postings"))
-    if not pdir.exists():
-        return False
-    try:
-        physical = "term_id" in spark.read.parquet(str(pdir)).columns
-    except Exception:
-        return False  # empty/unreadable dir: nothing to protect yet
-    if physical == flag:
-        return False
-    witness = next(
-        (
-            e
-            for e in man.pending_maintenance_entries()
-            if e.get("op") == "migrate_postings"
-        ),
-        None,
-    )
-    if physical and not flag and witness is not None:
-        lay["postings_term_ids"] = True
-        # the seed the crashed migrate actually packed with rides its
-        # journal entry — the healer's own config may use a different one
-        # (a fallback to the healer's seed covers only pre-seed-journal
-        # entries, written when configs could not diverge mid-migrate)
-        lay["term_id_seed"] = int(witness.get("seed", cat.config.term_id_seed))
-        lay["pack_cosine"] = bool(
-            lay.get("pack_cosine", cat.config.pack_cosine)
-        ) and ("norm" in cat.read(spark, "doc_terms").columns)
-        man.record_stage(
-            "migrate",
-            {"term_stats": "term_stats", "postings": "postings"},
-            {"healed_interrupted_migration": True},
-        )
-        return True
-    raise RuntimeError(
-        f"postings are physically {'term_id' if physical else 'string'}-keyed "
-        f"but the recorded layout says postings_term_ids={flag}, and no "
-        "pending migrate_postings journal explains it — refusing to write "
-        "mixed-schema blocks; investigate, then restore the table or re-run "
-        "migrate_postings"
-    )
-
-
-def _repair_pending_for_maintenance(spark: SparkSession, cat: IndexCatalog) -> None:
-    """Maintenance ops are writer-side: heal a crashed append BEFORE
-    rewriting anything.  Without this, optimize/compact would merge orphan
-    runs into blocks that SPAN the journaled doc_int range, breaking the
-    reader-side exclusion predicate's no-spanning invariant (which only
-    needs to hold while the journal exists — once the repair tombstones
-    the orphans, exact doc_int masking takes over and spanning is fine).
-    A half-committed layout migration is healed here too, for the same
-    reason: rewrites must see the true layout before repacking anything."""
+def _settle_journals(spark: SparkSession, cat: IndexCatalog) -> None:
+    """Heal a crashed append BEFORE rewriting anything.  Without this,
+    optimize/compact would merge orphan runs into blocks that SPAN the
+    journaled doc_int range, breaking the reader-side exclusion
+    predicate's no-spanning invariant (which only needs to hold while the
+    journal exists — once the repair tombstones the orphans, exact doc_int
+    masking takes over and spanning is fine)."""
     from splade_easy_spark.index.append import _repair_pending
 
-    # settle crashed-swap dirs FIRST so everything below sees final state
-    heal_interrupted_swaps(cat.index_dir)
     _repair_pending(spark, cat)
-    heal_interrupted_migration(spark, cat)
     # Single-writer contract: any journal entry still present belongs to a
     # CRASHED op, and with swaps settled the on-disk dirs ARE that op's
     # final state.  Re-recording current lineage for its tables is a true
@@ -394,6 +313,7 @@ def delete(spark: SparkSession, index_dir: str, doc_ids: list[str]) -> int:
     actually deleted (ids must exist and not already be tombstoned —
     cf. ``src/splade_easy/index.py:207-219``)."""
     cat = IndexCatalog(index_dir)
+    writer_prologue(spark, cat)
     docs = cat.read(spark, "docs")
     target = docs.where(F.col("doc_id").isin(doc_ids)).select("doc_id", "doc_int")
     existing = cat.read_deleted(spark)
@@ -409,8 +329,8 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig | None = No
     """Physically drop tombstoned docs from every table, clear tombstones.
     Weights/statistics frozen (see module docstring)."""
     cat = IndexCatalog(index_dir, config)
+    writer_prologue(spark, cat)
     cfg = cat.config
-    _repair_pending_for_maintenance(spark, cat)
     deleted = cat.read_deleted(spark)
     t0 = time.time()
     _gc_rewrite_dirs(cat)
@@ -432,13 +352,10 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig | None = No
     )
 
     dt_new = spark.read.parquet(cat.table_dir("doc_terms") + "__rewrite")
-    pack_kw, tkey = _pack_layout(cat)
-    packed = pack_doc_terms(
-        dt_new, cfg.segment_docs, cfg.block_size, **pack_kw
-    ).sortWithinPartitions(tkey, "block_id")
+    packed = pack_for(dt_new, cfg).sortWithinPartitions("term_id", "block_id")
     packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
 
-    _journal_maintenance(cat.manifest, "compact", ["docs", "doc_terms", "postings"])
+    cat.manifest.journal_maintenance("compact", ["docs", "doc_terms", "postings"])
     for t in ["docs", "doc_terms", "postings"]:
         _swap_in(cat, t)
     shutil.rmtree(cat.table_dir("deleted"), ignore_errors=True)
@@ -471,8 +388,8 @@ def reshard(
     ``src/splade_easy/reshard.py:22,102-115``) and ``rollback_reshard``
     restores it.  Returns before/after layout stats."""
     cat = IndexCatalog(index_dir, config)
+    writer_prologue(spark, cat)
     cfg = cat.config
-    _repair_pending_for_maintenance(spark, cat)
     t0 = time.time()
     _gc_rewrite_dirs(cat)
     parts = target_partitions or cfg.build_partitions
@@ -486,18 +403,16 @@ def reshard(
         cat.table_dir("doc_terms") + "__rewrite"
     )
     dt_new = spark.read.parquet(cat.table_dir("doc_terms") + "__rewrite")
-    pack_kw, tkey = _pack_layout(cat)
-    packed = pack_doc_terms(dt_new, seg_docs, bs, **pack_kw).sortWithinPartitions(
-        tkey, "block_id"
-    )
-    packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
     man = cat.manifest
-    prior_layout = dict(man.data.get("layout", {}))
-    _journal_maintenance(man, "reshard", ["doc_terms", "postings"])
+    packed = pack_for(
+        dt_new, dataclasses.replace(cfg, segment_docs=seg_docs, block_size=bs)
+    ).sortWithinPartitions("term_id", "block_id")
+    packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
+    prior_layout = dict(man.data["layout"])
+    man.journal_maintenance("reshard", ["doc_terms", "postings"])
     for t in ["doc_terms", "postings"]:
         _swap_in(cat, t, keep_old=keep_originals)
 
-    man.data.setdefault("layout", {})
     man.data["layout"].update(
         {"segment_docs": seg_docs, "block_size": bs, "build_partitions": parts}
     )
@@ -519,8 +434,9 @@ def rollback_reshard(index_dir: str) -> dict:
     Spark job); raises if no backup exists."""
     cat = IndexCatalog(index_dir)
     man = cat.manifest
+    man.require_current()
     backup = man.data.pop("reshard_backup", None)
-    pend_seq = _journal_maintenance(man, "rollback_reshard", ["doc_terms", "postings"])
+    pend_seq = man.journal_maintenance("rollback_reshard", ["doc_terms", "postings"])
     restored = []
     for t in ["doc_terms", "postings"]:
         live = Path(cat.table_dir(t))
@@ -557,6 +473,7 @@ def stats(spark: SparkSession, index_dir: str) -> dict:
     (``src/splade_easy/index.py:298-306``): live/deleted doc counts, table
     sizes and file counts."""
     cat = IndexCatalog(index_dir)
+    cat.manifest.require_current()
     corpus = cat.corpus_stats(spark)
     deleted = cat.read_deleted(spark)
     if deleted is None:
@@ -612,68 +529,75 @@ def stats(spark: SparkSession, index_dir: str) -> dict:
 def migrate_postings(
     spark: SparkSession, index_dir: str, config: IndexConfig | None = None
 ) -> dict:
-    """Weight-preserving migration of a legacy string-keyed postings table
-    to the int64 ``term_id`` layout (the round-4 analog of the reference's
-    token-id wire format, ``src/splade_easy/schema.fbs:14``).
+    """Upgrade an index in place to the current format
+    (``manifest.FORMAT_VERSION``).  This is the only entry point that
+    accepts an older index and the only code that knows the retired
+    layouts:
 
-    ``refresh_stats`` also migrates, but re-derives corpus statistics and
-    therefore CHANGES weights on an appended index (that is its job).
-    This op is the pure layout move: postings are repacked from the
-    existing ``doc_terms`` weights, so scores are byte-identical before
-    and after (same float32 values through the same packer), and
-    ``term_stats`` gains the ``term_id`` column behind the build's exact
-    collision gate.  No-op on already-migrated indexes.  Subsequent
-    appends pack term_id-keyed blocks (the recorded layout flips)."""
+    * postings keyed by the term string, or without the ``nwts`` cosine
+      stream: repacked from ``doc_terms`` through the build's packer, so
+      scores are identical before and after (same float32 weights);
+    * ``term_stats`` without ``term_id``: the id is added behind the
+      build's exact collision gate, hashed with the index's recorded
+      ``term_id_seed`` (this config's when it never recorded one);
+    * ``term_stats`` without ``max_tf`` (text indexes): a NULL column,
+      which is exact — ``Searcher._term_bounds`` reads NULL as the loose
+      tf→∞ bound;
+    * a manifest without ``next_doc_int``: ``max(doc_int) + 1``.
+
+    A ``reshard(keep_originals=True)`` backup is dropped: it holds
+    old-format tables.  The stage commit stamps the layout and the format.  Migrate reads
+    ``docs`` and ``doc_terms`` and never writes them, so a run that
+    crashed anywhere is finished by running it again: the repack starts
+    over from the same input.  A no-op on a current index.
+    ``refresh_stats`` is the alternative that re-derives statistics (and
+    so changes weights on an appended index)."""
     from splade_easy_spark.index.builder import _assert_no_term_id_collisions
     from splade_easy_spark.index.catalog import term_id_expr
 
     cat = IndexCatalog(index_dir, config)
     man = cat.manifest
-    lay = man.data.setdefault("layout", {})
-    if lay.get("postings_term_ids"):
-        return {"migrated": False, "reason": "already term_id layout"}
-    _repair_pending_for_maintenance(spark, cat)
-    if lay.get("postings_term_ids"):
-        # the repair found this migration's own swaps already on disk
-        # (crash between swap and stage commit) and finished the commit
-        return {"migrated": True, "healed_interrupted_migration": True}
+    if man.format_version == FORMAT_VERSION:
+        return {"migrated": False, "reason": f"already format {FORMAT_VERSION}"}
+    heal_interrupted_swaps(cat.index_dir)
+    _settle_journals(spark, cat)
     _gc_rewrite_dirs(cat)
     t0 = time.time()
-    seed = int(cat.config.term_id_seed)
+    # the recorded layout where there is one, this config where not
+    known = cat.config.layout()
+    cfg = dataclasses.replace(
+        cat.config, **{k: v for k, v in man.data.get("layout", {}).items() if k in known}
+    )
+    seed = cfg.term_id_seed
 
-    ts = cat.read(spark, "term_stats")
-    if "term_id" in ts.columns:
-        ts = ts.drop("term_id")
+    ts = cat.read(spark, "term_stats").drop("term_id")
+    if "max_tf" not in ts.columns and man.data.get("identity", {}).get("mode") != "vector":
+        ts = ts.withColumn("max_tf", F.lit(None).cast("int"))
     ts = ts.withColumn("term_id", term_id_expr(F.col("term"), seed))
     _assert_no_term_id_collisions(ts, seed)
     ts.write.parquet(cat.table_dir("term_stats") + "__rewrite")
 
     dt = cat.read(spark, "doc_terms")
-    # pre-nwts indexes have no norm column: migrate without the cosine
-    # stream (matching what the index could serve before)
-    pack_cosine = bool(lay.get("pack_cosine", cat.config.pack_cosine)) and (
-        "norm" in dt.columns
-    )
-    seg_docs = int(lay.get("segment_docs", cat.config.segment_docs))
-    bs = int(lay.get("block_size", cat.config.block_size))
-    sel = ["term", "doc_int", "weight"] + (["norm"] if "norm" in dt.columns else [])
-    packed = pack_doc_terms(
-        dt.select(*sel), seg_docs, bs,
-        pack_cosine=pack_cosine, term_ids=True, term_id_seed=seed,
-    ).sortWithinPartitions("term_id", "block_id")
+    # doc_terms without the denormalized norm cannot feed the cosine stream
+    cfg = dataclasses.replace(cfg, pack_cosine=cfg.pack_cosine and "norm" in dt.columns)
+    packed = pack_for(dt, cfg).sortWithinPartitions("term_id", "block_id")
     packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
 
-    # the seed rides the journal entry: a crash-heal by a writer running a
-    # DIFFERENT config must flip the layout to the seed these files were
-    # actually packed with, not its own
-    _journal_maintenance(
-        man, "migrate_postings", ["term_stats", "postings"], {"seed": seed}
-    )
+    next_doc_int = man.data.get("next_doc_int")
+    if next_doc_int is None:
+        top = cat.read(spark, "docs").agg(F.max("doc_int")).collect()[0][0]
+        next_doc_int = (-1 if top is None else int(top)) + 1
+
+    man.journal_maintenance("migrate_postings", ["term_stats", "postings"])
     for t in ["term_stats", "postings"]:
         _swap_in(cat, t)
-    lay["postings_term_ids"] = True
-    lay["term_id_seed"] = seed
-    lay["pack_cosine"] = pack_cosine
+    # a reshard backup holds old-format postings: a rollback would put
+    # them back under the new format
+    man.data.pop("reshard_backup", None)
+    for t in ["doc_terms", "postings"]:
+        shutil.rmtree(cat.table_dir(t) + "__backup", ignore_errors=True)
+    man.data["next_doc_int"] = int(next_doc_int)
+    man.stamp_current(cfg)
     metrics = {"elapsed_sec": round(time.time() - t0, 3)}
     man.record_stage(
         "migrate", {"term_stats": "term_stats", "postings": "postings"}, metrics
@@ -712,13 +636,12 @@ def optimize_postings(
     import pandas as pd
 
     from splade_easy_spark.index.builder import POSTINGS_SCHEMA
-    from splade_easy_spark.index.postings import pack_postings, varbyte_decode
+    from splade_easy_spark.index.postings import pack_postings, unpack_blocks
 
     cat = IndexCatalog(index_dir, config)
-    _repair_pending_for_maintenance(spark, cat)
+    writer_prologue(spark, cat)
     man = cat.manifest
-    layout = man.data.get("layout", {})
-    block_size = int(layout.get("block_size", cat.config.block_size))
+    block_size = cat.config.block_size
     t0 = time.time()
     _gc_rewrite_dirs(cat)
 
@@ -751,62 +674,37 @@ def optimize_postings(
     pend_seqs: list[int] = []
     if frag_segs:
         src = cat.read(spark, "postings").where(F.col("seg").isin(frag_segs))
-        # pre-nwts indexes (built before the cosine stream existed) have no
-        # nwts/max_nweight columns at all — Searcher supports them (SQL
-        # cosine fallback), so optimize must too: merge without the stream
-        # and emit the legacy schema so swapped partitions match the rest
-        # of the table.
-        has_nwts_col = "nwts" in src.columns
-        # the table's term key: int64 term_id (round-4 layout) or the
-        # legacy term string — merge whichever the index carries
-        tkey = "term_id" if "term_id" in src.columns else "term"
-        from splade_easy_spark.index.builder import POSTINGS_SCHEMA_LEGACY
-
-        base_schema = POSTINGS_SCHEMA if tkey == "term_id" else POSTINGS_SCHEMA_LEGACY
         out_cols = [
-            "seg", tkey, "block_id", "n", "doc_min", "doc_max",
-            "max_weight", "docs", "wts",
-        ] + (["max_nweight", "nwts"] if has_nwts_col else [])
-        out_schema = (
-            base_schema
-            if has_nwts_col
-            else base_schema.split(", max_nweight")[0]
-        )
+            "seg", "term_id", "block_id", "n", "doc_min", "doc_max",
+            "max_weight", "docs", "wts", "max_nweight", "nwts",
+        ]
 
         def _merge_groups(pdf: pd.DataFrame):
             """Repack each complete (seg, term) group of block-run rows."""
-            for (seg, term), g in pdf.groupby(["seg", tkey], sort=False):
+            for (seg, term), g in pdf.groupby(["seg", "term_id"], sort=False):
                 g = g.sort_values(["doc_min", "block_id"], kind="stable")
-                nbufs = g["nwts"] if has_nwts_col else [None] * len(g)
-                docs_cat, wts_cat, nwts_cat = [], [], []
-                for dbuf, wbuf, nbuf, n in zip(g["docs"], g["wts"], nbufs, g["n"]):
-                    deltas = varbyte_decode(dbuf, int(n))
-                    docs_cat.append(np.cumsum(deltas.astype(np.int64)))
-                    wts_cat.append(np.frombuffer(wbuf, dtype=np.float32))
-                    if nbuf is not None and len(nbuf):
-                        nwts_cat.append(np.frombuffer(nbuf, dtype=np.float32))
-                if 0 < len(nwts_cat) < len(docs_cat):
+                docs, wts = unpack_blocks(g["docs"], g["wts"], g["n"])
+                n_cos = sum(1 for b in g["nwts"] if b is not None and len(b))
+                if 0 < n_cos < len(g):
                     # some runs carry the cosine stream and some don't —
                     # merging would silently write empty nwts and corrupt
                     # cosine-WAND for this term (round-3 ADVICE): refuse.
                     raise ValueError(
                         f"optimize_postings: (seg={seg}, term={term!r}) mixes "
                         f"runs with and without the nwts cosine stream "
-                        f"({len(nwts_cat)}/{len(docs_cat)} runs carry it); "
+                        f"({n_cos}/{len(g)} runs carry it); "
                         "the index is corrupt or was appended with an "
                         "inconsistent pack_cosine setting"
                     )
-                docs = np.concatenate(docs_cat)
-                wts = np.concatenate(wts_cat).astype(np.float64)
                 nwts = (
-                    np.concatenate(nwts_cat).astype(np.float64)
-                    if nwts_cat
+                    np.frombuffer(b"".join(g["nwts"]), dtype=np.float32).astype(np.float64)
+                    if n_cos
                     else None
                 )
                 out: dict[str, list] = {k: [] for k in out_cols}
                 for b in pack_postings(docs, wts, block_size, nweights=nwts):
                     out["seg"].append(int(seg))
-                    out[tkey].append(term)
+                    out["term_id"].append(term)
                     out["block_id"].append(b["block_id"])
                     out["n"].append(b["n"])
                     out["doc_min"].append(b["doc_min"])
@@ -814,9 +712,8 @@ def optimize_postings(
                     out["max_weight"].append(b["max_weight"])
                     out["docs"].append(b["docs"])
                     out["wts"].append(b["wts"])
-                    if has_nwts_col:
-                        out["max_nweight"].append(b.get("max_nweight", 0.0))
-                        out["nwts"].append(b.get("nwts", b""))
+                    out["max_nweight"].append(b.get("max_nweight", 0.0))
+                    out["nwts"].append(b.get("nwts", b""))
                 yield pd.DataFrame(out)
 
         def merge_runs(batches):
@@ -833,8 +730,8 @@ def optimize_postings(
                 # rows arrive sorted by (seg, term): the last (seg, term)
                 # pair may continue in the next batch — hold it back
                 last_seg = b["seg"].iloc[-1]
-                last_term = b[tkey].iloc[-1]
-                tail = (b["seg"] == last_seg) & (b[tkey] == last_term)
+                last_term = b["term_id"].iloc[-1]
+                tail = (b["seg"] == last_seg) & (b["term_id"] == last_term)
                 complete, carry = b[~tail], b[tail]
                 if len(complete):
                     yield from _merge_groups(complete)
@@ -844,13 +741,13 @@ def optimize_postings(
         staged = post_dir.with_name(post_dir.name + "__rewrite")
         (
             src.repartition(F.col("seg"))
-            .sortWithinPartitions("seg", tkey)
-            .mapInPandas(merge_runs, schema=out_schema)
-            .sortWithinPartitions(tkey, "block_id")
+            .sortWithinPartitions("seg", "term_id")
+            .mapInPandas(merge_runs, schema=POSTINGS_SCHEMA)
+            .sortWithinPartitions("term_id", "block_id")
             .write.partitionBy("seg")
             .parquet(str(staged))
         )
-        pend_seqs.append(_journal_maintenance(man, "optimize", ["postings"]))
+        pend_seqs.append(man.journal_maintenance("optimize", ["postings"]))
         # per-partition swap: only the fragmented seg dirs move
         for s in frag_segs:
             new = staged / f"seg={s}"
@@ -874,7 +771,7 @@ def optimize_postings(
             .write.partitionBy("tb")
             .parquet(str(staged))
         )
-        pend_seqs.append(_journal_maintenance(man, "optimize", ["doc_terms"]))
+        pend_seqs.append(man.journal_maintenance("optimize", ["doc_terms"]))
         for t in frag_tbs:
             new = staged / f"tb={t}"
             if not new.exists():

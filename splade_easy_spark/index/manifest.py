@@ -18,6 +18,7 @@ commits; the seam is ``IndexCatalog`` in ``catalog.py``.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -27,8 +28,21 @@ from typing import Any
 
 import pyarrow.parquet as pq
 
+from splade_easy_spark.config import IndexConfig
+
 MANIFEST_NAME = "_manifest.json"
-FORMAT_VERSION = 1
+#: on-disk format the readers and writers understand.  Format 2: postings
+#: keyed by ``term_id`` and always carrying the ``nwts``/``max_nweight``
+#: columns (empty when the index packs no cosine stream); ``term_stats``
+#: with ``term_id`` (and ``max_tf`` on text indexes); a manifest with
+#: ``next_doc_int`` and the build's ``layout`` (``IndexConfig.layout``).
+#: Older indexes are upgraded by ``migrate_postings``, the only code that
+#: knows the retired layouts.
+FORMAT_VERSION = 2
+#: the layout fields that decide how the tables are laid out on disk
+#: (``IndexConfig.layout`` also records ``build_partitions``, which only
+#: sets a writer's parallelism)
+PHYSICAL_LAYOUT = ("segment_docs", "block_size", "term_buckets", "pack_cosine", "term_id_seed")
 
 
 def _hash_file(path: Path, chunk: int = 1 << 20) -> str:
@@ -91,6 +105,47 @@ class Manifest:
         if self.path.exists():
             self.data = json.loads(self.path.read_text())
 
+    # -- format ----------------------------------------------------------
+    @property
+    def format_version(self) -> int:
+        """The recorded format (manifests written before the field
+        existed are format 1)."""
+        return int(self.data.get("format_version", 1))
+
+    def require_current(self) -> None:
+        """The format gate: every reader and writer entry point except
+        ``migrate_postings`` runs it, so no other code path ever sees an
+        older layout."""
+        v = self.format_version
+        if v > FORMAT_VERSION:
+            raise RuntimeError(
+                f"index {self.index_dir} is format {v}, newer than this "
+                f"engine's format {FORMAT_VERSION}: upgrade splade_easy_spark"
+            )
+        if v < FORMAT_VERSION:
+            raise RuntimeError(
+                f"index {self.index_dir} is format {v}; this engine reads "
+                f"format {FORMAT_VERSION}. Upgrade it in place with: "
+                f"python -m splade_easy_spark.cli migrate --index {self.index_dir}"
+            )
+
+    def stamp_current(self, config: IndexConfig) -> None:
+        """Record the layout the tables were packed with (``config``'s) and
+        mark the index as the current format (the caller saves)."""
+        self.data["layout"] = config.layout()
+        self.data["format_version"] = FORMAT_VERSION
+
+    def layout_config(self, config: IndexConfig) -> IndexConfig:
+        """``config`` with the physical layout the index was built with —
+        segment width, block size, term buckets, cosine stream, term_id
+        seed — so every reader and rewrite follows the recorded layout,
+        whatever the caller's config says.  A build that has not finished
+        yet has recorded none: its config is the layout."""
+        lay = self.data.get("layout", {})
+        return dataclasses.replace(
+            config, **{k: lay[k] for k in PHYSICAL_LAYOUT if k in lay}
+        )
+
     # -- queries ---------------------------------------------------------
     def stage_complete(self, stage: str) -> bool:
         return stage in self.data["stages"]
@@ -137,28 +192,24 @@ class Manifest:
             return []
         return [pend] if isinstance(pend, dict) else list(pend)
 
-    def journal_maintenance(
-        self, op: str, tables: list[str], extra: dict | None = None
-    ) -> int:
-        """Append a journal entry declaring which tables' lineage the op's
-        imminent dir swaps will invalidate.  Entries are per-op (a second
-        op crashing cannot be healed by a first op's commit): each lives
-        until every one of its tables has fresh post-swap lineage recorded
+    def journal_maintenance(self, op: str, tables: list[str]) -> int:
+        """Append a durable journal entry declaring which tables' lineage
+        the op's imminent dir swaps will invalidate.  A crash AFTER a swap
+        lands but BEFORE ``record_stage`` re-records lineage would
+        otherwise leave per-file lineage describing the pre-rewrite files
+        with nothing marking it stale (``stats()`` would report
+        just-compacted rows, ``optimize_postings`` would size partitions
+        from ghosts).  ``maintenance._fresh_lineage`` treats a table in any
+        entry as lineage-stale.  Entries are per-op (a second op crashing
+        cannot be healed by a first op's commit): each lives until every
+        one of its tables has fresh post-swap lineage recorded
         (``record_stage``), or until its owner withdraws it
-        (``clear_maintenance`` — no swaps happened).  ``extra`` carries
-        op parameters a crash-heal must reproduce exactly (e.g. the
-        term_id seed a migrate packed with — the healer's own config may
-        differ).  Returns the entry's seq (the owner's handle)."""
+        (``clear_maintenance`` — no swaps happened).  Returns the entry's
+        seq (the owner's handle)."""
         entries = self.pending_maintenance_entries()
         seq = self.next_seq()
         entries.append(
-            {
-                "op": op,
-                "tables": sorted(tables),
-                "at": time.time(),
-                "seq": seq,
-                **(extra or {}),
-            }
+            {"op": op, "tables": sorted(tables), "at": time.time(), "seq": seq}
         )
         self.data["pending_maintenance"] = entries
         self.save()

@@ -24,9 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
-from splade_easy_spark.index.builder import pack_doc_terms
+from splade_easy_spark.index.append import _record_append, _register_new_terms
+from splade_easy_spark.index.builder import pack_for
 from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr
 from splade_easy_spark.index.docids import assign_doc_ints
+from splade_easy_spark.index.maintenance import writer_prologue
 
 
 def vector_query_terms(token_ids, weights) -> list[tuple[str, float]]:
@@ -120,12 +122,8 @@ def build_vector_index(
         "doc_terms",
         partition_by=["tb"],
     )
-    packed = pack_doc_terms(
-        doc_terms.select("term", "doc_int", "weight", "norm"),
-        cfg.segment_docs,
-        cfg.block_size,
-        pack_cosine=cfg.pack_cosine,
-        term_id_seed=cfg.term_id_seed,
+    packed = pack_for(
+        doc_terms.select("term", "doc_int", "weight", "norm"), cfg
     ).sortWithinPartitions("term_id", "block_id")
     cat.write(packed, "postings", partition_by=["seg"])
     doc_terms_raw.unpersist()
@@ -134,15 +132,7 @@ def build_vector_index(
         {"doc_terms": "doc_terms", "postings": "postings"},
         {"n_postings": cat.table_rows("doc_terms")},
     )
-    man.data["layout"] = {
-        "segment_docs": cfg.segment_docs,
-        "block_size": cfg.block_size,
-        "term_buckets": cfg.term_buckets,
-        "build_partitions": cfg.build_partitions,
-        "pack_cosine": cfg.pack_cosine,
-        "postings_term_ids": True,
-        "term_id_seed": cfg.term_id_seed,
-    }
+    man.stamp_current(cfg)
     man.data["next_doc_int"] = int(agg["n"])
     man.save()
     return {
@@ -170,24 +160,17 @@ def append_vector_documents(
     appender)."""
     from pyspark import StorageLevel
 
-    from splade_easy_spark.index.builder import pack_doc_terms
-
     cat = IndexCatalog(index_dir, config)
-    cfg = cat.config
     man = cat.manifest
     t0 = time.time()
     if man.data.get("identity", {}).get("mode") != "vector":
         raise ValueError("append_vector_documents requires a vector-mode index")
-    # heal a previous crashed append (same docs-last protocol as the text
-    # appender — see index/append.py module docstring, crash atomicity)
-    from splade_easy_spark.index.append import _repair_pending
-
-    _repair_pending(spark, cat)
-    next_int = man.data.get("next_doc_int")
-    if next_int is None:
-        next_int = (
-            cat.read(spark, "docs").agg(F.max("doc_int").alias("m")).collect()[0]["m"] or -1
-        ) + 1
+    # the text appender's prologue: crashed swaps, the format gate, and a
+    # previous crashed append (same docs-last protocol — see
+    # index/append.py module docstring, crash atomicity)
+    writer_prologue(spark, cat)
+    cfg = cat.config
+    next_int = int(man.data["next_doc_int"])
 
     cols = documents.columns
     base = documents.select(
@@ -244,17 +227,7 @@ def append_vector_documents(
     doc_terms.repartition(min(cfg.build_partitions, 8), "tb").sortWithinPartitions(
         "term", "doc_int"
     ).write.mode("append").partitionBy("tb").parquet(cat.table_dir("doc_terms"))
-    layout = man.data.get("layout", {})
-    term_ids = bool(layout.get("postings_term_ids"))
-    id_seed = int(layout.get("term_id_seed", cfg.term_id_seed))
-    packed = pack_doc_terms(
-        doc_terms.select("term", "doc_int", "weight", "norm"),
-        cfg.segment_docs,
-        cfg.block_size,
-        pack_cosine=layout.get("pack_cosine", cfg.pack_cosine),
-        term_ids=term_ids,
-        term_id_seed=id_seed,
-    )
+    packed = pack_for(doc_terms.select("term", "doc_int", "weight", "norm"), cfg)
     packed.write.mode("append").partitionBy("seg").parquet(cat.table_dir("postings"))
 
     # register batch-new terms (df/max_weight at batch grain)
@@ -265,18 +238,9 @@ def append_vector_documents(
         .agg(F.count("*").alias("df"), F.max("weight").alias("max_weight"))
         .join(cat.read(spark, "term_stats").select("term"), "term", "left_anti")
         .withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
+        .withColumn("term_id", term_id_expr(F.col("term"), cfg.term_id_seed))
     )
-    if term_ids:
-        tstats_new = tstats_new.withColumn(
-            "term_id", term_id_expr(F.col("term"), id_seed)
-        )
-    n_new_terms = tstats_new.count()
-    if n_new_terms:
-        if term_ids:
-            from splade_easy_spark.index.append import _assert_no_append_collisions
-
-            _assert_no_append_collisions(spark, cat, tstats_new, id_seed)
-        tstats_new.write.mode("append").parquet(cat.table_dir("term_stats"))
+    n_new_terms = _register_new_terms(spark, cat, tstats_new, cfg.term_id_seed)
     # COMMIT POINT: docs last (crash before this line → the pending journal
     # tombstones the orphan range on the next append); same seam as the
     # text appender so crash tests can inject here
@@ -285,16 +249,4 @@ def append_vector_documents(
     _commit_docs(cat, new_docs.drop("token_ids", "weights"))
     doc_terms_raw.unpersist()
     new_docs.unpersist()
-
-    man.data.pop("pending_append", None)
-    man.data["next_doc_int"] = int(next_int) + n_new
-    man.data.setdefault("appends", []).append(
-        {"docs": n_new, "new_terms": n_new_terms, "at": time.time(),
-         "elapsed_sec": round(time.time() - t0, 3)}
-    )
-    man.save()
-    return {
-        "appended_docs": n_new,
-        "new_terms": n_new_terms,
-        "elapsed_sec": round(time.time() - t0, 3),
-    }
+    return _record_append(man, next_int, n_new, n_new_terms, t0)

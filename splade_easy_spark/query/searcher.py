@@ -32,6 +32,12 @@ docs join ends in sort+limit, a TakeOrderedAndProject over at most k
 rows rather than a sampled range sort.  ``search`` is then four jobs on
 the SQL path (query broadcast, scoring map stage, top-k, docs join) and
 three on the WAND path (postings exchange, kernel top-k, docs join).
+
+Opening a searcher runs the format gate (``Manifest.require_current``) and
+reads the recorded layout (segment width, term buckets, cosine stream,
+term_id seed) and the snapshot watermark from the manifest once; no
+search call inspects a table's columns to find out which layout it is
+reading.
 """
 
 from __future__ import annotations
@@ -81,6 +87,11 @@ def analyze_query(
     return sorted(out.items())
 
 
+def _check_method(method: str) -> None:
+    if method not in ("sql", "wand"):
+        raise ValueError(f"unknown search method {method!r}: use 'sql' or 'wand'")
+
+
 @dataclass
 class SearchResultSchema:
     """Column contract of search results — the reference's SearchResult
@@ -106,7 +117,6 @@ class Searcher:
     ):
         self.spark = spark
         self.cat = IndexCatalog(index_dir, config)
-        self.config = self.cat.config
         # a crash inside optimize_postings' per-partition swap leaves a
         # `seg=N__old` dir that breaks Hive partition inference for every
         # query on the table — heal (rename-only, one listdir per table,
@@ -115,6 +125,8 @@ class Searcher:
 
         #: partition dirs this open restored or removed (usually empty)
         self.healed: list[str] = heal_interrupted_swaps(index_dir)
+        man = self.cat.manifest
+        man.require_current()
         #: per-call tables' schemas, pinned at their first read (see _read)
         self._schemas: dict[str, StructType] = {}
         # SNAPSHOT BOUND: this searcher serves the index as of open.
@@ -128,11 +140,14 @@ class Searcher:
         # A pushed `doc_int < watermark` predicate on every read path
         # excludes all three uniformly — no writes, no repair race with a
         # healthy writer, works on read-only replicas.  The writer's own
-        # _repair_pending remains the sole healer.  Pre-watermark indexes
-        # (none built since round 2) read unbounded, as before.
-        snap = self.cat.manifest.data.get("next_doc_int")
-        self._snapshot_max: int | None = int(snap) if snap is not None else None
-        man_identity = self.cat.manifest.data.get("identity", {})
+        # _repair_pending remains the sole healer.
+        self._snapshot_max = int(man.data["next_doc_int"])
+        # the caller's analyzer and BM25 settings over the layout recorded
+        # at build: doc segment width, term buckets, whether the cosine
+        # stream is packed, and the seed of the postings term_id hash
+        self.config = man.layout_config(self.cat.config)
+        self.term_id_seed = self.config.term_id_seed
+        man_identity = man.data.get("identity", {})
         ours = self.cat.config.identity()
         if man_identity and man_identity.get("analyzer_hash") != ours["analyzer_hash"]:
             raise ValueError(
@@ -142,22 +157,11 @@ class Searcher:
         self.stats = self.cat.corpus_stats(spark)
         self.doc_terms = self.cat.read(spark, "doc_terms")
         self.docs = self.cat.read(spark, "docs")
-        if self._snapshot_max is not None:
-            # one consistent as-of-open view for ALL read paths (search,
-            # point get, doc_vector): un-acknowledged rows never score,
-            # never occupy a top-k slot, never surface in lookups
-            self.doc_terms = self.doc_terms.where(
-                F.col("doc_int") < self._snapshot_max
-            )
-            self.docs = self.docs.where(F.col("doc_int") < self._snapshot_max)
-        # seed of the postings term_id hash (catalog.term_id_py) — recorded
-        # at build; legacy pre-term_id indexes never recorded one, and the
-        # WAND path detects their layout from the postings columns
-        self.term_id_seed = int(
-            self.cat.manifest.data.get("layout", {}).get(
-                "term_id_seed", self.config.term_id_seed
-            )
-        )
+        # one consistent as-of-open view for ALL read paths (search, point
+        # get, doc_vector): un-acknowledged rows never score, never occupy
+        # a top-k slot, never surface in lookups
+        self.doc_terms = self.doc_terms.where(F.col("doc_int") < self._snapshot_max)
+        self.docs = self.docs.where(F.col("doc_int") < self._snapshot_max)
         for name in ("postings", "term_stats"):
             if Path(self.cat.table_dir(name)).exists():
                 self._read(name)
@@ -189,24 +193,20 @@ class Searcher:
         return self._read("deleted") if self.cat.has_deleted() else None
 
     def _postings(self) -> DataFrame:
-        post = self._read("postings")
-        if self._snapshot_max is not None:
-            # the snapshot bound at block grain, ROW-EXACT overall: drop
-            # blocks whose every doc is post-watermark (`doc_min >= W` —
-            # fresh append runs always open past the previous max, so an
-            # in-flight/crashed batch's runs are excluded here, pushed to
-            # parquet row-group stats), keep every block containing ANY
-            # pre-watermark doc, and let the kernel mask `doc_int >= W`
-            # after decode for blocks that SPAN the watermark.  Spanning
-            # blocks are legal: a concurrent optimize_postings merges the
-            # tail segment's runs — including runs appended after this
-            # reader opened — into blocks with doc_min < W <= doc_max, and
-            # `_postings()` relists files per search, so a long-lived
-            # reader does see them (round-4 used `doc_max < W` here and
-            # silently dropped those blocks' committed pre-snapshot
-            # postings; round-5 ADVICE high).
-            post = post.where(F.col("doc_min") < self._snapshot_max)
-        return post
+        # the snapshot bound at block grain, ROW-EXACT overall: drop blocks
+        # whose every doc is post-watermark (`doc_min >= W` — fresh append
+        # runs always open past the previous max, so an in-flight/crashed
+        # batch's runs are excluded here, pushed to parquet row-group
+        # stats), keep every block containing ANY pre-watermark doc, and
+        # let the kernel mask `doc_int >= W` after decode for blocks that
+        # SPAN the watermark.  Spanning blocks are legal: a concurrent
+        # optimize_postings merges the tail segment's runs — including
+        # runs appended after this reader opened — into blocks with
+        # doc_min < W <= doc_max, and `_postings()` relists files per
+        # search, so a long-lived reader does see them (round-4 used
+        # `doc_max < W` here and silently dropped those blocks' committed
+        # pre-snapshot postings; round-5 ADVICE high).
+        return self._read("postings").where(F.col("doc_min") < self._snapshot_max)
 
     #: skip the driver-side vocabulary map past this many distinct terms —
     #: at web scale term_stats can hold 10^8+ rows and a driver collect of
@@ -236,28 +236,18 @@ class Searcher:
         """
         if self._tb_cache != "unset":
             return self._tb_cache  # type: ignore[return-value]
-        if self._snapshot_max is None:
-            # legacy snapshot-less index: reads are unbounded, so a term
-            # appended AFTER this cache is built would serve postings while
-            # the cache calls it OOV — the exactness proof above needs the
-            # as-of-open bound.  No bounds, no pruning, no OOV drop.
-            self._tb_cache = None
-            return None
         if self.cat.table_rows("term_stats") > self.TERM_BOUNDS_MAX_VOCAB:
             self._tb_cache = None
             return None
         ts = self._read("term_stats")
         p = self.config.bm25
-        loose = F.lit(p.k1 + 1.0)  # tf→∞ limit: always an upper bound
-        if "max_tf" in ts.columns:
-            # append registers batch-new terms with max_tf=NULL
-            # (append.py:338) — fall back to the loose bound per row
-            mtf = F.col("max_tf").cast("double")
-            comp = F.coalesce(
-                mtf * (p.k1 + 1.0) / (mtf + p.k1 * (1.0 - p.b)), loose
-            )
-        else:  # pre-max_tf stats layout
-            comp = loose
+        # append registers batch-new terms with max_tf=NULL, and migrate
+        # adds a NULL max_tf to older stats: the tf→∞ limit k1+1 is always
+        # an upper bound, so a NULL row falls back to it
+        mtf = F.col("max_tf").cast("double")
+        comp = F.coalesce(
+            mtf * (p.k1 + 1.0) / (mtf + p.k1 * (1.0 - p.b)), F.lit(p.k1 + 1.0)
+        )
         rows = ts.select("term", (F.col("idf") * comp).alias("ub")).collect()
         # a null bound must KEEP the term (keeping is always exact)
         self._tb_cache = {
@@ -379,8 +369,8 @@ class Searcher:
         ``method='wand'``: packed-postings block-max kernel — identical
         results, pruned physical work (see query/wand.py).  Cosine mode
         runs the same kernel over the normalized weight stream packed at
-        build time (indexes built before that stream existed silently fall
-        back to the SQL path).
+        build time (an index built with ``pack_cosine=False`` answers
+        cosine through the SQL path).
 
         ``doc_filter``: filtered retrieval — a predicate over the stored
         doc columns (conv_id, turn_idx, role, tool, ts, doc_len) that
@@ -398,27 +388,16 @@ class Searcher:
         the path for SELECTIVE filters, where the mask is small and the
         kernel's pruning does proportionally less work.
         """
+        _check_method(method)
         terms = analyze_query(query, self.config) if isinstance(query, str) else query
         if not terms:
             return self._no_hits(return_text)
         deleted = self._deleted()
+        if use_cosine and not self.config.pack_cosine:
+            method = "sql"  # no normalized weight stream: cosine via SQL
         if method == "wand":
             from splade_easy_spark.query.wand import wand_search_scores
 
-            postings = self._postings()
-            if use_cosine and (
-                "nwts" not in postings.columns
-                or not self.cat.manifest.data.get("layout", {}).get("pack_cosine", True)
-            ):
-                # index without a normalized weight stream (pre-nwts build,
-                # or pack_cosine=False) — cosine answers via the SQL path
-                method = "sql"
-        if method == "wand":
-            seg_docs = int(
-                self.cat.manifest.data.get("layout", {}).get(
-                    "segment_docs", self.config.segment_docs
-                )
-            )
             scan_terms = terms
             if isinstance(self._tb_cache, dict):
                 # vocabulary map already paid for by a batch call: the
@@ -440,7 +419,8 @@ class Searcher:
                 else self.docs.where(doc_filter).select("doc_int")
             )
             scores = wand_search_scores(
-                self.spark, postings, scan_terms, seg_docs, top_k, deleted, use_cosine,
+                self.spark, self._postings(), scan_terms, self.config.segment_docs, top_k,
+                deleted, use_cosine,
                 term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
                 allowed=allowed,
             )
@@ -506,37 +486,26 @@ class Searcher:
         in the true top-k may contain one, and with its postings never
         shipped the kernel's repair pass has nothing to repair with — so
         exactness-preserving cuts live in the kernel (MaxScore + repair)
-        and this knob defaults off.  Pruning applies to the wand/wand_nox
-        methods only; ``method='sql'`` stays the untouched oracle path.
+        and this knob defaults off.  Pruning applies to ``method='wand'``
+        only; ``method='sql'`` stays the untouched oracle path.
 
         ``doc_filter`` as in :func:`search` — candidate restriction with
         full-corpus statistics.  SQL path: one semi-join for the whole
         batch.  WAND path: one set of mask rows (one per allowed id,
         JVM-projected, see ``search``) shipped to the batch kernel and
-        applied before every query's pruning threshold.  The
-        exchange-free ``wand_nox`` variant falls back to SQL (its
-        post-kernel groupBy-sum has no mask seam).
+        applied before every query's pruning threshold.
         """
-        if doc_filter is not None and method == "wand_nox":
-            method = "sql"
+        _check_method(method)
         analyzed = [(q["query_id"], analyze_query(q["text"], self.config)) for q in queries]
         rows = [(qid, term, qw) for qid, ts in analyzed for term, qw in ts]
         if not rows:
             return local_frame(self.spark, [], _MANY_SCHEMA)
         deleted0 = self._deleted()
-        if method in ("wand", "wand_nox"):
-            from splade_easy_spark.query.wand import (
-                wand_search_many_scores,
-                wand_search_many_scores_nox,
-            )
+        if use_cosine and not self.config.pack_cosine:
+            method = "sql"  # no normalized weight stream: cosine via SQL
+        if method == "wand":
+            from splade_easy_spark.query.wand import wand_search_many_scores
 
-            postings = self._postings()
-            if use_cosine and (
-                "nwts" not in postings.columns
-                or not self.cat.manifest.data.get("layout", {}).get("pack_cosine", True)
-            ):
-                method = "sql"  # no normalized stream: cosine via SQL path
-        if method in ("wand", "wand_nox"):
             qt = {k: v for k, v in dict(analyzed).items() if v}
             # cosine query norms are over the FULL analyzed term list —
             # the SQL path's norm includes OOV terms (they contribute to
@@ -572,35 +541,15 @@ class Searcher:
                 qt = pruned_qt
             if not qt:
                 return local_frame(self.spark, [], _MANY_SCHEMA)
-            seg_docs = int(
-                self.cat.manifest.data.get("layout", {}).get(
-                    "segment_docs", self.config.segment_docs
-                )
+            allowed = (
+                None
+                if doc_filter is None
+                else self.docs.where(doc_filter).select("doc_int")
             )
-            # 'wand_nox' = the exchange-free variant: no repartition(seg),
-            # partial (query, doc) sums merged by groupBy — see
-            # wand.wand_search_many_scores_nox for the measured trade-off
-            batch_fn = (
-                wand_search_many_scores_nox
-                if method == "wand_nox"
-                else wand_search_many_scores
-            )
-            batch_kwargs = dict(
-                term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max
-            )
-            if doc_filter is not None:
-                batch_kwargs["allowed"] = self.docs.where(doc_filter).select(
-                    "doc_int"
-                )
-            cand = batch_fn(
-                self.spark,
-                postings,
-                qt,
-                seg_docs,
-                top_k,
-                deleted0,
-                use_cosine,
-                **batch_kwargs,
+            cand = wand_search_many_scores(
+                self.spark, self._postings(), qt, self.config.segment_docs, top_k,
+                deleted0, use_cosine, term_id_seed=self.term_id_seed,
+                snapshot_max=self._snapshot_max, allowed=allowed,
             )
             if use_cosine:
                 qnorms = [

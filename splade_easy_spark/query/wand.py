@@ -57,6 +57,11 @@ packed weights, cosine over the doc-normalized weight stream packed
 alongside (``nwts`` = w/‖d‖ with per-block ``max_nweight``) — cosine is a
 plain dot product over that stream up to the query-norm factor, which the
 caller divides out (monotone: pruning and ranking are unaffected).
+
+The kernels read one postings layout, the current format
+(``manifest.FORMAT_VERSION``): int64 ``term_id`` keys and both weight
+streams.  ``Searcher`` refuses an older index at open (``migrate_postings``
+upgrades it), so nothing here inspects a frame's columns per call.
 """
 
 from __future__ import annotations
@@ -72,11 +77,9 @@ from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.index.catalog import (
     ALLOW_TERM_ID,
     TOMB_TERM_ID,
-    term_id_expr,
     term_id_py,
 )
 from splade_easy_spark.index.postings import unpack_block, unpack_blocks
-from splade_easy_spark.session import local_frame
 
 
 def _query_term_ids(terms: list[str], seed: int) -> dict[str, int]:
@@ -404,8 +407,6 @@ def _pruned_with_tombstones(
     segment_docs: int,
     wcol: str = "wts",
     mcol: str = "max_weight",
-    qterms_legacy: list[str] | None = None,
-    term_id_seed: int = 0,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Term filter FIRST (parquet predicate pushdown — only the query's
@@ -417,14 +418,10 @@ def _pruned_with_tombstones(
     only the query's postings (same volume the SQL path shuffles into its
     join).
 
-    On the round-4 layout the filter is ``term_id IN (...)`` — an int64
-    predicate against the natively-stored hash, pushed to parquet row-group
-    stats exactly like the string filter was.  Both filters are built by
-    ``functions.in_list``: one expression string, so the py4j round trips
-    do not grow with the number of query terms.  On a legacy index
-    (``qterms_legacy`` given) the string filter still pushes down and the
-    hash is projected JVM-side above the scan, so the exchange/hop/kernel
-    see the identical int64-keyed frame either way.
+    The filter is ``term_id IN (...)``, an int64 predicate against the
+    natively-stored hash, pushed to parquet row-group stats.  It is built
+    by ``functions.in_list``: one expression string, so the py4j round
+    trips do not grow with the number of query terms.
 
     The column pruning matters as much as the term filter: the postings
     table carries BOTH weight streams (``wts`` and the cosine-mode
@@ -435,14 +432,7 @@ def _pruned_with_tombstones(
     lands below the exchange (Catalyst pushes it into the scan), so the
     unused stream is never read, shuffled, or IPC'd."""
     cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
-    if qterms_legacy is not None:
-        pruned = (
-            postings.where(in_list("term", qterms_legacy))
-            .withColumn("term_id", term_id_expr(F.col("term"), term_id_seed))
-            .select(*cols)
-        )
-    else:
-        pruned = postings.where(in_list("term_id", qterm_ids)).select(*cols)
+    pruned = postings.where(in_list("term_id", qterm_ids)).select(*cols)
     if deleted is not None:
         pruned = pruned.unionByName(
             _tombstone_blocks(deleted, segment_docs).select(*cols)
@@ -492,9 +482,7 @@ def wand_search_scores(
     a plain dot product, Σ qw·(w/‖d‖), up to the query-norm factor the
     caller divides out (monotone, so pruning and ranking are unaffected).
 
-    The postings layout (native int64 ``term_id`` vs legacy ``term``
-    string) is detected from the frame's columns; ``term_id_seed`` must be
-    the index's recorded seed (manifest layout)."""
+    ``term_id_seed`` must be the index's recorded seed (manifest layout)."""
     qterms = [t for t, _ in terms]
     ids = _query_term_ids(qterms, term_id_seed)
     b_qw = spark.sparkContext.broadcast({ids[t]: w for t, w in terms})
@@ -502,8 +490,7 @@ def wand_search_scores(
     filter_active = allowed is not None
     pruned = _pruned_with_tombstones(
         postings, [ids[t] for t in qterms], deleted, segment_docs, wcol, mcol,
-        qterms_legacy=None if "term_id" in postings.columns else qterms,
-        term_id_seed=term_id_seed, allowed=allowed,
+        allowed=allowed,
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -548,9 +535,7 @@ def wand_profile(
     b_qw = spark.sparkContext.broadcast({ids[t]: w for t, w in terms})
     wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
     pruned = _pruned_with_tombstones(
-        postings, [ids[t] for t in qterms], deleted, segment_docs, wcol, mcol,
-        qterms_legacy=None if "term_id" in postings.columns else qterms,
-        term_id_seed=term_id_seed,
+        postings, [ids[t] for t in qterms], deleted, segment_docs, wcol, mcol
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -736,8 +721,7 @@ def _batch_prepared(
     wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
     pruned = _pruned_with_tombstones(
         postings, [ids[t] for t in all_terms], deleted, segment_docs, wcol, mcol,
-        qterms_legacy=None if "term_id" in postings.columns else all_terms,
-        term_id_seed=term_id_seed, allowed=allowed,
+        allowed=allowed,
     )
     return b_queries, wcol, mcol, pruned
 
@@ -797,147 +781,6 @@ def wand_search_many_scores(
                 yield pd.DataFrame({"query_id": out_q, "doc_int": out_d, "score": out_s})
 
     return pruned.mapInPandas(kernel, schema="query_id STRING, doc_int LONG, score DOUBLE")
-
-
-def wand_search_many_scores_nox(
-    spark: SparkSession,
-    postings: DataFrame,
-    queries_terms: dict[str, list[tuple[str, float]]],
-    segment_docs: int,
-    top_k: int = 10,
-    deleted: DataFrame | None = None,
-    use_cosine: bool = False,
-    term_id_seed: int = 0,
-    snapshot_max: int | None = None,
-) -> DataFrame:
-    """EXCHANGE-FREE batch scoring (the round-4 VERDICT #1 experiment).
-
-    Scores are additive over block runs, so the batch kernel does not
-    *need* segment colocation: this path runs the scatter kernel directly
-    on the scan output — term filter + column prune, **no
-    ``repartition(seg)``** — each task scores whatever postings blocks it
-    was handed and emits partial ``(query, doc_int, partial_score)`` sums;
-    a ``groupBy(query, doc_int).sum`` + per-query top-k above merges them
-    (the doc-grain partial frame is the thing shuffled, instead of the
-    postings blocks).
-
-    Trade-offs vs ``wand_search_many_scores`` (the colocated kernel):
-
-    * deleted: the ``repartition(seg)`` exchange AND its post-shuffle
-      Arrow hop — on the sandbox box exactly the stage the measured
-      0.48–0.54 IPC passthrough ceiling throttles;
-    * lost: per-query MaxScore term cuts and the per-segment top-k cut —
-      a task holding half a segment cannot prove anything about final
-      ranks, so EVERY matched posting is scattered and EVERY matched
-      (query, doc) pair leaves the kernel (k rows/query/segment for the
-      colocated kernel vs all-matched-docs/query here), then pays a
-      doc-grain shuffle the colocated path never does.
-
-    Exactness: trivially exact (no pruning anywhere).  Tombstones and the
-    snapshot watermark are row-grain filters on the summed frame — they
-    cannot ride a seg exchange that no longer exists, and masking AFTER
-    the sum is equivalent because masks are per-doc, not per-block.
-    Both paths are A/B'd by the 2→8 scaling harness; see BENCH.md."""
-    qids = sorted(queries_terms)
-    all_terms = sorted({t for ts in queries_terms.values() for t, _ in ts})
-    ids = _query_term_ids(all_terms, term_id_seed)
-    # inverted query map: term_id -> [(query index, qweight)] — the kernel
-    # scatters each decoded term ONCE per query carrying it
-    by_term: dict[int, list[tuple[int, float]]] = {}
-    for qi, qid in enumerate(qids):
-        for t, w in queries_terms[qid]:
-            by_term.setdefault(ids[t], []).append((qi, w))
-    b_by_term = spark.sparkContext.broadcast(by_term)
-    wcol = "nwts" if use_cosine else "wts"
-    mcol = "max_nweight" if use_cosine else "max_weight"
-    cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
-    if "term_id" in postings.columns:
-        pruned = postings.where(
-            in_list("term_id", [ids[t] for t in all_terms])
-        ).select(*cols)
-    else:
-        pruned = (
-            postings.where(in_list("term", all_terms))
-            .withColumn("term_id", term_id_expr(F.col("term"), term_id_seed))
-            .select(*cols)
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        bt = b_by_term.value
-        acc = np.zeros(segment_docs, dtype=np.float64)
-        for seg, g in pdf.groupby("seg", sort=False):
-            base = int(seg) * segment_docs
-            wm = None if snapshot_max is None else int(snapshot_max) - base
-            # decode each term's blocks present in THIS task once, then
-            # scatter per carrying query into a dense per-segment acc
-            decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-            ti = _TermIndex(g, base, wcol, mcol)
-            for i, term in enumerate(ti.terms):
-                idx, wts = ti.decode(i)
-                if wm is not None and wm < segment_docs:
-                    keep = idx < max(wm, 0)
-                    idx, wts = idx[keep], wts[keep]
-                if len(idx):
-                    decoded[int(term)] = (idx, wts)
-            # per-query partial sums over this task's fragment of the seg
-            per_q: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
-            for term, (idx, wts) in decoded.items():
-                for qi, qw in bt.get(term, ()):
-                    per_q.setdefault(qi, []).append((idx, qw * wts))
-            for qi, contribs in per_q.items():
-                if len(contribs) == 1:
-                    live, vals = contribs[0]
-                    out_d, out_s = live + base, vals
-                else:
-                    acc.fill(0.0)
-                    touched_parts = []
-                    for idx, vals in contribs:
-                        acc[idx] += vals
-                        touched_parts.append(idx)
-                    live = np.unique(np.concatenate(touched_parts))
-                    out_d, out_s = live + base, acc[live]
-                yield pd.DataFrame(
-                    {
-                        "q": np.full(len(out_d), qi, dtype=np.int32),
-                        "doc_int": out_d.astype(np.int64),
-                        "score": out_s.astype(np.float64),
-                    }
-                )
-
-    part = pruned.mapInPandas(kernel, schema="q INT, doc_int LONG, score DOUBLE")
-    scores = (
-        part.groupBy("q", "doc_int")
-        .agg(F.sum("score").alias("score"))
-        .where(F.col("score") > 0)
-    )
-    if deleted is not None:
-        scores = scores.join(
-            F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-        )
-    scores = scores.select("q", "doc_int", "score")
-    qmap = local_frame(spark, list(enumerate(qids)), "q INT, query_id STRING")
-
-    # partial per-partition top-k before the caller's global window — the
-    # summed frame still holds EVERY matched doc per query (no per-segment
-    # cut exists on this path)
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.sort_values(
-            ["q", "score", "doc_int"], ascending=[True, False, True]
-        )
-        yield allp.groupby("q", sort=False).head(top_k)
-
-    scores = scores.mapInPandas(
-        partial_topk, schema="q INT, doc_int LONG, score DOUBLE"
-    )
-    return scores.join(F.broadcast(qmap), "q").select("query_id", "doc_int", "score")
 
 
 def wand_batch_profile(

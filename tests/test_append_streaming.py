@@ -81,9 +81,8 @@ def test_append_has_no_index_sized_rescan():
     src = inspect.getsource(ap.append_documents)
     assert "read.parquet" not in src
     assert 'cat.read(spark, "doc_terms")' not in src
-    # the only docs-table touch is the column-pruned dedupe anti-join and a
-    # legacy max-doc_int fallback for manifests without next_doc_int
-    assert src.count('cat.read(spark, "docs")') <= 2
+    # the only docs-table touch is the column-pruned dedupe anti-join
+    assert src.count('cat.read(spark, "docs")') <= 1
 
 
 def test_refresh_stats_matches_oneshot(spark, tmp_path):

@@ -18,15 +18,19 @@ from pyspark.sql import functions as F
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.data import generate_transcripts
 from splade_easy_spark.index import build_index
-from splade_easy_spark.index.append import append_documents
+from splade_easy_spark.index.append import append_documents, refresh_stats
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.index.maintenance import (
     compact,
+    delete,
     heal_interrupted_swaps,
+    migrate_postings,
     optimize_postings,
+    reshard,
     stats,
 )
 from splade_easy_spark.query import Searcher
+from tests.retired_layouts import SHAPES, retire, tree_state
 
 CFG = IndexConfig(build_partitions=4, term_buckets=8, segment_docs=128, block_size=32)
 QUERIES = ["baba0 ceba1", "diba2 foba3 baba0"]
@@ -200,22 +204,22 @@ def test_optimize_swap_crash_is_healed(spark, tmp_path):
 
 def test_optimize_pre_nwts_index(spark, tmp_path):
     """optimize_postings on an index whose postings table predates the
-    cosine stream (no nwts/max_nweight columns at all): must merge with the
-    legacy schema instead of raising KeyError (round-3 ADVICE low)."""
+    cosine stream (no nwts/max_nweight columns at all) refuses with the
+    migrate error before touching a file; after migrate_postings it merges
+    with byte-identical scores."""
     idx, cfg = _fragmented_index(spark, tmp_path, "prenwts", pack_cosine=False)
-    # strip the (empty) nwts columns to reproduce a round-1 layout
-    post_dir = Path(idx) / "postings"
-    legacy = spark.read.parquet(str(post_dir)).drop("nwts", "max_nweight")
-    tmp_out = str(tmp_path / "prenwts_legacy")
-    legacy.write.partitionBy("seg").parquet(tmp_out)
-    shutil.rmtree(post_dir)
-    shutil.move(tmp_out, post_dir)
-
     before = _snapshot(spark, idx)
+    retire(spark, idx, ["no_nwts"])
+    state = tree_state(idx)
+    with pytest.raises(RuntimeError, match="cli migrate --index"):
+        optimize_postings(spark, idx, cfg, min_files=1)
+    assert tree_state(idx) == state
+
+    assert migrate_postings(spark, idx, cfg)["migrated"] is True
     out = optimize_postings(spark, idx, cfg, min_files=1)
     assert out["segs_rewritten"] > 0
-    merged = spark.read.parquet(str(post_dir))
-    assert "nwts" not in merged.columns  # legacy schema preserved
+    merged = spark.read.parquet(str(Path(idx) / "postings"))
+    assert "nwts" in merged.columns  # the current schema, empty cosine stream
     assert _snapshot(spark, idx) == before
 
 
@@ -670,132 +674,149 @@ def test_seq_orders_equal_timestamp_events(spark, tmp_path):
     assert _fresh_lineage(cat2, "postings") is None
 
 
-def _legacyize(spark, tmp_path, idx):
-    """Rewrite a freshly built index to the pre-term_id (string-keyed)
-    layout — the same recipe as test_term_ids."""
-    from splade_easy_spark.index.builder import pack_doc_terms
-
-    dt = spark.read.parquet(f"{idx}/doc_terms")
-    legacy = pack_doc_terms(
-        dt.select("term", "doc_int", "weight", "norm"),
-        CFG.segment_docs, CFG.block_size, term_ids=False,
-    )
-    staging = str(tmp_path / "legacy_postings")
-    legacy.write.partitionBy("seg").parquet(staging)
-    shutil.rmtree(Path(idx) / "postings")
-    shutil.move(staging, Path(idx) / "postings")
-    ts_staging = str(tmp_path / "legacy_ts")
-    spark.read.parquet(f"{idx}/term_stats").drop("term_id").write.parquet(ts_staging)
-    shutil.rmtree(Path(idx) / "term_stats")
-    shutil.move(ts_staging, Path(idx) / "term_stats")
-    man0 = IndexCatalog(idx, CFG).manifest
-    man0.data["layout"].pop("postings_term_ids", None)
-    man0.data["layout"].pop("term_id_seed", None)
-    man0.save()
+def _writers(spark, idx, cfg):
+    """Every writer entry point, each a call that must refuse a format-1
+    index in the shared prologue."""
+    tx = generate_transcripts(spark, num_convs=2, seed=92)
+    return {
+        "append": lambda: append_documents(spark, idx, tx, cfg),
+        "optimize": lambda: optimize_postings(spark, idx, cfg, min_files=1),
+        "compact": lambda: compact(spark, idx, cfg),
+        "reshard": lambda: reshard(spark, idx, cfg),
+        "delete": lambda: delete(spark, idx, ["conv_00000000#0"]),
+        "refresh_stats": lambda: refresh_stats(spark, idx, cfg),
+        "resume_build": lambda: build_index(spark, tx, idx, cfg, resume=True),
+        "searcher": lambda: Searcher(spark, idx, cfg),
+    }
 
 
-def _crash_migrate(spark, idx, cfg, monkeypatch):
-    """Run migrate_postings with an injected crash between its dir swaps
-    and its stage commit."""
-    from splade_easy_spark.index.maintenance import migrate_postings
+def _migrated_exactly(spark, idx, seed):
+    """After a completed migrate: format 2 under ``seed``, the packed and
+    registered term ids are that seed's hashes, WAND = SQL, and the
+    maintenance journal is empty."""
+    from splade_easy_spark.index.catalog import term_id_py
+
+    man = IndexCatalog(idx, CFG).manifest
+    assert man.format_version == 2
+    assert man.data["layout"]["term_id_seed"] == seed
+    assert man.pending_maintenance_entries() == []
+    ts = spark.read.parquet(f"{idx}/term_stats").select("term", "term_id").collect()
+    assert all(r["term_id"] == term_id_py(r["term"], seed) for r in ts)
+    packed = {r[0] for r in spark.read.parquet(f"{idx}/postings").select("term_id").distinct().collect()}
+    assert packed <= {r["term_id"] for r in ts}
+    s = Searcher(spark, idx, CFG)
+    w = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="wand").collect()]
+    q = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="sql").collect()]
+    assert w == q and len(w) > 0
+
+
+def _crash_migrate(spark, idx, cfg, monkeypatch, target, when):
+    """Run migrate_postings with an injected crash: ``target`` is the
+    maintenance-module function to break and ``when(args)`` picks the
+    call that raises."""
+    import splade_easy_spark.index.maintenance as mt
     from splade_easy_spark.index.manifest import Manifest
 
-    real = Manifest.record_stage
+    owner = Manifest if target == "record_stage" else mt
+    real = getattr(owner, target)
 
-    def boom(self, stage, *a, **k):
-        if stage == "migrate":
-            raise RuntimeError("injected crash after migrate swaps")
-        return real(self, stage, *a, **k)
+    def boom(*a, **k):
+        if when(a):
+            raise RuntimeError("injected crash inside migrate")
+        return real(*a, **k)
 
-    monkeypatch.setattr(Manifest, "record_stage", boom)
-    with pytest.raises(RuntimeError, match="after migrate swaps"):
+    monkeypatch.setattr(owner, target, boom)
+    with pytest.raises(RuntimeError, match="injected crash inside migrate"):
         migrate_postings(spark, idx, cfg)
     monkeypatch.undo()
 
 
 def test_migrate_crash_between_swap_and_commit_heals(spark, tmp_path, monkeypatch):
-    """Round-5 review HIGH: a migrate_postings whose dir swaps land but
-    whose stage commit doesn't leaves postings physically term_id-keyed
-    while the recorded layout still says string keys.  The next append
-    must NOT trust the stale flag (string-keyed blocks in a term_id table
-    would be silently unsearchable under the term_id-filtered scan): the
-    pending migrate journal entry is the witness, and every writer-side
-    entry point finishes the flag flip + stage commit before packing."""
-    idx = str(tmp_path / "legacy")
-    build_index(spark, generate_transcripts(spark, num_convs=6, seed=91), idx, CFG)
-    _legacyize(spark, tmp_path, idx)
-    _crash_migrate(spark, idx, CFG, monkeypatch)
-
-    # the dangerous state: physical term_id, recorded flag false, witness entry
-    cat = IndexCatalog(idx, CFG)
-    assert "term_id" in spark.read.parquet(f"{idx}/postings").columns
-    assert not cat.manifest.data["layout"].get("postings_term_ids")
-    assert any(
-        e["op"] == "migrate_postings"
-        for e in cat.manifest.pending_maintenance_entries()
-    )
-
-    # append heals first (journal-witnessed), THEN packs — term_id blocks only
-    append_documents(
-        spark, idx, generate_transcripts(spark, num_convs=2, seed=92), CFG
-    )
-    cat2 = IndexCatalog(idx, CFG)
-    assert cat2.manifest.data["layout"].get("postings_term_ids") is True
-    assert cat2.manifest.pending_maintenance_entries() == []
-    post = spark.read.parquet(f"{idx}/postings")
-    assert "term_id" in post.columns and "term" not in post.columns
-    assert post.where(F.col("term_id").isNull()).count() == 0
-
-    # and the healed index still searches exactly (WAND == SQL)
-    s = Searcher(spark, idx, CFG)
-    w = [(r["doc_id"], round(r["score"], 5)) for r in s.search("baba0 ceba1", 10, method="wand").collect()]
-    q = [(r["doc_id"], round(r["score"], 5)) for r in s.search("baba0 ceba1", 10, method="sql").collect()]
-    assert w == q
-
-
-def test_layout_mismatch_without_witness_raises(spark, tmp_path):
-    """A physical/recorded postings-key mismatch with NO pending migrate
-    journal is unknown state: writers refuse loudly instead of guessing."""
-    from splade_easy_spark.index.maintenance import heal_interrupted_migration
-
-    idx = str(tmp_path / "idx")
-    build_index(spark, generate_transcripts(spark, num_convs=4, seed=93), idx, CFG)
-    cat = IndexCatalog(idx, CFG)
-    # flip the flag out from under the (term_id-keyed) table
-    cat.manifest.data["layout"]["postings_term_ids"] = False
-    cat.manifest.save()
-    cat2 = IndexCatalog(idx, CFG)
-    with pytest.raises(RuntimeError, match="refusing to write mixed-schema"):
-        heal_interrupted_migration(spark, cat2)
-
-
-def test_migrate_crash_heal_uses_journaled_seed(spark, tmp_path, monkeypatch):
-    """Round-5 review: the crashed migrate packed term_ids with ITS config's
-    seed; a healer running a different config must flip the layout to the
-    journaled seed, not its own — otherwise every query/append recomputes
-    ids in the wrong hash space and silently misses all pre-crash postings."""
+    """A migrate_postings whose dir swaps land but whose stage commit does
+    not leaves current-format tables under a format-1 manifest.  Writers
+    refuse that state (the format, not the physical columns, decides), and
+    re-running migrate — here under a different term_id seed — finishes
+    it from the same input: migrate never writes doc_terms."""
     import dataclasses
 
     idx = str(tmp_path / "legacy")
-    build_index(spark, generate_transcripts(spark, num_convs=5, seed=97), idx, CFG)
-    _legacyize(spark, tmp_path, idx)
+    build_index(spark, generate_transcripts(spark, num_convs=6, seed=91), idx, CFG)
+    retire(spark, idx, ["string_keys"])
     cfg_seeded = dataclasses.replace(CFG, term_id_seed=7)
-    _crash_migrate(spark, idx, cfg_seeded, monkeypatch)
-
-    # heal with the DEFAULT-config writer (seed 0): the journal entry's
-    # seed=7 must win
-    append_documents(
-        spark, idx, generate_transcripts(spark, num_convs=2, seed=98), CFG
+    _crash_migrate(
+        spark, idx, cfg_seeded, monkeypatch, "record_stage", lambda a: a[1] == "migrate"
     )
+
     cat = IndexCatalog(idx, CFG)
-    assert cat.manifest.data["layout"]["postings_term_ids"] is True
-    assert cat.manifest.data["layout"]["term_id_seed"] == 7
-    # and the index searches exactly under the healed layout (Searcher
-    # resolves the seed from the layout, not its config)
-    s = Searcher(spark, idx, CFG)
-    w = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="wand").collect()]
-    q = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="sql").collect()]
-    assert w == q and len(w) > 0
+    assert "term_id" in spark.read.parquet(f"{idx}/postings").columns
+    assert cat.manifest.format_version == 1
+    assert any(e["op"] == "migrate_postings" for e in cat.manifest.pending_maintenance_entries())
+    state = tree_state(idx)
+    for call in _writers(spark, idx, CFG).values():
+        with pytest.raises(RuntimeError, match="cli migrate --index"):
+            call()
+    assert tree_state(idx) == state
+
+    assert migrate_postings(spark, idx, CFG)["migrated"] is True
+    _migrated_exactly(spark, idx, seed=0)
+
+
+def test_layout_mismatch_without_witness_raises(spark, tmp_path):
+    """Current-format tables under a manifest that says format 1, with no
+    pending migrate journal: every writer and the Searcher refuse with the
+    migrate error before writing anything — none of them inspects the
+    physical layout."""
+    idx = str(tmp_path / "idx")
+    build_index(spark, generate_transcripts(spark, num_convs=4, seed=93), idx, CFG)
+    cat = IndexCatalog(idx, CFG)
+    cat.manifest.data["format_version"] = 1
+    cat.manifest.save()
+    state = tree_state(idx)
+    for call in _writers(spark, idx, CFG).values():
+        with pytest.raises(RuntimeError, match="cli migrate --index"):
+            call()
+    assert tree_state(idx) == state
+
+
+def test_migrate_crash_mid_swap_reruns_under_any_seed(spark, tmp_path, monkeypatch):
+    """A migrate killed inside its postings swap — term_stats already
+    swapped in, live postings renamed to ``postings__old``, the staged
+    rewrite not yet moved — is refused by writers and finished by
+    re-running migrate under a different seed: the swap heal restores the
+    old postings, the staging is collected, and the rerun records the seed
+    its ids were packed with."""
+    import dataclasses
+
+    import splade_easy_spark.index.maintenance as mt
+
+    idx = str(tmp_path / "legacy")
+    build_index(spark, generate_transcripts(spark, num_convs=5, seed=97), idx, CFG)
+    retire(spark, idx, SHAPES)
+
+    def mid_swap(a):
+        if a[1] != "postings":
+            return False
+        live = Path(a[0].table_dir("postings"))
+        live.rename(live.with_name("postings__old"))
+        return True
+
+    _crash_migrate(
+        spark, idx, dataclasses.replace(CFG, term_id_seed=7), monkeypatch, "_swap_in", mid_swap
+    )
+    assert not (Path(idx) / "postings").exists()
+    assert (Path(idx) / "postings__rewrite").exists()
+    assert IndexCatalog(idx, CFG).manifest.format_version == 1
+    for call in (
+        lambda: append_documents(spark, idx, generate_transcripts(spark, num_convs=2, seed=98), CFG),
+        lambda: Searcher(spark, idx, CFG),
+    ):
+        with pytest.raises(RuntimeError, match="cli migrate --index"):
+            call()
+
+    assert migrate_postings(spark, idx, CFG)["migrated"] is True
+    assert not list(Path(idx).glob("*__*"))
+    _migrated_exactly(spark, idx, seed=0)
+    assert mt.migrate_postings(spark, idx, CFG)["migrated"] is False
 
 
 def test_append_heals_interrupted_table_swap(spark, tmp_path):

@@ -173,6 +173,12 @@ def test_vector_append_matches_oneshot_and_is_idempotent(spark, tmp_path):
     # redelivery: nothing appended
     out2 = append_vector_documents(spark, idx_b, spark.createDataFrame(rest, SCHEMA), CFG)
     assert out2["appended_docs"] == 0
+    # every append entry carries its manifest seq, so lineage freshness
+    # orders it against stage commits without wall-clock timestamps
+    from splade_easy_spark.index.catalog import IndexCatalog
+
+    appends = IndexCatalog(idx_b, CFG).manifest.data["appends"]
+    assert appends and all(isinstance(a.get("seq"), int) for a in appends)
 
     sa, sb = Searcher(spark, idx_a, CFG), Searcher(spark, idx_b, CFG)
     q = vector_query_terms([7, 42, 1999, 1500], [1.0, 0.5, 2.0, 0.25])
@@ -180,6 +186,52 @@ def test_vector_append_matches_oneshot_and_is_idempotent(spark, tmp_path):
         ra = [(r["doc_id"], round(r["score"], 6)) for r in sa.search(q, 20, method=method).collect()]
         rb = [(r["doc_id"], round(r["score"], 6)) for r in sb.search(q, 20, method=method).collect()]
         assert ra == rb, method
+
+
+def test_vector_append_after_crashed_swap_keeps_segment(spark, tmp_path):
+    """A vector append arriving after a maintenance op crashed between its
+    two renames (``postings/seg=0`` moved to ``seg=0__old``, the staged
+    replacement never moved in) must restore the segment before it writes:
+    otherwise it creates a fresh ``seg=0`` holding only the batch, and the
+    next heal deletes ``seg=0__old``, the only copy of the segment's
+    earlier postings.  WAND = SQL = a never-crashed index afterwards."""
+    import shutil
+    from pathlib import Path
+
+    from splade_easy_spark.index import append_vector_documents
+
+    rng = np.random.default_rng(31)
+
+    def mk(i):
+        n = int(rng.integers(5, 30))
+        ids = sorted(int(x) for x in rng.choice(300, size=n, replace=False))
+        w = [float(x) for x in rng.uniform(0.01, 2.0, size=n).astype(np.float32)]
+        return (f"doc_{i:03d}", None, None, ids, w)
+
+    first = [mk(i) for i in range(40)]
+    rest = [mk(i) for i in range(40, 55)]
+    q = vector_query_terms(list(range(0, 300, 15)), [1.0 + i / 10 for i in range(20)])
+
+    def results(idx):
+        s = Searcher(spark, idx, CFG)
+        return {
+            m: [(r["doc_id"], round(r["score"], 6)) for r in s.search(q, 60, method=m).collect()]
+            for m in ("sql", "wand")
+        }
+
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for idx in (clean, crashed):
+        build_vector_index(spark, spark.createDataFrame(first, SCHEMA), idx, CFG)
+    seg0 = Path(crashed) / "postings" / "seg=0"
+    shutil.move(str(seg0), str(seg0.with_name("seg=0__old")))
+    for idx in (clean, crashed):
+        append_vector_documents(spark, idx, spark.createDataFrame(rest, SCHEMA), CFG)
+
+    want = results(clean)
+    hit = {d for d, _ in want["sql"]}
+    assert want["sql"] == want["wand"]
+    assert hit & {r[0] for r in first} and hit & {r[0] for r in rest}
+    assert results(crashed) == want
 
 
 def test_vector_index_optimize_preserves_scores(spark, tmp_path):

@@ -643,81 +643,6 @@ def test_batch_segment_exactness_property(case, n_queries):
         _check_exact(d_out, s_out, acc, alive, k)
 
 
-def test_batch_wand_nox_equals_batch_sql(corpus, spark):
-    """The exchange-free batch path (method='wand_nox': partial per-task
-    sums, no repartition(seg)) must equal the SQL batch path exactly —
-    including tombstones, which it masks row-grain on the summed frame.
-    Runs against whatever tombstones the module fixture accumulated."""
-    idx_dir, _ = corpus
-    s = Searcher(spark, idx_dir, CFG)
-    queries = [
-        {"query_id": f"q{i}", "text": q["text"]}
-        for i, q in enumerate(generate_query_set(12, seed=31))
-    ]
-
-    def collect(method, k, cos=False):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method, use_cosine=cos).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    for k in (3, 10):
-        sql, nox = collect("sql", k), collect("wand_nox", k)
-        assert set(sql) == set(nox)
-        for qid in sql:
-            assert [d for d, _ in sql[qid]] == [d for d, _ in nox[qid]], qid
-            for (_, a), (_, b) in zip(sql[qid], nox[qid]):
-                assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-    # cosine mode through the normalized stream
-    sqlc, noxc = collect("sql", 5, cos=True), collect("wand_nox", 5, cos=True)
-    assert set(sqlc) == set(noxc)
-    for qid in sqlc:
-        assert [d for d, _ in sqlc[qid]] == [d for d, _ in noxc[qid]], qid
-        for (_, a), (_, b) in zip(sqlc[qid], noxc[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-
-
-def test_batch_wand_nox_appended_multifile_index(spark, tmp_path):
-    """wand_nox on an APPENDED index: a segment's runs live in multiple
-    files that land in DIFFERENT scan tasks — exactly the case the
-    partial-sum merge exists for (each task emits its fragment's sums, the
-    groupBy adds them)."""
-    from splade_easy_spark.index.append import append_documents
-    from splade_easy_spark.index.maintenance import delete
-
-    idx_dir = str(tmp_path / "index")
-    tx = generate_transcripts(spark, num_convs=18, seed=11)
-    build_index(spark, tx, idx_dir, CFG)
-    for seed in (12, 13):
-        append_documents(
-            spark, idx_dir, generate_transcripts(spark, num_convs=6, seed=seed), CFG
-        )
-    s0 = Searcher(spark, idx_dir, CFG)
-    victims = [r["doc_id"] for r in s0.search("baba0 ceba1", 2, method="sql").collect()]
-    assert delete(spark, idx_dir, victims) == len(victims)
-
-    s = Searcher(spark, idx_dir, CFG)
-    queries = [
-        {"query_id": f"q{i}", "text": q["text"]}
-        for i, q in enumerate(generate_query_set(10, seed=21))
-    ]
-
-    def collect(method, k):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, nox = collect("sql", 10), collect("wand_nox", 10)
-    assert set(sql) == set(nox)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in nox[qid]], qid
-        for (_, a), (_, b) in zip(sql[qid], nox[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-    for qid, rows in nox.items():
-        assert not any(d in victims for d, _ in rows)
-
-
 def test_term_bounds_dominate_every_packed_weight(corpus, spark):
     """The driver-side per-term bound (idf · max_tf·(k1+1)/(max_tf+k1·(1−b)))
     must dominate every doc-side weight actually indexed — the soundness
