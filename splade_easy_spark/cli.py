@@ -345,71 +345,41 @@ def cmd_batch_search(args) -> int:
     return 0
 
 
-def cmd_boolean(args) -> int:
-    from splade_easy_spark.query import Searcher
+def _hits_verb(run):
+    """A CLI verb that prints ranked hits: ``run(searcher, args)`` builds
+    the verb's result over the index; each hit prints as
+    ``score  doc_id  [role]``."""
 
-    s = Searcher(_spark(args), args.index)
-    rows = s.boolean_search(
-        must=(args.must or "").split() or None,
-        should=(args.should or "").split() or None,
-        must_not=(args.must_not or "").split() or None,
-        top_k=args.top_k,
-    ).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
+    def cmd(args) -> int:
+        from splade_easy_spark.query import Searcher
 
+        rows = run(Searcher(_spark(args), args.index), args).collect()
+        for r in rows:
+            print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
+        print(f"-- {len(rows)} hits", file=sys.stderr)
+        return 0
 
-def cmd_query(args) -> int:
-    """Lucene-style query string: quoted phrases, +must, -must_not,
-    field:value filters, fuzzy~N, prefix*."""
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.query(args.query, top_k=args.top_k).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
+    return cmd
 
 
-def cmd_regex(args) -> int:
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.regex_search(args.pattern, top_k=args.top_k).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
-
-
-def cmd_near(args) -> int:
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.near_search(
-        args.term_a, args.term_b, slop=args.slop, top_k=args.top_k,
-        ordered=args.ordered,
-    ).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
-
-
-def cmd_fuzzy(args) -> int:
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.fuzzy_search(
-        args.term, max_dist=args.max_dist, top_k=args.top_k
-    ).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
+cmd_boolean = _hits_verb(lambda s, a: s.boolean_search(
+    must=(a.must or "").split() or None,
+    should=(a.should or "").split() or None,
+    must_not=(a.must_not or "").split() or None,
+    top_k=a.top_k,
+))
+#: Lucene-style query string: quoted phrases, +must, -must_not,
+#: field:value filters, fuzzy~N, prefix*
+cmd_query = _hits_verb(lambda s, a: s.query(a.query, top_k=a.top_k))
+cmd_regex = _hits_verb(lambda s, a: s.regex_search(a.pattern, top_k=a.top_k))
+cmd_near = _hits_verb(lambda s, a: s.near_search(
+    a.term_a, a.term_b, slop=a.slop, top_k=a.top_k, ordered=a.ordered
+))
+cmd_fuzzy = _hits_verb(lambda s, a: s.fuzzy_search(a.term, max_dist=a.max_dist, top_k=a.top_k))
+cmd_mlt = _hits_verb(lambda s, a: s.more_like_this(
+    a.doc_id, query_terms=a.query_terms, top_k=a.top_k
+))
+cmd_phrase = _hits_verb(lambda s, a: s.phrase_search(a.query, top_k=a.top_k))
 
 
 def cmd_suggest(args) -> int:
@@ -427,30 +397,6 @@ def cmd_facets(args) -> int:
     s = Searcher(_spark(args), args.index)
     for r in s.facet_counts(args.query, args.by).collect():
         print(f"{r['n_docs']:>8}  {r['facet']}")
-    return 0
-
-
-def cmd_mlt(args) -> int:
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.more_like_this(
-        args.doc_id, query_terms=args.query_terms, top_k=args.top_k
-    ).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
-    return 0
-
-
-def cmd_phrase(args) -> int:
-    from splade_easy_spark.query import Searcher
-
-    s = Searcher(_spark(args), args.index)
-    rows = s.phrase_search(args.query, top_k=args.top_k).collect()
-    for r in rows:
-        print(f"{r['score']:.4f}  {r['doc_id']}  [{r['role']}]")
-    print(f"-- {len(rows)} hits", file=sys.stderr)
     return 0
 
 

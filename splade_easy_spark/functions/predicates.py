@@ -39,3 +39,20 @@ def in_list(col: str, values) -> Column:
         return F.lit(False)
     name = "`" + col.replace("`", "``") + "`"
     return F.expr(f"{name} IN ({', '.join(map(_sql_literal, vals))})")
+
+
+def case_weight(col: str, weights: dict[str, float]) -> Column:
+    """The weight of ``col``'s value under ``weights`` ({value: weight}),
+    NULL for any other value, as one ``CASE`` ``F.expr``: one ``IN`` arm
+    per distinct weight, each weight an exact double (its shortest repr,
+    cast).  Replaces a join against a query-weight table."""
+    by_weight: dict[float, list[str]] = {}
+    for v, w in weights.items():
+        by_weight.setdefault(float(w), []).append(v)
+    name = "`" + col.replace("`", "``") + "`"
+    arms = " ".join(
+        f"WHEN {name} IN ({', '.join(map(_sql_literal, sorted(vs)))}) "
+        f"THEN CAST('{w!r}' AS DOUBLE)"
+        for w, vs in sorted(by_weight.items())
+    )
+    return F.expr(f"CASE {arms} END") if arms else F.lit(None).cast("double")

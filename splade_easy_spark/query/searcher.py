@@ -33,6 +33,15 @@ rows rather than a sampled range sort.  ``search`` is then four jobs on
 the SQL path (query broadcast, scoring map stage, top-k, docs join) and
 three on the WAND path (postings exchange, kernel top-k, docs join).
 
+The SQL path of ``search``/``search_many`` and every full-text verb
+(phrase, boolean, query string, fuzzy, prefix, regex, near, facets,
+more-like-this, snippets, suggest) is the shared body in ``query.verbs``,
+run over this index as a scoring source (``_IndexSource``); ``adhoc``
+runs the same bodies over a raw corpus.  What stays here is what only an
+index has: the WAND fast path over packed postings, tombstones and the
+snapshot bound, and the finishing step that cuts on ``doc_int`` and joins
+the docs columns (``_top_hits``, ``_ranked_many``).
+
 Opening a searcher runs the format gate (``Manifest.require_current``) and
 reads the recorded layout (segment width, term buckets, cosine stream,
 term_id seed) and the snapshot watermark from the manifest once; no
@@ -43,8 +52,7 @@ reading.
 from __future__ import annotations
 
 import math
-import re
-from dataclasses import dataclass
+import zlib
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -54,50 +62,45 @@ from pyspark.sql.types import StructType
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.index.catalog import IndexCatalog
+from splade_easy_spark.query import verbs
+from splade_easy_spark.query.verbs import analyze_query
 from splade_easy_spark.session import local_frame
-
-#: columns of a ``search_many`` result
-_MANY_SCHEMA = (
-    "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT"
-)
-
-
-def analyze_query(
-    text: str, config: IndexConfig | None = None, weights: dict[str, float] | None = None
-) -> list[tuple[str, float]]:
-    """Driver-side query analysis with the *same* analyzer rules as the
-    build (the model-identity seam; mismatch is what the reference warns
-    about at ``src/splade_easy/retriever.py:137-145``).
-
-    Duplicate terms keep the **max** weight, mirroring the reference's
-    vector normalization (``src/splade_easy/scoring.py:102-114``).
-    """
-    cfg = config or IndexConfig()
-    a = cfg.analyzer
-    s = text.lower() if a.lowercase else text
-    toks = [
-        t
-        for t in re.findall(a.token_pattern, s)
-        if a.min_token_len <= len(t) <= a.max_token_len
-    ]
-    out: dict[str, float] = {}
-    for t in toks:
-        w = (weights or {}).get(t, 1.0)
-        out[t] = max(out.get(t, w), w)
-    return sorted(out.items())
-
 
 def _check_method(method: str) -> None:
     if method not in ("sql", "wand"):
         raise ValueError(f"unknown search method {method!r}: use 'sql' or 'wand'")
 
 
-@dataclass
-class SearchResultSchema:
-    """Column contract of search results — the reference's SearchResult
-    (``src/splade_easy/retriever.py:20-25``) plus transcript metadata."""
+class _IndexSource:
+    """The index as a scoring source (``verbs.ScoringSource``): weights
+    from the snapshot-bounded ``doc_terms``, the dictionary from
+    ``term_stats``, ``avgdl`` as of open."""
 
-    columns = ["doc_id", "score", "conv_id", "turn_idx", "role", "tool", "ts"]
+    key = "doc_int"
+
+    def __init__(self, searcher: "Searcher"):
+        self._s = searcher
+        self.config = searcher.config
+        self.docs = searcher.docs
+        self.avgdl = float(searcher.stats["avgdl"] or 1.0)
+
+    @property
+    def dead(self) -> DataFrame | None:
+        return self._s._deleted()
+
+    def weights(self, terms: list[str], norm: bool = False) -> DataFrame:
+        """Bucket- and term-pruned doc_terms scan: driver-side crc32
+        bucket computation (same hash as term_bucket_expr, no Spark job)
+        prunes partitions on ``tb``, and the term IN-filter reaches row
+        groups (files are term-sorted within buckets)."""
+        buckets = sorted(
+            {zlib.crc32(t.encode()) % self.config.term_buckets for t in terms}
+        )
+        dt = self._s.doc_terms.where(in_list("tb", buckets) & in_list("term", terms))
+        return dt.select("doc_int", "term", "weight", *(["norm"] if norm else []))
+
+    def dictionary(self) -> DataFrame:
+        return self._s._read("term_stats")
 
 
 class Searcher:
@@ -174,6 +177,10 @@ class Searcher:
             self.docs = self.docs.persist()
             self.doc_terms.count()
             self.docs.count()
+        #: a ``build_vector_index`` index: caller-supplied weights, no idf
+        self._vector = man_identity.get("mode") == "vector"
+        #: this index as the scoring source of the shared verbs
+        self.source = _IndexSource(self)
 
     # ------------------------------------------------------------------
     def _read(self, name: str) -> DataFrame:
@@ -230,6 +237,12 @@ class Searcher:
         terms whose postings are all post-snapshot stay in the map: keeping
         a term is always exact, pruning is what needs proof.
 
+        On a vector index every registered term gets an unknown (``inf``)
+        bound: its weights are caller-supplied, and an append registers
+        only batch-new terms, so the recorded ``max_weight`` is not raised
+        when a batch brings a heavier weight for a known term.  The OOV drop
+        stays exact and ``prune_below`` never cuts a vector term.
+
         Returns ``None`` (pruning disabled, behavior unchanged) when the
         vocabulary exceeds ``TERM_BOUNDS_MAX_VOCAB`` — the footer-based row
         count costs no Spark job.
@@ -239,61 +252,25 @@ class Searcher:
         if self.cat.table_rows("term_stats") > self.TERM_BOUNDS_MAX_VOCAB:
             self._tb_cache = None
             return None
-        ts = self._read("term_stats")
-        p = self.config.bm25
-        # append registers batch-new terms with max_tf=NULL, and migrate
-        # adds a NULL max_tf to older stats: the tf→∞ limit k1+1 is always
-        # an upper bound, so a NULL row falls back to it
-        mtf = F.col("max_tf").cast("double")
-        comp = F.coalesce(
-            mtf * (p.k1 + 1.0) / (mtf + p.k1 * (1.0 - p.b)), F.lit(p.k1 + 1.0)
-        )
-        rows = ts.select("term", (F.col("idf") * comp).alias("ub")).collect()
+        if self._vector:
+            ub = F.lit(None).cast("double")
+        else:
+            p = self.config.bm25
+            # append registers batch-new terms with max_tf=NULL, and migrate
+            # adds a NULL max_tf to older stats: the tf→∞ limit k1+1 is
+            # always an upper bound, so a NULL row falls back to it
+            mtf = F.col("max_tf").cast("double")
+            comp = F.coalesce(
+                mtf * (p.k1 + 1.0) / (mtf + p.k1 * (1.0 - p.b)), F.lit(p.k1 + 1.0)
+            )
+            ub = F.col("idf") * comp
+        rows = self._read("term_stats").select("term", ub.alias("ub")).collect()
         # a null bound must KEEP the term (keeping is always exact)
         self._tb_cache = {
             r["term"]: (float("inf") if r["ub"] is None else float(r["ub"]))
             for r in rows
         }
         return self._tb_cache
-
-    def _pruned_doc_terms(self, terms: list[str]) -> DataFrame:
-        """Bucket- and term-pruned doc_terms scan — THE pruning prologue
-        every term-driven verb shares (search, search_many, phrase,
-        boolean): driver-side crc32 bucket computation (same hash as
-        term_bucket_expr, no Spark job) prunes partitions on ``tb``, and
-        the term IN-filter reaches row groups (files are term-sorted
-        within buckets)."""
-        import zlib
-
-        buckets = sorted(
-            {zlib.crc32(t.encode()) % self.config.term_buckets for t in terms}
-        )
-        return self.doc_terms.where(in_list("tb", buckets) & in_list("term", terms))
-
-    def _scores(self, terms: list[tuple[str, float]], use_cosine: bool) -> DataFrame:
-        """(doc_int, score) for all docs sharing ≥1 query term."""
-        qdf = local_frame(self.spark, terms, "term STRING, qweight DOUBLE")
-        dt = self._pruned_doc_terms([t for t, _ in terms])
-        joined = dt.join(F.broadcast(qdf), "term")
-        if use_cosine:
-            qnorm = sum(qw * qw for _, qw in terms) ** 0.5
-            scores = joined.groupBy("doc_int").agg(
-                (F.sum(F.col("weight") * F.col("qweight"))).alias("dot"),
-                F.first("norm").alias("norm"),
-            )
-            if qnorm == 0.0:
-                return scores.select("doc_int", F.lit(0.0).alias("score")).where(F.lit(False))
-            scores = scores.select(
-                "doc_int",
-                F.when(F.col("norm") == 0.0, F.lit(0.0))
-                .otherwise(F.col("dot") / (F.col("norm") * F.lit(qnorm)))
-                .alias("score"),
-            )
-        else:
-            scores = joined.groupBy("doc_int").agg(
-                F.sum(F.col("weight") * F.col("qweight")).alias("score")
-            )
-        return scores.where(F.col("score") > 0)  # cf. retriever.py:186
 
     def _top_hits(
         self, scores: DataFrame, top_k: int, return_text: bool = False
@@ -313,9 +290,9 @@ class Searcher:
         ]
         if return_text and "text" in available:
             cols.append("text")
-        topk = scores.orderBy(F.desc("score"), F.asc("doc_int")).limit(top_k)
         return (
-            topk.join(self.docs, "doc_int")
+            verbs.top(scores, "doc_int", top_k)
+            .join(self.docs, "doc_int")
             .select(*cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(top_k)
@@ -328,29 +305,23 @@ class Searcher:
 
     def _ranked_many(self, scores: DataFrame, top_k: int) -> DataFrame:
         """The batch tail shared by every ``search_many`` path: the
-        ``top_k`` best (query_id, doc_int, score) rows per query, ranked
-        (score DESC, doc_int ASC), joined to their docs columns and sorted
-        by (query_id, rank).
-
-        A row_number filter of ``rank <= top_k`` lets Spark's
-        ``InferWindowGroupLimit`` plan a partial ``WindowGroupLimit`` below
-        the query_id exchange, so at most (partitions × k) rows per query
-        are shuffled (the rule applies while ``top_k`` ≤
-        ``spark.sql.optimizer.windowGroupLimitThreshold``, default 1000).
-        The final sort runs in one task over at most Q·k rows: a global
-        ``orderBy`` would plan a range-partition sampling job for them."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
-        topk = scores.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= top_k
-        )
+        ``top_k`` best (query_id, doc_int, score) rows per query
+        (``verbs.rank_many``), joined to their docs columns (conv_id and
+        turn_idx on a transcript index, metadata on a vector index) and
+        sorted by (query_id, rank).  The final sort runs in one task over
+        at most Q·k rows: a global ``orderBy`` would plan a range-partition
+        sampling job for them."""
+        meta = [c for c in ("conv_id", "turn_idx", "metadata") if c in self.docs.columns]
         return (
-            topk.join(self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int")
-            .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
+            verbs.rank_many(scores, "doc_int", top_k)
+            .join(self.docs.select("doc_int", "doc_id", *meta), "doc_int")
+            .select("query_id", "rank", "doc_id", "score", *meta)
             .repartition(1)
             .sortWithinPartitions("query_id", "rank")
         )
+
+    def _terms(self, query: str | list[tuple[str, float]]) -> list[tuple[str, float]]:
+        return analyze_query(query, self.config) if isinstance(query, str) else query
 
     # ------------------------------------------------------------------
     def search(
@@ -365,12 +336,12 @@ class Searcher:
         """Top-k search.  ``use_cosine=False`` is BM25 (dot) — the parity
         mode vs the reference's ``compute_splade_score(use_cosine=False)``.
 
-        ``method='sql'``: postings join + hash agg (Catalyst end to end).
-        ``method='wand'``: packed-postings block-max kernel — identical
-        results, pruned physical work (see query/wand.py).  Cosine mode
-        runs the same kernel over the normalized weight stream packed at
-        build time (an index built with ``pack_cosine=False`` answers
-        cosine through the SQL path).
+        ``method='sql'``: postings join + hash agg (Catalyst end to end,
+        ``verbs.search``).  ``method='wand'``: packed-postings block-max
+        kernel — identical results, pruned physical work (see
+        query/wand.py).  Cosine mode runs the same kernel over the
+        normalized weight stream packed at build time (an index built with
+        ``pack_cosine=False`` answers cosine through the SQL path).
 
         ``doc_filter``: filtered retrieval — a predicate over the stored
         doc columns (conv_id, turn_idx, role, tool, ts, doc_len) that
@@ -389,63 +360,46 @@ class Searcher:
         kernel's pruning does proportionally less work.
         """
         _check_method(method)
-        terms = analyze_query(query, self.config) if isinstance(query, str) else query
+        terms = self._terms(query)
         if not terms:
             return self._no_hits(return_text)
-        deleted = self._deleted()
         if use_cosine and not self.config.pack_cosine:
             method = "sql"  # no normalized weight stream: cosine via SQL
-        if method == "wand":
-            from splade_easy_spark.query.wand import wand_search_scores
+        if method == "sql":
+            scores = verbs.search(self.source, terms, use_cosine, doc_filter)
+            return self._top_hits(scores, top_k, return_text)
+        from splade_easy_spark.query.wand import wand_search_scores
 
-            scan_terms = terms
-            if isinstance(self._tb_cache, dict):
-                # vocabulary map already paid for by a batch call: the
-                # exact OOV drop is free here — a term absent from
-                # term_stats has no postings, so removing it from the
-                # pushed IN-list changes no result.  Only the SCAN list
-                # shrinks; the cosine query norm below keeps every term,
-                # matching the SQL path.  Never loaded eagerly for single
-                # queries: one short IN-list isn't worth a vocab collect.
-                scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
-            if not scan_terms:
-                return self._no_hits(return_text)
-            # tombstones stay distributed: one mask row per id rides the
-            # postings' seg exchange into the kernel (never a driver
-            # collect), which masks them BEFORE the pruning threshold
-            allowed = (
-                None
-                if doc_filter is None
-                else self.docs.where(doc_filter).select("doc_int")
-            )
-            scores = wand_search_scores(
-                self.spark, self._postings(), scan_terms, self.config.segment_docs, top_k,
-                deleted, use_cosine,
-                term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
-                allowed=allowed,
-            )
-            if use_cosine:
-                # kernel scores are Σ qw·(w/‖d‖); divide the monotone
-                # query-norm factor out so values equal the SQL path's
-                qnorm = sum(qw * qw for _, qw in terms) ** 0.5
-                if qnorm == 0.0:
-                    scores = scores.where(F.lit(False))
-                else:
-                    scores = scores.select(
-                        "doc_int", (F.col("score") / F.lit(qnorm)).alias("score")
-                    )
-        else:
-            scores = self._scores(terms, use_cosine)
-            if deleted is not None:
-                scores = scores.join(
-                    F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-                )
-            if doc_filter is not None:
-                # inclusion mask at doc_int grain; selectivity is unknown so
-                # the join strategy is left to AQE (broadcast when small)
-                scores = scores.join(
-                    self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
-                )
+        scan_terms = terms
+        if isinstance(self._tb_cache, dict):
+            # vocabulary map already paid for by a batch call: the exact
+            # OOV drop is free here — a term absent from term_stats has no
+            # postings, so removing it from the pushed IN-list changes no
+            # result.  Only the SCAN list shrinks; the cosine query norm
+            # below keeps every term, matching the SQL path.  Never loaded
+            # eagerly for single queries: one short IN-list isn't worth a
+            # vocab collect.
+            scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
+        if not scan_terms:
+            return self._no_hits(return_text)
+        # tombstones stay distributed: one mask row per id rides the
+        # postings' seg exchange into the kernel (never a driver collect),
+        # which masks them BEFORE the pruning threshold
+        allowed = None if doc_filter is None else self.docs.where(doc_filter).select("doc_int")
+        scores = wand_search_scores(
+            self.spark, self._postings(), scan_terms, self.config.segment_docs, top_k,
+            self._deleted(), use_cosine,
+            term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
+            allowed=allowed,
+        )
+        if use_cosine:
+            # kernel scores are Σ qw·(w/‖d‖); divide the monotone
+            # query-norm factor out so values equal the SQL path's
+            qnorm = sum(qw * qw for _, qw in terms) ** 0.5
+            if qnorm == 0.0:
+                scores = scores.where(F.lit(False))
+            else:
+                scores = scores.select("doc_int", (F.col("score") / F.lit(qnorm)).alias("score"))
         return self._top_hits(scores, top_k, return_text)
 
     def search_many(
@@ -487,7 +441,9 @@ class Searcher:
         shipped the kernel's repair pass has nothing to repair with — so
         exactness-preserving cuts live in the kernel (MaxScore + repair)
         and this knob defaults off.  Pruning applies to ``method='wand'``
-        only; ``method='sql'`` stays the untouched oracle path.
+        only; ``method='sql'`` stays the untouched oracle path.  On a
+        vector index every bound is unknown (see ``_term_bounds``), so
+        only the OOV drop applies there.
 
         ``doc_filter`` as in :func:`search` — candidate restriction with
         full-corpus statistics.  SQL path: one semi-join for the whole
@@ -499,170 +455,75 @@ class Searcher:
         analyzed = [(q["query_id"], analyze_query(q["text"], self.config)) for q in queries]
         rows = [(qid, term, qw) for qid, ts in analyzed for term, qw in ts]
         if not rows:
-            return local_frame(self.spark, [], _MANY_SCHEMA)
-        deleted0 = self._deleted()
+            return self._ranked_many(verbs.search_many(self.source, rows), top_k)
         if use_cosine and not self.config.pack_cosine:
             method = "sql"  # no normalized weight stream: cosine via SQL
-        if method == "wand":
-            from splade_easy_spark.query.wand import wand_search_many_scores
+        if method == "sql":
+            scores = verbs.search_many(self.source, rows, use_cosine, doc_filter)
+            return self._ranked_many(scores, top_k)
+        from splade_easy_spark.query.wand import wand_search_many_scores
 
-            qt = {k: v for k, v in dict(analyzed).items() if v}
-            # cosine query norms are over the FULL analyzed term list —
-            # the SQL path's norm includes OOV terms (they contribute to
-            # ‖q‖ though never to the dot), so pruning must not touch it
-            qt_full = qt
-            bounds = self._term_bounds()
-            if bounds is not None:
-                pruned_qt: dict[str, list[tuple[str, float]]] = {}
-                for qid, ts in qt.items():
-                    kept = [(t, w) for t, w in ts if t in bounds]
-                    if kept and prune_below > 0.0:
-                        # per-query relative cut on qweight·global-bound —
-                        # approximate by design (see docstring); in cosine
-                        # mode the BM25 bounds order terms heuristically.
-                        # Terms with an unknown (inf) bound never set the
-                        # threshold and are never cut: one NULL-stat term
-                        # must not make thr=inf and evict every other term.
-                        finite = [
-                            w * bounds[t]
+        qt = {k: v for k, v in dict(analyzed).items() if v}
+        # cosine query norms are over the FULL analyzed term list — the SQL
+        # path's norm includes OOV terms (they contribute to ‖q‖ though
+        # never to the dot), so pruning must not touch it
+        qt_full = qt
+        bounds = self._term_bounds()
+        if bounds is not None:
+            pruned_qt: dict[str, list[tuple[str, float]]] = {}
+            for qid, ts in qt.items():
+                kept = [(t, w) for t, w in ts if t in bounds]
+                if kept and prune_below > 0.0:
+                    # per-query relative cut on qweight·global-bound —
+                    # approximate by design (see docstring); in cosine mode
+                    # the BM25 bounds order terms heuristically.  Terms with
+                    # an unknown (inf) bound never set the threshold and are
+                    # never cut: one NULL-stat term must not make thr=inf
+                    # and evict every other term.
+                    finite = [w * bounds[t] for t, w in kept if math.isfinite(bounds[t])]
+                    if finite:
+                        thr = prune_below * max(finite)
+                        kept = [
+                            (t, w)
                             for t, w in kept
-                            if math.isfinite(bounds[t])
+                            if not math.isfinite(bounds[t]) or w * bounds[t] >= thr
                         ]
-                        if finite:
-                            thr = prune_below * max(finite)
-                            kept = [
-                                (t, w)
-                                for t, w in kept
-                                if not math.isfinite(bounds[t])
-                                or w * bounds[t] >= thr
-                            ]
-                    if kept:
-                        pruned_qt[qid] = kept
-                qt = pruned_qt
-            if not qt:
-                return local_frame(self.spark, [], _MANY_SCHEMA)
-            allowed = (
-                None
-                if doc_filter is None
-                else self.docs.where(doc_filter).select("doc_int")
-            )
-            cand = wand_search_many_scores(
-                self.spark, self._postings(), qt, self.config.segment_docs, top_k,
-                deleted0, use_cosine, term_id_seed=self.term_id_seed,
-                snapshot_max=self._snapshot_max, allowed=allowed,
-            )
-            if use_cosine:
-                qnorms = [
-                    (qid, sum(qw * qw for _, qw in ts) ** 0.5)
-                    for qid, ts in qt_full.items()
-                ]
-                qn = local_frame(self.spark, qnorms, "query_id STRING, _qn DOUBLE")
-                cand = (
-                    cand.join(F.broadcast(qn), "query_id")
-                    .where(F.col("_qn") > 0)
-                    .select(
-                        "query_id", "doc_int", (F.col("score") / F.col("_qn")).alias("score")
-                    )
-                )
-            return self._ranked_many(cand, top_k)
-
-        qdf = local_frame(self.spark, rows, "query_id STRING, term STRING, qweight DOUBLE")
-        dt = self._pruned_doc_terms(sorted({r[1] for r in rows}))
-        joined = dt.join(F.broadcast(qdf), "term")
+                if kept:
+                    pruned_qt[qid] = kept
+            qt = pruned_qt
+        if not qt:
+            return self._ranked_many(verbs.search_many(self.source, []), top_k)
+        allowed = None if doc_filter is None else self.docs.where(doc_filter).select("doc_int")
+        cand = wand_search_many_scores(
+            self.spark, self._postings(), qt, self.config.segment_docs, top_k,
+            self._deleted(), use_cosine, term_id_seed=self.term_id_seed,
+            snapshot_max=self._snapshot_max, allowed=allowed,
+        )
         if use_cosine:
-            qnorms = qdf.groupBy("query_id").agg(
-                F.sqrt(F.sum(F.col("qweight") ** 2)).alias("qnorm")
+            qnorms = [(qid, sum(qw * qw for _, qw in ts) ** 0.5) for qid, ts in qt_full.items()]
+            qn = local_frame(self.spark, qnorms, "query_id STRING, _qn DOUBLE")
+            cand = (
+                cand.join(F.broadcast(qn), "query_id")
+                .where(F.col("_qn") > 0)
+                .select("query_id", "doc_int", (F.col("score") / F.col("_qn")).alias("score"))
             )
-            scores = (
-                joined.groupBy("query_id", "doc_int")
-                .agg(
-                    F.sum(F.col("weight") * F.col("qweight")).alias("dot"),
-                    F.first("norm").alias("norm"),
-                )
-                .join(F.broadcast(qnorms), "query_id")
-                .select(
-                    "query_id",
-                    "doc_int",
-                    F.when((F.col("norm") == 0.0) | (F.col("qnorm") == 0.0), F.lit(0.0))
-                    .otherwise(F.col("dot") / (F.col("norm") * F.col("qnorm")))
-                    .alias("score"),
-                )
-            )
-        else:
-            scores = joined.groupBy("query_id", "doc_int").agg(
-                F.sum(F.col("weight") * F.col("qweight")).alias("score")
-            )
-        scores = scores.where(F.col("score") > 0)
-        if deleted0 is not None:
-            scores = scores.join(
-                F.broadcast(deleted0.select("doc_int")), "doc_int", "left_anti"
-            )
-        if doc_filter is not None:
-            # before the window's per-query cut: a cut taken over ineligible
-            # docs would evict eligible ones (the mask must precede any cut)
-            scores = scores.join(
-                self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
-            )
-        return self._ranked_many(scores, top_k)
+        return self._ranked_many(cand, top_k)
 
     # ------------------------------------------------------------------
+    # the full-text verbs: each is its ``verbs`` body over this index's
+    # source, finished by ``_top_hits`` (or run through ``search``, so an
+    # expansion composes with both query paths and ``doc_filter``)
     def phrase_search(
         self,
         phrase: str,
         top_k: int = 10,
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """Exact phrase search over the index, no positional postings:
-        conjunctive CANDIDATE GENERATION off the term-bucketed weights
-        (docs containing ALL distinct phrase terms — bucket-pruned scan,
-        one hash agg), then token-sequence VERIFICATION re-tokenizing only
-        the candidate docs' text (|candidates| ≪ |corpus| for selective
-        phrases; the docs join is doc_int-grain).  Ranked by BM25 over the
-        phrase's distinct terms, desc score / asc doc_id — same semantics
-        as ``adhoc.phrase_search``."""
-        from splade_easy_spark.adhoc import _phrase_tokens
-        from splade_easy_spark.functions.text import tokenize
-
-        if "text" not in self.docs.columns:
-            raise ValueError(
-                "phrase_search needs stored text; this index has none "
-                "(vector-mode build)"
-            )
-        ordered = _phrase_tokens(phrase, self.config)
-        if not ordered:
-            return self._no_hits()
-        distinct = sorted(set(ordered))
-        dt = self._pruned_doc_terms(distinct)
-        cand = (
-            dt.groupBy("doc_int")
-            .agg(
-                F.sum("weight").alias("score"),
-                F.count_distinct("term").alias("_nt"),
-            )
-            .where(F.col("_nt") == len(distinct))
-            .select("doc_int", "score")
-        )
-        deleted = self._deleted()
-        if deleted is not None:
-            cand = cand.join(
-                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-            )
-        if doc_filter is not None:
-            cand = cand.join(
-                self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
-            )
-        needle = " " + " ".join(ordered) + " "
-        hay = F.concat(
-            F.lit(" "),
-            F.array_join(tokenize(F.col("text"), self.config.analyzer), " "),
-            F.lit(" "),
-        )
-        verified = (
-            cand.join(self.docs.select("doc_int", "text"), "doc_int")
-            .where(F.instr(hay, needle) > 0)
-            .select("doc_int", "score")
-        )
-        return self._top_hits(verified, top_k)
+        """Exact phrase search over the index, no positional postings
+        (``verbs.phrase_search``): docs containing ALL distinct phrase
+        terms, verified by re-tokenizing only those docs' text.  Ranked by
+        BM25 over the phrase's distinct terms, desc score / asc doc_id."""
+        return self._top_hits(verbs.phrase_search(self.source, phrase, doc_filter), top_k)
 
     def boolean_search(
         self,
@@ -672,51 +533,13 @@ class Searcher:
         top_k: int = 10,
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """Lucene BooleanQuery over the index: a hit contains EVERY
-        ``must`` term, gains score from ``should`` terms, and is excluded
-        by ANY ``must_not`` term.  Score = Σ weight over the doc's
-        (must ∪ should) terms.  One bucket-pruned doc_terms scan and one
-        aggregate serve all three clauses (the conjunction is a
-        count-distinct over must terms, the exclusion a count of must_not
-        rows that has to be 0) — same semantics as
-        ``adhoc.boolean_search``."""
-        cfg = self.config
-        m = sorted({t for t, _ in analyze_query(" ".join(must or []), cfg)})
-        s_extra = sorted(
-            {t for t, _ in analyze_query(" ".join(should or []), cfg)} - set(m)
-        )
-        n = sorted({t for t, _ in analyze_query(" ".join(must_not or []), cfg)})
-        scored_terms = m + s_extra
-        if not scored_terms:
-            return self._no_hits()
-        all_terms = sorted(set(scored_terms) | set(n))
-        dt = self._pruned_doc_terms(all_terms)
-        scored = (
-            dt.groupBy("doc_int")
-            .agg(
-                F.sum(
-                    F.when(in_list("term", scored_terms), F.col("weight"))
-                ).alias("score"),
-                F.count_distinct(
-                    F.when(in_list("term", m), F.col("term"))
-                ).alias("_nm"),
-                F.count(F.when(in_list("term", n), 1)).alias("_nn"),
-            )
-            .where(
-                (F.col("_nm") == len(m)) & (F.col("score") > 0) & (F.col("_nn") == 0)
-            )
-            .select("doc_int", "score")
-        )
-        deleted = self._deleted()
-        if deleted is not None:
-            scored = scored.join(
-                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-            )
-        if doc_filter is not None:
-            scored = scored.join(
-                self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
-            )
-        return self._top_hits(scored, top_k)
+        """Lucene BooleanQuery over the index (``verbs.boolean_search``):
+        a hit contains EVERY ``must`` term, gains score from ``should``
+        terms, and is excluded by ANY ``must_not`` term.  Score = Σ weight
+        over the doc's (must ∪ should) terms.  One bucket-pruned doc_terms
+        scan and one aggregate serve all three clauses."""
+        scores = verbs.boolean_search(self.source, must, should, must_not, doc_filter)
+        return self._top_hits(scores, top_k)
 
     def fuzzy_search(
         self,
@@ -729,46 +552,14 @@ class Searcher:
         doc_filter: Column | None = None,
     ) -> DataFrame:
         """Lucene FuzzyQuery over the index: expand to dictionary terms
-        within ``max_dist`` edits (closest first, then df desc / term asc,
-        capped), then a regular OR search with the closeness boost
-        ``1 − dist/max(|q|,|term|)`` as the query weight — composing with
-        both query paths and ``doc_filter``.  The levenshtein test runs
-        only inside the LENGTH BAND ``|q| ± max_dist`` of the term_stats
-        scan (the banded scan is the distributed analog of Lucene's FST
-        automaton walk; postings are untouched until the expansion is
-        fixed)."""
-        # same casing as the index dictionary — unconditional lower()
-        # against a case-preserving analyzer would inflate every distance
-        terms = self._fuzzy_expansions(query_term, max_dist, max_expansions)
-        if not terms:
-            return self._no_hits()
+        within ``max_dist`` edits (``verbs.fuzzy_terms``: closest first,
+        then df desc / term asc, capped), then a regular OR search with
+        the closeness boost ``1 − dist/max(|q|,|term|)`` as the query
+        weight — composing with both query paths and ``doc_filter``."""
+        terms = verbs.fuzzy_terms(self.source, query_term, max_dist, max_expansions)
         return self.search(
-            terms, top_k=top_k, use_cosine=use_cosine, method=method,
-            doc_filter=doc_filter,
+            terms, top_k=top_k, use_cosine=use_cosine, method=method, doc_filter=doc_filter
         )
-
-    def _fuzzy_expansions(
-        self, query_term: str, max_dist: int, max_expansions: int
-    ) -> list[tuple[str, float]]:
-        """[(term, closeness boost)] — the FuzzyQuery expansion: dictionary
-        terms within ``max_dist`` edits, levenshtein evaluated only inside
-        the |q|±d length band, closest-first / df desc / term asc capped
-        cut, boost = 1 − dist/max(|q|,|term|).  Query casing follows the
-        analyzer (unconditional lower() against a case-preserving
-        dictionary would inflate every distance)."""
-        q = query_term.lower() if self.config.analyzer.lowercase else query_term
-        lq = len(q)
-        exp = (
-            self._read("term_stats")
-            .where(F.length("term").between(lq - max_dist, lq + max_dist))
-            .withColumn("dist", F.levenshtein(F.col("term"), F.lit(q)))
-            .where(F.col("dist") <= max_dist)
-            .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term", "dist")
-            .collect()
-        )
-        return [(r["term"], 1.0 - r["dist"] / max(len(r["term"]), lq)) for r in exp]
 
     def query(
         self,
@@ -778,108 +569,19 @@ class Searcher:
     ) -> DataFrame:
         """Execute a Lucene-style query string (see ``query.parser`` for
         the grammar: quoted phrases, +must, -must_not, field:value
-        filters, fuzzy~N, prefix*).  Composition of the engine's
-        primitives in ONE plan: one bucket-pruned doc_terms scan scores
-        every clause's terms (must-conjunction as a count-distinct inside
-        the scoring agg, exclusions as a must_not row count of 0 in the
-        same agg), field filters land on the pushed docs scan with
-        full-corpus idf, and phrase constraints verify token sequences on
-        candidate rows only."""
-        from splade_easy_spark.adhoc import _phrase_tokens
-        from splade_easy_spark.functions.text import tokenize
-        from splade_easy_spark.query.parser import parse_query
-
-        p = parse_query(qs)
-        cfg = self.config
-
-        def analyzed(words: list[str]) -> list[str]:
-            return [t for w in words for t, _ in analyze_query(w, cfg)]
-
-        phrases = [ph for ph in (_phrase_tokens(x, cfg) for x in p.phrases) if ph]
-        if phrases and "text" not in self.docs.columns:
-            raise ValueError(
-                "phrase clauses need stored text; this index has none "
-                "(vector-mode build)"
-            )
-        must_set = sorted(
-            set(analyzed(p.must)) | {t for ph in phrases for t in ph}
-        )
-        weights: dict[str, float] = {t: 1.0 for t in must_set}
-        for t in analyzed(p.should):
-            weights[t] = max(weights.get(t, 0.0), 1.0)
-        for term, dist in p.fuzzy:
-            for t, w in self._fuzzy_expansions(term, dist, 50):
-                weights[t] = max(weights.get(t, 0.0), w)
-        for pre in p.prefixes:
-            for r in self.suggest_terms(pre, 64).collect():
-                weights[r["term"]] = max(weights.get(r["term"], 0.0), 1.0)
-        must_not = sorted(set(analyzed(p.must_not)))
-        flt = doc_filter
-        for name, val in p.filters:
-            rhs = int(val) if val.lstrip("-").isdigit() else val
-            cond = F.col(name) == rhs
-            flt = cond if flt is None else (flt & cond)
-        if not weights:
-            return self._no_hits()
-        dt = self._pruned_doc_terms(sorted(set(weights) | set(must_not)))
-        qdf = local_frame(self.spark, sorted(weights.items()), "term STRING, qweight DOUBLE")
-        # left join: must_not rows keep a null qweight, so they add nothing
-        # to the score but still count toward the exclusion
-        scored = (
-            dt.join(F.broadcast(qdf), "term", "left")
-            .groupBy("doc_int")
-            .agg(
-                F.sum(F.col("weight") * F.col("qweight")).alias("score"),
-                F.count_distinct(
-                    F.when(in_list("term", must_set), F.col("term"))
-                ).alias("_nm"),
-                F.count(F.when(in_list("term", must_not), 1)).alias("_nn"),
-            )
-            .where(
-                (F.col("_nm") == len(must_set))
-                & (F.col("score") > 0)
-                & (F.col("_nn") == 0)
-            )
-            .select("doc_int", "score")
-        )
-        deleted = self._deleted()
-        if deleted is not None:
-            scored = scored.join(
-                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-            )
-        if flt is not None:
-            scored = scored.join(
-                self.docs.where(flt).select("doc_int"), "doc_int", "left_semi"
-            )
-        if phrases:
-            hay = F.concat(
-                F.lit(" "),
-                F.array_join(tokenize(F.col("text"), cfg.analyzer), " "),
-                F.lit(" "),
-            )
-            cond = None
-            for ph in phrases:
-                c = F.instr(hay, " " + " ".join(ph) + " ") > 0
-                cond = c if cond is None else (cond & c)
-            scored = (
-                scored.join(self.docs.select("doc_int", "text"), "doc_int")
-                .where(cond)
-                .select("doc_int", "score")
-            )
-        return self._top_hits(scored, top_k)
+        filters, fuzzy~N, prefix*) as ONE plan (``verbs.query``): one
+        bucket-pruned doc_terms scan scores every clause's terms,
+        field filters land on the pushed docs scan with full-corpus idf,
+        and phrase constraints verify token sequences on candidate rows
+        only."""
+        return self._top_hits(verbs.query(self.source, qs, doc_filter), top_k)
 
     def suggest_terms(self, prefix: str, n: int = 10) -> DataFrame:
-        """(term, df) — autocomplete off the index's term dictionary:
-        ``startswith`` compiles to a range predicate pushed to the sorted
-        term_stats scan, ranked df desc / term asc via
+        """(term, df) — autocomplete off the index's term dictionary
+        (``verbs.suggest_terms``): the prefix predicate is pushed to the
+        sorted term_stats scan, ranked df desc / term asc via
         TakeOrderedAndProject (no dictionary collect)."""
-        return (
-            self._read("term_stats")
-            .where(F.col("term").startswith(prefix))
-            .select("term", "df")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
+        return verbs.suggest_terms(self.source, prefix, n)
 
     def prefix_search(
         self,
@@ -891,18 +593,13 @@ class Searcher:
         doc_filter: Column | None = None,
     ) -> DataFrame:
         """Lucene PrefixQuery over the index: expand the prefix to at most
-        ``max_expansions`` dictionary terms (df desc, term asc — the
-        highest-signal expansions when the cap binds), then run a regular
-        OR search with unit weights — which means the expansion composes
-        with BOTH query paths (WAND pruning included) and with
-        ``doc_filter``.  The expansion is one tiny bounded job against the
-        prefix-pruned term_stats scan."""
-        exp = [r["term"] for r in self.suggest_terms(prefix, max_expansions).collect()]
-        if not exp:
-            return self._no_hits()
+        ``max_expansions`` dictionary terms (``verbs.prefix_terms``, one
+        tiny bounded job), then a regular OR search with unit weights —
+        composing with BOTH query paths (WAND pruning included) and with
+        ``doc_filter``."""
+        terms = verbs.prefix_terms(self.source, prefix, max_expansions)
         return self.search(
-            [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
-            method=method, doc_filter=doc_filter,
+            terms, top_k=top_k, use_cosine=use_cosine, method=method, doc_filter=doc_filter
         )
 
     def near_search(
@@ -914,66 +611,12 @@ class Searcher:
         ordered: bool = False,
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """Lucene SpanNearQuery over the index: docs where the two terms
-        occur within ``slop`` token positions (``ordered=True`` requires
-        a before b), ranked by BM25 over the pair.  Same candidate-then-
-        verify shape as phrase_search — the conjunctive candidate set
-        comes off the bucket-pruned doc_terms scan, and only candidate
-        docs' text is re-tokenized for the position check (the position
-        stream is filtered to the two terms before the self-join)."""
-        from splade_easy_spark.adhoc import _phrase_tokens
-        from splade_easy_spark.functions.text import tokenize
-
-        if "text" not in self.docs.columns:
-            raise ValueError(
-                "near_search needs stored text; this index has none "
-                "(vector-mode build)"
-            )
-        a_terms = _phrase_tokens(term_a, self.config)
-        b_terms = _phrase_tokens(term_b, self.config)
-        if len(a_terms) != 1 or len(b_terms) != 1:
-            raise ValueError("near_search takes exactly one term per side")
-        ta, tb = a_terms[0], b_terms[0]
-        distinct = sorted({ta, tb})
-        dt = self._pruned_doc_terms(distinct)
-        cand = (
-            dt.groupBy("doc_int")
-            .agg(
-                F.sum("weight").alias("score"),
-                F.count_distinct("term").alias("_nt"),
-            )
-            .where(F.col("_nt") == len(distinct))
-            .select("doc_int", "score")
-        )
-        deleted = self._deleted()
-        if deleted is not None:
-            cand = cand.join(
-                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-            )
-        if doc_filter is not None:
-            cand = cand.join(
-                self.docs.where(doc_filter).select("doc_int"), "doc_int", "left_semi"
-            )
-        pos = (
-            cand.join(self.docs.select("doc_int", "text"), "doc_int")
-            .select(
-                "doc_int",
-                F.posexplode(tokenize(F.col("text"), self.config.analyzer)).alias(
-                    "pos", "tok"
-                ),
-            )
-            .where(in_list("tok", distinct))
-        )
-        pa = pos.where(F.col("tok") == ta).select("doc_int", F.col("pos").alias("pa"))
-        pb = pos.where(F.col("tok") == tb).select("doc_int", F.col("pos").alias("pb"))
-        gap = (
-            (F.col("pb") - F.col("pa")).between(1, slop)
-            if ordered
-            else F.abs(F.col("pa") - F.col("pb")).between(1, slop)
-        )
-        near_ids = pa.join(pb, "doc_int").where(gap).select("doc_int").distinct()
-        verified = cand.join(near_ids, "doc_int", "left_semi")
-        return self._top_hits(verified, top_k)
+        """Lucene SpanNearQuery over the index (``verbs.near_search``):
+        docs where the two terms occur within ``slop`` token positions
+        (``ordered=True`` requires a before b), ranked by BM25 over the
+        pair; only candidate docs' text is re-tokenized."""
+        scores = verbs.near_search(self.source, term_a, term_b, slop, ordered, doc_filter)
+        return self._top_hits(scores, top_k)
 
     def regex_search(
         self,
@@ -985,25 +628,12 @@ class Searcher:
         doc_filter: Column | None = None,
     ) -> DataFrame:
         """Lucene RegexpQuery over the index: anchored full-term pattern
-        expanded against the term dictionary (df desc / term asc, capped),
-        then a regular OR search with unit weights.  A general regex has
-        no pushdown, so the expansion scans term_stats — |dictionary| ≪
-        |corpus| and the scan is embarrassingly parallel, the same trade
-        Lucene makes when a pattern's automaton has no literal prefix."""
-        exp = [
-            r["term"]
-            for r in self._read("term_stats")
-            .where(F.col("term").rlike(f"^(?:{pattern})$"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-            .collect()
-        ]
-        if not exp:
-            return self._no_hits()
+        expanded against the term dictionary (``verbs.regex_terms``: df
+        desc / term asc, capped), then a regular OR search with unit
+        weights."""
+        terms = verbs.regex_terms(self.source, pattern, max_expansions)
         return self.search(
-            [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
-            method=method, doc_filter=doc_filter,
+            terms, top_k=top_k, use_cosine=use_cosine, method=method, doc_filter=doc_filter
         )
 
     def facet_counts(
@@ -1012,31 +642,11 @@ class Searcher:
         facet_col: str,
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """(facet, n_docs) — Lucene/Solr-style faceting: matching-doc
-        counts (score > 0, tombstones excluded) per value of a stored doc
-        column, desc count / asc facet.  The match set joins back to the
-        docs scan pruned to (doc_int, facet); the facet agg itself is tiny
-        (|facets| ≪ |docs|), so the cost is one postings-bucket scan plus
-        one doc-grain join — the same work as a search without the top-k."""
-        terms = analyze_query(query, self.config) if isinstance(query, str) else query
-        if not terms:
-            return local_frame(self.spark, [], "facet STRING, n_docs BIGINT")
-        scores = self._scores(terms, use_cosine=False)
-        deleted = self._deleted()
-        if deleted is not None:
-            scores = scores.join(
-                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
-            )
-        d = self.docs.where(doc_filter) if doc_filter is not None else self.docs
-        # the counts are one row per facet value: sort them in one task
-        # (a global orderBy would add a range-sampling job and a shuffle)
-        return (
-            scores.join(d.select("doc_int", F.col(facet_col).alias("facet")), "doc_int")
-            .groupBy("facet")
-            .agg(F.count("*").alias("n_docs"))
-            .coalesce(1)
-            .sortWithinPartitions(F.desc("n_docs"), F.asc("facet"))
-        )
+        """(facet, n_docs) — Lucene/Solr-style faceting
+        (``verbs.facet_counts``): matching-doc counts (score > 0,
+        tombstones excluded) per value of a stored doc column, desc count
+        / asc facet."""
+        return verbs.facet_counts(self.source, self._terms(query), facet_col, doc_filter)
 
     def more_like_this(
         self,
@@ -1051,62 +661,16 @@ class Searcher:
         doc's top ``query_terms`` BM25-weighted terms (desc weight, asc
         term), query weight = source weight, source doc excluded.
 
-        Scale shape: the source vector is NEVER read from doc_terms (a
-        doc-grain lookup there scans every term bucket) — the seed doc's
-        tf vector, its idf join against ``term_stats`` and the weight cut
-        are ONE driver-synchronous job: tokenize the pushed point lookup
-        with the build's own analyzer expression, count terms, broadcast
-        that handful of rows against the term_stats scan through the
-        builder's own ``bm25_weight_expr`` (no formula duplicated, no
-        full-table pass; |dictionary| ≪ |corpus| and the scan is
-        embarrassingly parallel).  ``avgdl`` comes from the searcher's
-        as-of-open stats — no per-call corpus_stats job.  Round-4/5 shape
-        was three jobs per call (point lookup → stats → weights); folding
-        them removed two job floors from the latency path.  The term cut
-        ranks on round(weight, 9) so near-ulp weight noise can't flip the
-        LIMIT boundary between runs."""
-        from splade_easy_spark.functions.bm25 import bm25_weight_expr
-        from splade_easy_spark.functions.text import tokenize
-
-        if "text" not in self.docs.columns:
-            raise ValueError(
-                "more_like_this needs stored text; this index has none "
-                "(vector-mode build)"
-            )
-        avgdl = float(self.stats["avgdl"] or 1.0)
-        src = (
-            self.docs.where(F.col("doc_id") == doc_id)
-            .select("text", "doc_len")
-            .limit(1)
-        )
-        tfdf = (
-            src.select(
-                F.explode(tokenize(F.col("text"), self.config.analyzer)).alias("term"),
-                "doc_len",
-            )
-            .groupBy("term")
-            .agg(F.count("*").cast("int").alias("tf"), F.first("doc_len").alias("_dl"))
-        )
-        ts = self._read("term_stats").select("term", "idf")
-        picked = (
-            ts.join(F.broadcast(tfdf), "term")
-            .select(
-                "term",
-                bm25_weight_expr(
-                    F.col("tf"), F.col("_dl"), F.lit(avgdl), F.col("idf"),
-                    self.config.bm25,
-                ).alias("w"),
-            )
-            .orderBy(F.desc(F.round("w", 9)), F.asc("term"))
-            .limit(query_terms)
-            .collect()
-        )
-        terms = [(r["term"], float(r["w"])) for r in picked]
+        The source vector is one driver-synchronous job
+        (``verbs.more_like_this_terms``), never a doc-grain lookup in
+        doc_terms (which would scan every term bucket); ``avgdl`` is the
+        searcher's as-of-open value, so no per-call corpus_stats job."""
+        terms = verbs.more_like_this_terms(self.source, F.col("doc_id") == doc_id, query_terms)
         if not terms:
-            # empty expansion: either the doc is missing (KeyError, as
-            # before) or it has no in-vocabulary terms (empty result) —
-            # disambiguate on the rare path only
-            if src.count() == 0:
+            # empty expansion: either the doc is missing (KeyError) or it
+            # has no in-vocabulary terms (empty result) — disambiguate on
+            # the rare path only
+            if self.docs.where(F.col("doc_id") == doc_id).limit(1).count() == 0:
                 raise KeyError(f"doc_id not in index: {doc_id!r}")
             return self._no_hits()
         # overfetch by one: the source doc itself is typically the top hit
@@ -1130,58 +694,17 @@ class Searcher:
         method: str = "sql",
         doc_filter: Column | None = None,
     ) -> DataFrame:
-        """(doc_id, score, pos, snippet, …) — KWIC highlighting over the
+        """(doc_id, score, …, pos, snippet) — KWIC highlighting over the
         index: the regular top-k search plus, per hit, the earliest
-        1-based character position of any query term in lower(text) and a
-        ``width``-char window starting ``before`` chars earlier.  The
-        window math runs post-limit on the k result rows (the text join
-        the search already does), never a corpus pass — same semantics as
-        ``adhoc.search_snippets``."""
-        if "text" not in self.docs.columns:
-            raise ValueError(
-                "search_snippets needs stored text; this index has none "
-                "(vector-mode build)"
-            )
-        terms = analyze_query(query, self.config) if isinstance(query, str) else query
+        1-based character position of any query term in its text and a
+        ``width``-char window starting ``before`` chars earlier
+        (``verbs.snippets``, on the k result rows only)."""
         hits = self.search(
             query, top_k=top_k, use_cosine=use_cosine, return_text=True,
             method=method, doc_filter=doc_filter,
         )
-        if not terms:
-            return hits.select(
-                "doc_id", "score", F.lit(None).cast("int").alias("pos"),
-                F.lit(None).cast("string").alias("snippet"),
-            )
-        # haystack casing follows the analyzer: with lowercase=True the
-        # terms are lowercased so the haystack must be too; with a
-        # case-preserving analyzer the raw text already matches the terms
-        hay = (
-            F.lower(F.col("text"))
-            if self.config.analyzer.lowercase
-            else F.col("text")
-        )
-        sentinel = 1 << 30
-        cands = [
-            F.coalesce(F.nullif(F.instr(hay, t), F.lit(0)), F.lit(sentinel))
-            for t, _ in terms
-        ]
-        pos_raw = cands[0] if len(cands) == 1 else F.least(*cands)
-        # never surface the internal sentinel (defensive: pre-analyzed
-        # term lists may contain terms not present as substrings)
-        pos = F.when(pos_raw < sentinel, pos_raw.cast("int"))
-        keep = [c for c in hits.columns if c != "text"]
-        return (
-            hits.withColumn("pos", pos)
-            .withColumn(
-                "snippet",
-                F.when(
-                    F.col("pos").isNotNull(),
-                    F.expr(f"substring(text, greatest(pos - {before}, 1), {width})"),
-                ),
-            )
-            .select(*keep, "pos", "snippet")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(top_k)
+        return verbs.snippets(
+            self.source, hits, self._terms(query), top_k, before, width, "doc_id"
         )
 
     def get(self, doc_id: str, load_text: bool = True) -> dict | None:

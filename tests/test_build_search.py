@@ -696,12 +696,27 @@ def test_query_tables_are_local_relations(corpus, spark):
 #: search_many: the same scoring jobs, then the per-query window, the docs
 #: join and a one-task final sort (no range-sampling job); a filter's
 #: allowed ids join the WAND postings exchange as JVM-projected mask rows;
-#: bm25_topk_multi runs its tf kernel once (df is a window over it).
+#: bm25_topk_multi runs its tf kernel once (df is a window over it).  The
+#: full-text verbs the benchmark's interactive loop times are pinned at
+#: the counts measured before they became shared ``query.verbs`` bodies
+#: (``query`` and ``near_search`` now start fewer).
 JOB_BUDGET = {
     "search_sql": 4, "search_wand": 3, "suggest_terms": 1,
     "search_many_sql": 6, "search_many_wand": 5,
     "search_many_wand_filtered": 5, "bm25_topk_multi": 8,
+    "phrase_search": 5, "boolean_search": 4, "query": 5, "fuzzy_search": 5,
+    "prefix_search": 5, "regex_search": 5, "near_search": 7, "facet_counts": 5,
+    "more_like_this": 7, "search_snippets": 6, "get": 1,
 }
+
+
+def _verb_args(s):
+    """A doc of the module corpus, a phrase from its text, and a query."""
+    import re
+
+    row = s.docs.where(F.col("doc_int") == 100).select("doc_id", "text").collect()[0]
+    toks = re.findall(CFG.analyzer.token_pattern, row["text"].lower())
+    return row["doc_id"], " ".join(toks[:2]), generate_query_set()[0]["text"]
 
 
 def test_warm_call_job_budget(corpus, spark, spark_jobs):
@@ -711,6 +726,10 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
     from splade_easy_spark import adhoc
 
     idx_dir, _, _ = corpus
+    # frames an earlier test persisted (a memory-mode searcher over this
+    # index) would serve these plans from the cache and change their job
+    # count (near_search: 7 -> 10); measure the plans as a fresh session runs them
+    spark.catalog.clearCache()
     s = Searcher(spark, idx_dir, CFG)
     qs = generate_query_set()[:4]
     text = qs[0]["text"]
@@ -728,6 +747,21 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
             spark, s.docs.select("doc_id", "text"), many, top_k=10
         ).collect(),
     }
+    doc_id, phrase, _ = _verb_args(s)
+    verb_calls = {
+        "phrase_search": lambda: s.phrase_search(phrase, top_k=10),
+        "boolean_search": lambda: s.boolean_search(["baba0"], ["ceba1"], ["foba3"], top_k=10),
+        "query": lambda: s.query("+baba0 ceba1 -foba3", top_k=10),
+        "fuzzy_search": lambda: s.fuzzy_search("bab0", max_dist=1, top_k=10),
+        "prefix_search": lambda: s.prefix_search("ba", top_k=10),
+        "regex_search": lambda: s.regex_search("ba.a0", top_k=10),
+        "near_search": lambda: s.near_search("baba0", "ceba1", slop=3, top_k=10),
+        "facet_counts": lambda: s.facet_counts(text, "role"),
+        "more_like_this": lambda: s.more_like_this(doc_id, top_k=10),
+        "search_snippets": lambda: s.search_snippets(text, top_k=10),
+    }
+    calls.update({k: (lambda f=f: f().collect()) for k, f in verb_calls.items()})
+    calls["get"] = lambda: [s.get(doc_id)]
     for name, call in calls.items():
         call()  # warm: Python workers up, code paths loaded
         n, rows = spark_jobs(call)
@@ -815,3 +849,80 @@ def test_one_python_stage_per_wand_call(corpus, spark, tmp_path):
     multi = adhoc.bm25_topk_multi(spark, s.docs.select("doc_id", "text"), many, top_k=5)
     plan = _final_plan(multi)
     assert plan.count("MapInArrow") == 1, plan
+
+
+def test_every_verb_matches_adhoc(corpus, spark):
+    """Each full-text verb served by the index equals its ``adhoc``
+    counterpart over the index's own docs: ranked lists within 1e-6 with
+    tie bands compared as sets, exact facet counts, exact (pos, snippet)
+    per hit, exact suggest lists; ``get`` returns the stored row.  Both
+    sides run the same ``query.verbs`` body over different sources."""
+    from splade_easy_spark import adhoc
+
+    idx_dir, _, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    docs = s.docs.select("doc_id", "text", "role")
+    doc_id, phrase, text = _verb_args(s)
+    a, b = phrase.split()
+    k, wide = 10, 40  # the adhoc side ranks deeper: a tie band may straddle k
+
+    topk = {
+        "phrase_search": (
+            lambda: s.phrase_search(phrase, top_k=k),
+            lambda n: adhoc.phrase_search(spark, docs, phrase, top_k=n),
+        ),
+        "boolean_search": (
+            lambda: s.boolean_search([a], [b], ["foba3"], top_k=k),
+            lambda n: adhoc.boolean_search(spark, docs, [a], [b], ["foba3"], top_k=n),
+        ),
+        "query": (
+            lambda: s.query(f"+{a} {b} -foba3", top_k=k),
+            lambda n: adhoc.boolean_search(spark, docs, [a], [b], ["foba3"], top_k=n),
+        ),
+        "fuzzy_search": (
+            lambda: s.fuzzy_search(a[:-1], max_dist=1, top_k=k),
+            lambda n: adhoc.fuzzy_search(spark, docs, a[:-1], max_dist=1, top_k=n),
+        ),
+        "prefix_search": (
+            lambda: s.prefix_search(a[:2], top_k=k),
+            lambda n: adhoc.prefix_search(spark, docs, a[:2], top_k=n),
+        ),
+        "regex_search": (
+            lambda: s.regex_search(a[:1] + "." + a[2:], top_k=k),
+            lambda n: adhoc.regex_search(spark, docs, a[:1] + "." + a[2:], top_k=n),
+        ),
+        "near_search": (
+            lambda: s.near_search(a, b, slop=3, top_k=k),
+            lambda n: adhoc.near_search(spark, docs, a, b, slop=3, top_k=n),
+        ),
+        "more_like_this": (
+            lambda: s.more_like_this(doc_id, top_k=k),
+            lambda n: adhoc.more_like_this(spark, docs, doc_id, top_k=n),
+        ),
+    }
+    for name, (index_call, adhoc_call) in topk.items():
+        got = [(r["doc_id"], r["score"]) for r in index_call().collect()]
+        want = [(r["id"], r["score"]) for r in adhoc_call(wide).collect()]
+        assert got, name
+        assert_topk_matches(got, want, k, tol=1e-6)
+
+    got = {r["facet"]: r["n_docs"] for r in s.facet_counts(text, "role").collect()}
+    want = {r["facet"]: r["n_docs"] for r in adhoc.facet_counts(spark, docs, text, "role").collect()}
+    assert got and got == want
+
+    got = s.search_snippets(text, top_k=k).collect()
+    want = adhoc.search_snippets(spark, docs, text, top_k=wide).collect()
+    assert_topk_matches([(r["doc_id"], r["score"]) for r in got],
+                        [(r["id"], r["score"]) for r in want], k, tol=1e-6)
+    windows = {r["id"]: (r["pos"], r["snippet"]) for r in want}
+    assert got and all((r["pos"], r["snippet"]) == windows[r["doc_id"]] for r in got)
+
+    got = [(r["term"], r["df"]) for r in s.suggest_terms(a[:2], k).collect()]
+    want = [(r["term"], r["df"]) for r in adhoc.suggest_terms(spark, docs, a[:2], k).collect()]
+    assert got and got == want
+
+    row = s.get(doc_id)
+    stored = docs.where(F.col("doc_id") == doc_id).collect()[0]
+    assert (row["doc_id"], row["role"], row["text"]) == (
+        stored["doc_id"], stored["role"], stored["text"]
+    )

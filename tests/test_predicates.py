@@ -7,7 +7,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from splade_easy_spark.functions.predicates import in_list
+from splade_easy_spark.functions.predicates import case_weight, in_list
 from pyspark.sql import functions as F
 
 #: strings the SQL parser would treat specially if they were pasted into a
@@ -62,3 +62,17 @@ def test_in_list_pushes_to_parquet_scan(spark, tmp_path):
             pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
             assert f"In({col}," in pushed, plan
             assert q.count() == n
+
+
+def test_case_weight_is_an_exact_lookup(spark):
+    """``case_weight`` maps each listed value to its exact double (tricky
+    strings included) and every other value, and NULL, to NULL."""
+    weights = {t: 1.0 / (i + 3) for i, t in enumerate(_TRICKY)}
+    weights["plain"] = 1.0
+    weights["also_one"] = 1.0
+    vals = [*weights, "absent", None]
+    df = spark.createDataFrame([(v,) for v in vals], "t STRING")
+    got = {r["t"]: r["w"] for r in df.select("t", case_weight("t", weights).alias("w")).collect()}
+    assert got == {**weights, "absent": None, None: None}
+    empty = df.select(case_weight("t", {}).alias("w")).collect()
+    assert all(r["w"] is None for r in empty)

@@ -95,6 +95,33 @@ def test_metadata_roundtrip(spark, trio_index):
     assert rows[0]["metadata"]["topic"] == "ml"
 
 
+def test_search_many_wand_matches_sql(spark, trio_index):
+    """Batch WAND on a vector index: its term_stats carry no idf/max_tf,
+    so every term bound is unknown and only the exact OOV drop applies.
+    Dot and cosine agree with the SQL batch."""
+    s = Searcher(spark, trio_index, CFG)
+    queries = [
+        {"query_id": "q1", "text": "1 4"},
+        {"query_id": "q2", "text": "10 12 999"},
+        {"query_id": "q3", "text": "3"},
+    ]
+    for cosine in (False, True):
+        out = {}
+        for method in ("sql", "wand"):
+            rows = s.search_many(
+                queries, top_k=3, use_cosine=cosine, method=method, prune_below=0.5
+            ).collect()
+            out[method] = [(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows]
+        assert [r[:3] for r in out["wand"]] == [r[:3] for r in out["sql"]] != []
+        for w, q in zip(out["wand"], out["sql"]):
+            assert abs(w[3] - q[3]) < TOL
+    # an all-OOV batch comes back empty with the same columns on both paths
+    hits = s.search_many(queries, top_k=3).columns
+    for method in ("sql", "wand"):
+        none = s.search_many([{"query_id": "q", "text": "999"}], top_k=3, method=method)
+        assert none.columns == hits and none.count() == 0
+
+
 def test_duplicate_tokens_keep_max(spark, tmp_path):
     """Build + query side dedup keeps max weight (scoring.py:102-114)."""
     idx = str(tmp_path / "idx")
