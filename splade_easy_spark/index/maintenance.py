@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
+from splade_easy_spark.functions.predicates import in_list
 from splade_easy_spark.index.builder import pack_for
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.index.manifest import FORMAT_VERSION
@@ -223,9 +224,8 @@ def _fresh_lineage(cat: IndexCatalog, name: str) -> list[dict] | None:
         # record_stage re-recorded lineage (the files on disk are the
         # POST-rewrite set while the lineage still describes the
         # pre-rewrite files — round-5 ADVICE low): never trust a table the
-        # entry declared at-risk.  Legacy entries carry no table list and
-        # distrust everything.
-        if "tables" not in e or name in e["tables"]:
+        # entry declared at-risk
+        if name in e["tables"]:
             return None
     stages = [
         s
@@ -234,23 +234,12 @@ def _fresh_lineage(cat: IndexCatalog, name: str) -> list[dict] | None:
     ]
     if not stages:
         return None
-    appends = man.data.get("appends", [])
-    # order events by the monotonic manifest sequence when every entry
-    # carries one (all manifests written since round 5 do); legacy entries
-    # without seq fall back to the wall-clock comparison they were written
-    # under
-    if all("seq" in s for s in stages) and all("seq" in a for a in appends):
-        committed = max(s["seq"] for s in stages)
-        last_append = max((a["seq"] for a in appends), default=0)
-        if last_append > committed:
-            return None
-    else:
-        committed = max(s.get("committed_at", 0) for s in stages)
-        if committed == 0.0:
-            return None
-        last_append = max((a.get("at", 0) for a in appends), default=0.0)
-        if last_append > committed:
-            return None
+    # events are ordered by the monotonic manifest sequence, never by wall
+    # clock (migrate numbers the entries of a format-1 manifest)
+    committed = max(s["seq"] for s in stages)
+    last_append = max((a["seq"] for a in man.data.get("appends", [])), default=0)
+    if last_append > committed:
+        return None
     return info["files"]
 
 
@@ -294,7 +283,7 @@ def _settle_journals(spark: SparkSession, cat: IndexCatalog) -> None:
         {
             t
             for e in man.pending_maintenance_entries()
-            for t in e.get("tables", [])
+            for t in e["tables"]
             if Path(cat.table_dir(t)).exists()
         }
     )
@@ -315,7 +304,7 @@ def delete(spark: SparkSession, index_dir: str, doc_ids: list[str]) -> int:
     cat = IndexCatalog(index_dir)
     writer_prologue(spark, cat)
     docs = cat.read(spark, "docs")
-    target = docs.where(F.col("doc_id").isin(doc_ids)).select("doc_id", "doc_int")
+    target = docs.where(in_list("doc_id", doc_ids)).select("doc_id", "doc_int")
     existing = cat.read_deleted(spark)
     if existing is not None:
         target = target.join(existing.select("doc_id"), "doc_id", "left_anti")
@@ -559,6 +548,7 @@ def migrate_postings(
     man = cat.manifest
     if man.format_version == FORMAT_VERSION:
         return {"migrated": False, "reason": f"already format {FORMAT_VERSION}"}
+    man.normalize_format1()
     heal_interrupted_swaps(cat.index_dir)
     _settle_journals(spark, cat)
     _gc_rewrite_dirs(cat)

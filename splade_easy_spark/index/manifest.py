@@ -146,12 +146,39 @@ class Manifest:
             config, **{k: lay[k] for k in PHYSICAL_LAYOUT if k in lay}
         )
 
+    def normalize_format1(self) -> None:
+        """Bring a format-1 manifest's journal to the current shape, in
+        memory (``migrate_postings`` runs it, then saves).
+
+        * Stage and append entries without a ``seq`` get one, in the
+          order of their ``committed_at``/``at`` (a stage first at a tie, so
+          the tie reads as stale lineage).  They predate every entry that
+          has a ``seq``, so those seqs move up past them.
+        * A dict ``pending_maintenance`` (the single-marker journal) becomes
+          a one-entry list naming every recorded table, all of which the
+          marker distrusted."""
+        d = self.data
+        stages = list(d.get("stages", {}).values())
+        appends = d.get("appends", [])
+        if isinstance(d.get("pending_maintenance"), dict):
+            d["pending_maintenance"] = [
+                {"tables": sorted(d.get("tables", {})), **d["pending_maintenance"]}
+            ]
+        legacy = sorted(
+            [(s.get("committed_at", 0.0), 0, s) for s in stages if "seq" not in s]
+            + [(a.get("at", 0.0), 1, a) for a in appends if "seq" not in a],
+            key=lambda x: x[:2],
+        )
+        for e in [*stages, *appends, *d.get("pending_maintenance", [])]:
+            if "seq" in e:
+                e["seq"] += len(legacy)
+        for seq, (*_, e) in enumerate(legacy, start=1):
+            e["seq"] = seq
+        d["seq"] = int(d.get("seq", 0)) + len(legacy)
+
     # -- queries ---------------------------------------------------------
     def stage_complete(self, stage: str) -> bool:
         return stage in self.data["stages"]
-
-    def table_path(self, name: str) -> Path:
-        return self.index_dir / self.data["tables"][name]["dir"]
 
     def verify_table(self, name: str) -> bool:
         """Check every recorded file still exists with the recorded size
@@ -185,12 +212,8 @@ class Manifest:
 
     # -- maintenance journal --------------------------------------------
     def pending_maintenance_entries(self) -> list[dict]:
-        """The pending-maintenance journal as a list (a dict is the legacy
-        single-marker format written before the per-table protocol)."""
-        pend = self.data.get("pending_maintenance")
-        if not pend:
-            return []
-        return [pend] if isinstance(pend, dict) else list(pend)
+        """The pending-maintenance journal's entries."""
+        return list(self.data.get("pending_maintenance", []))
 
     def journal_maintenance(self, op: str, tables: list[str]) -> int:
         """Append a durable journal entry declaring which tables' lineage
@@ -259,20 +282,13 @@ class Manifest:
         # not re-trust the docs lineage a crashed compact invalidated.
         entries = []
         for e in self.pending_maintenance_entries():
-            left = [t for t in e.get("tables", []) if t not in tables]
-            if left and e.get("tables"):
+            left = [t for t in e["tables"] if t not in tables]
+            if left:
                 entries.append({**e, "tables": left})
-            # legacy dict-format markers carry no tables list: dropped on
-            # any stage commit (the pre-round-5 behavior they were written
-            # under)
         if entries:
             self.data["pending_maintenance"] = entries
         else:
             self.data.pop("pending_maintenance", None)
-        self.save()
-
-    def drop_stage(self, stage: str) -> None:
-        self.data["stages"].pop(stage, None)
         self.save()
 
     def save(self) -> None:

@@ -31,16 +31,18 @@ files are still listed afresh on each call (see ``_postings``); and the
 docs join ends in sort+limit, a TakeOrderedAndProject over at most k
 rows rather than a sampled range sort.  ``search`` is then four jobs on
 the SQL path (query broadcast, scoring map stage, top-k, docs join) and
-three on the WAND path (postings exchange, kernel top-k, docs join).
+three on the WAND path (postings exchange, kernel top-k, docs join); a
+cosine query's norm is a literal in the plan, no query table.
 
 The SQL path of ``search``/``search_many`` and every full-text verb
 (phrase, boolean, query string, fuzzy, prefix, regex, near, facets,
 more-like-this, snippets, suggest) is the shared body in ``query.verbs``,
 run over this index as a scoring source (``_IndexSource``); ``adhoc``
 runs the same bodies over a raw corpus.  What stays here is what only an
-index has: the WAND fast path over packed postings, tombstones and the
-snapshot bound, and the finishing step that cuts on ``doc_int`` and joins
-the docs columns (``_top_hits``, ``_ranked_many``).
+index has: the WAND fast path over packed postings (one branch,
+``_wand_scores``, shared by ``search`` and ``search_many``), tombstones
+and the snapshot bound, and the finishing step that cuts on ``doc_int``
+and joins the docs columns (``_top_hits``, ``_ranked_many``).
 
 Opening a searcher runs the format gate (``Manifest.require_current``) and
 reads the recorded layout (segment width, term buckets, cosine stream,
@@ -60,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from splade_easy_spark.config import IndexConfig
-from splade_easy_spark.functions.predicates import in_list
+from splade_easy_spark.functions.predicates import case_weight, in_list
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.query import verbs
 from splade_easy_spark.query.verbs import analyze_query
@@ -107,8 +109,10 @@ class Searcher:
     """Read-only view over an index directory.
 
     ``mode='disk'`` streams parquet per query; ``mode='memory'`` persists
-    the postings + docs tables (the reference's two retriever modes,
-    ``src/splade_easy/retriever.py:31-67``).
+    the snapshot-bounded ``doc_terms`` and ``docs`` tables (the reference's
+    two retriever modes, ``src/splade_easy/retriever.py:31-67``).  Nothing
+    unpersists them, and Spark's cache manager also serves a later
+    disk-mode reader's plans over the same files from them.
     """
 
     def __init__(
@@ -341,7 +345,9 @@ class Searcher:
         kernel — identical results, pruned physical work (see
         query/wand.py).  Cosine mode runs the same kernel over the
         normalized weight stream packed at build time (an index built with
-        ``pack_cosine=False`` answers cosine through the SQL path).
+        ``pack_cosine=False`` answers cosine through the SQL path).  A warm
+        call is four Spark jobs on the SQL path and three on the WAND path,
+        cosine included (see the module docstring).
 
         ``doc_filter``: filtered retrieval — a predicate over the stored
         doc columns (conv_id, turn_idx, role, tool, ts, doc_len) that
@@ -350,14 +356,9 @@ class Searcher:
         what the corpus is).  On the SQL path it is a doc-grain semi-join
         between the scored candidates and the pushed-down filtered docs
         scan — right-sized for BROAD filters.  On the WAND path the
-        allowed doc_ints reach the kernel like tombstones, as mask rows
-        (one JVM-projected row per id, about 14 shuffle bytes each, no
-        Python stage besides the kernel; see wand._tombstone_blocks), and
-        are masked BEFORE the pruning threshold (block-max bounds stay
-        conservative over the allowed subset, so exactness is unchanged;
-        see wand._alive_mask).  The mask grows with |allowed|, so this is
-        the path for SELECTIVE filters, where the mask is small and the
-        kernel's pruning does proportionally less work.
+        allowed doc_ints reach the kernel as mask rows, masked BEFORE the
+        pruning threshold (see wand._tombstone_blocks); the mask grows
+        with |allowed|, so this is the path for SELECTIVE filters.
         """
         _check_method(method)
         terms = self._terms(query)
@@ -368,39 +369,13 @@ class Searcher:
         if method == "sql":
             scores = verbs.search(self.source, terms, use_cosine, doc_filter)
             return self._top_hits(scores, top_k, return_text)
-        from splade_easy_spark.query.wand import wand_search_scores
-
-        scan_terms = terms
-        if isinstance(self._tb_cache, dict):
-            # vocabulary map already paid for by a batch call: the exact
-            # OOV drop is free here — a term absent from term_stats has no
-            # postings, so removing it from the pushed IN-list changes no
-            # result.  Only the SCAN list shrinks; the cosine query norm
-            # below keeps every term, matching the SQL path.  Never loaded
-            # eagerly for single queries: one short IN-list isn't worth a
-            # vocab collect.
-            scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
-        if not scan_terms:
+        # the exact OOV drop uses the vocabulary map only once a batch call
+        # has paid for it: one short IN-list is not worth a vocab collect
+        bounds = self._tb_cache if isinstance(self._tb_cache, dict) else None
+        scores = self._wand_scores({"": terms}, top_k, use_cosine, doc_filter, bounds)
+        if scores is None:
             return self._no_hits(return_text)
-        # tombstones stay distributed: one mask row per id rides the
-        # postings' seg exchange into the kernel (never a driver collect),
-        # which masks them BEFORE the pruning threshold
-        allowed = None if doc_filter is None else self.docs.where(doc_filter).select("doc_int")
-        scores = wand_search_scores(
-            self.spark, self._postings(), scan_terms, self.config.segment_docs, top_k,
-            self._deleted(), use_cosine,
-            term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
-            allowed=allowed,
-        )
-        if use_cosine:
-            # kernel scores are Σ qw·(w/‖d‖); divide the monotone
-            # query-norm factor out so values equal the SQL path's
-            qnorm = sum(qw * qw for _, qw in terms) ** 0.5
-            if qnorm == 0.0:
-                scores = scores.where(F.lit(False))
-            else:
-                scores = scores.select("doc_int", (F.col("score") / F.lit(qnorm)).alias("score"))
-        return self._top_hits(scores, top_k, return_text)
+        return self._top_hits(scores.select("doc_int", "score"), top_k, return_text)
 
     def search_many(
         self,
@@ -414,10 +389,11 @@ class Searcher:
         """Batch evaluation of many queries in one plan (the bulk path
         the reference lacks entirely): explode all query terms, join
         postings once, window top-k per query_id.  A warm call runs a
-        handful of Spark jobs (about 5 on the WAND path, 6 on SQL: the
-        query-table broadcast, the scoring stages, the window, the docs
-        join and a one-task final sort), one Python stage at most (the
-        WAND kernel), and a number of py4j round trips that does not grow
+        handful of Spark jobs (5 on the WAND path, cosine included, and 6
+        on SQL: the scoring stages, the window, the docs join and a
+        one-task final sort, plus the query-table broadcast on SQL), one
+        Python stage at most (the WAND kernel, the same driver as
+        ``search``'s), and a number of py4j round trips that does not grow
         with the batch's terms (``functions.in_list``).  Each query is
         analyzed once.
 
@@ -445,11 +421,8 @@ class Searcher:
         vector index every bound is unknown (see ``_term_bounds``), so
         only the OOV drop applies there.
 
-        ``doc_filter`` as in :func:`search` — candidate restriction with
-        full-corpus statistics.  SQL path: one semi-join for the whole
-        batch.  WAND path: one set of mask rows (one per allowed id,
-        JVM-projected, see ``search``) shipped to the batch kernel and
-        applied before every query's pruning threshold.
+        ``doc_filter`` as in :func:`search`, one semi-join (SQL) or one
+        set of mask rows (WAND) for the whole batch.
         """
         _check_method(method)
         analyzed = [(q["query_id"], analyze_query(q["text"], self.config)) for q in queries]
@@ -461,53 +434,71 @@ class Searcher:
         if method == "sql":
             scores = verbs.search_many(self.source, rows, use_cosine, doc_filter)
             return self._ranked_many(scores, top_k)
+        qt = {k: v for k, v in dict(analyzed).items() if v}
+        scores = self._wand_scores(
+            qt, top_k, use_cosine, doc_filter, self._term_bounds(), prune_below
+        )
+        if scores is None:
+            return self._ranked_many(verbs.search_many(self.source, []), top_k)
+        return self._ranked_many(scores, top_k)
+
+    def _wand_scores(
+        self,
+        queries: dict[str, list[tuple[str, float]]],
+        top_k: int,
+        use_cosine: bool,
+        doc_filter: Column | None,
+        bounds: dict[str, float] | None,
+        prune_below: float = 0.0,
+    ) -> DataFrame | None:
+        """The WAND branch of ``search`` and ``search_many``: (query_id,
+        doc_int, score) per-segment top-k candidates of the one WAND
+        driver, or None when no query has a term left to scan.
+
+        With ``bounds`` (``_term_bounds``) each query drops its
+        out-of-vocabulary terms, which is exact: a term absent from
+        ``term_stats`` has no postings.  ``prune_below`` is the
+        approximate tail cut of ``search_many``.  Cosine scores are
+        divided by the norm of the FULL analyzed query, as on the SQL path
+        (OOV terms count in ‖q‖ though never in the dot); queries whose
+        norm is 0 match nothing and are dropped first."""
         from splade_easy_spark.query.wand import wand_search_many_scores
 
-        qt = {k: v for k, v in dict(analyzed).items() if v}
-        # cosine query norms are over the FULL analyzed term list — the SQL
-        # path's norm includes OOV terms (they contribute to ‖q‖ though
-        # never to the dot), so pruning must not touch it
-        qt_full = qt
-        bounds = self._term_bounds()
-        if bounds is not None:
-            pruned_qt: dict[str, list[tuple[str, float]]] = {}
-            for qid, ts in qt.items():
-                kept = [(t, w) for t, w in ts if t in bounds]
-                if kept and prune_below > 0.0:
-                    # per-query relative cut on qweight·global-bound —
-                    # approximate by design (see docstring); in cosine mode
-                    # the BM25 bounds order terms heuristically.  Terms with
-                    # an unknown (inf) bound never set the threshold and are
-                    # never cut: one NULL-stat term must not make thr=inf
-                    # and evict every other term.
-                    finite = [w * bounds[t] for t, w in kept if math.isfinite(bounds[t])]
-                    if finite:
-                        thr = prune_below * max(finite)
-                        kept = [
-                            (t, w)
-                            for t, w in kept
-                            if not math.isfinite(bounds[t]) or w * bounds[t] >= thr
-                        ]
-                if kept:
-                    pruned_qt[qid] = kept
-            qt = pruned_qt
-        if not qt:
-            return self._ranked_many(verbs.search_many(self.source, []), top_k)
+        if use_cosine:
+            qnorms = {q: sum(w * w for _, w in ts) ** 0.5 for q, ts in queries.items()}
+            queries = {q: ts for q, ts in queries.items() if qnorms[q] > 0.0}
+        scan: dict[str, list[tuple[str, float]]] = {}
+        for qid, ts in queries.items():
+            kept = ts if bounds is None else [(t, w) for t, w in ts if t in bounds]
+            if kept and bounds is not None and prune_below > 0.0:
+                # per-query relative cut on qweight·global-bound (in cosine
+                # mode the BM25 bounds order terms heuristically).  Terms
+                # with an unknown (inf) bound never set the threshold and
+                # are never cut: one NULL-stat term must not make thr=inf
+                finite = [w * bounds[t] for t, w in kept if math.isfinite(bounds[t])]
+                if finite:
+                    thr = prune_below * max(finite)
+                    kept = [
+                        (t, w)
+                        for t, w in kept
+                        if not math.isfinite(bounds[t]) or w * bounds[t] >= thr
+                    ]
+            if kept:
+                scan[qid] = kept
+        if not scan:
+            return None
         allowed = None if doc_filter is None else self.docs.where(doc_filter).select("doc_int")
-        cand = wand_search_many_scores(
-            self.spark, self._postings(), qt, self.config.segment_docs, top_k,
+        scores = wand_search_many_scores(
+            self.spark, self._postings(), scan, self.config.segment_docs, top_k,
             self._deleted(), use_cosine, term_id_seed=self.term_id_seed,
             snapshot_max=self._snapshot_max, allowed=allowed,
         )
         if use_cosine:
-            qnorms = [(qid, sum(qw * qw for _, qw in ts) ** 0.5) for qid, ts in qt_full.items()]
-            qn = local_frame(self.spark, qnorms, "query_id STRING, _qn DOUBLE")
-            cand = (
-                cand.join(F.broadcast(qn), "query_id")
-                .where(F.col("_qn") > 0)
-                .select("query_id", "doc_int", (F.col("score") / F.col("_qn")).alias("score"))
-            )
-        return self._ranked_many(cand, top_k)
+            # kernel scores are Σ qw·(w/‖d‖): divide the monotone query-norm
+            # factor out so values equal the SQL path's
+            qn = case_weight("query_id", {q: qnorms[q] for q in scan})
+            scores = scores.select("query_id", "doc_int", (F.col("score") / qn).alias("score"))
+        return scores
 
     # ------------------------------------------------------------------
     # the full-text verbs: each is its ``verbs`` body over this index's

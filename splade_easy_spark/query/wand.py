@@ -34,17 +34,12 @@ hybrid, exact by construction:
   partial scores.
 
 Tombstones never pass through the driver: the ``deleted`` table becomes
-mask rows, one per doc_int (``term_id = TOMB_TERM_ID``, ``doc_min =
-doc_max = doc_int``, ``n = 1``, null binaries), projected JVM-side, that
-ride the same seg-colocation exchange as the postings; a filter's allowed
-ids ride the same way under ``ALLOW_TERM_ID``.  The kernel is the call's
-only Python stage.  A mask row costs about 14 more compressed shuffle
-bytes per id than a varbyte-packed id list would; that is bounded by
-``compact`` for tombstones and small for the selective filters the allow
-path serves (see ``_tombstone_blocks``).  The kernel masks dead docs
-*before* θ / candidate computation, so deletes can never inflate the
-pruning threshold (they are invisible to it) and results equal a
-rebuilt-without-them index's.
+mask rows (``_tombstone_blocks``) that ride the same seg-colocation
+exchange as the postings; a filter's allowed ids ride the same way.  The
+kernel masks them *before* θ / candidate computation, so deletes can never
+inflate the pruning threshold and results equal a rebuilt-without-them
+index's; block-max bounds stay conservative over an allowed subset, so a
+filter keeps exactness too.
 
 Scores are EXACT (pruning only skips work that cannot change the top-k),
 so this path is rank-identical to the SQL path and to the oracle — asserted
@@ -52,11 +47,19 @@ by tests/test_wand.py on every fixture.  Per-segment k-boundary ties are
 all kept (everything scoring >= the kth value survives the segment cut) so
 the global (score DESC, doc_id ASC) ordering resolves them deterministically.
 
-Both score modes run through the same kernel: dot (BM25) over the raw
+Both score modes run through the same kernels: dot (BM25) over the raw
 packed weights, cosine over the doc-normalized weight stream packed
 alongside (``nwts`` = w/‖d‖ with per-block ``max_nweight``) — cosine is a
 plain dot product over that stream up to the query-norm factor, which the
 caller divides out (monotone: pruning and ranking are unaffected).
+
+One driver, ``wand_search_many_scores``, serves a single query and a
+batch.  Its ``mapInPandas`` kernel is the call's only Python stage: it
+sets up each segment's masks once, then runs ``_score_segment`` for one
+query (block-level skipping) or ``_batch_segment`` for several
+(decode-once per term).  The block counters (blocks matching the query
+terms, blocks decoded) live in that kernel: ``wand_profile`` and
+``wand_batch_profile`` run it with a pair of Spark accumulators attached.
 
 The kernels read one postings layout, the current format
 (``manifest.FORMAT_VERSION``): int64 ``term_id`` keys and both weight
@@ -70,6 +73,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,6 +84,7 @@ from splade_easy_spark.index.catalog import (
     term_id_py,
 )
 from splade_easy_spark.index.postings import unpack_block, unpack_blocks
+from splade_easy_spark.session import local_frame
 
 
 def _query_term_ids(terms: list[str], seed: int) -> dict[str, int]:
@@ -103,18 +108,15 @@ def _tombstone_blocks(
     deleted: DataFrame, segment_docs: int, sentinel: int = TOMB_TERM_ID
 ) -> DataFrame:
     """Mask rows for a doc_int set, in the postings schema, so the set
-    rides the postings' seg-colocation exchange to its segment's kernel —
-    fully distributed (the round-1 driver ``collect()`` of tombstones would
-    funnel a heavily-deleted index's millions of ids through the driver per
-    query).
+    rides the postings' seg-colocation exchange to its segment's kernel
+    instead of a driver collect.
 
     One row per doc_int: ``doc_min = doc_max = doc_int``, ``n = 1``, null
     ``docs``/weight binaries.  It is a plain JVM projection, so masking
-    adds no Python stage to the call: the WAND kernel is the only one.
-    The rows are wider than a packed per-segment id list: about 14 more
-    compressed shuffle bytes per id (measured: +9.9 KB for 695 allowed
-    ids on a 2,000-turn index, +8.0 KB for 566 on a 1,600-turn one).
-    That stays small on both paths that use them: ``compact`` bounds the
+    adds no Python stage to the call.  The rows are wider than a packed
+    per-segment id list: about 14 more compressed shuffle bytes per id
+    (measured: +9.9 KB for 695 allowed ids on a 2,000-turn index).  That
+    stays small on both paths that use them: ``compact`` bounds the
     number of tombstones, and the allow path serves selective filters.
 
     ``sentinel`` selects the row kind: TOMB_TERM_ID for an EXCLUSION set
@@ -135,34 +137,15 @@ def _tombstone_blocks(
     )
 
 
-def _split_tombstones(
-    pdf: pd.DataFrame,
-) -> tuple[pd.DataFrame, pd.DataFrame | None, pd.DataFrame | None]:
-    """(real, tombstones, allow) — sentinel rows carved off the postings
-    frame (real ids are non-negative 60-bit hashes)."""
-    mask = pdf["term_id"] < 0
-    if not mask.any():
-        return pdf, None, None
-    neg = pdf[mask]
-    tomb = neg[neg["term_id"] == TOMB_TERM_ID]
-    allow = neg[neg["term_id"] == ALLOW_TERM_ID]
-    return (
-        pdf[~mask],
-        tomb if len(tomb) else None,
-        allow if len(allow) else None,
-    )
-
-
-def _dead_local(tomb: pd.DataFrame | None, seg: int, seg_base: int) -> np.ndarray | None:
-    """Segment-local indices of one mask-row frame (tombstones OR allow
-    rows — the wire format is identical: one row per doc_int, the id in
+def _mask_ids(pdf: pd.DataFrame, sentinel: int, segment_docs: int) -> dict[int, np.ndarray]:
+    """seg → segment-local doc indices of one mask-row kind (tombstones and
+    allowed ids share the wire format: one row per doc_int, the id in
     ``doc_min``)."""
-    if tomb is None:
-        return None
-    tg = tomb[tomb["seg"] == seg]
-    if not len(tg):
-        return None
-    return np.unique(tg["doc_min"].to_numpy(dtype=np.int64)) - seg_base
+    rows = pdf[pdf["term_id"] == sentinel]
+    return {
+        int(seg): np.unique(g["doc_min"].to_numpy(dtype=np.int64)) - int(seg) * segment_docs
+        for seg, g in rows.groupby("seg", sort=False)
+    }
 
 
 class _TermIndex:
@@ -400,172 +383,6 @@ def _score_segment(
     return (live + seg_base)[order], scores[order], blocks_total, blocks_decoded
 
 
-def _pruned_with_tombstones(
-    postings: DataFrame,
-    qterm_ids: list[int],
-    deleted: DataFrame | None,
-    segment_docs: int,
-    wcol: str = "wts",
-    mcol: str = "max_weight",
-    allowed: DataFrame | None = None,
-) -> DataFrame:
-    """Term filter FIRST (parquet predicate pushdown — only the query's
-    posting lists are read), prune to the columns THIS score mode's kernel
-    reads, union the mask rows (tombstones, a filter's allowed ids; one
-    JVM-projected row per doc_int, see ``_tombstone_blocks``), then
-    colocate each segment's surviving blocks in one partition.  The kernel needs a segment's blocks
-    together to produce complete document scores; this repartition moves
-    only the query's postings (same volume the SQL path shuffles into its
-    join).
-
-    The filter is ``term_id IN (...)``, an int64 predicate against the
-    natively-stored hash, pushed to parquet row-group stats.  It is built
-    by ``functions.in_list``: one expression string, so the py4j round
-    trips do not grow with the number of query terms.
-
-    The column pruning matters as much as the term filter: the postings
-    table carries BOTH weight streams (``wts`` and the cosine-mode
-    ``nwts``, equal-sized) plus ``block_id``; a dot-mode query that
-    shipped the full schema would pay ~2× the weight bytes through the
-    seg exchange AND the Arrow hop into the kernel — the measured scaling
-    cap on this box is exactly bytes through that hop.  The projection
-    lands below the exchange (Catalyst pushes it into the scan), so the
-    unused stream is never read, shuffled, or IPC'd."""
-    cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
-    pruned = postings.where(in_list("term_id", qterm_ids)).select(*cols)
-    if deleted is not None:
-        pruned = pruned.unionByName(
-            _tombstone_blocks(deleted, segment_docs).select(*cols)
-        )
-    if allowed is not None:
-        # the filtered-retrieval inclusion set rides the identical mask-row
-        # wire format under its own sentinel; its shuffle bytes grow with
-        # |allowed| — the selective-filter case this path exists for keeps
-        # them small
-        pruned = pruned.unionByName(
-            _tombstone_blocks(allowed, segment_docs, ALLOW_TERM_ID).select(*cols)
-        )
-    return pruned.repartition(F.col("seg"))
-
-
-def wand_search_scores(
-    spark: SparkSession,
-    postings: DataFrame,
-    terms: list[tuple[str, float]],
-    segment_docs: int,
-    top_k: int = 10,
-    deleted: DataFrame | None = None,
-    use_cosine: bool = False,
-    term_id_seed: int = 0,
-    snapshot_max: int | None = None,
-    allowed: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_int, score) candidates: per-segment exact top-k via the pruned
-    kernel, global merge left to the caller's orderBy/limit.
-
-    ``allowed``: filtered retrieval — a (doc_int) frame of the docs a
-    filter permits.  Shipped like tombstones, as one JVM-projected mask
-    row per allowed id, masked in the kernel BEFORE θ (block-max bounds
-    stay conservative upper bounds over the allowed subset, so exactness
-    is unchanged); segments none of whose docs are allowed are skipped
-    outright.  The kernel stays the call's only Python stage; the mask
-    rows cost about 14 shuffle bytes per allowed id — use this path for
-    selective filters, the SQL path for broad ones.
-
-    ``snapshot_max``: the reader's as-of-open watermark — docs with
-    ``doc_int >= snapshot_max`` are masked exactly in the kernel (blocks
-    merged across the watermark by a concurrent optimize are decoded and
-    row-filtered, never dropped whole; see searcher._postings).
-
-    ``use_cosine`` runs the SAME kernel over the normalized weight stream
-    (``nwts``/``max_nweight``: w/‖d‖ packed at build time) — cosine is then
-    a plain dot product, Σ qw·(w/‖d‖), up to the query-norm factor the
-    caller divides out (monotone, so pruning and ranking are unaffected).
-
-    ``term_id_seed`` must be the index's recorded seed (manifest layout)."""
-    qterms = [t for t, _ in terms]
-    ids = _query_term_ids(qterms, term_id_seed)
-    b_qw = spark.sparkContext.broadcast({ids[t]: w for t, w in terms})
-    wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
-    filter_active = allowed is not None
-    pruned = _pruned_with_tombstones(
-        postings, [ids[t] for t in qterms], deleted, segment_docs, wcol, mcol,
-        allowed=allowed,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        real, tomb, allow = _split_tombstones(pdf)
-        for seg, g in real.groupby("seg", sort=False):
-            base = int(seg) * segment_docs
-            alw = _dead_local(allow, seg, base)
-            if filter_active and alw is None:
-                continue  # active filter, no allowed doc in this segment
-            dead = _dead_local(tomb, seg, base)
-            wm = None if snapshot_max is None else int(snapshot_max) - base
-            d, s, _, _ = _score_segment(
-                g, b_qw.value, base, segment_docs, top_k, dead, wcol, mcol,
-                wm_local=wm, allow_local=alw, allow_active=filter_active,
-            )
-            if len(d):
-                yield pd.DataFrame({"doc_int": d, "score": s})
-
-    return pruned.mapInPandas(kernel, schema="doc_int LONG, score DOUBLE")
-
-
-def wand_profile(
-    spark: SparkSession,
-    postings: DataFrame,
-    terms: list[tuple[str, float]],
-    segment_docs: int,
-    top_k: int = 10,
-    deleted: DataFrame | None = None,
-    use_cosine: bool = False,
-    term_id_seed: int = 0,
-    snapshot_max: int | None = None,
-) -> DataFrame:
-    """Instrumented run: per-segment (blocks_total, blocks_decoded) for the
-    same exact computation — the pruning-effectiveness probe behind the
-    ``wand_block_skip_ratio`` bench entry."""
-    qterms = [t for t, _ in terms]
-    ids = _query_term_ids(qterms, term_id_seed)
-    b_qw = spark.sparkContext.broadcast({ids[t]: w for t, w in terms})
-    wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
-    pruned = _pruned_with_tombstones(
-        postings, [ids[t] for t in qterms], deleted, segment_docs, wcol, mcol
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        real, tomb, _allow = _split_tombstones(pdf)
-        segs, bt, bd = [], [], []
-        for seg, g in real.groupby("seg", sort=False):
-            base = int(seg) * segment_docs
-            dead = _dead_local(tomb, seg, base)
-            wm = None if snapshot_max is None else int(snapshot_max) - base
-            _, _, total, decoded = _score_segment(
-                g, b_qw.value, base, segment_docs, top_k, dead, wcol, mcol,
-                wm_local=wm,
-            )
-            segs.append(int(seg))
-            bt.append(total)
-            bd.append(decoded)
-        if segs:
-            yield pd.DataFrame(
-                {"seg": segs, "blocks_total": bt, "blocks_decoded": bd}
-            )
-
-    return pruned.mapInPandas(
-        kernel, schema="seg LONG, blocks_total LONG, blocks_decoded LONG"
-    )
-
-
 def _batch_segment(
     g: pd.DataFrame,
     queries: list[tuple[str, list[tuple[int, float]]]],
@@ -579,9 +396,9 @@ def _batch_segment(
     allow: np.ndarray | None = None,
     allow_active: bool = False,
 ) -> tuple[list, list, list, int, int]:
-    """Exact batch top-k for one segment; shared by the live batch kernel
-    and the profile kernel.  ``wm_local`` masks post-snapshot docs exactly
-    like tombstones (see ``_score_segment``).
+    """Exact top-k for one segment and a batch of queries: the driver's
+    kernel when a call carries two or more.  ``wm_local`` masks
+    post-snapshot docs exactly like tombstones (see ``_score_segment``).
 
     Returns (query_ids, doc_ints, scores, blocks_total, blocks_decoded).
 
@@ -699,33 +516,6 @@ def _batch_segment(
     return out_q, out_d, out_s, blocks_total, n_decoded
 
 
-def _batch_prepared(
-    spark: SparkSession,
-    postings: DataFrame,
-    queries_terms: dict[str, list[tuple[str, float]]],
-    segment_docs: int,
-    deleted: DataFrame | None,
-    use_cosine: bool,
-    term_id_seed: int = 0,
-    allowed: DataFrame | None = None,
-):
-    qids = sorted(queries_terms)
-    all_terms = sorted({t for ts in queries_terms.values() for t, _ in ts})
-    ids = _query_term_ids(all_terms, term_id_seed)
-    b_queries = spark.sparkContext.broadcast(
-        [
-            (qid, sorted((ids[t], w) for t, w in queries_terms[qid]))
-            for qid in qids
-        ]
-    )
-    wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
-    pruned = _pruned_with_tombstones(
-        postings, [ids[t] for t in all_terms], deleted, segment_docs, wcol, mcol,
-        allowed=allowed,
-    )
-    return b_queries, wcol, mcol, pruned
-
-
 def wand_search_many_scores(
     spark: SparkSession,
     postings: DataFrame,
@@ -737,50 +527,154 @@ def wand_search_many_scores(
     term_id_seed: int = 0,
     snapshot_max: int | None = None,
     allowed: DataFrame | None = None,
+    _counters: tuple[Accumulator, Accumulator] | None = None,
 ) -> DataFrame:
-    """Batch retrieval: (query_id, doc_int, score) per-segment top-k
-    candidates for EVERY query in one pass.
+    """(query_id, doc_int, score) per-segment exact top-k candidates for
+    every query in one pass: the one WAND driver, for a single query and
+    for a batch; the global merge is left to the caller.
 
-    ``allowed`` is the filtered-retrieval inclusion set, shared by every
-    query in the batch (see ``wand_search_scores`` — same mask rows, same
-    exactness argument, shipped once for the whole batch).
+    Per segment it runs ``_score_segment`` when the call carries one query
+    (block-level skipping, the right tool for k≈1–5 queries) and
+    ``_batch_segment`` when it carries more (decode-once per term: the SQL
+    batch path multiplies each posting row by every query sharing its
+    term, a Zipfian head term × 100 queries → 10^8 joined rows, while here
+    each segment's blocks for the union of query terms are decoded at most
+    once and scattered into per-query dense accumulators).  Only
+    per-segment top-k rows leave the kernel.
 
-    The SQL batch path multiplies each posting row by every query sharing
-    its term (a Zipfian head term × 100 queries → 10^8 joined rows).  Here
-    each segment's blocks for the union of query terms are decoded AT MOST
-    once (decode-once per term — see ``_batch_segment``; terms no query needs stay
-    packed) and scattered into per-query dense accumulators — work is
-    O(Σ_term needed-block decode + Σ_(term,query) postings_in_segment)
-    with no join blowup materialized, and only per-segment top-k rows
-    leave the kernel.
-    """
-    filter_active = allowed is not None
-    b_queries, wcol, mcol, pruned = _batch_prepared(
-        spark, postings, queries_terms, segment_docs, deleted, use_cosine,
-        term_id_seed, allowed=allowed,
+    ``deleted``/``allowed``: (doc_int) frames of the tombstoned docs and
+    of the docs a filter permits (shared by every query), shipped as mask
+    rows; segments none of whose docs are allowed are skipped outright.
+    The allowed mask grows with |allowed|: use this path for selective
+    filters, the SQL path for broad ones.
+
+    ``snapshot_max``: the reader's as-of-open watermark — docs with
+    ``doc_int >= snapshot_max`` are masked exactly in the kernel (blocks
+    merged across the watermark by a concurrent optimize are decoded and
+    row-filtered, never dropped whole; see searcher._postings).
+
+    ``use_cosine`` runs the same kernels over the normalized weight stream.
+
+    ``term_id_seed`` must be the index's recorded seed (manifest layout).
+
+    ``_counters``: a (blocks_total, blocks_decoded) pair of Spark
+    accumulators each segment's counts are added to; only the profile
+    wrappers below pass it."""
+    qids = sorted(queries_terms)
+    all_terms = sorted({t for ts in queries_terms.values() for t, _ in ts})
+    ids = _query_term_ids(all_terms, term_id_seed)
+    b_queries = spark.sparkContext.broadcast(
+        [(qid, sorted((ids[t], w) for t, w in queries_terms[qid])) for qid in qids]
     )
+    wcol, mcol = ("nwts", "max_nweight") if use_cosine else ("wts", "max_weight")
+    filter_active = allowed is not None
+    # The term filter comes first: ``term_id IN (...)`` (one ``in_list``
+    # expression, so py4j round trips do not grow with the terms) is pushed
+    # to parquet row-group stats, and only the query's posting lists are
+    # read.  The column pruning matters as much: the postings carry BOTH
+    # weight streams, and a query shipping the one it does not score with
+    # would pay ~2x the weight bytes through the seg exchange and the Arrow
+    # hop into the kernel, the measured scaling cap of this path (the
+    # projection lands in the scan).  The mask rows join, then each
+    # segment's blocks are colocated: the kernel needs them together.
+    cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
+    pruned = postings.where(in_list("term_id", [ids[t] for t in all_terms])).select(*cols)
+    for mask, sentinel in ((deleted, TOMB_TERM_ID), (allowed, ALLOW_TERM_ID)):
+        if mask is not None:
+            pruned = pruned.unionByName(
+                _tombstone_blocks(mask, segment_docs, sentinel).select(*cols)
+            )
+    pruned = pruned.repartition(F.col("seg"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches if len(b)]
         if not frames:
             return
         pdf = pd.concat(frames, ignore_index=True)
-        real, tomb, allow = _split_tombstones(pdf)
-        for seg, g in real.groupby("seg", sort=False):
-            base = int(seg) * segment_docs
-            alw = _dead_local(allow, seg, base)
-            if filter_active and alw is None:
+        dead = _mask_ids(pdf, TOMB_TERM_ID, segment_docs)
+        allow = _mask_ids(pdf, ALLOW_TERM_ID, segment_docs)
+        queries = b_queries.value
+        # real term ids are non-negative 60-bit hashes, mask rows negative
+        for seg, g in pdf[pdf["term_id"] >= 0].groupby("seg", sort=False):
+            seg = int(seg)
+            if filter_active and seg not in allow:
                 continue  # active filter, no allowed doc in this segment
-            dead = _dead_local(tomb, seg, base)
+            base = seg * segment_docs
+            alw, dl = allow.get(seg), dead.get(seg)
             wm = None if snapshot_max is None else int(snapshot_max) - base
-            out_q, out_d, out_s, _, _ = _batch_segment(
-                g, b_queries.value, base, segment_docs, top_k, dead, wcol, mcol,
-                wm_local=wm, allow=alw, allow_active=filter_active,
-            )
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "doc_int": out_d, "score": out_s})
+            if len(queries) == 1:
+                qid, qterms = queries[0]
+                d, s, total, decoded = _score_segment(
+                    g, dict(qterms), base, segment_docs, top_k, dl, wcol, mcol,
+                    wm_local=wm, allow_local=alw, allow_active=filter_active,
+                )
+                q = [qid] * len(d)
+            else:
+                q, d, s, total, decoded = _batch_segment(
+                    g, queries, base, segment_docs, top_k, dl, wcol, mcol,
+                    wm_local=wm, allow=alw, allow_active=filter_active,
+                )
+            if _counters is not None:
+                _counters[0].add(total)
+                _counters[1].add(decoded)
+            if len(q):
+                yield pd.DataFrame({"query_id": q, "doc_int": d, "score": s})
 
     return pruned.mapInPandas(kernel, schema="query_id STRING, doc_int LONG, score DOUBLE")
+
+
+def wand_search_scores(
+    spark: SparkSession,
+    postings: DataFrame,
+    terms: list[tuple[str, float]],
+    segment_docs: int,
+    top_k: int = 10,
+    deleted: DataFrame | None = None,
+    use_cosine: bool = False,
+    term_id_seed: int = 0,
+    snapshot_max: int | None = None,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_int, score) candidates of one query: the driver's
+    single-query case (see ``wand_search_many_scores``)."""
+    return wand_search_many_scores(
+        spark, postings, {"": terms}, segment_docs, top_k, deleted, use_cosine,
+        term_id_seed, snapshot_max, allowed,
+    ).select("doc_int", "score")
+
+
+def _block_counts(spark: SparkSession, run) -> DataFrame:
+    """One row (blocks_total, blocks_decoded): ``run(counters)`` builds the
+    live driver's frame with the counters attached, and a ``count()`` runs
+    its kernel once."""
+    sc = spark.sparkContext
+    counters = (sc.accumulator(0), sc.accumulator(0))
+    run(counters).count()
+    return local_frame(
+        spark,
+        [(counters[0].value, counters[1].value)],
+        "blocks_total LONG, blocks_decoded LONG",
+    )
+
+
+def wand_profile(
+    spark: SparkSession,
+    postings: DataFrame,
+    terms: list[tuple[str, float]],
+    segment_docs: int,
+    top_k: int = 10,
+    deleted: DataFrame | None = None,
+    use_cosine: bool = False,
+    term_id_seed: int = 0,
+    snapshot_max: int | None = None,
+) -> DataFrame:
+    """Blocks matching one query's terms and blocks ``_score_segment``
+    decoded for them, counted inside a live run — the probe behind the
+    ``wand.block_skip_ratio`` figure."""
+    return _block_counts(spark, lambda c: wand_search_many_scores(
+        spark, postings, {"": terms}, segment_docs, top_k, deleted, use_cosine,
+        term_id_seed, snapshot_max, _counters=c,
+    ))
 
 
 def wand_batch_profile(
@@ -794,38 +688,11 @@ def wand_batch_profile(
     term_id_seed: int = 0,
     snapshot_max: int | None = None,
 ) -> DataFrame:
-    """Instrumented batch run: per-segment (blocks_total, blocks_decoded)
-    for the same exact computation — the probe behind the
-    ``batch_block_decode_ratio`` bench entry (terms no query in the batch
+    """Blocks matching a batch's terms and blocks the kernel decoded for
+    them, counted inside a live run — the probe behind the
+    ``wand.batch_decode_ratio`` figure (terms no query in the batch
     scattered or repaired through stay packed)."""
-    b_queries, wcol, mcol, pruned = _batch_prepared(
-        spark, postings, queries_terms, segment_docs, deleted, use_cosine,
-        term_id_seed,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        real, tomb, _allow = _split_tombstones(pdf)
-        segs, bt, bd = [], [], []
-        for seg, g in real.groupby("seg", sort=False):
-            base = int(seg) * segment_docs
-            dead = _dead_local(tomb, seg, base)
-            wm = None if snapshot_max is None else int(snapshot_max) - base
-            _, _, _, total, decoded = _batch_segment(
-                g, b_queries.value, base, segment_docs, top_k, dead, wcol, mcol,
-                wm_local=wm,
-            )
-            segs.append(int(seg))
-            bt.append(total)
-            bd.append(decoded)
-        if segs:
-            yield pd.DataFrame(
-                {"seg": segs, "blocks_total": bt, "blocks_decoded": bd}
-            )
-
-    return pruned.mapInPandas(
-        kernel, schema="seg LONG, blocks_total LONG, blocks_decoded LONG"
-    )
+    return _block_counts(spark, lambda c: wand_search_many_scores(
+        spark, postings, queries_terms, segment_docs, top_k, deleted, use_cosine,
+        term_id_seed, snapshot_max, _counters=c,
+    ))

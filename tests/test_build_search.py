@@ -696,13 +696,15 @@ def test_query_tables_are_local_relations(corpus, spark):
 #: search_many: the same scoring jobs, then the per-query window, the docs
 #: join and a one-task final sort (no range-sampling job); a filter's
 #: allowed ids join the WAND postings exchange as JVM-projected mask rows;
+#: WAND cosine divides by each query's norm in one CASE expression, with
+#: no query-norm table to broadcast (6 jobs when it was one);
 #: bm25_topk_multi runs its tf kernel once (df is a window over it).  The
 #: full-text verbs the benchmark's interactive loop times are pinned at
 #: the counts measured before they became shared ``query.verbs`` bodies
 #: (``query`` and ``near_search`` now start fewer).
 JOB_BUDGET = {
     "search_sql": 4, "search_wand": 3, "suggest_terms": 1,
-    "search_many_sql": 6, "search_many_wand": 5,
+    "search_many_sql": 6, "search_many_wand": 5, "search_many_wand_cosine": 5,
     "search_many_wand_filtered": 5, "bm25_topk_multi": 8,
     "phrase_search": 5, "boolean_search": 4, "query": 5, "fuzzy_search": 5,
     "prefix_search": 5, "regex_search": 5, "near_search": 7, "facet_counts": 5,
@@ -740,6 +742,9 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
         "suggest_terms": lambda: s.suggest_terms(text[:2], 5).collect(),
         "search_many_sql": lambda: s.search_many(many, top_k=10, method="sql").collect(),
         "search_many_wand": lambda: s.search_many(many, top_k=10, method="wand").collect(),
+        "search_many_wand_cosine": lambda: s.search_many(
+            many, top_k=10, method="wand", use_cosine=True
+        ).collect(),
         "search_many_wand_filtered": lambda: s.search_many(
             many, top_k=10, method="wand", doc_filter=F.col("role") == "user"
         ).collect(),
@@ -803,6 +808,25 @@ def test_plan_build_round_trips_flat(corpus, spark, py4j_calls):
         plan = df._jdf.queryExecution().executedPlan().toString()
         if name.startswith("search_many wand"):
             assert "In(term_id," in plan or "InSet(term_id," in plan, plan
+
+
+def test_delete_round_trips_flat(corpus, spark, py4j_calls, tmp_path):
+    """``delete`` matches its doc_ids with one ``functions.in_list``
+    expression: deleting 100 ids sends about as many py4j commands as
+    deleting 4 (``isin`` sent one JVM literal per id)."""
+    import shutil
+
+    from splade_easy_spark.index.maintenance import delete
+
+    idx_dir, _, _ = corpus
+    copy = str(tmp_path / "index")
+    shutil.copytree(idx_dir, copy)
+    ids = [r["doc_id"] for r in Searcher(spark, copy, CFG).docs.select("doc_id").orderBy("doc_id").limit(105).collect()]
+    assert delete(spark, copy, ids[:1]) == 1  # warm, and a deleted table exists
+    small, n_small = py4j_calls(lambda: delete(spark, copy, ids[1:5]))
+    large, n_large = py4j_calls(lambda: delete(spark, copy, ids[5:105]))
+    assert (n_small, n_large) == (4, 100)
+    assert large - small <= 10, f"{small} -> {large} py4j commands"
 
 
 def _final_plan(df) -> str:

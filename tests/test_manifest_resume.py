@@ -81,3 +81,62 @@ def test_full_resume_is_noop(spark, tmp_path):
     res = build_index(spark, tx, idx, CFG, resume=True)
     assert res.stages_run == []
     assert sorted(res.stages_skipped) == ["docs", "postings", "stats"]
+
+
+def _format1_manifest() -> dict:
+    """A hand-written format-1 manifest: stage and append entries written
+    before the manifest kept a ``seq`` (one append after it did), and the
+    single-marker dict journal."""
+    files = [{"file": "part-0.parquet", "bytes": 1, "rows": 1}]
+    return {
+        "format_version": 1,
+        "identity": {},
+        "tables": {t: {"dir": t, "files": files} for t in ("docs", "postings", "term_stats")},
+        "stages": {
+            "docs": {"tables": ["docs"], "committed_at": 10.0},
+            "stats": {"tables": ["term_stats"], "committed_at": 20.0},
+            "postings": {"tables": ["postings"], "committed_at": 30.0},
+        },
+        "appends": [{"docs": 1, "at": 25.0}, {"docs": 1, "at": 30.0}, {"docs": 1, "at": 40.0, "seq": 1}],
+        "seq": 1,
+        "pending_maintenance": {"op": "compact", "at": 35.0},
+    }
+
+
+def test_normalize_format1_numbers_entries_by_time(tmp_path):
+    """``Manifest.normalize_format1`` (run by ``migrate_postings``) gives
+    every seq-less stage and append entry a seq in the order of its
+    recorded time, a stage before an append at a tie, moves the recorded
+    seqs past them, and turns the dict journal into a list that distrusts
+    every recorded table."""
+    man = Manifest(tmp_path)
+    man.data = _format1_manifest()
+    man.normalize_format1()
+    d = man.data
+    assert {k: s["seq"] for k, s in d["stages"].items()} == {"docs": 1, "stats": 2, "postings": 4}
+    assert [a["seq"] for a in d["appends"]] == [3, 5, 6]
+    assert d["seq"] == 6 and man.next_seq() == 7
+    assert man.pending_maintenance_entries() == [
+        {"op": "compact", "at": 35.0, "tables": ["docs", "postings", "term_stats"]}
+    ]
+    before = json.dumps(d, sort_keys=True)
+    man.normalize_format1()  # a normalized manifest is left as it is
+    assert json.dumps(d, sort_keys=True) == before
+
+
+def test_normalized_format1_lineage_freshness(tmp_path):
+    """After normalization the seq order alone decides lineage freshness:
+    a table the journal names is stale, one whose stage precedes an
+    append is stale, and one committed after every append is fresh."""
+    from splade_easy_spark.index.maintenance import _fresh_lineage
+
+    data = _format1_manifest()
+    data["appends"] = data["appends"][:1]  # only the append at t=25
+    data.pop("seq")
+    (tmp_path / "_manifest.json").write_text(json.dumps(data))
+    cat = IndexCatalog(tmp_path)
+    cat.manifest.normalize_format1()
+    assert _fresh_lineage(cat, "docs") is None  # journaled
+    cat.manifest.data.pop("pending_maintenance")
+    assert _fresh_lineage(cat, "term_stats") is None  # stage t=20 < append t=25
+    assert _fresh_lineage(cat, "postings") == data["tables"]["postings"]["files"]

@@ -524,6 +524,96 @@ def test_cosine_batch_wand_equals_sql(corpus, spark):
             assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
 
 
+def test_search_many_one_query_is_search(corpus, spark):
+    """One WAND driver: a one-query ``search_many`` runs the same kernel
+    as ``search`` (``_score_segment``) and the same cosine division, so
+    doc_ids and scores are bit-identical — dot and cosine, after a
+    delete, with and without a ``doc_filter``."""
+    from pyspark.sql import functions as F
+
+    from splade_easy_spark.index.maintenance import delete
+
+    idx_dir, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    q = "baba0 ceba1 diba2"
+    victim = s.search(q, top_k=1, method="wand").collect()[0]["doc_id"]
+    delete(spark, idx_dir, [victim])
+    assert s._deleted() is not None
+    checked = 0
+    for text in [q] + [x["text"] for x in generate_query_set(4, seed=13)]:
+        for use_cosine in (False, True):
+            for pred in (None, F.col("role") == "user"):
+                one = s.search(
+                    text, top_k=5, use_cosine=use_cosine, method="wand", doc_filter=pred
+                ).collect()
+                many = s.search_many(
+                    [{"query_id": "only", "text": text}], top_k=5,
+                    use_cosine=use_cosine, method="wand", doc_filter=pred,
+                ).collect()
+                assert [(r["doc_id"], r["score"]) for r in one] == [
+                    (r["doc_id"], r["score"]) for r in many
+                ], (text, use_cosine, pred)
+                assert victim not in {r["doc_id"] for r in one}
+                checked += bool(one)
+    assert checked >= 10
+
+
+def _local_pruned(s, terms: list[str]):
+    """The query terms' pruned postings, collected: one pandas frame per
+    segment, with the term -> term_id map the driver uses."""
+    from splade_easy_spark.functions.predicates import in_list
+    from splade_easy_spark.index.catalog import term_id_py
+
+    ids = {t: term_id_py(t, s.term_id_seed) for t in terms}
+    cols = ["seg", "term_id", "n", "doc_min", "doc_max", "max_weight", "docs", "wts"]
+    pdf = s.cat.read(s.spark, "postings").where(in_list("term_id", list(ids.values())))
+    return dict(list(pdf.select(*cols).toPandas().groupby("seg"))), ids
+
+
+def test_profiles_count_the_live_kernels(corpus, spark):
+    """``wand_profile`` / ``wand_batch_profile`` read their counters from
+    the live driver: their totals equal the (blocks_total,
+    blocks_decoded) that ``_score_segment`` and ``_batch_segment`` return
+    when run locally over the same collected postings."""
+    from splade_easy_spark.query.searcher import analyze_query
+    from splade_easy_spark.query.wand import (
+        _batch_segment,
+        wand_batch_profile,
+        wand_profile,
+    )
+
+    idx_dir, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    post = s.cat.read(spark, "postings")
+    seg_docs, k = CFG.segment_docs, 3
+
+    from splade_easy_spark.data.transcripts import make_vocab
+
+    terms = analyze_query(" ".join(make_vocab()[:12]), CFG)  # skips blocks at k=3
+    segs, ids = _local_pruned(s, [t for t, _ in terms])
+    qw = {ids[t]: w for t, w in terms}
+    local = np.zeros(2, dtype=np.int64)
+    for seg, g in segs.items():
+        local += _score_segment(g, qw, int(seg) * seg_docs, seg_docs, k, None)[2:]
+    prof = wand_profile(spark, post, terms, seg_docs, top_k=k).collect()
+    assert [(r["blocks_total"], r["blocks_decoded"]) for r in prof] == [tuple(local)]
+    assert 0 < local[1] < local[0], "the fixture query must skip blocks"
+
+    qterms = {
+        q["query_id"]: analyze_query(q["text"], CFG) for q in generate_query_set(12, seed=31)
+    }
+    qterms = {k_: v for k_, v in qterms.items() if v}
+    segs, ids = _local_pruned(s, sorted({t for ts in qterms.values() for t, _ in ts}))
+    queries = [(q, sorted((ids[t], w) for t, w in qterms[q])) for q in sorted(qterms)]
+    local = np.zeros(2, dtype=np.int64)
+    for seg, g in segs.items():
+        out = _batch_segment(g, queries, int(seg) * seg_docs, seg_docs, k, None, "wts", "max_weight")
+        local += out[3:]
+    prof = wand_batch_profile(spark, post, qterms, seg_docs, top_k=k).collect()
+    assert [(r["blocks_total"], r["blocks_decoded"]) for r in prof] == [tuple(local)]
+    assert local[0] > 0
+
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
