@@ -12,12 +12,19 @@ stats+postings rebuild, cheap relative to re-tokenizing: stage-level resume
 applies) re-derives exact weights; the drift-then-refresh cycle is the
 standard trade for append-only search indexes.
 
+One write path: ``append_documents`` and ``vector_builder.append_vector_documents``
+run one batch skeleton (``_append_batch``) and differ only in how they
+weigh a batch; both hand the weighted rows to the build's writer
+(``builder._write_weighted``), so an appended doc's norm, its doc_terms
+row and its packed cosine weights follow the build's rule exactly.
+
 Per-batch cost is O(batch), NOT O(index): every downstream table (docs,
-doc_terms, postings) is packed from the in-flight weighted DataFrame — round 1 re-read the whole docs and doc_terms tables per batch
-and filtered ``doc_int >= next_int``, a full table scan per append
-micro-batch that would cost O(index size) at 10^12 turns.  The next doc_int
-is tracked in the manifest (``next_doc_int``), so even the max-doc_int
-lookup needs no scan.
+doc_terms, postings) is written from the in-flight weighted DataFrame —
+round 1 re-read the whole docs and doc_terms tables per batch and filtered
+``doc_int >= next_int``, a full table scan per append micro-batch that
+would cost O(index size) at 10^12 turns.  The next doc_int is tracked in
+the manifest (``next_doc_int``), so even the max-doc_int lookup needs no
+scan.
 
 Idempotence (exactly-once at the doc_id grain): with ``dedupe=True`` the
 incoming batch is first deduplicated on doc_id within itself, then
@@ -62,15 +69,16 @@ additive over block runs; the SQL path is layout-agnostic).
 from __future__ import annotations
 
 import time
+from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.functions.bm25 import bm25_weight_expr, idf_expr
-from splade_easy_spark.functions.text import doc_id_expr, tokenize
-from splade_easy_spark.index.builder import _term_tf, pack_for
+from splade_easy_spark.functions.text import tokenize
+from splade_easy_spark.index.builder import _term_tf, _turn_rows, _write_weighted
 from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr, term_id_expr
 from splade_easy_spark.index.docids import assign_doc_ints
 from splade_easy_spark.index.maintenance import writer_prologue
@@ -108,34 +116,6 @@ def _assert_no_append_collisions(
             f"{pairs or 'within batch-new terms'}; rebuild with a "
             f"different IndexConfig.term_id_seed"
         )
-
-
-def _register_new_terms(
-    spark: SparkSession, cat: IndexCatalog, new_terms: DataFrame, id_seed: int
-) -> int:
-    """Append a batch's new vocabulary to ``term_stats`` behind the
-    collision gate; returns how many terms it registered."""
-    n = new_terms.count()
-    if n:
-        _assert_no_append_collisions(spark, cat, new_terms, id_seed)
-        new_terms.write.mode("append").parquet(cat.table_dir("term_stats"))
-    return n
-
-
-def _record_append(man, next_int: int, n_new: int, n_new_terms: int, t0: float) -> dict:
-    """Close a committed batch in the manifest, for both appenders: clear
-    the journal, advance the watermark, log the append with its ``seq``
-    (``maintenance._fresh_lineage`` orders appends against stage commits
-    by it), save.  Returns the appender's result."""
-    elapsed = round(time.time() - t0, 3)
-    man.data.pop("pending_append", None)
-    man.data["next_doc_int"] = next_int + n_new
-    man.data.setdefault("appends", []).append(
-        {"docs": n_new, "new_terms": n_new_terms, "at": time.time(),
-         "seq": man.next_seq(), "elapsed_sec": elapsed}
-    )
-    man.save()
-    return {"appended_docs": n_new, "new_terms": n_new_terms, "elapsed_sec": elapsed}
 
 
 def _commit_docs(cat: IndexCatalog, new_docs: DataFrame) -> None:
@@ -223,6 +203,109 @@ def _repair_pending(spark: SparkSession, cat: IndexCatalog) -> dict | None:
     return {"repaired_range": [lo, hi], "docs_were_committed": bool(committed)}
 
 
+def _nothing(t0: float) -> dict:
+    return {"appended_docs": 0, "new_terms": 0, "elapsed_sec": round(time.time() - t0, 3)}
+
+
+def _append_batch(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    rows: DataFrame,
+    doc_len: Column,
+    weigh: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+    dedupe: bool,
+    drop: tuple[str, ...] = (),
+) -> dict:
+    """The batch skeleton both appenders run (module docstring:
+    idempotence and crash atomicity).  ``rows`` are the batch in docs-row
+    shape (``doc_id`` first, no ``doc_len``/``doc_int``); ``doc_len`` is
+    added after the dedupe, so dropped rows are never measured;
+    ``weigh(new_docs)`` returns the per-mode ``(weighted, new_terms)`` —
+    ``weighted`` holds one ``(term, doc_int, weight)`` row per posting and
+    ``new_terms`` the batch-new ``term_stats`` rows;
+    ``drop`` names the columns that do not go into the docs table."""
+    t0 = time.time()
+    writer_prologue(spark, cat)
+    man = cat.manifest
+    cfg = cat.config
+    next_int = int(man.data["next_doc_int"])
+    if dedupe:
+        # within-batch first (re-delivered rows inside one batch), then
+        # against the index: broadcast the batch's ids, column-pruned scan.
+        rows = rows.dropDuplicates(["doc_id"])
+        # Bound the docs scan by the BATCH's id range: docs is written
+        # range-major sorted by doc_id, so the between-predicate reaches
+        # parquet row-group stats (PushedFilters) and the anti-join reads
+        # only row groups overlapping [batch_min, batch_max] — for
+        # time-clustered ids that is a handful of row groups regardless of
+        # index size.  Worst case (adversarial ids spanning the whole
+        # range) degrades to a full doc_id column scan, never worse;
+        # callers with an external exactly-once guarantee skip via
+        # dedupe=False, and the streaming appender skips re-delivered
+        # epochs entirely via the manifest's committed-epoch log
+        # (streaming/appender.py), so this scan is its crash-retry heal
+        # path, not the steady state.
+        bounds = rows.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).collect()[0]
+        if bounds["lo"] is None:
+            return _nothing(t0)
+        existing = (
+            cat.read(spark, "docs")
+            .where(F.col("doc_id").between(bounds["lo"], bounds["hi"]))
+            .select("doc_id")
+        )
+        rows = rows.join(F.broadcast(existing.join(
+            F.broadcast(rows.select("doc_id")), "doc_id", "left_semi"
+        )), "doc_id", "left_anti")
+    new_docs = assign_doc_ints(
+        rows.withColumn("doc_len", doc_len), "doc_id", cfg.build_partitions
+    ).withColumn("doc_int", F.col("doc_int") + F.lit(next_int))
+    # TRUNCATE LINEAGE before touching the index: the batch's plan reads the
+    # docs table (dedupe anti-join), and appending to that path triggers
+    # Spark's refreshByPath cache invalidation for every plan referencing it
+    # — a mere persist() would be dropped by the very write and downstream
+    # stages would silently re-evaluate against the already-appended table
+    # (anti-joining the batch out of existence).  localCheckpoint
+    # materializes the batch (batch-sized, not index-sized) and cuts the
+    # plan off the docs path.
+    new_docs = new_docs.localCheckpoint(eager=True)
+    n_new = new_docs.count()
+    if n_new == 0:
+        return _nothing(t0)
+    # journal the batch's doc_int range BEFORE any table write — the crash
+    # repair's unit of work (module docstring: crash atomicity)
+    man.data["pending_append"] = {"lo": next_int, "hi": next_int + n_new}
+    man.save()
+
+    # batch-sized caches: the norms agg and both writes read weighted; the
+    # collision gate and the term_stats append read new_terms
+    weighted, new_terms = (f.persist(StorageLevel.MEMORY_AND_DISK) for f in weigh(new_docs))
+    _write_weighted(cat, weighted, append=True)
+    # register batch-new terms, behind the collision gate, so query-time
+    # idf exists for them
+    n_new_terms = new_terms.count()
+    if n_new_terms:
+        _assert_no_append_collisions(spark, cat, new_terms, cfg.term_id_seed)
+        new_terms.write.mode("append").parquet(cat.table_dir("term_stats"))
+    # COMMIT POINT: docs last — the batch becomes visible to the dedupe
+    # anti-join (and thus "exists") only once every other table is durable.
+    # Looked up on this module at call time, so a crash test can replace it.
+    _commit_docs(cat, new_docs.drop(*drop))
+    weighted.unpersist()
+    new_terms.unpersist()
+    # close the batch: clear the journal, advance the watermark, log the
+    # append with its seq (maintenance._fresh_lineage orders appends
+    # against stage commits by it)
+    elapsed = round(time.time() - t0, 3)
+    man.data.pop("pending_append", None)
+    man.data["next_doc_int"] = next_int + n_new
+    man.data.setdefault("appends", []).append(
+        {"docs": n_new, "new_terms": n_new_terms, "at": time.time(),
+         "seq": man.next_seq(), "elapsed_sec": elapsed}
+    )
+    man.save()
+    return {"appended_docs": n_new, "new_terms": n_new_terms, "elapsed_sec": elapsed}
+
+
 def append_documents(
     spark: SparkSession,
     index_dir: str,
@@ -235,136 +318,49 @@ def append_documents(
     — never a scan of the existing index tables (except the column-pruned
     doc_id anti-join when ``dedupe=True``)."""
     cat = IndexCatalog(index_dir, config)
-    man = cat.manifest
-    t0 = time.time()
-    writer_prologue(spark, cat)
-    cfg = cat.config
-    stats = cat.corpus_stats(spark)
-    n_docs_frozen, avgdl = int(stats["n_docs"]), float(stats["avgdl"] or 1.0)
-    next_int = int(man.data["next_doc_int"])
 
-    base = transcripts.select(
-        doc_id_expr().alias("doc_id"),
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-    )
-    if dedupe:
-        # within-batch first (re-delivered rows inside one batch), then
-        # against the index: broadcast the batch's ids, column-pruned scan.
-        base = base.dropDuplicates(["doc_id"])
-        # Bound the docs scan by the BATCH's id range: docs is written
-        # range-major sorted by doc_id, so the between-predicate reaches
-        # parquet row-group stats (PushedFilters) and the anti-join reads
-        # only row groups overlapping [batch_min, batch_max] — for
-        # time-clustered transcript ids (conv-prefixed) that is a handful
-        # of row groups regardless of index size, where round 2 scanned
-        # the whole doc_id column every micro-batch.  Worst case
-        # (adversarial ids spanning the whole range) degrades to the old
-        # full-column scan, never worse; callers with an external
-        # exactly-once guarantee skip via dedupe=False, and the streaming
-        # appender skips re-delivered epochs entirely via the manifest's
-        # committed-epoch log (streaming/appender.py) so this scan is its
-        # crash-retry heal path, not the steady state.
-        bounds = base.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return {"appended_docs": 0, "new_terms": 0, "elapsed_sec": round(time.time() - t0, 3)}
-        existing = (
-            cat.read(spark, "docs")
-            .where(F.col("doc_id").between(bounds["lo"], bounds["hi"]))
-            .select("doc_id")
+    def weigh(new_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+        cfg = cat.config
+        stats = cat.corpus_stats(spark)
+        n_docs_frozen, avgdl = int(stats["n_docs"]), float(stats["avgdl"] or 1.0)
+        term_tf = _term_tf(new_docs, cfg)
+        # frozen idf where known; batch-derived idf (vs frozen N) for new terms
+        idf_map = (
+            term_tf.groupBy("term").agg(F.count("*").alias("batch_df"))
+            .join(cat.read(spark, "term_stats").select("term", "idf"), "term", "left")
+            .select(
+                "term",
+                "batch_df",
+                F.coalesce(F.col("idf"), idf_expr(F.col("batch_df"), n_docs_frozen)).alias("idf"),
+                F.col("idf").isNull().alias("is_new_term"),
+            )
         )
-        base = base.join(F.broadcast(existing.join(
-            F.broadcast(base.select("doc_id")), "doc_id", "left_semi"
-        )), "doc_id", "left_anti")
-    base = base.withColumn("doc_len", F.size(tokenize(F.col("text"), cfg.analyzer)))
-    new_docs = assign_doc_ints(base, "doc_id", cfg.build_partitions).withColumn(
-        "doc_int", F.col("doc_int") + F.lit(int(next_int))
-    )
-    # TRUNCATE LINEAGE before touching the index: the batch's plan reads the
-    # docs table (dedupe anti-join), and appending to that path triggers
-    # Spark's refreshByPath cache invalidation for every plan referencing it
-    # — a mere persist() would be dropped by the very write and downstream
-    # stages would silently re-evaluate against the already-appended table
-    # (anti-joining the batch out of existence).  localCheckpoint
-    # materializes the batch (batch-sized, not index-sized) and cuts the
-    # plan off the docs path.
-    new_docs = new_docs.localCheckpoint(eager=True)
-    n_new = new_docs.count()
-    if n_new == 0:
-        return {"appended_docs": 0, "new_terms": 0, "elapsed_sec": round(time.time() - t0, 3)}
-    # journal the batch's doc_int range BEFORE any table write — the crash
-    # repair's unit of work (module docstring: crash atomicity)
-    man.data["pending_append"] = {"lo": int(next_int), "hi": int(next_int) + n_new}
-    man.save()
-
-    term_tf = _term_tf(new_docs, cfg)
-    tstats = cat.read(spark, "term_stats").select("term", "idf")
-    batch_df = term_tf.groupBy("term").agg(F.count("*").alias("batch_df"))
-    # frozen idf where known; batch-derived idf (vs frozen N) for new terms
-    idf_map = batch_df.join(tstats, "term", "left").select(
-        "term",
-        F.coalesce(F.col("idf"), idf_expr(F.col("batch_df"), n_docs_frozen)).alias("idf"),
-        F.col("batch_df"),
-        F.col("idf").isNull().alias("is_new_term"),
-    )
-    idf_map = idf_map.persist(StorageLevel.MEMORY_AND_DISK)
-    weighted = (
-        term_tf.join(F.broadcast(idf_map.select("term", "idf")), "term")
-        .withColumn(
+        weighted = term_tf.join(F.broadcast(idf_map), "term").withColumn(
             "weight",
             bm25_weight_expr(F.col("tf"), F.col("doc_len"), avgdl, F.col("idf"), cfg.bm25),
         )
-        .withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
-    )
-    # consumed by doc_terms and the postings pack — all in-flight
-    weighted = weighted.persist(StorageLevel.MEMORY_AND_DISK)
-    from splade_easy_spark.index.builder import attach_doc_norm
+        new_terms = (
+            weighted.where(F.col("is_new_term"))
+            .select(
+                "term",
+                F.col("batch_df").alias("df"),
+                F.lit(None).cast("int").alias("max_tf"),
+                "idf",
+                term_bucket_expr(F.col("term"), cfg.term_buckets).alias("tb"),
+                term_id_expr(F.col("term"), cfg.term_id_seed).alias("term_id"),
+            )
+            .dropDuplicates(["term"])
+        )
+        return weighted, new_terms
 
-    # zero-shuffle norm (rows are doc-contiguous: map-side tf kernel +
-    # broadcast idf join) — same kernel as the build; consumed by both the
-    # doc_terms write and the pack (norm feeds the cosine-mode nweights)
-    with_norm = attach_doc_norm(weighted).persist(StorageLevel.MEMORY_AND_DISK)
-    doc_terms = with_norm.select("tb", "term", "doc_int", "weight", "norm")
-    doc_terms.repartition(min(cfg.build_partitions, 8), "tb").sortWithinPartitions(
-        "term", "doc_int"
-    ).write.mode("append").partitionBy("tb").parquet(cat.table_dir("doc_terms"))
-
-    # pack postings straight from the in-flight frame (round 1 re-read the
-    # whole doc_terms table here — O(index) per batch)
-    packed = pack_for(with_norm.select("term", "doc_int", "weight", "norm"), cfg)
-    packed.write.mode("append").partitionBy("seg").parquet(cat.table_dir("postings"))
-
-    # register batch-new terms so query-time idf exists for them
-    new_terms = idf_map.where(F.col("is_new_term")).select(
-        F.col("term"),
-        F.col("batch_df").alias("df"),
-        F.lit(None).cast("int").alias("max_tf"),
-        F.col("idf"),
-        term_bucket_expr(F.col("term"), cfg.term_buckets).alias("tb"),
-        term_id_expr(F.col("term"), cfg.term_id_seed).alias("term_id"),
-    )
-    n_new_terms = _register_new_terms(spark, cat, new_terms, cfg.term_id_seed)
-    # COMMIT POINT: docs last — the batch becomes visible to the dedupe
-    # anti-join (and thus "exists") only once every other table is durable
-    _commit_docs(cat, new_docs)
-    with_norm.unpersist()
-    weighted.unpersist()
-    idf_map.unpersist()
-    new_docs.unpersist()  # releases the localCheckpoint blocks
-
-    return _record_append(man, next_int, n_new, n_new_terms, t0)
+    doc_len = F.size(tokenize(F.col("text"), cat.config.analyzer))
+    return _append_batch(spark, cat, _turn_rows(transcripts), doc_len, weigh, dedupe)
 
 
 def refresh_stats(spark: SparkSession, index_dir: str, config: IndexConfig | None = None) -> dict:
     """Re-derive exact corpus statistics and weights after appends: reruns
     the stats + postings stages over the full docs table (stage-committed,
-    resumable like the build)."""
+    resumable like the build), sharing one tokenize+tf pass between them."""
     from splade_easy_spark.index.builder import _stage_postings, _stage_stats, _STAGE_TABLES
 
     cat = IndexCatalog(index_dir, config)
@@ -373,13 +369,14 @@ def refresh_stats(spark: SparkSession, index_dir: str, config: IndexConfig | Non
     # exclusion predicate (see maintenance._settle_journals)
     writer_prologue(spark, cat)
     t0 = time.time()
-    m1 = _stage_stats(spark, cat)
+    ctx: dict = {}
+    m1 = _stage_stats(spark, cat, ctx)
     cat.manifest.record_stage("stats", {t: t for t in _STAGE_TABLES["stats"]}, m1)
     # postings rewrite must not append onto old postings: clear first
     import shutil
 
-    for t in ["doc_terms", "postings", "doc_norms"]:
+    for t in ["doc_terms", "postings"]:
         shutil.rmtree(cat.table_dir(t), ignore_errors=True)
-    m2 = _stage_postings(spark, cat)
+    m2 = _stage_postings(spark, cat, ctx)
     cat.manifest.record_stage("postings", {t: t for t in _STAGE_TABLES["postings"]}, m2)
     return {"elapsed_sec": round(time.time() - t0, 3), **m1}

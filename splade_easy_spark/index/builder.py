@@ -14,18 +14,28 @@ acknowledged bottleneck) with three bulk Spark jobs:
                   (the single term-keyed shuffle) → term_stats + corpus_stats;
                   hot-term threshold observed on the write job
   stage postings: tf rows ⨝ term_stats (broadcast when small) → BM25
-                  weights → hot-term-salted repartition for the tb-bucketed
-                  doc_terms write (norm denormalized in) + seg repartition
-                  into the streaming mapInArrow block packer → postings
+                  weights → ``_write_weighted``: one materialized doc-norm
+                  agg, then the hot-term-salted tb-bucketed doc_terms write
+                  and the seg-partitioned streaming mapInArrow block pack,
+                  run concurrently
+
+``_write_weighted`` is the one writer of doc_terms + postings: the build,
+``append.refresh_stats``, ``append.append_documents`` and both vector
+writers (``vector_builder``) all go through it, so every table row gets
+its norm from the same rule.
 
 Shuffle budget at scale: one doc-id shuffle, one term-stats agg, one
-term-keyed exchange for posting grouping (salted for hot terms), one
-doc-keyed agg for norms.  Everything else is map-side.  Driver-synchronous
-actions are minimized (they are the Amdahl serial term in N→4N scaling):
-5 real jobs per build, each doing only necessary data work — corpus stats
-and the hot-term threshold ride existing writes as observed metrics instead
-of separate agg actions, n_docs/n_terms come from parquet footers, and the
-doc-int assigner needs no range-sampling pass.
+doc-keyed norms agg (materialized once, read by both writes), and per
+write one doc-keyed exchange for the norms join plus one layout exchange
+((tb, hot-term salt) for doc_terms, (seg, term) for the pack).
+Everything else is map-side, and the tokenize+tf kernel runs once per
+build (its output is cached from the stats stage through the postings
+stage).
+Driver-synchronous actions are minimized (they are the Amdahl serial term
+in N→4N scaling): corpus stats and the hot-term threshold ride existing
+writes as observed metrics instead of separate agg actions, n_docs/n_terms
+come from parquet footers, and the doc-int assigner needs no
+range-sampling pass.
 """
 
 from __future__ import annotations
@@ -77,9 +87,10 @@ def _term_tf(docs: DataFrame, config: IndexConfig) -> DataFrame:
     return term_tf_frame(docs, ["doc_int", "doc_len"], "text", config.analyzer)
 
 
-def _stage_docs(spark: SparkSession, transcripts: DataFrame, cat: IndexCatalog) -> dict:
-    cfg = cat.config
-    base = transcripts.select(
+def _turn_rows(transcripts: DataFrame) -> DataFrame:
+    """Transcript turns as docs-table rows (without ``doc_len`` and
+    ``doc_int``) — the build's docs stage and the text append share it."""
+    return transcripts.select(
         doc_id_expr().alias("doc_id"),
         "conv_id",
         "turn_idx",
@@ -88,6 +99,11 @@ def _stage_docs(spark: SparkSession, transcripts: DataFrame, cat: IndexCatalog) 
         "ts",
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
     )
+
+
+def _stage_docs(spark: SparkSession, transcripts: DataFrame, cat: IndexCatalog) -> dict:
+    cfg = cat.config
+    base = _turn_rows(transcripts)
     # doc_len AFTER the id exchange so tokenize() runs once, downstream of
     # the shuffle.  Corpus aggregates (n_docs, total_tokens) ride the write
     # job as observed metrics — the stats stage then needs NO separate
@@ -212,69 +228,6 @@ def _assert_no_term_id_collisions(tstats: DataFrame, seed: int) -> None:
             f"term_id collision (seed={seed}) between terms {terms!r}: "
             f"rebuild with a different IndexConfig.term_id_seed"
         )
-
-
-def attach_doc_norm(weighted: DataFrame) -> DataFrame:
-    """Append ``norm`` (L2 of the doc's BM25 weight vector) to a frame whose
-    rows are **doc-contiguous** — ``term_tf`` emits each doc's rows together
-    (map-side kernel, no shuffle since) and the broadcast idf join preserves
-    stream order — with ZERO shuffle: a streaming ``mapInArrow`` kernel
-    reduces each doc run (``np.add.reduceat``) and carries the trailing
-    partial run into the next batch.  Replaces round 1's
-    ``groupBy(doc_int).agg`` + join, which cost two full exchanges of the
-    postings-sized frame inside the doc_terms write job (profiled as its
-    dominant non-scaling term).  mapInArrow (not mapInPandas) because the
-    kernel only reads doc_int/weight: the term strings pass through as
-    columnar Arrow buffers and never materialize as Python objects —
-    the pandas conversion alone cost more than the shuffles it replaced.
-    Correctness is pinned by the cosine gate queries (hash-exact vs DuckDB)
-    and tests/test_build_search.py."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    # StructType.add MUTATES the receiver — never call it on a live
-    # DataFrame's schema (it corrupts the frame's column resolution)
-    schema = StructType(
-        list(weighted.schema.fields) + [StructField("norm", DoubleType(), False)]
-    )
-
-    def with_norm(rb: pa.RecordBatch) -> pa.RecordBatch:
-        d = rb.column("doc_int").to_numpy(zero_copy_only=False)
-        w = rb.column("weight").to_numpy(zero_copy_only=False).astype(np.float64)
-        change = np.flatnonzero(d[1:] != d[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        norms = np.sqrt(np.add.reduceat(w * w, starts))
-        lens = np.diff(np.concatenate((starts, [len(d)])))
-        return rb.append_column("norm", pa.array(np.repeat(norms, lens)))
-
-    def kernel(batches):
-        carry: pa.RecordBatch | None = None
-        prev_done = None  # doc_int of the last COMPLETED run (contiguity check)
-        for rb in batches:
-            if carry is not None and carry.num_rows:
-                tbl = pa.Table.from_batches([carry, rb]).combine_chunks()
-                rb = tbl.to_batches()[0]
-            if rb.num_rows == 0:
-                continue
-            d = rb.column("doc_int").to_numpy(zero_copy_only=False)
-            if prev_done is not None and d[0] == prev_done:
-                raise RuntimeError(
-                    "attach_doc_norm: doc runs interleaved — input is not "
-                    "doc-contiguous (did an exchange sneak in upstream?)"
-                )
-            change = np.flatnonzero(d[1:] != d[:-1]) + 1
-            if len(change) == 0:
-                carry = rb  # whole batch is one (possibly continuing) run
-                continue
-            last_start = int(change[-1])
-            complete, carry = rb.slice(0, last_start), rb.slice(last_start)
-            prev_done = int(d[last_start - 1])
-            yield with_norm(complete)
-        if carry is not None and carry.num_rows:
-            yield with_norm(carry)
-
-    return weighted.mapInArrow(kernel, schema=schema)
 
 
 @functools.cache
@@ -444,12 +397,11 @@ def pack_doc_terms(
         F.col("weight"),
     ]
     if pack_cosine:
-        nweight = (
-            F.col("nweight")
-            if "nweight" in dt.columns
-            else F.when(F.col("norm") > 0, F.col("weight") / F.col("norm")).otherwise(F.lit(0.0))
+        cols.append(
+            F.when(F.col("norm") > 0, F.col("weight") / F.col("norm"))
+            .otherwise(F.lit(0.0))
+            .alias("nweight")
         )
-        cols.append(nweight.alias("nweight"))
     # the window's required clustering is satisfied by the explicit
     # repartition; its sort spec (seg, term, doc_int) IS the packer's input
     # order — one exchange + one sort total.  Partitioning is (seg, term),
@@ -502,136 +454,126 @@ def pack_for(dt: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
-def _stage_postings(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = None) -> dict:
-    """Weighted postings in two layouts.
+def _write_weighted(
+    cat: IndexCatalog,
+    weighted: DataFrame,
+    hot: DataFrame | None = None,
+    append: bool = False,
+) -> None:
+    """The one writer of ``doc_terms`` and ``postings``: the build,
+    ``refresh_stats``, ``build_vector_index`` and both appenders hand it a
+    ``(term, doc_int, weight)`` frame.
 
-    1. ``doc_terms`` — exploded (tb, term, doc_int, weight, norm),
-       hive-partitioned by term bucket ``tb`` for query-time partition
-       pruning (a query's handful of terms touches a handful of buckets).
-       ``tf`` is NOT persisted: weight already folds it in and no query or
-       maintenance path reads it (``refresh_stats`` re-tokenizes) — at
-       posting grain the column was pure parquet + shuffle bytes.
-       The repartition before the write is **salted for hot terms**: a
-       Zipfian head term would otherwise put its whole posting mass in one
-       task; salting by ``pmod(doc_int, hot_term_salt)`` splits it.
-       ``norm`` is denormalized into the row so cosine scoring needs no
-       query-time join against a corpus-sized norms table.
+    The doc norm (L2 of the doc's weight vector) is computed here and
+    nowhere else: one doc-grain ``groupBy`` agg, materialized once before
+    the writes and released after them, so ``doc_terms.norm`` and the
+    packed cosine stream (``nwts`` = weight / norm) read the same value
+    bit for bit.  The agg is cheap (rows are doc-contiguous, so the partial
+    agg emits one row per doc per partition and the exchange ships
+    doc-grain rows only), and the join back is hinted SHUFFLE_HASH: a
+    sort-merge join would sort the postings-grain frame for nothing.  A
+    zero-shuffle Arrow norm kernel was measured as a loss (the full frame
+    through Python IPC, 23 s over 62M rows at 8 cores, more than the
+    exchange it saved).
 
-    2. ``postings`` — packed blocks, hive-partitioned by **document
-       segment** ``seg = doc_int // segment_docs`` (doc-sharded, the same
-       topology as the reference's shard fan-out,
-       ``src/splade_easy/retriever.py:105-122``): every segment holds
-       complete posting lists for its doc range, so a per-segment kernel
-       computes *exact* document scores locally and only top-k rows cross
-       the network for the global merge.  Segmenting also structurally
-       bounds every packing group at ``segment_docs`` postings — no hot
-       term can blow up an ``applyInPandas`` group.
-    """
+    Two layouts, written CONCURRENTLY so each job's tasks back-fill the
+    slots the other's straggler tails free (guide §2.6):
+
+    1. ``doc_terms`` — (tb, term, doc_int, weight, norm), hive-partitioned
+       by term bucket ``tb`` for query-time partition pruning, sorted by
+       (term, doc_int) within each file so ``term IN (...)`` predicates
+       prune row groups too.  ``hot`` (a ``term`` frame of Zipfian-head
+       terms) salts the repartition by ``pmod(doc_int, hot_term_salt)``,
+       so a head term's posting mass is not one task.
+    2. ``postings`` — packed blocks (``pack_for``), hive-partitioned by
+       document segment ``seg = doc_int // segment_docs`` (doc-sharded, the
+       topology of the reference's shard fan-out,
+       ``src/splade_easy/retriever.py:105-122``): a per-segment kernel
+       scores exactly and only top-k rows cross the network.
+
+    A build writes ``build_partitions`` doc_terms tasks over fresh tables;
+    an ``append`` adds batch-sized files (at most 8 tasks) to the live
+    tables."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import StorageLevel
+
     cfg = cat.config
-    docs = cat.read(spark, "docs")
+    norms = weighted.groupBy("doc_int").agg(
+        F.sqrt(F.sum(F.col("weight") * F.col("weight"))).alias("norm")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    norms.count()
+    with_norm = weighted.join(norms.hint("SHUFFLE_HASH"), "doc_int")
+    dt = with_norm.withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
+    salt = F.lit(0)
+    if hot is not None:
+        dt = dt.join(F.broadcast(hot.select("term", F.lit(1).alias("_hot"))), "term", "left")
+        salt = F.when(
+            F.col("_hot") == 1, F.pmod(F.col("doc_int"), F.lit(cfg.hot_term_salt))
+        ).otherwise(F.lit(0))
+    parts = min(cfg.build_partitions, 8) if append else cfg.build_partitions
+    doc_terms = (
+        dt.repartition(parts, F.col("tb"), salt)
+        .select("tb", "term", "doc_int", "weight", "norm")
+        .sortWithinPartitions("term", "doc_int")
+    )
+    packed = pack_for(with_norm, cfg).sortWithinPartitions("term_id", "block_id")
+    mode = "append" if append else "overwrite"
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(cat.write, doc_terms, "doc_terms", ["tb"], mode),
+                pool.submit(cat.write, packed, "postings", ["seg"], mode),
+            ]
+            for f in futs:
+                f.result()
+    finally:
+        norms.unpersist()
+
+
+def _stage_postings(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = None) -> dict:
+    """BM25-weight every (doc, term) and write ``doc_terms`` + ``postings``
+    through ``_write_weighted``.  ``tf`` is NOT kept: weight folds it in
+    and no query or maintenance path reads it.
+
+    One tokenize+tf pass per build: the stats stage hands its cached
+    ``term_tf`` over in ``ctx``; a resumed build that skipped that stage
+    caches its own here, so the norms agg and both writes read one cache.
+    ``weighted`` itself is deliberately NOT persisted: each consumer
+    re-derives it from the term_tf cache with one broadcast join and a
+    codegen'd weight expression, cheaper than a second postings-grain
+    cache (round-6 A/B: dropping the weighted persist took the full build
+    27.8 → 21.7 s)."""
+    from pyspark import StorageLevel
+
+    cfg = cat.config
     tstats = cat.read(spark, "term_stats")
     stats = cat.corpus_stats(spark)
     avgdl = stats["avgdl"] or 1.0
 
-    term_tf = (ctx or {}).get("term_tf")
+    term_tf = (ctx or {}).pop("term_tf", None)
     if term_tf is None:
-        term_tf = _term_tf(docs, cfg)
+        term_tf = _term_tf(cat.read(spark, "docs"), cfg).persist(StorageLevel.MEMORY_AND_DISK)
 
     # Hot-term df threshold: observed during the stats stage's term_stats
-    # write (Zipfian head — roles/tool names by construction)
+    # write (Zipfian head — roles/tool names by construction); the hot set
+    # is tiny by construction (top (1-quantile) of terms by df)
     df_threshold = cat.manifest.data["stages"]["stats"]["metrics"]["hot_df_threshold"]
-    tstats_sel = tstats.select("term", "df", "idf")
+    hot = tstats.where(F.col("df") >= F.lit(df_threshold)).select("term")
+    tstats_sel = tstats.select("term", "idf")
     small_vocab = stats["n_terms"] < 2_000_000
     tstats_b = F.broadcast(tstats_sel) if small_vocab else tstats_sel
-
-    weighted = (
-        term_tf.join(tstats_b, "term")
-        .withColumn(
-            "weight",
-            bm25_weight_expr(F.col("tf"), F.col("doc_len"), float(avgdl), F.col("idf"), cfg.bm25),
-        )
-        .withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
+    weighted = term_tf.join(tstats_b, "term").select(
+        "term",
+        "doc_int",
+        bm25_weight_expr(
+            F.col("tf"), F.col("doc_len"), float(avgdl), F.col("idf"), cfg.bm25
+        ).alias("weight"),
     )
-    from pyspark import StorageLevel
-
-    # norm is denormalized into doc_terms (cosine scoring needs no
-    # query-time join); no separate doc_norms table.  The norm agg is
-    # near-free (rows are doc-contiguous, so the partial agg emits one row
-    # per doc per partition — the exchange ships doc-grain rows only) and
-    # the join back is hinted SHUFFLE_HASH: the norms side is doc-grain
-    # (small relative to postings), and a sort-merge join would sort the
-    # whole postings-grain frame twice for nothing.  Both measured
-    # alternatives lost: a zero-shuffle Arrow norm kernel paid the full
-    # frame through Python IPC (23s/62M rows at 8 cores — more than the
-    # exchanges it saved), and SMJ paid the big sort.
-    # ``weighted`` itself is deliberately NOT persisted: its two consumers
-    # (the norms agg and the join probe) each re-derive it from the
-    # term_tf cache with one broadcast join + codegen'd weight expression —
-    # cheaper than a second postings-grain cache materialization (round-6
-    # A/B: dropping the weighted persist took the full build 27.8 → 21.7s).
-    norms = weighted.groupBy("doc_int").agg(
-        F.sqrt(F.sum(F.col("weight") * F.col("weight"))).alias("norm")
-    )
-    # consumed by BOTH writes (doc_terms and the pack, which needs norm
-    # for the cosine nweights) — but deliberately NOT persisted either:
-    # the two writes run CONCURRENTLY (below), so each recomputes the
-    # norms agg + join with full-cluster parallelism while the other is
-    # in flight, which measured faster than materializing a postings-
-    # grain cache and reading it twice (round-6 A/B, alternated runs:
-    # 20.0/21.0s without vs 23.0/23.5s with the persist) and holds no
-    # corpus-sized block-manager storage at any point (guide §5)
-    with_norm = weighted.join(norms.hint("SHUFFLE_HASH"), "doc_int")
-
-    # hot-term set is tiny by construction (top (1-quantile) of terms by df)
-    hot = F.broadcast(
-        tstats.where(F.col("df") >= F.lit(df_threshold)).select("term", F.lit(1).alias("_hot"))
-    )
-    doc_terms = (
-        with_norm
-        .join(hot, "term", "left")
-        .withColumn(
-            "_salt",
-            F.when(
-                F.col("_hot") == 1, F.pmod(F.col("doc_int"), F.lit(cfg.hot_term_salt))
-            ).otherwise(F.lit(0)),
-        )
-        .select("tb", "term", "doc_int", "weight", "norm", "_salt")
-    )
-    # sortWithinPartitions(term) gives tight parquet row-group min/max stats
-    # on term, so query-time `term IN (...)` predicates prune row groups, not
-    # just bucket directories
-    def _write_doc_terms() -> None:
-        cat.write(
-            doc_terms.repartition(cfg.build_partitions, F.col("tb"), F.col("_salt"))
-            .drop("_salt")
-            .sortWithinPartitions("term", "doc_int"),
-            "doc_terms",
-            partition_by=["tb"],
-        )
-
-    # pack straight from the in-flight frame — re-reading the just-written
-    # doc_terms parquet would cost a full extra table scan.  The pack input
-    # carries norm (for the cosine-mode normalized weights), so it reuses
-    # the same norms agg + SHUFFLE_HASH join the doc_terms write ran.
-    def _write_postings() -> None:
-        packed = pack_for(
-            with_norm.select("term", "doc_int", "weight", "norm"), cfg
-        ).sortWithinPartitions("term_id", "block_id")
-        cat.write(packed, "postings", partition_by=["seg"])
-
-    # the two writes are independent — submit them concurrently so each
-    # job's tasks back-fill executor slots freed by the other's straggler
-    # tails (guide §2.6; FIFO scheduling does exactly this).  Their shared
-    # upstream reads the term_tf cache, so the only duplicated work is the
-    # cheap JVM join/agg layer above it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_doc_terms), pool.submit(_write_postings)]
-        for f in futs:
-            f.result()
-    if ctx is not None and "term_tf" in ctx:
-        ctx.pop("term_tf").unpersist()
+    try:
+        _write_weighted(cat, weighted, hot)
+    finally:
+        term_tf.unpersist()
 
     n_postings = cat.table_rows("doc_terms")
     n_blocks = cat.table_rows("postings")

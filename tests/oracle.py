@@ -147,3 +147,39 @@ def assert_topk_matches(
             f"band at rank {i}: engine {engine_band - oracle_band} not in oracle band"
         )
         i = j
+
+
+def assert_single_norm_rule(spark, index_dir: str, term_id_seed: int = 0) -> None:
+    """The two weighted layouts of an index agree on every doc's norm: each
+    ``doc_terms`` row's ``float32(weight / norm)`` equals its packed
+    ``nwts`` entry bit for bit, and each block's ``max_nweight`` is the
+    max of its rows' ``weight / norm``."""
+    import numpy as np
+    import pandas as pd
+
+    from splade_easy_spark.index.catalog import term_id_py
+    from splade_easy_spark.index.postings import unpack_blocks
+
+    dt = spark.read.parquet(f"{index_dir}/doc_terms").select(
+        "term", "doc_int", "weight", "norm"
+    ).toPandas()
+    post = spark.read.parquet(f"{index_dir}/postings").select(
+        "term_id", "n", "docs", "wts", "nwts", "max_nweight"
+    ).toPandas()
+    ns = post["n"].to_numpy()
+    doc_ints, _ = unpack_blocks(post["docs"], post["wts"], ns)
+    nw32 = np.frombuffer(b"".join(post["nwts"]), dtype=np.float32)
+    assert len(nw32) == ns.sum() == len(dt), "cosine stream missing or postings differ"
+    packed = pd.DataFrame({
+        "term_id": np.repeat(post["term_id"].to_numpy(), ns),
+        "doc_int": doc_ints,
+        "nw32": nw32.view(np.uint32),
+        "blk": np.repeat(np.arange(len(post)), ns),
+    })
+    dt["term_id"] = [term_id_py(t, term_id_seed) for t in dt["term"]]
+    dt["nw"] = np.where(dt["norm"] > 0, dt["weight"] / dt["norm"], 0.0)
+    m = dt.merge(packed, on=["term_id", "doc_int"], how="inner")
+    assert len(m) == len(dt), "doc_terms rows without a packed posting"
+    assert (m["nw"].to_numpy().astype(np.float32).view(np.uint32) == m["nw32"].to_numpy()).all()
+    block_max = m.groupby("blk")["nw"].max()
+    assert (block_max.to_numpy() == post["max_nweight"].to_numpy()[block_max.index]).all()

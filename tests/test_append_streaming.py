@@ -10,6 +10,7 @@ from splade_easy_spark.data.transcripts import TRANSCRIPT_SCHEMA
 from splade_easy_spark.index import build_index
 from splade_easy_spark.index.append import append_documents, refresh_stats
 from splade_easy_spark.query import Searcher
+from tests.oracle import assert_single_norm_rule
 
 CFG = IndexConfig(build_partitions=4, term_buckets=8, segment_docs=128, block_size=32)
 
@@ -70,19 +71,32 @@ def test_append_redelivery_is_idempotent(spark, tmp_path):
     assert after == before  # no double-scoring
 
 
-def test_append_has_no_index_sized_rescan():
-    """The append path must pack postings/doc_terms from the in-flight
-    batch frames — re-reading the whole docs/doc_terms tables per batch is
-    O(index) per micro-batch at 10^12 turns (round-1 regression guard)."""
+def _appender_sources() -> dict:
+    """Each appender's source, with the shared batch skeleton appended
+    when the appender delegates to it."""
     import inspect
 
     import splade_easy_spark.index.append as ap
+    from splade_easy_spark.index.vector_builder import append_vector_documents
 
-    src = inspect.getsource(ap.append_documents)
-    assert "read.parquet" not in src
-    assert 'cat.read(spark, "doc_terms")' not in src
-    # the only docs-table touch is the column-pruned dedupe anti-join
-    assert src.count('cat.read(spark, "docs")') <= 1
+    out = {}
+    for fn in (ap.append_documents, append_vector_documents):
+        src = inspect.getsource(fn)
+        if "_append_batch(" in src:
+            src += inspect.getsource(ap._append_batch)
+        out[fn.__name__] = src
+    return out
+
+
+def test_append_has_no_index_sized_rescan():
+    """Both append paths must pack postings/doc_terms from the in-flight
+    batch frames — re-reading the whole docs/doc_terms tables per batch is
+    O(index) per micro-batch at 10^12 turns (round-1 regression guard)."""
+    for name, src in _appender_sources().items():
+        assert "read.parquet" not in src, name
+        assert 'cat.read(spark, "doc_terms")' not in src, name
+        # the only docs-table touch is the column-pruned dedupe anti-join
+        assert src.count('cat.read(spark, "docs")') <= 1, name
 
 
 def test_refresh_stats_matches_oneshot(spark, tmp_path):
@@ -166,6 +180,8 @@ def test_cosine_wand_after_append_matches_sql(spark, tmp_path):
     rest = all_tx.where(F.col("conv_id") >= "conv_00000005")
     build_index(spark, first, idx, CFG)
     append_documents(spark, idx, rest, CFG)
+    # built and appended rows alike: one norm per doc in both layouts
+    assert_single_norm_rule(spark, idx, CFG.term_id_seed)
     s = Searcher(spark, idx, CFG)
     for q in ("baba0 ceba1", "diba2 baba0 eba3"):
         sql = [(r["doc_id"], r["score"]) for r in s.search(q, 15, use_cosine=True).collect()]
@@ -216,13 +232,11 @@ def test_append_dedupe_scan_is_range_pruned(spark, tmp_path):
     that reaches the parquet row-group stats (PushedFilters) — the round-2
     version scanned the whole doc_id column per batch, O(index) at 10^12
     turns."""
-    import inspect
-
-    import splade_easy_spark.index.append as ap
     from splade_easy_spark.index.catalog import IndexCatalog
 
-    src = inspect.getsource(ap.append_documents)
-    assert ".between(" in src  # the range bound is part of the dedupe path
+    # the range bound is part of both appenders' dedupe path
+    for name, src in _appender_sources().items():
+        assert ".between(" in src, name
 
     # the docs layout supports the pruning: a between-predicate on doc_id
     # reaches the scan as pushed filters over the range-major sorted table

@@ -59,13 +59,12 @@ def test_append_crash_before_commit_is_repaired(spark, tmp_path, monkeypatch):
     base = generate_transcripts(spark, num_convs=8, seed=11)
     batch = generate_transcripts(spark, num_convs=3, seed=12)
 
-    clean = str(tmp_path / "clean")
+    # one build, two copies (the build is deterministic)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     build_index(spark, base, clean, CFG)
+    shutil.copytree(clean, crashed)
     clean_out = append_documents(spark, clean, batch, CFG)
     assert clean_out["appended_docs"] > 0
-
-    crashed = str(tmp_path / "crashed")
-    build_index(spark, base, crashed, CFG)
 
     def boom(cat, new_docs):
         raise RuntimeError("injected crash at the docs commit point")
@@ -295,12 +294,11 @@ def test_vector_append_crash_before_commit_is_repaired(spark, tmp_path, monkeypa
             for m in ("sql", "wand")
         }
 
-    clean = str(tmp_path / "vclean")
+    # one build, two copies (the build is deterministic)
+    clean, crashed = str(tmp_path / "vclean"), str(tmp_path / "vcrashed")
     build_vector_index(spark, spark.createDataFrame(base, schema), clean, vcfg)
+    shutil.copytree(clean, crashed)
     append_vector_documents(spark, clean, spark.createDataFrame(batch, schema), vcfg)
-
-    crashed = str(tmp_path / "vcrashed")
-    build_vector_index(spark, spark.createDataFrame(base, schema), crashed, vcfg)
 
     def boom(cat, new_docs):
         raise RuntimeError("injected vector crash")
@@ -564,12 +562,11 @@ def test_partial_docs_write_repaired_count_exact(spark, tmp_path, monkeypatch):
     batch = generate_transcripts(spark, num_convs=3, seed=94).withColumn(
         "conv_id", F.concat(F.lit("p"), F.col("conv_id"))
     )
-    clean = str(tmp_path / "clean")
+    # one build, two copies (the build is deterministic)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     build_index(spark, base, clean, CFG)
+    shutil.copytree(clean, crashed)
     assert append_documents(spark, clean, batch, CFG)["appended_docs"] > 0
-
-    crashed = str(tmp_path / "crashed")
-    build_index(spark, base, crashed, CFG)
     real_commit = ap._commit_docs
 
     def partial_commit(cat, new_docs):

@@ -12,7 +12,7 @@ import pytest
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.data import generate_transcripts
 from splade_easy_spark.index import build_index
-from splade_easy_spark.index.builder import _STAGES, _STAGE_TABLES, _stage_docs
+from splade_easy_spark.index.builder import _STAGES, _STAGE_TABLES
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.index.manifest import Manifest
 
@@ -35,23 +35,58 @@ def test_manifest_lineage_recorded(spark, tmp_path):
     assert man["identity"]["analyzer_hash"]
 
 
-def test_resume_skips_completed_stages(spark, tmp_path):
-    """Simulated crash after stage 'docs': only later stages rerun, and the
-    final manifest equals a one-shot build's (modulo timestamps)."""
+def _tf_kernels_outside_cache(plan) -> int:
+    """Tokenize+tf ``MapInArrow`` nodes (output has a ``tf`` column) in an
+    executed plan, not counting the ones behind an ``InMemoryTableScan``
+    (a cached frame's plan is its relation's, not a child of the scan)."""
+    name = plan.getClass().getSimpleName()
+    if name.startswith("InMemoryTableScan"):
+        return 0
+    if name == "AdaptiveSparkPlanExec":
+        return _tf_kernels_outside_cache(plan.inputPlan())
+    out = plan.output()
+    names = {out.apply(i).name() for i in range(out.size())}
+    n = int("MapInArrow" in name and "tf" in names)
+    kids = plan.children()
+    return n + sum(_tf_kernels_outside_cache(kids.apply(i)) for i in range(kids.size()))
+
+
+@pytest.mark.parametrize("crash_after", ["docs", "stats"])
+def test_resume_skips_completed_stages(spark, tmp_path, monkeypatch, crash_after):
+    """Simulated crash after stage ``crash_after``: only later stages
+    rerun, the final manifest equals a one-shot build's (modulo
+    timestamps), and the postings stage tokenizes once: neither of its
+    two writes runs the tf kernel outside the term_tf cache."""
     idx_a = str(tmp_path / "a")
     idx_b = str(tmp_path / "b")
     tx = generate_transcripts(spark, num_convs=5, seed=1)
     build_index(spark, tx, idx_a, CFG)
 
-    # partial build: run stage docs only, commit, then "crash"
+    # partial build: run the stages up to crash_after, commit, then "crash"
     cat = IndexCatalog(idx_b, CFG)
     cat.manifest.set_identity(CFG.identity())
-    metrics = _stage_docs(spark, tx, cat)
-    cat.manifest.record_stage("docs", {"docs": "docs"}, metrics)
+    done = list(_STAGES)[: list(_STAGES).index(crash_after) + 1]
+    for stage in done:
+        fn = _STAGES[stage]
+        metrics = fn(spark, tx, cat) if stage == "docs" else fn(spark, cat)
+        cat.manifest.record_stage(stage, {t: t for t in _STAGE_TABLES[stage]}, metrics)
 
+    plans = {}
+    real_write = IndexCatalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        if name in ("doc_terms", "postings"):
+            plans[name] = df._jdf.queryExecution().executedPlan()
+        return real_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(IndexCatalog, "write", recording_write)
     res = build_index(spark, tx, idx_b, CFG, resume=True)
-    assert res.stages_skipped == ["docs"]
-    assert sorted(res.stages_run) == ["postings", "stats"]
+    monkeypatch.undo()
+    assert res.stages_skipped == done
+    assert sorted(res.stages_run) == sorted(set(_STAGES) - set(done))
+    assert set(plans) == {"doc_terms", "postings"}
+    for name, plan in plans.items():
+        assert _tf_kernels_outside_cache(plan) == 0, f"{name} write re-runs the tf kernel"
 
     man_a = json.loads((Path(idx_a) / "_manifest.json").read_text())
     man_b = json.loads((Path(idx_b) / "_manifest.json").read_text())

@@ -131,7 +131,8 @@ def test_quantize_null_elements_match_hof(spark, ragged):
 
 def test_term_tf_rows_doc_contiguous(spark):
     """The Arrow term-tf kernel keeps each doc's rows contiguous (the
-    contract attach_doc_norm-style streaming consumers rely on)."""
+    contract that lets the build's norms agg emit one partial row per doc
+    per partition)."""
     from splade_easy_spark.functions.text import term_tf_frame
 
     df = spark.createDataFrame(

@@ -19,6 +19,7 @@ import pytest
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.index.vector_builder import build_vector_index, vector_query_terms
 from splade_easy_spark.query import Searcher
+from tests.oracle import assert_single_norm_rule
 
 CFG = IndexConfig(build_partitions=2, term_buckets=8, segment_docs=64, block_size=16)
 TOL = 1e-5  # the reference's own tolerance, tests/test_scoring.py:20
@@ -206,6 +207,8 @@ def test_vector_append_matches_oneshot_and_is_idempotent(spark, tmp_path):
 
     appends = IndexCatalog(idx_b, CFG).manifest.data["appends"]
     assert appends and all(isinstance(a.get("seq"), int) for a in appends)
+    for idx in (idx_a, idx_b):
+        assert_single_norm_rule(spark, idx, CFG.term_id_seed)
 
     sa, sb = Searcher(spark, idx_a, CFG), Searcher(spark, idx_b, CFG)
     q = vector_query_terms([7, 42, 1999, 1500], [1.0, 0.5, 2.0, 0.25])

@@ -219,16 +219,23 @@ def test_wand_profile_blocks_skipped(corpus, spark):
     """The instrumented kernel must report real pruning on a skewed corpus
     and stay exact (wand_profile shares _score_segment with the live path)."""
     idx_dir, _ = corpus
+    from splade_easy_spark.data.transcripts import make_vocab
     from splade_easy_spark.query.wand import wand_profile
     from splade_easy_spark.query.searcher import analyze_query
 
     s = Searcher(spark, idx_dir, CFG)
-    terms = analyze_query("baba0 ceba1 dada2", CFG)
+    text = " ".join(make_vocab()[:12])
+    terms = analyze_query(text, CFG)
     postings = s.cat.read(spark, "postings")
     prof = wand_profile(spark, postings, terms, CFG.segment_docs, top_k=3).collect()
     total = sum(r["blocks_total"] for r in prof)
     decoded = sum(r["blocks_decoded"] for r in prof)
-    assert total > 0 and 0 < decoded <= total
+    assert 0 < decoded < total, (decoded, total)
+    sql = [(r["doc_id"], r["score"]) for r in s.search(text, top_k=3).collect()]
+    wand = [(r["doc_id"], r["score"]) for r in s.search(text, top_k=3, method="wand").collect()]
+    assert [d for d, _ in wand] == [d for d, _ in sql]
+    for (_, a), (_, b) in zip(wand, sql):
+        assert abs(a - b) <= 1e-5 * max(1.0, abs(b))
 
 
 def test_batch_wand_equals_batch_sql(corpus, spark):
