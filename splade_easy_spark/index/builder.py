@@ -15,14 +15,18 @@ acknowledged bottleneck) with three bulk Spark jobs:
                   hot-term threshold observed on the write job
   stage postings: tf rows ⨝ term_stats (broadcast when small) → BM25
                   weights → ``_write_weighted``: one materialized doc-norm
-                  agg, then the hot-term-salted tb-bucketed doc_terms write
-                  and the seg-partitioned streaming mapInArrow block pack,
-                  run concurrently
+                  agg, then ``_write_tables``: the hot-term-salted
+                  tb-bucketed doc_terms write and the seg-partitioned
+                  streaming mapInArrow block pack, run concurrently
 
-``_write_weighted`` is the one writer of doc_terms + postings: the build,
-``append.refresh_stats``, ``append.append_documents`` and both vector
-writers (``vector_builder``) all go through it, so every table row gets
-its norm from the same rule.
+The build, ``append.refresh_stats``, both appenders and the vector build
+write new weights through ``_write_weighted``, so every row's norm follows
+one rule.  This module alone decides how doc_terms and postings lie on
+disk: every write of either table ends in ``_doc_terms_layout`` (by
+``tb``, rows sorted by ``(term, doc_int)`` in each file) and
+``_postings_layout`` (by ``seg``, sorted by ``(term_id, block_id)``) —
+through ``_write_tables`` for ``_write_weighted``, ``compact`` and
+``reshard``, directly for ``migrate_postings`` and ``optimize_postings``.
 
 Shuffle budget at scale: one doc-id shuffle, one term-stats agg, one
 doc-keyed norms agg (materialized once, read by both writes), and per
@@ -40,11 +44,10 @@ range-sampling pass.
 
 from __future__ import annotations
 
-import functools
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
@@ -230,27 +233,6 @@ def _assert_no_term_id_collisions(tstats: DataFrame, seed: int) -> None:
         )
 
 
-@functools.cache
-def _postings_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("seg", pa.int64()),
-            ("term_id", pa.int64()),
-            ("block_id", pa.int32()),
-            ("n", pa.int32()),
-            ("doc_min", pa.int64()),
-            ("doc_max", pa.int64()),
-            ("max_weight", pa.float64()),
-            ("docs", pa.binary()),
-            ("wts", pa.binary()),
-            ("max_nweight", pa.float64()),
-            ("nwts", pa.binary()),
-        ]
-    )
-
-
 def _group_starts(rb) -> "object":
     """int ndarray of row indices (>= 1) that start a new (seg, term) group
     — a row starts a group iff its ``term_first`` is non-null (the JVM lag
@@ -263,7 +245,7 @@ def _group_starts(rb) -> "object":
 
 
 def _pack_batch(
-    rb, block_size: int, segment_docs: int, pack_cosine: bool, term_id_seed: int = 0
+    rb, block_size: int, segment_docs: int, pack_cosine: bool, term_id_seed: int, schema
 ):
     """Pack an Arrow batch of (term_first, doc_int, weight[, nweight]) rows
     SORTED by (seg, term, doc_int) into block records.  The batch carries
@@ -278,7 +260,9 @@ def _pack_batch(
     With ``pack_cosine``, ``nweight`` = weight/‖doc‖ rides along so cosine
     scoring is the same dot-product kernel over the normalized stream (its
     block max is the cosine block-max bound); otherwise the nwts columns
-    are written empty and cosine stays available through the SQL path."""
+    are written empty and cosine stays available through the SQL path.
+    ``schema`` is ``POSTINGS_SCHEMA`` as Arrow, derived on the driver
+    (executors have no session to parse DDL with)."""
     import numpy as np
     import pyarrow as pa
 
@@ -346,7 +330,7 @@ def _pack_batch(
         pa.array(max_nw),
         pa.array(nwts),
     ]
-    return pa.RecordBatch.from_arrays(arrays, schema=_postings_pa_schema())
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def pack_doc_terms(
@@ -385,10 +369,13 @@ def pack_doc_terms(
     retired layout (``maintenance.migrate_postings``), so it must be True.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+    from pyspark.sql.window import Window
 
     if not term_ids:
         raise ValueError("string-keyed postings are a retired layout: term_ids must be True")
-    from pyspark.sql.window import Window
+    schema = to_arrow_schema(StructType.fromDDL(POSTINGS_SCHEMA))
 
     cols = [
         (F.col("doc_int") / F.lit(segment_docs)).cast("long").alias("seg"),
@@ -438,9 +425,11 @@ def pack_doc_terms(
                 continue
             last_start = int(idx[-1])
             complete, carry = rb.slice(0, last_start), rb.slice(last_start)
-            yield _pack_batch(complete, block_size, segment_docs, pack_cosine, term_id_seed)
+            yield _pack_batch(
+                complete, block_size, segment_docs, pack_cosine, term_id_seed, schema
+            )
         if carry is not None and carry.num_rows:
-            yield _pack_batch(carry, block_size, segment_docs, pack_cosine, term_id_seed)
+            yield _pack_batch(carry, block_size, segment_docs, pack_cosine, term_id_seed, schema)
 
     return slim.mapInArrow(packer, schema=POSTINGS_SCHEMA)
 
@@ -454,15 +443,76 @@ def pack_for(dt: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
+def _doc_terms_layout(dt: DataFrame, parts: int, salt: Column | None = None) -> DataFrame:
+    """``doc_terms`` as it lies on disk: ``parts`` tasks hashed on ``(tb,
+    salt)``, the five table columns, each task sorted by ``(tb, term,
+    doc_int)``, so every file is term-sorted and ``term IN (...)`` prunes
+    row groups by min/max statistics.  The sort must lead with the
+    ``partitionBy`` column: Spark's planned write
+    (``spark.sql.optimizer.plannedWrite.enabled``, on by default) silently
+    replaces a sort that does not by its own ``Sort [tb]``."""
+    return (
+        dt.repartition(parts, F.col("tb"), F.lit(0) if salt is None else salt)
+        .select("tb", "term", "doc_int", "weight", "norm")
+        .sortWithinPartitions("tb", "term", "doc_int")
+    )
+
+
+def _postings_layout(packed: DataFrame) -> DataFrame:
+    """``postings`` as it lies on disk: each task's blocks sorted by
+    ``(seg, term_id, block_id)`` (``seg`` first: see ``_doc_terms_layout``)."""
+    return packed.sortWithinPartitions("seg", "term_id", "block_id")
+
+
+def _write_tables(
+    cat: IndexCatalog,
+    rows: DataFrame,
+    names: tuple[str, str],
+    parts: int,
+    cfg: IndexConfig,
+    hot: DataFrame | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``(term, doc_int, weight, norm)`` rows as the tables ``names``
+    = (doc_terms, postings), concurrently so each job's tasks back-fill
+    the slots the other's straggler tails free (guide §2.6).
+    ``_write_weighted`` writes the live tables; ``compact`` and ``reshard``
+    stage ``<t>__rewrite`` from the stored rows and norms.  doc_terms is
+    partitioned by term bucket ``tb`` (query-time partition pruning) in
+    ``parts`` tasks; ``hot`` (the build's Zipfian-head ``term`` frame)
+    salts them by ``pmod(doc_int, hot_term_salt)`` so a head term is not
+    one task.  postings is ``pack_for`` with ``cfg``'s layout, partitioned
+    by document segment ``seg = doc_int // segment_docs`` (the reference's
+    shard fan-out, ``src/splade_easy/retriever.py:105-122``): a
+    per-segment kernel scores exactly and only top-k rows cross the
+    network."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    dt = rows.withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
+    salt = None
+    if hot is not None:
+        dt = dt.join(F.broadcast(hot.select("term", F.lit(1).alias("_hot"))), "term", "left")
+        salt = F.when(
+            F.col("_hot") == 1, F.pmod(F.col("doc_int"), F.lit(cfg.hot_term_salt))
+        ).otherwise(F.lit(0))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(cat.write, _doc_terms_layout(dt, parts, salt), names[0], ["tb"], mode),
+            pool.submit(cat.write, _postings_layout(pack_for(rows, cfg)), names[1], ["seg"], mode),
+        ]
+        for f in futs:
+            f.result()
+
+
 def _write_weighted(
     cat: IndexCatalog,
     weighted: DataFrame,
     hot: DataFrame | None = None,
     append: bool = False,
 ) -> None:
-    """The one writer of ``doc_terms`` and ``postings``: the build,
-    ``refresh_stats``, ``build_vector_index`` and both appenders hand it a
-    ``(term, doc_int, weight)`` frame.
+    """The one writer of new weights into ``doc_terms`` and ``postings``:
+    the build, ``refresh_stats``, ``build_vector_index`` and both
+    appenders hand it a ``(term, doc_int, weight)`` frame.
 
     The doc norm (L2 of the doc's weight vector) is computed here and
     nowhere else: one doc-grain ``groupBy`` agg, materialized once before
@@ -476,26 +526,9 @@ def _write_weighted(
     through Python IPC, 23 s over 62M rows at 8 cores, more than the
     exchange it saved).
 
-    Two layouts, written CONCURRENTLY so each job's tasks back-fill the
-    slots the other's straggler tails free (guide §2.6):
-
-    1. ``doc_terms`` — (tb, term, doc_int, weight, norm), hive-partitioned
-       by term bucket ``tb`` for query-time partition pruning, sorted by
-       (term, doc_int) within each file so ``term IN (...)`` predicates
-       prune row groups too.  ``hot`` (a ``term`` frame of Zipfian-head
-       terms) salts the repartition by ``pmod(doc_int, hot_term_salt)``,
-       so a head term's posting mass is not one task.
-    2. ``postings`` — packed blocks (``pack_for``), hive-partitioned by
-       document segment ``seg = doc_int // segment_docs`` (doc-sharded, the
-       topology of the reference's shard fan-out,
-       ``src/splade_easy/retriever.py:105-122``): a per-segment kernel
-       scores exactly and only top-k rows cross the network.
-
-    A build writes ``build_partitions`` doc_terms tasks over fresh tables;
-    an ``append`` adds batch-sized files (at most 8 tasks) to the live
-    tables."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    ``_write_tables`` lays the rows out.  A build writes
+    ``build_partitions`` doc_terms tasks over fresh tables; an ``append``
+    adds batch-sized files (at most 8 tasks) to the live tables."""
     from pyspark import StorageLevel
 
     cfg = cat.config
@@ -503,30 +536,13 @@ def _write_weighted(
         F.sqrt(F.sum(F.col("weight") * F.col("weight"))).alias("norm")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     norms.count()
-    with_norm = weighted.join(norms.hint("SHUFFLE_HASH"), "doc_int")
-    dt = with_norm.withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
-    salt = F.lit(0)
-    if hot is not None:
-        dt = dt.join(F.broadcast(hot.select("term", F.lit(1).alias("_hot"))), "term", "left")
-        salt = F.when(
-            F.col("_hot") == 1, F.pmod(F.col("doc_int"), F.lit(cfg.hot_term_salt))
-        ).otherwise(F.lit(0))
+    rows = weighted.join(norms.hint("SHUFFLE_HASH"), "doc_int")
     parts = min(cfg.build_partitions, 8) if append else cfg.build_partitions
-    doc_terms = (
-        dt.repartition(parts, F.col("tb"), salt)
-        .select("tb", "term", "doc_int", "weight", "norm")
-        .sortWithinPartitions("term", "doc_int")
-    )
-    packed = pack_for(with_norm, cfg).sortWithinPartitions("term_id", "block_id")
-    mode = "append" if append else "overwrite"
     try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(cat.write, doc_terms, "doc_terms", ["tb"], mode),
-                pool.submit(cat.write, packed, "postings", ["seg"], mode),
-            ]
-            for f in futs:
-                f.result()
+        _write_tables(
+            cat, rows, ("doc_terms", "postings"), parts, cfg, hot,
+            "append" if append else "overwrite",
+        )
     finally:
         norms.unpersist()
 

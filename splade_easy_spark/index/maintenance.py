@@ -10,11 +10,18 @@ full rebuild refreshes statistics).  This is asserted by
 tests/test_maintenance.py (search results identical before/after compact).
 
 Atomic table swap: new data is written to ``<table>__rewrite``, then
-directories are exchanged and the manifest committed — the analog of the
-reference's staged ``_reshard_temp`` + atomic metadata rename + rollback
-(``src/splade_easy/reshard.py:34-124``).  A crash mid-rewrite leaves the
-live table untouched (the ``__rewrite`` dir is garbage-collected on the
-next maintenance run).
+directories are exchanged (``_swap_dir``, which also swaps
+``optimize_postings``' partitions) and the manifest committed — the
+analog of the reference's staged ``_reshard_temp`` + atomic metadata
+rename + rollback (``src/splade_easy/reshard.py:34-124``).  A crash
+mid-rewrite leaves the live table untouched (the ``__rewrite`` dir is
+garbage-collected on the next maintenance run).
+
+The on-disk layout of ``doc_terms`` and ``postings`` is ``builder``'s, as
+the reference has one ``ShardWriter`` (SURVEY.md S1, W5, W6): ``compact``
+and ``reshard`` stage both tables through ``builder._write_tables`` with
+the stored norm, ``migrate_postings`` and ``optimize_postings`` end in
+its layout functions.
 """
 
 from __future__ import annotations
@@ -29,28 +36,30 @@ from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.functions.predicates import in_list
-from splade_easy_spark.index.builder import pack_for
+from splade_easy_spark.index.builder import _doc_terms_layout, _postings_layout, _write_tables, pack_for
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.index.manifest import FORMAT_VERSION
 
+#: compact's and reshard's staging tables for ``_write_tables``
+_REWRITE = ("doc_terms__rewrite", "postings__rewrite")
 
-def _swap_in(cat: IndexCatalog, name: str, keep_old: bool = False) -> None:
-    """Promote ``<name>__rewrite`` to ``<name>`` (old moved away first so a
-    failure between the two renames cannot leave a half-written live dir).
-    With ``keep_old`` the previous layout is retained as ``<name>__backup``
-    for ``rollback_reshard`` — the analog of the reference's
-    ``keep_originals`` renaming shards to ``.fb.backup``
-    (``src/splade_easy/reshard.py:22,102-115``).
 
-    Tolerates a concurrent reader's ``heal_interrupted_swaps`` (which runs
-    at every Searcher open and restores ``__old`` → live inside the
-    two-rename window): the second rename then fails, and the swap is
-    simply retried — the healer only acts while live is missing, so a
-    bounded retry wins the race.  On final failure the live dir is
-    restored from the moved-away copy and the error propagates (the
-    rewrite staging is left for the caller/GC)."""
-    live = Path(cat.table_dir(name))
-    new = live.with_name(live.name + "__rewrite")
+def _swap_dir(live: Path, new: Path, keep_old: bool = False) -> None:
+    """Promote the staged dir ``new`` to ``live`` — one protocol for whole
+    tables (``_swap_in``) and ``optimize_postings``' partitions.  The old
+    dir is moved away first (to ``<live>__backup`` with ``keep_old``, kept
+    for ``rollback_reshard`` like the reference's ``.fb.backup`` shards,
+    ``src/splade_easy/reshard.py:22,102-115``; else to ``<live>__old``,
+    deleted once the swap lands), so a failure between the two renames
+    cannot leave a half-written live dir, and the moved-away copy is never
+    deleted while live is missing.
+
+    A concurrent reader's ``heal_interrupted_swaps`` (run at every
+    Searcher open) may restore ``__old`` → live inside the two-rename
+    window; the second rename then fails and the swap is retried — the
+    healer only acts while live is missing, so a bounded retry wins.  On
+    final failure live is restored and the error propagates (the staging
+    is left for the caller/GC)."""
     trash = live.with_name(live.name + ("__backup" if keep_old else "__old"))
     last_err: OSError | None = None
     for _ in range(3):
@@ -94,44 +103,39 @@ def _swap_in(cat: IndexCatalog, name: str, keep_old: bool = False) -> None:
             trash.rename(live)
         except OSError:
             pass
-    raise RuntimeError(
-        f"table swap for {name!r} did not land after 3 attempts"
-    ) from last_err
+    raise RuntimeError(f"swap of {str(live)!r} did not land after 3 attempts") from last_err
+
+
+def _swap_in(cat: IndexCatalog, name: str, keep_old: bool = False) -> None:
+    """Promote table ``<name>__rewrite`` to ``<name>`` (``_swap_dir``)."""
+    live = Path(cat.table_dir(name))
+    _swap_dir(live, live.with_name(live.name + "__rewrite"), keep_old)
 
 
 def heal_interrupted_swaps(index_dir: str | Path) -> list[str]:
-    """Repair ``optimize_postings``' per-partition swap window.
+    """Repair ``_swap_dir``'s two-rename window for tables and partitions.
 
-    The swap is ``live.rename(<part>__old)`` → ``staged.rename(live)`` →
-    ``rmtree(<part>__old)``; a crash between the two renames leaves the
-    live partition dir missing and ``<part>__old`` in its place, and a
-    crash before the rmtree leaves both.  Either state breaks Hive
-    partition inference for the whole table (``seg=5__old`` is not a
-    LONG, so ``seg`` falls back to string and the kernels' ``int(seg)``
-    raises).  Healing is rename-only and idempotent: restore ``__old``
-    when the live dir is missing (pre-optimize state — optimize is
-    byte-preserving and simply reruns), delete it when the swap already
-    completed.  Returns the partition dirs touched.  Safe to call from
-    read-only contexts: rename failures are swallowed (nothing to heal
-    is the overwhelmingly common case and costs one listdir per table)."""
+    A crash between ``live.rename(<dir>__old)`` and ``staged.rename(live)``
+    leaves ``<dir>__old`` holding the ONLY copy while the staging still
+    exists (``_gc_rewrite_dirs`` would delete both); a crash before the
+    final rmtree leaves live and ``__old`` side by side.  A missing table
+    dir is restored from ``__old`` or ``__backup`` (a completed swap's
+    top-level leftovers are the GC's, and a ``__backup`` next to live is
+    ``rollback_reshard``'s).  A partition's ``__old`` breaks Hive
+    partition inference for the whole table (``seg=5__old`` is not a LONG,
+    so the kernels' ``int(seg)`` raises): it is restored when live is
+    missing (optimize is byte-preserving and simply reruns) and deleted
+    otherwise.  Rename-only and idempotent; returns the dirs touched.
+    Safe from read-only contexts: rename failures are swallowed (nothing
+    to heal is the common case and costs one listdir per table)."""
     healed: list[str] = []
     root = Path(index_dir)
     if not root.exists():
         return healed
-    # top-level table swaps (_swap_in, used by compact/reshard) have the
-    # same two-rename window: a crash leaves `<table>__old` holding the
-    # ONLY copy of the table while `<table>__rewrite` staging still exists
-    # — and _gc_rewrite_dirs deletes both unless the table is restored
-    # first.  Restore when the live dir is missing; a completed swap's
-    # leftover `__old` is deleted by the GC, not here (top-level `__old`
-    # dirs don't break reads the way nested partition dirs do).
     for suffix in ("__old", "__backup"):
         for old in root.glob(f"*{suffix}"):
             live = old.with_name(old.name[: -len(suffix)])
             if not live.exists():
-                # live missing = the swap never completed; restore.  (A
-                # *completed* keep_old swap leaves __backup NEXT TO live
-                # for rollback_reshard — untouched here.)
                 try:
                     old.rename(live)
                     healed.append(str(old))
@@ -153,50 +157,10 @@ def heal_interrupted_swaps(index_dir: str | Path) -> list[str]:
     return healed
 
 
-def _swap_partition(live: Path, new: Path) -> bool:
-    """Per-partition swap used by ``optimize_postings``, tolerant of a
-    CONCURRENT reader's ``heal_interrupted_swaps`` (which runs at every
-    Searcher open): if a reader restores ``<part>__old`` to ``live``
-    between our two renames, the second rename fails — the pre-optimize
-    content is back in place (correct, just unmerged), so the staged
-    replacement for this partition is discarded and the caller skips it.
-    All rmtrees ignore errors for the same reason (the healer may delete
-    ``__old`` first).  Returns True when the swap landed."""
-    old = live.with_name(live.name + "__old")
-    if old.exists():
-        shutil.rmtree(old, ignore_errors=True)
-    try:
-        live.rename(old)
-    except OSError:
-        return False
-    try:
-        new.rename(live)
-    except OSError:
-        # two distinct causes: a concurrent heal restored `live` from
-        # `old` (then `old` is stale and safe to drop), or the rename
-        # failed for its own reasons with `live` still MISSING — in which
-        # case `old` holds the only copy and must be put back, never
-        # deleted (round-4 review: deleting unconditionally destroyed the
-        # partition on e.g. a transient EIO)
-        if live.exists():
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            try:
-                old.rename(live)
-            except OSError:
-                pass  # healer got there between our check and rename
-        return False
-    shutil.rmtree(old, ignore_errors=True)
-    return True
-
-
 def _gc_rewrite_dirs(cat: IndexCatalog) -> None:
-    # heal interrupted per-partition swaps BEFORE deleting staging: the
-    # staged `<table>__rewrite` dir may hold the only copy of a partition
-    # whose live dir was renamed away mid-swap — restoring `__old` first
-    # makes deleting the staging safe (the round-3 ADVICE `high`: deleting
-    # staging first lost the seg's data and left a `seg=N__old` dir that
-    # broke partition inference for every later query).
+    # heal BEFORE deleting staging: a swap cut mid-window leaves the only
+    # copy of a table or partition in `__old` (round-3 ADVICE `high`:
+    # deleting staging first lost a seg's data)
     heal_interrupted_swaps(cat.index_dir)
     for p in cat.index_dir.glob("*__rewrite"):
         shutil.rmtree(p, ignore_errors=True)
@@ -335,14 +299,8 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig | None = No
     docs = cat.read(spark, "docs").join(dead_b, "doc_int", "left_anti")
     docs.write.parquet(cat.table_dir("docs") + "__rewrite")
 
-    dt = cat.read(spark, "doc_terms").join(dead_b, "doc_int", "left_anti")
-    dt.repartition(cfg.build_partitions, "tb").write.partitionBy("tb").parquet(
-        cat.table_dir("doc_terms") + "__rewrite"
-    )
-
-    dt_new = spark.read.parquet(cat.table_dir("doc_terms") + "__rewrite")
-    packed = pack_for(dt_new, cfg).sortWithinPartitions("term_id", "block_id")
-    packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
+    rows = cat.read(spark, "doc_terms").join(dead_b, "doc_int", "left_anti")
+    _write_tables(cat, rows, _REWRITE, cfg.build_partitions, cfg)
 
     cat.manifest.journal_maintenance("compact", ["docs", "doc_terms", "postings"])
     for t in ["docs", "doc_terms", "postings"]:
@@ -387,16 +345,11 @@ def reshard(
 
     before = stats(spark, index_dir)
 
-    dt = cat.read(spark, "doc_terms")
-    dt.repartition(parts, "tb").write.partitionBy("tb").parquet(
-        cat.table_dir("doc_terms") + "__rewrite"
+    _write_tables(
+        cat, cat.read(spark, "doc_terms"), _REWRITE, parts,
+        dataclasses.replace(cfg, segment_docs=seg_docs, block_size=bs),
     )
-    dt_new = spark.read.parquet(cat.table_dir("doc_terms") + "__rewrite")
     man = cat.manifest
-    packed = pack_for(
-        dt_new, dataclasses.replace(cfg, segment_docs=seg_docs, block_size=bs)
-    ).sortWithinPartitions("term_id", "block_id")
-    packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
     prior_layout = dict(man.data["layout"])
     man.journal_maintenance("reshard", ["doc_terms", "postings"])
     for t in ["doc_terms", "postings"]:
@@ -570,8 +523,7 @@ def migrate_postings(
     dt = cat.read(spark, "doc_terms")
     # doc_terms without the denormalized norm cannot feed the cosine stream
     cfg = dataclasses.replace(cfg, pack_cosine=cfg.pack_cosine and "norm" in dt.columns)
-    packed = pack_for(dt, cfg).sortWithinPartitions("term_id", "block_id")
-    packed.write.partitionBy("seg").parquet(cat.table_dir("postings") + "__rewrite")
+    cat.write(_postings_layout(pack_for(dt, cfg)), "postings__rewrite", ["seg"])
 
     next_doc_int = man.data.get("next_doc_int")
     if next_doc_int is None:
@@ -613,17 +565,20 @@ def optimize_postings(
     Unlike ``reshard`` (full-index rewrite), this touches ONLY the seg
     partitions whose file count reached ``min_files``: their block runs
     are unpacked, merged per ``(seg, term)``, and repacked into minimal
-    full blocks, then the rewritten ``seg=N`` directories are swapped in
-    one by one — O(fragmented partitions), not O(index).  Weights are
-    preserved bit-exactly (float32 in, float32 out), so scores are
-    byte-identical before/after (the frozen-weight contract of this
-    module); tombstones are untouched (postings keep deleted docs until
-    ``compact``).  ``doc_terms`` ``tb=N`` partitions with ≥
-    ``doc_terms_min_files`` files are coalesced the same way (plain
-    re-sorted rewrite; row-group stats on ``term`` come back tight).
+    full blocks (``_postings_layout``), then the rewritten ``seg=N``
+    directories are swapped in one by one (``_swap_dir``) —
+    O(fragmented partitions), not O(index).  Weights are preserved
+    bit-exactly (float32 in, float32 out), so scores are byte-identical
+    before/after (the frozen-weight contract of this module); tombstones
+    are untouched (postings keep deleted docs until ``compact``).
+    ``doc_terms`` ``tb=N`` partitions with ≥ ``doc_terms_min_files`` files
+    are coalesced the same way (``_doc_terms_layout``: term-sorted files,
+    so row-group stats on ``term`` come back tight).
     """
     import numpy as np
     import pandas as pd
+
+    from pyspark.sql.types import StructType
 
     from splade_easy_spark.index.builder import POSTINGS_SCHEMA
     from splade_easy_spark.index.postings import pack_postings, unpack_blocks
@@ -635,7 +590,7 @@ def optimize_postings(
     t0 = time.time()
     _gc_rewrite_dirs(cat)
 
-    def _partition_file_counts(table: str, prefix: str, table_dir: Path) -> dict[int, int]:
+    def _partition_file_counts(table: str, prefix: str) -> dict[int, int]:
         """Files per hive partition — from the manifest's per-file lineage
         when it is current (no listing at all), else one directory walk."""
         lineage = _fresh_lineage(cat, table)
@@ -653,24 +608,38 @@ def optimize_postings(
             return counts
         return {
             int(p.name.split("=", 1)[1]): sum(1 for _ in p.glob("*.parquet"))
-            for p in table_dir.glob(prefix + "=*")
+            for p in Path(cat.table_dir(table)).glob(prefix + "=*")
             if p.is_dir()
         }
 
-    post_dir = Path(cat.table_dir("postings"))
-    seg_files = _partition_file_counts("postings", "seg", post_dir)
+    pend_seqs: list[int] = []
+
+    def _swap_staged(table: str, prefix: str, keys: list[int]) -> int:
+        """Swap ``<table>__rewrite``'s ``<prefix>=<key>`` dirs into the
+        live table one by one (a partition of only empty files stages
+        nothing); returns how many landed."""
+        live = Path(cat.table_dir(table))
+        staged = live.with_name(live.name + "__rewrite")
+        pend_seqs.append(man.journal_maintenance("optimize", [table]))
+        landed = 0
+        for k in keys:
+            new = staged / f"{prefix}={k}"
+            if new.exists():
+                _swap_dir(live / new.name, new)
+                landed += 1
+        shutil.rmtree(staged, ignore_errors=True)
+        return landed
+
+    seg_files = _partition_file_counts("postings", "seg")
     frag_segs = sorted(s for s, n in seg_files.items() if n >= min_files)
     rewritten_segs = 0
-    pend_seqs: list[int] = []
     if frag_segs:
         src = cat.read(spark, "postings").where(F.col("seg").isin(frag_segs))
-        out_cols = [
-            "seg", "term_id", "block_id", "n", "doc_min", "doc_max",
-            "max_weight", "docs", "wts", "max_nweight", "nwts",
-        ]
+        out_cols = StructType.fromDDL(POSTINGS_SCHEMA).fieldNames()
 
         def _merge_groups(pdf: pd.DataFrame):
             """Repack each complete (seg, term) group of block-run rows."""
+            rows = []
             for (seg, term), g in pdf.groupby(["seg", "term_id"], sort=False):
                 g = g.sort_values(["doc_min", "block_id"], kind="stable")
                 docs, wts = unpack_blocks(g["docs"], g["wts"], g["n"])
@@ -691,20 +660,10 @@ def optimize_postings(
                     if n_cos
                     else None
                 )
-                out: dict[str, list] = {k: [] for k in out_cols}
-                for b in pack_postings(docs, wts, block_size, nweights=nwts):
-                    out["seg"].append(int(seg))
-                    out["term_id"].append(term)
-                    out["block_id"].append(b["block_id"])
-                    out["n"].append(b["n"])
-                    out["doc_min"].append(b["doc_min"])
-                    out["doc_max"].append(b["doc_max"])
-                    out["max_weight"].append(b["max_weight"])
-                    out["docs"].append(b["docs"])
-                    out["wts"].append(b["wts"])
-                    out["max_nweight"].append(b.get("max_nweight", 0.0))
-                    out["nwts"].append(b.get("nwts", b""))
-                yield pd.DataFrame(out)
+                # blocks without the cosine stream write it empty
+                key = {"seg": int(seg), "term_id": term, "max_nweight": 0.0, "nwts": b""}
+                rows += [key | b for b in pack_postings(docs, wts, block_size, nweights=nwts)]
+            yield pd.DataFrame(rows, columns=out_cols)
 
         def merge_runs(batches):
             """Streaming over (seg, term)-sorted rows with a trailing-group
@@ -728,47 +687,21 @@ def optimize_postings(
             if carry is not None and len(carry):
                 yield from _merge_groups(carry)
 
-        staged = post_dir.with_name(post_dir.name + "__rewrite")
-        (
+        merged = (
             src.repartition(F.col("seg"))
             .sortWithinPartitions("seg", "term_id")
             .mapInPandas(merge_runs, schema=POSTINGS_SCHEMA)
-            .sortWithinPartitions("term_id", "block_id")
-            .write.partitionBy("seg")
-            .parquet(str(staged))
         )
-        pend_seqs.append(man.journal_maintenance("optimize", ["postings"]))
-        # per-partition swap: only the fragmented seg dirs move
-        for s in frag_segs:
-            new = staged / f"seg={s}"
-            if not new.exists():
-                continue  # seg held only empty files — nothing to swap
-            if _swap_partition(post_dir / f"seg={s}", new):
-                rewritten_segs += 1
-        shutil.rmtree(staged, ignore_errors=True)
+        cat.write(_postings_layout(merged), "postings__rewrite", ["seg"])
+        rewritten_segs = _swap_staged("postings", "seg", frag_segs)
 
-    dt_dir = Path(cat.table_dir("doc_terms"))
-    tb_files = _partition_file_counts("doc_terms", "tb", dt_dir)
+    tb_files = _partition_file_counts("doc_terms", "tb")
     frag_tbs = sorted(t for t, n in tb_files.items() if n >= doc_terms_min_files)
     rewritten_tbs = 0
     if frag_tbs:
-        staged = dt_dir.with_name(dt_dir.name + "__rewrite")
-        (
-            cat.read(spark, "doc_terms")
-            .where(F.col("tb").isin(frag_tbs))
-            .repartition(max(1, len(frag_tbs)), "tb")
-            .sortWithinPartitions("term", "doc_int")
-            .write.partitionBy("tb")
-            .parquet(str(staged))
-        )
-        pend_seqs.append(man.journal_maintenance("optimize", ["doc_terms"]))
-        for t in frag_tbs:
-            new = staged / f"tb={t}"
-            if not new.exists():
-                continue
-            if _swap_partition(dt_dir / f"tb={t}", new):
-                rewritten_tbs += 1
-        shutil.rmtree(staged, ignore_errors=True)
+        frag = cat.read(spark, "doc_terms").where(F.col("tb").isin(frag_tbs))
+        cat.write(_doc_terms_layout(frag, len(frag_tbs)), "doc_terms__rewrite", ["tb"])
+        rewritten_tbs = _swap_staged("doc_terms", "tb", frag_tbs)
 
     metrics = {
         "segs_rewritten": rewritten_segs,
@@ -787,9 +720,9 @@ def optimize_postings(
             checksum=False,
         )
     else:
-        # every staged swap was skipped (e.g. a concurrent reader's heal
-        # won each race): the live dirs are unchanged, so withdraw ONLY
-        # this op's own journal entries — a foreign crashed op's entry
+        # no fragmented partition left a staged dir (it held only empty
+        # files): the live dirs are unchanged, so withdraw ONLY this op's
+        # own journal entries — a foreign crashed op's entry
         # must survive (its tables really are stale) until a commit
         # re-records them
         for s in pend_seqs:

@@ -93,8 +93,8 @@ class _IndexSource:
     def weights(self, terms: list[str], norm: bool = False) -> DataFrame:
         """Bucket- and term-pruned doc_terms scan: driver-side crc32
         bucket computation (same hash as term_bucket_expr, no Spark job)
-        prunes partitions on ``tb``, and the term IN-filter reaches row
-        groups (files are term-sorted within buckets)."""
+        prunes partitions on ``tb``, and the term IN-filter prunes row
+        groups (``builder._doc_terms_layout`` sorts every file by term)."""
         buckets = sorted(
             {zlib.crc32(t.encode()) % self.config.term_buckets for t in terms}
         )

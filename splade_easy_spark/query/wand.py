@@ -6,8 +6,8 @@ segmented* layout:
 
   postings (partitioned by seg, one complete posting sub-list per term per
   segment) → parquet scan pruned to the query's terms (predicate pushdown;
-  files are sorted by term inside each segment partition so row-group stats
-  prune) → mapInPandas kernel: per segment, exact BM25 scores via a dense
+  ``builder._postings_layout`` sorts every file by term id, so row-group
+  stats prune) → mapInPandas kernel: per segment, exact BM25 scores via a dense
   NumPy scatter-add accumulator with **block-max pruning** → per-segment
   top-k candidates → global ``orderBy(desc).limit(k)``
   (TakeOrderedAndProject: partial top-k per partition + driver merge, the

@@ -183,3 +183,22 @@ def assert_single_norm_rule(spark, index_dir: str, term_id_seed: int = 0) -> Non
     assert (m["nw"].to_numpy().astype(np.float32).view(np.uint32) == m["nw32"].to_numpy()).all()
     block_max = m.groupby("blk")["nw"].max()
     assert (block_max.to_numpy() == post["max_nweight"].to_numpy()[block_max.index]).all()
+
+
+def assert_files_ordered(index_dir: str) -> None:
+    """Every parquet file of ``doc_terms`` is sorted by ``(term, doc_int)``
+    and every file of ``postings`` by ``(term_id, block_id)``: the
+    clustering that lets min/max row-group statistics prune a term lookup.
+    Read file by file with pyarrow, so the check sees the order on disk,
+    not an order Spark restores on read."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    for table, keys in (("doc_terms", ("term", "doc_int")), ("postings", ("term_id", "block_id"))):
+        files = sorted(Path(index_dir, table).rglob("*.parquet"))
+        assert files, f"{table} has no files"
+        for f in files:
+            t = pq.read_table(f, columns=list(keys))
+            rows = list(zip(*(t.column(k).to_pylist() for k in keys)))
+            assert rows == sorted(rows), f"{f} is not sorted by {keys}"

@@ -10,7 +10,7 @@ from splade_easy_spark.data.transcripts import TRANSCRIPT_SCHEMA
 from splade_easy_spark.index import build_index
 from splade_easy_spark.index.append import append_documents, refresh_stats
 from splade_easy_spark.query import Searcher
-from tests.oracle import assert_single_norm_rule
+from tests.oracle import assert_files_ordered, assert_single_norm_rule
 
 CFG = IndexConfig(build_partitions=4, term_buckets=8, segment_docs=128, block_size=32)
 
@@ -180,6 +180,7 @@ def test_cosine_wand_after_append_matches_sql(spark, tmp_path):
     rest = all_tx.where(F.col("conv_id") >= "conv_00000005")
     build_index(spark, first, idx, CFG)
     append_documents(spark, idx, rest, CFG)
+    assert_files_ordered(idx)
     # built and appended rows alike: one norm per doc in both layouts
     assert_single_norm_rule(spark, idx, CFG.term_id_seed)
     s = Searcher(spark, idx, CFG)

@@ -30,6 +30,7 @@ from splade_easy_spark.index.maintenance import (
     stats,
 )
 from splade_easy_spark.query import Searcher
+from tests.oracle import assert_files_ordered
 from tests.retired_layouts import SHAPES, retire, tree_state
 
 CFG = IndexConfig(build_partitions=4, term_buckets=8, segment_docs=128, block_size=32)
@@ -392,10 +393,12 @@ def test_repair_marks_lineage_stale(spark, tmp_path, monkeypatch):
 def test_optimize_tolerates_concurrent_heal(spark, tmp_path, monkeypatch):
     """A reader's heal_interrupted_swaps restoring a partition BETWEEN the
     optimizer's two renames must not abort optimize or corrupt the table:
-    the raced partition keeps its pre-optimize (correct) content and the
-    rest of the run completes (round-4 review fix)."""
+    the swap retries, so the raced partition is merged too (round-4
+    review fix)."""
     idx, cfg = _fragmented_index(spark, tmp_path, "race")
     before = _snapshot(spark, idx)
+    post_dir = Path(idx) / "postings"
+    n_frag = sum(1 for p in post_dir.glob("seg=*") if len(list(p.glob("*.parquet"))) >= 2)
 
     real_rename = Path.rename
     raced = {}
@@ -415,12 +418,14 @@ def test_optimize_tolerates_concurrent_heal(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
     assert raced, "race never triggered — fixture had no fragmented seg"
-    post_dir = Path(idx) / "postings"
+    # the raced partition's merge lands on the swap's retry
+    assert out["segs_rewritten"] == n_frag
     assert not list(post_dir.glob("*__old"))
     assert not post_dir.with_name("postings__rewrite").exists()
     assert _snapshot(spark, idx) == before  # scores untouched either way
-    # a later, un-raced optimize still lands the merge
+    # nothing is left to merge
     out2 = optimize_postings(spark, idx, cfg)
+    assert out2["segs_rewritten"] == 0
     assert _snapshot(spark, idx) == before
 
 
@@ -705,6 +710,7 @@ def _migrated_exactly(spark, idx, seed):
     w = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="wand").collect()]
     q = [(r["doc_id"], round(r["score"], 5)) for r in s.search(QUERIES[0], 10, method="sql").collect()]
     assert w == q and len(w) > 0
+    assert_files_ordered(idx)
 
 
 def _crash_migrate(spark, idx, cfg, monkeypatch, target, when):

@@ -11,6 +11,7 @@ from splade_easy_spark.data import generate_transcripts
 from splade_easy_spark.index import build_index
 from splade_easy_spark.index.maintenance import compact, delete, reshard, stats
 from splade_easy_spark.query import Searcher
+from tests.oracle import assert_files_ordered, assert_single_norm_rule
 
 CFG = IndexConfig(build_partitions=4, term_buckets=8, segment_docs=128, block_size=32)
 
@@ -39,6 +40,7 @@ def test_delete_respected_by_search_and_get(spark, small_index):
 
 def test_compact_preserves_surviving_scores(spark, small_index):
     idx_dir, res = small_index
+    assert_files_ordered(idx_dir)
     s = Searcher(spark, idx_dir, CFG)
     all_hits = s.search("baba0", top_k=100).collect()
     assert len(all_hits) >= 3
@@ -57,6 +59,9 @@ def test_compact_preserves_surviving_scores(spark, small_index):
         for r in Searcher(spark, idx_dir, CFG).search("baba0", top_k=50).collect()
     ]
     assert before == after  # frozen-weight contract
+    assert_files_ordered(idx_dir)
+    # compact repacks nwts from the stored norm
+    assert_single_norm_rule(spark, idx_dir, CFG.term_id_seed)
     # physically gone
     docs = spark.read.parquet(f"{idx_dir}/docs")
     assert docs.where(F.col("doc_id").isin(victims)).count() == 0
@@ -68,6 +73,7 @@ def test_reshard_preserves_results(spark, small_index):
     before_sql = [(r["doc_id"], round(r["score"], 9)) for r in s.search("baba0 ceba1", 20).collect()]
     out = reshard(spark, idx_dir, CFG, target_partitions=2, segment_docs=64, block_size=16)
     assert out["after"]["tables"]["postings"]["files"] > 0
+    assert_files_ordered(idx_dir)
     s2 = Searcher(spark, idx_dir, CFG)
     after_sql = [(r["doc_id"], round(r["score"], 9)) for r in s2.search("baba0 ceba1", 20).collect()]
     after_wand = [(r["doc_id"], r["score"]) for r in s2.search("baba0 ceba1", 20, method="wand").collect()]
@@ -171,6 +177,7 @@ def test_optimize_coalesces_appended_runs(spark, tmp_path):
 
     out = optimize_postings(spark, idx, CFG)
     assert out["segs_rewritten"] > 0
+    assert_files_ordered(idx)
 
     after = snapshot()
     assert after == before  # scores byte-identical, tombstone still gone
