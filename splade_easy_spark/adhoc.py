@@ -270,15 +270,22 @@ def search_snippets(
     params: BM25Params | None = None,
 ) -> DataFrame:
     """(id, score, pos, snippet) — KWIC highlighting for the top-k hits
-    (``verbs.snippets``): ``pos`` is the earliest 1-based character
-    position of ANY query term in the text, ``snippet`` the
+    (``verbs.snippet_columns``): ``pos`` is the earliest 1-based
+    character position of ANY query term in the text, ``snippet`` the
     ``width``-char window starting ``before`` chars earlier.  The window
-    math runs only on the k result rows, so snippeting adds one
-    point-join to the search plan, never a corpus pass."""
+    math runs only on the k result rows, in the projection that orders
+    them after the text join, so snippeting adds no sort and no corpus
+    pass."""
     src = _CorpusSource(docs, id_col, text_col, params, None)
     terms = analyze_query(query_text, src.config)
-    hits = _top(verbs.search(src, terms), top_k)
-    return verbs.snippets(src, hits, terms, top_k, before, width, "id")
+    snippet = verbs.snippet_columns(src, terms, before, width)
+    return (
+        _top(verbs.search(src, terms), top_k)
+        .join(src.docs.select("id", "text"), "id")
+        .selectExpr("id", "score", *snippet)
+        .orderBy(F.desc("score"), F.asc("id"))
+        .limit(top_k)
+    )
 
 
 def suggest_terms(

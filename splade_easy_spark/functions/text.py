@@ -21,16 +21,32 @@ def tokenize(col: Column | str, analyzer: AnalyzerConfig | None = None) -> Colum
     """``text -> ARRAY<STRING>`` of analyzer tokens.
 
     lower() + regexp_extract_all(pattern) + length bounds.  DuckDB oracle
-    equivalent: ``regexp_extract_all(lower(text), '[a-z0-9]+')``.
+    equivalent: ``regexp_extract_all(lower(text), '[a-z0-9]+')``.  A column
+    given by name is the one ``F.expr`` of :func:`tokenize_sql`.
     """
+    if isinstance(col, str):
+        return F.expr(tokenize_sql(col, analyzer))
     analyzer = analyzer or AnalyzerConfig()
-    c = F.col(col) if isinstance(col, str) else col
-    if analyzer.lowercase:
-        c = F.lower(c)
+    c = F.lower(col) if analyzer.lowercase else col
     toks = F.regexp_extract_all(c, F.lit(analyzer.token_pattern), 0)
     lo, hi = analyzer.min_token_len, analyzer.max_token_len
     if lo > 1 or hi < 10_000:
         toks = F.filter(toks, lambda t: (F.length(t) >= lo) & (F.length(t) <= hi))
+    return toks
+
+
+def tokenize_sql(col: str, analyzer: AnalyzerConfig | None = None) -> str:
+    """:func:`tokenize` of the column named ``col`` as SQL text, for plans
+    built from expression strings (one parse instead of a py4j round trip
+    per function)."""
+    from splade_easy_spark.functions.predicates import sql_literal, sql_name
+
+    analyzer = analyzer or AnalyzerConfig()
+    c = f"lower({sql_name(col)})" if analyzer.lowercase else sql_name(col)
+    toks = f"regexp_extract_all({c}, {sql_literal(analyzer.token_pattern)}, 0)"
+    lo, hi = analyzer.min_token_len, analyzer.max_token_len
+    if lo > 1 or hi < 10_000:
+        toks = f"filter({toks}, t -> length(t) >= {lo} AND length(t) <= {hi})"
     return toks
 
 

@@ -56,6 +56,7 @@ from splade_easy_spark.functions.text import doc_id_expr, term_tf_frame, tokeniz
 from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr
 from splade_easy_spark.index.docids import assign_doc_ints
 from splade_easy_spark.index.manifest import FORMAT_VERSION
+from splade_easy_spark.session import local_frame
 
 #: packed postings block schema.  The term key is a 60-bit content hash
 #: (``catalog.term_id_py``) rather than the term string: a block row is a
@@ -153,6 +154,18 @@ def _corpus_aggregates(spark: SparkSession, cat: IndexCatalog) -> tuple[int, flo
     return int(agg["n_docs"]), float(agg["avgdl"] or 0.0), int(agg["total_tokens"] or 0)
 
 
+def _write_corpus_stats(
+    spark: SparkSession, cat: IndexCatalog, n_docs: int, avgdl: float, total_tokens: int,
+    n_terms: int,
+) -> None:
+    """Write the one-row ``corpus_stats`` table.  The row is a
+    ``session.local_frame``: ``createDataFrame(list)`` would make it a
+    pickled Python RDD, whose write starts Python workers."""
+    row = (n_docs, avgdl, total_tokens, n_terms)
+    schema = "n_docs LONG, avgdl DOUBLE, total_tokens LONG, n_terms LONG"
+    cat.write(local_frame(spark, [row], schema), "corpus_stats")
+
+
 def _stage_stats(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = None) -> dict:
     cfg = cat.config
     docs = cat.read(spark, "docs")
@@ -193,11 +206,7 @@ def _stage_stats(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = None
     hot_thr = float(obs.get["thr"] or 1.0)
     _assert_no_term_id_collisions(cat.read(spark, "term_stats"), cfg.term_id_seed)
     n_terms = cat.table_rows("term_stats")  # footers, no job
-    stats_df = spark.createDataFrame(
-        [(n_docs, avgdl, total_tokens, n_terms)],
-        "n_docs LONG, avgdl DOUBLE, total_tokens LONG, n_terms LONG",
-    )
-    cat.write(stats_df, "corpus_stats")
+    _write_corpus_stats(spark, cat, n_docs, avgdl, total_tokens, n_terms)
     return {
         "n_docs": n_docs,
         "avgdl": avgdl,
@@ -520,8 +529,11 @@ def _write_weighted(
     packed cosine stream (``nwts`` = weight / norm) read the same value
     bit for bit.  The agg is cheap (rows are doc-contiguous, so the partial
     agg emits one row per doc per partition and the exchange ships
-    doc-grain rows only), and the join back is hinted SHUFFLE_HASH: a
-    sort-merge join would sort the postings-grain frame for nothing.  A
+    doc-grain rows only).  On a build the join back is hinted
+    SHUFFLE_HASH: a sort-merge join would sort the postings-grain frame
+    for nothing.  An append's norms are batch-sized and materialized, so
+    the planner is left to broadcast them (with the hint every append
+    paid a doc-keyed exchange of its postings).  A
     zero-shuffle Arrow norm kernel was measured as a loss (the full frame
     through Python IPC, 23 s over 62M rows at 8 cores, more than the
     exchange it saved).
@@ -536,7 +548,7 @@ def _write_weighted(
         F.sqrt(F.sum(F.col("weight") * F.col("weight"))).alias("norm")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     norms.count()
-    rows = weighted.join(norms.hint("SHUFFLE_HASH"), "doc_int")
+    rows = weighted.join(norms if append else norms.hint("SHUFFLE_HASH"), "doc_int")
     parts = min(cfg.build_partitions, 8) if append else cfg.build_partitions
     try:
         _write_tables(

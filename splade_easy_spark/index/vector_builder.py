@@ -31,19 +31,21 @@ from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.index.append import _append_batch
-from splade_easy_spark.index.builder import _assert_no_term_id_collisions, _write_weighted
+from splade_easy_spark.index.builder import (
+    _assert_no_term_id_collisions,
+    _write_corpus_stats,
+    _write_weighted,
+)
 from splade_easy_spark.index.catalog import IndexCatalog, term_bucket_expr, term_id_expr
 from splade_easy_spark.index.docids import assign_doc_ints
 
 
 def vector_query_terms(token_ids, weights) -> list[tuple[str, float]]:
     """Raw sparse query vector → engine query terms; dedup keeps max
-    weight (``scoring.py:102-114``)."""
-    out: dict[str, float] = {}
-    for t, w in zip(token_ids, weights):
-        k = str(int(t))
-        out[k] = max(out.get(k, float(w)), float(w))
-    return sorted(out.items())
+    weight (``verbs.dedup_max``)."""
+    from splade_easy_spark.query.verbs import dedup_max
+
+    return sorted(dedup_max((str(int(t)), float(w)) for t, w in zip(token_ids, weights)))
 
 
 def _vector_rows(documents: DataFrame) -> DataFrame:
@@ -113,11 +115,10 @@ def build_vector_index(
     cat.write(_vector_terms(weighted, cfg), "term_stats")
     _assert_no_term_id_collisions(cat.read(spark, "term_stats"), cfg.term_id_seed)
     agg = docs.agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl"), F.sum("doc_len").alias("t")).collect()[0]
-    stats_df = spark.createDataFrame(
-        [(int(agg["n"]), float(agg["avgdl"] or 0.0), int(agg["t"] or 0), cat.table_rows("term_stats"))],
-        "n_docs LONG, avgdl DOUBLE, total_tokens LONG, n_terms LONG",
+    _write_corpus_stats(
+        spark, cat, int(agg["n"]), float(agg["avgdl"] or 0.0), int(agg["t"] or 0),
+        cat.table_rows("term_stats"),
     )
-    cat.write(stats_df, "corpus_stats")
     man.record_stage(
         "stats",
         {"term_stats": "term_stats", "corpus_stats": "corpus_stats"},

@@ -15,24 +15,32 @@ Restates the reference's query lifecycle (SURVEY.md §3.1) Spark-first:
                                              per-partition top-k + driver merge
                                              — the same topology, built in)
 
-Scale notes: the query side is always broadcast (a query has dozens of
-terms); tombstones are a broadcast anti-join *before* the limit; the docs
-table join for metadata/text happens *after* the limit, on k rows only.
-Tie-break is pinned to (score DESC, doc_id ASC) — the reference leaves tie
-order arbitrary (``src/splade_easy/retriever.py:122,202``), so the parity
-harness compares tie groups as sets (SURVEY.md §7).
+Scale notes: a weighted query's table is broadcast (a query has dozens
+of terms) and a unit-weight query needs none; tombstones are a broadcast
+anti-join *before* the limit; the docs join for metadata/text happens
+*after* the k-row cut, which is broadcast against a scan of the docs
+table.  Tie-break is pinned to (score DESC, doc_id ASC) — the reference
+leaves tie order arbitrary (``src/splade_easy/retriever.py:122,202``), so
+the parity harness compares tie groups as sets (SURVEY.md §7).
 
-Per-call job shape (a warm searcher, no tombstones): the query table is
-a ``LocalRelation`` built through Arrow (``session.local_frame``), so its
-broadcast is a small JVM-only job with no Python worker; the tables read
-on every call (``postings``, ``term_stats``, ``deleted``) are read with
-the schema pinned at open, so no footer-inference job runs, while their
-files are still listed afresh on each call (see ``_postings``); and the
-docs join ends in sort+limit, a TakeOrderedAndProject over at most k
-rows rather than a sampled range sort.  ``search`` is then four jobs on
-the SQL path (query broadcast, scoring map stage, top-k, docs join) and
-three on the WAND path (postings exchange, kernel top-k, docs join); a
-cosine query's norm is a literal in the plan, no query table.
+Per-call job shape (a warm searcher, no tombstones): the tables read on
+every call (``postings``, ``term_stats``, ``deleted``) are read with the
+schema pinned at open, so no footer-inference job runs, while their
+files are still listed afresh on each call (see ``_postings``); the docs
+join ends in sort+limit, a TakeOrderedAndProject over at most k rows
+rather than a sampled range sort; and each call has one top-k
+(``_top_hits``), which also computes ``search_snippets``' columns and
+drops ``more_like_this``'s source doc.  ``search`` is then three jobs on
+the SQL path (scoring map stage, top-k, docs join) and three on the WAND
+path (postings exchange, kernel top-k, docs join), cosine included.  A
+unit-weight query (an analyzed string, a prefix or regex expansion)
+scores Σ weight, bit-identical to Σ weight·1.0, so it has no query table;
+a weighted list (fuzzy boosts, more-like-this, caller vectors) adds the
+broadcast of a ``LocalRelation`` query table (``session.local_frame``, a
+JVM-only job).  Plans are built from SQL text (``F.expr``,
+``selectExpr``, ``where(str)``): a ``search`` plan takes about 70 py4j
+commands, where ``F.col`` alone costs 13 and each analyzed DataFrame step
+a few milliseconds.
 
 The SQL path of ``search``/``search_many`` and every full-text verb
 (phrase, boolean, query string, fuzzy, prefix, regex, near, facets,
@@ -62,7 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from splade_easy_spark.config import IndexConfig
-from splade_easy_spark.functions.predicates import case_weight, in_list
+from splade_easy_spark.functions.predicates import case_weight, in_list, in_sql, sql_literal
 from splade_easy_spark.index.catalog import IndexCatalog
 from splade_easy_spark.query import verbs
 from splade_easy_spark.query.verbs import analyze_query
@@ -98,8 +106,8 @@ class _IndexSource:
         buckets = sorted(
             {zlib.crc32(t.encode()) % self.config.term_buckets for t in terms}
         )
-        dt = self._s.doc_terms.where(in_list("tb", buckets) & in_list("term", terms))
-        return dt.select("doc_int", "term", "weight", *(["norm"] if norm else []))
+        dt = self._s.doc_terms.where(f"{in_sql('tb', buckets)} AND {in_sql('term', terms)}")
+        return dt.selectExpr("doc_int", "term", "weight", *(["norm"] if norm else []))
 
     def dictionary(self) -> DataFrame:
         return self._s._read("term_stats")
@@ -181,6 +189,18 @@ class Searcher:
             self.docs = self.docs.persist()
             self.doc_terms.count()
             self.docs.count()
+        # the docs side of every single-query result (``_top_hits``):
+        # transcript-mode docs carry (conv_id..ts), vector-mode docs carry
+        # (metadata) — project whatever exists (reference SearchResult
+        # shape: doc_id, score, metadata, text?, retriever.py:20-25)
+        meta = [c for c in ("conv_id", "turn_idx", "role", "tool", "ts", "metadata")
+                if c in self.docs.columns]
+        text = ["text"] if "text" in self.docs.columns else []
+        self._hit_cols = {False: ["doc_id", "score", *meta], True: ["doc_id", "score", *meta, *text]}
+        self._hit_docs = {
+            False: self.docs.select("doc_int", "doc_id", *meta),
+            True: self.docs.select("doc_int", "doc_id", *meta, *text),
+        }
         #: a ``build_vector_index`` index: caller-supplied weights, no idf
         self._vector = man_identity.get("mode") == "vector"
         #: this index as the scoring source of the shared verbs
@@ -217,7 +237,7 @@ class Searcher:
         # search, so a long-lived reader does see them (round-4 used
         # `doc_max < W` here and silently dropped those blocks' committed
         # pre-snapshot postings; round-5 ADVICE high).
-        return self._read("postings").where(F.col("doc_min") < self._snapshot_max)
+        return self._read("postings").where(f"doc_min < {self._snapshot_max}")
 
     #: skip the driver-side vocabulary map past this many distinct terms —
     #: at web scale term_stats can hold 10^8+ rows and a driver collect of
@@ -277,35 +297,39 @@ class Searcher:
         return self._tb_cache
 
     def _top_hits(
-        self, scores: DataFrame, top_k: int, return_text: bool = False
+        self,
+        scores: DataFrame,
+        top_k: int,
+        return_text: bool = False,
+        extra: list[str] = (),
+        drop_doc: str | None = None,
     ) -> DataFrame:
-        """The ``top_k`` best (doc_int, score) rows with their docs columns.
+        """The ``top_k`` best (doc_int, score) rows with their docs columns,
+        then ``extra`` (SQL projections over them and ``text``).
 
         Both ends are sort+limit, so both plan as TakeOrderedAndProject:
         the cut before the docs join, and the final (score DESC, doc_id
-        ASC) order over at most k joined rows.  A bare ``orderBy`` there
-        would plan a range-partition sampling job plus a shuffle."""
-        # transcript-mode docs carry (conv_id..ts); vector-mode docs carry
-        # (metadata) — project whatever exists (reference SearchResult shape:
-        # doc_id, score, metadata, text?, retriever.py:20-25)
-        available = set(self.docs.columns)
-        cols = ["doc_id", "score"] + [
-            c for c in ["conv_id", "turn_idx", "role", "tool", "ts", "metadata"] if c in available
-        ]
-        if return_text and "text" in available:
-            cols.append("text")
+        ASC) order of the joined rows.  A bare ``orderBy`` there would plan
+        a range-partition sampling job plus a shuffle.  The join itself
+        scans the whole docs table (pruned to the projected columns) with
+        the k cut rows as its broadcast side.  ``drop_doc`` (a doc_id)
+        cuts one row more and drops that doc after the join."""
+        cut = top_k + (drop_doc is not None)
+        hits = verbs.top(scores, "doc_int", cut).join(
+            self._hit_docs[return_text or bool(extra)], "doc_int"
+        )
+        if drop_doc is not None:
+            hits = hits.where(f"doc_id <> {sql_literal(drop_doc)}")
         return (
-            verbs.top(scores, "doc_int", top_k)
-            .join(self.docs, "doc_int")
-            .select(*cols)
+            hits.selectExpr(*self._hit_cols[return_text], *extra)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(top_k)
         )
 
-    def _no_hits(self, return_text: bool = False) -> DataFrame:
+    def _no_hits(self, return_text: bool = False, extra: list[str] = ()) -> DataFrame:
         """An empty result with the search result columns."""
         empty = local_frame(self.spark, [], "doc_int LONG, score DOUBLE")
-        return self._top_hits(empty, 0, return_text)
+        return self._top_hits(empty, 0, return_text, extra)
 
     def _ranked_many(self, scores: DataFrame, top_k: int) -> DataFrame:
         """The batch tail shared by every ``search_many`` path: the
@@ -325,7 +349,37 @@ class Searcher:
         )
 
     def _terms(self, query: str | list[tuple[str, float]]) -> list[tuple[str, float]]:
-        return analyze_query(query, self.config) if isinstance(query, str) else query
+        """A query string's analyzed terms, or a pre-analyzed (term,
+        qweight) list through ``verbs.dedup_max``, so that the SQL path
+        (which sums over the list) and WAND (which maps term to weight)
+        score the same query."""
+        if isinstance(query, str):
+            return analyze_query(query, self.config)
+        return verbs.dedup_max(query)
+
+    def _scores(
+        self,
+        terms: list[tuple[str, float]],
+        top_k: int,
+        use_cosine: bool,
+        method: str,
+        doc_filter: Column | None,
+    ) -> DataFrame | None:
+        """(doc_int, score) of the OR query ``terms`` on the chosen path:
+        every scored doc on SQL, each segment's ``top_k`` on WAND; None
+        when nothing can match."""
+        _check_method(method)
+        if not terms:
+            return None
+        if use_cosine and not self.config.pack_cosine:
+            method = "sql"  # no normalized weight stream: cosine via SQL
+        if method == "sql":
+            return verbs.search(self.source, terms, use_cosine, doc_filter)
+        # the exact OOV drop uses the vocabulary map only once a batch call
+        # has paid for it: one short IN-list is not worth a vocab collect
+        bounds = self._tb_cache if isinstance(self._tb_cache, dict) else None
+        scores = self._wand_scores({"": terms}, top_k, use_cosine, doc_filter, bounds)
+        return None if scores is None else scores.selectExpr("doc_int", "score")
 
     # ------------------------------------------------------------------
     def search(
@@ -346,8 +400,10 @@ class Searcher:
         query/wand.py).  Cosine mode runs the same kernel over the
         normalized weight stream packed at build time (an index built with
         ``pack_cosine=False`` answers cosine through the SQL path).  A warm
-        call is four Spark jobs on the SQL path and three on the WAND path,
-        cosine included (see the module docstring).
+        call is three Spark jobs on either path, cosine included, plus the
+        query-table broadcast for a weighted list on SQL (see the module
+        docstring).  A pre-analyzed list keeps each repeated term once, at
+        its max qweight (``_terms``).
 
         ``doc_filter``: filtered retrieval — a predicate over the stored
         doc columns (conv_id, turn_idx, role, tool, ts, doc_len) that
@@ -360,22 +416,10 @@ class Searcher:
         pruning threshold (see wand._tombstone_blocks); the mask grows
         with |allowed|, so this is the path for SELECTIVE filters.
         """
-        _check_method(method)
-        terms = self._terms(query)
-        if not terms:
-            return self._no_hits(return_text)
-        if use_cosine and not self.config.pack_cosine:
-            method = "sql"  # no normalized weight stream: cosine via SQL
-        if method == "sql":
-            scores = verbs.search(self.source, terms, use_cosine, doc_filter)
-            return self._top_hits(scores, top_k, return_text)
-        # the exact OOV drop uses the vocabulary map only once a batch call
-        # has paid for it: one short IN-list is not worth a vocab collect
-        bounds = self._tb_cache if isinstance(self._tb_cache, dict) else None
-        scores = self._wand_scores({"": terms}, top_k, use_cosine, doc_filter, bounds)
+        scores = self._scores(self._terms(query), top_k, use_cosine, method, doc_filter)
         if scores is None:
             return self._no_hits(return_text)
-        return self._top_hits(scores.select("doc_int", "score"), top_k, return_text)
+        return self._top_hits(scores, top_k, return_text)
 
     def search_many(
         self,
@@ -652,28 +696,27 @@ class Searcher:
         doc's top ``query_terms`` BM25-weighted terms (desc weight, asc
         term), query weight = source weight, source doc excluded.
 
-        The source vector is one driver-synchronous job
+        The source vector is one driver-synchronous collect
         (``verbs.more_like_this_terms``), never a doc-grain lookup in
         doc_terms (which would scan every term bucket); ``avgdl`` is the
-        searcher's as-of-open value, so no per-call corpus_stats job."""
-        terms = verbs.more_like_this_terms(self.source, F.col("doc_id") == doc_id, query_terms)
+        searcher's as-of-open value, so no per-call corpus_stats job.  The
+        search's one top-k cuts ``top_k + 1`` rows and drops the source
+        doc after the docs join (``_top_hits``)."""
+        source = F.expr(f"doc_id = {sql_literal(doc_id)}")
+        terms = verbs.more_like_this_terms(self.source, source, query_terms)
         if not terms:
             # empty expansion: either the doc is missing (KeyError) or it
             # has no in-vocabulary terms (empty result) — disambiguate on
             # the rare path only
-            if self.docs.where(F.col("doc_id") == doc_id).limit(1).count() == 0:
+            if self.docs.where(source).limit(1).count() == 0:
                 raise KeyError(f"doc_id not in index: {doc_id!r}")
             return self._no_hits()
-        # overfetch by one: the source doc itself is typically the top hit
-        out = self.search(
-            terms, top_k=top_k + 1, use_cosine=use_cosine, method=method,
-            doc_filter=doc_filter,
-        )
-        return (
-            out.where(F.col("doc_id") != doc_id)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(top_k)
-        )
+        # the cut takes one row more: the source doc is typically the top
+        # hit, and is dropped after the docs join
+        scores = self._scores(self._terms(terms), top_k + 1, use_cosine, method, doc_filter)
+        if scores is None:
+            return self._no_hits()
+        return self._top_hits(scores, top_k, drop_doc=doc_id)
 
     def search_snippets(
         self,
@@ -689,14 +732,14 @@ class Searcher:
         index: the regular top-k search plus, per hit, the earliest
         1-based character position of any query term in its text and a
         ``width``-char window starting ``before`` chars earlier
-        (``verbs.snippets``, on the k result rows only)."""
-        hits = self.search(
-            query, top_k=top_k, use_cosine=use_cosine, return_text=True,
-            method=method, doc_filter=doc_filter,
-        )
-        return verbs.snippets(
-            self.source, hits, self._terms(query), top_k, before, width, "doc_id"
-        )
+        (``verbs.snippet_columns``, computed in the top-k's final
+        projection, on the k result rows only)."""
+        terms = self._terms(query)
+        snippet = verbs.snippet_columns(self.source, terms, before, width)
+        scores = self._scores(terms, top_k, use_cosine, method, doc_filter)
+        if scores is None:
+            return self._no_hits(extra=snippet)
+        return self._top_hits(scores, top_k, extra=snippet)
 
     def get(self, doc_id: str, load_text: bool = True) -> dict | None:
         """Point lookup.  The reference scans every shard until hit

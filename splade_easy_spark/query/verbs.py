@@ -10,6 +10,8 @@ the DuckDB gates check are the same code.  A verb returns unranked
 each front end finishes them (``top``/``rank_many`` plus its own
 columns).  The WAND fast path reads packed postings, so it stays in
 ``Searcher``; the plans here are the SQL path, the oracle path of both.
+Their expressions are SQL text (``F.expr``, ``selectExpr``, ``where``):
+an interactive call's plan is a few dozen py4j commands, not hundreds.
 """
 
 from __future__ import annotations
@@ -22,8 +24,14 @@ from pyspark.sql import functions as F
 
 from splade_easy_spark.config import IndexConfig
 from splade_easy_spark.functions.bm25 import bm25_weight_expr
-from splade_easy_spark.functions.predicates import case_weight, in_list
-from splade_easy_spark.functions.text import tokenize
+from splade_easy_spark.functions.predicates import (
+    case_weight_sql,
+    in_sql,
+    sql_double,
+    sql_literal,
+    sql_name,
+)
+from splade_easy_spark.functions.text import tokenize_sql
 from splade_easy_spark.session import local_frame
 
 
@@ -69,14 +77,21 @@ def analyze_query(
     build (the model-identity seam; mismatch is what the reference warns
     about at ``src/splade_easy/retriever.py:137-145``).
 
-    Duplicate terms keep the **max** weight, mirroring the reference's
-    vector normalization (``src/splade_easy/scoring.py:102-114``).
+    Duplicate terms keep the **max** weight (:func:`dedup_max`).
     """
+    w = weights or {}
+    return sorted(dedup_max((t, w.get(t, 1.0)) for t in query_tokens(text, config)))
+
+
+def dedup_max(terms) -> list[tuple[str, float]]:
+    """(term, qweight) pairs with each repeated term kept once, at its
+    **max** qweight, in first-seen order: the reference's query vector
+    normalization (``src/splade_easy/scoring.py:102-114``), and the one
+    rule of every query list the engine scores."""
     out: dict[str, float] = {}
-    for t in query_tokens(text, config):
-        w = (weights or {}).get(t, 1.0)
+    for t, w in terms:
         out[t] = max(out.get(t, w), w)
-    return sorted(out.items())
+    return list(out.items())
 
 
 def _analyzed(words: list[str] | None, config: IndexConfig) -> list[str]:
@@ -94,7 +109,7 @@ def _need_text(src: ScoringSource, verb: str) -> None:
 # ---------------------------------------------------------------- scoring
 def no_scores(src: ScoringSource) -> DataFrame:
     """An empty ``(key, score)`` frame (folds to an empty relation)."""
-    return src.docs.select(src.key, F.lit(0.0).alias("score")).where(F.lit(False))
+    return src.docs.selectExpr(src.key, "0.0D AS score").where("false")
 
 
 def eligible(scores: DataFrame, src: ScoringSource, doc_filter: Column | None = None) -> DataFrame:
@@ -112,9 +127,9 @@ def eligible(scores: DataFrame, src: ScoringSource, doc_filter: Column | None = 
     return scores
 
 
-def _cosine(dot: Column, qnorm: Column | float) -> Column:
-    """``dot / (‖d‖·‖q‖)``, 0 for an empty doc vector."""
-    return F.when(F.col("norm") == 0.0, F.lit(0.0)).otherwise(dot / (F.col("norm") * qnorm))
+def _cosine(dot: str, qnorm: str) -> str:
+    """``dot / (‖d‖·‖q‖)`` as SQL text, 0 for an empty doc vector."""
+    return f"CASE WHEN norm = 0.0D THEN 0.0D ELSE {dot} / (norm * {qnorm}) END"
 
 
 def search(
@@ -123,25 +138,36 @@ def search(
     use_cosine: bool = False,
     doc_filter: Column | None = None,
 ) -> DataFrame:
-    """``(key, score)`` of the OR query ``terms`` = [(term, qweight)]:
-    Σ weight·qweight over the doc's query terms (BM25 dot), or that dot
-    over ‖d‖·‖q‖ (cosine).  One term-pruned weights scan joined to the
-    broadcast query table, one hash aggregate."""
+    """``(key, score)`` of the OR query ``terms`` = [(term, qweight)],
+    distinct terms: Σ weight·qweight over the doc's query terms (BM25
+    dot), or that dot over ‖d‖·‖q‖ (cosine).  One term-pruned weights scan
+    and one hash aggregate.
+
+    A unit-weight query (every analyzed query string, every prefix or
+    regex expansion) scores Σ weight, which is Σ weight·1.0 bit for bit:
+    its weights scan is already pruned to the query's terms, so it needs
+    no query table.  Any other query joins the broadcast query table: a
+    ``CASE`` over the weights would save its broadcast job, but its cost
+    grows with the number of distinct weights."""
     if not terms:
         return no_scores(src)
     k = src.key
-    qdf = local_frame(src.docs.sparkSession, terms, "term STRING, qweight DOUBLE")
-    joined = src.weights([t for t, _ in terms], norm=use_cosine).join(F.broadcast(qdf), "term")
-    dot = F.sum(F.col("weight") * F.col("qweight"))
+    w = src.weights([t for t, _ in terms], norm=use_cosine)
+    if all(qw == 1.0 for _, qw in terms):
+        dot = "sum(weight)"
+    else:
+        qdf = local_frame(src.docs.sparkSession, terms, "term STRING, qweight DOUBLE")
+        w = w.join(F.broadcast(qdf), "term")
+        dot = "sum(weight * qweight)"
     if use_cosine:
         qnorm = sum(qw * qw for _, qw in terms) ** 0.5
         if qnorm == 0.0:
             return no_scores(src)
-        scores = joined.groupBy(k).agg(dot.alias("dot"), F.first("norm").alias("norm"))
-        scores = scores.select(k, _cosine(F.col("dot"), F.lit(qnorm)).alias("score"))
+        scores = w.groupBy(k).agg(F.expr(f"{dot} AS dot"), F.expr("first(norm) AS norm"))
+        scores = scores.selectExpr(k, f"{_cosine('dot', sql_double(qnorm))} AS score")
     else:
-        scores = joined.groupBy(k).agg(dot.alias("score"))
-    return eligible(scores.where(F.col("score") > 0), src, doc_filter)  # cf. retriever.py:186
+        scores = w.groupBy(k).agg(F.expr(f"{dot} AS score"))
+    return eligible(scores.where("score > 0"), src, doc_filter)  # cf. retriever.py:186
 
 
 def search_many(
@@ -161,23 +187,21 @@ def search_many(
     joined = src.weights(sorted({r[1] for r in rows}), norm=use_cosine).join(
         F.broadcast(qdf), "term"
     )
-    dot = F.sum(F.col("weight") * F.col("qweight"))
+    dot = "sum(weight * qweight)"
     if use_cosine:
         qnorms = qdf.groupBy("query_id").agg(F.sqrt(F.sum(F.col("qweight") ** 2)).alias("qnorm"))
         scores = (
             joined.groupBy("query_id", k)
-            .agg(dot.alias("dot"), F.first("norm").alias("norm"))
+            .agg(F.expr(f"{dot} AS dot"), F.expr("first(norm) AS norm"))
             .join(F.broadcast(qnorms), "query_id")
-            .select(
+            .selectExpr(
                 "query_id", k,
-                F.when(F.col("qnorm") == 0.0, F.lit(0.0))
-                .otherwise(_cosine(F.col("dot"), F.col("qnorm")))
-                .alias("score"),
+                f"CASE WHEN qnorm = 0.0D THEN 0.0D ELSE {_cosine('dot', 'qnorm')} END AS score",
             )
         )
     else:
-        scores = joined.groupBy("query_id", k).agg(dot.alias("score"))
-    return eligible(scores.where(F.col("score") > 0), src, doc_filter)
+        scores = joined.groupBy("query_id", k).agg(F.expr(f"{dot} AS score"))
+    return eligible(scores.where("score > 0"), src, doc_filter)
 
 
 def top(scores: DataFrame, key: str, top_k: int) -> DataFrame:
@@ -215,9 +239,9 @@ def facet_counts(
     # (a global orderBy would add a range-sampling job and a shuffle)
     return (
         search(src, terms)
-        .join(d.select(k, F.col(facet_col).alias("facet")), k)
+        .join(d.selectExpr(k, f"{sql_name(facet_col)} AS facet"), k)
         .groupBy("facet")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.expr("count(*) AS n_docs"))
         .coalesce(1)
         .sortWithinPartitions(F.desc("n_docs"), F.asc("facet"))
     )
@@ -241,31 +265,40 @@ def clause_scores(
     if not weights:
         return no_scores(src)
     k = src.key
-    aggs = [F.sum(F.col("weight") * case_weight("term", weights)).alias("score")]
-    keep = F.col("score") > 0
+    aggs = [f"sum(weight * {case_weight_sql('term', weights)}) AS score"]
+    keep = ["score > 0"]
     if must:
-        aggs.append(F.count_distinct(F.when(in_list("term", must), F.col("term"))).alias("_nm"))
-        keep = keep & (F.col("_nm") == len(set(must)))
+        aggs.append(f"count(DISTINCT CASE WHEN {in_sql('term', must)} THEN term END) AS _nm")
+        keep.append(f"_nm = {len(set(must))}")
     if must_not:
-        aggs.append(F.count(F.when(in_list("term", must_not), 1)).alias("_nn"))
-        keep = keep & (F.col("_nn") == 0)
+        aggs.append(f"count(CASE WHEN {in_sql('term', must_not)} THEN 1 END) AS _nn")
+        keep.append("_nn = 0")
     dt = src.weights(sorted(set(weights) | set(must_not)))
-    return dt.groupBy(k).agg(*aggs).where(keep).select(k, "score")
+    return dt.groupBy(k).agg(*map(F.expr, aggs)).where(" AND ".join(keep)).selectExpr(k, "score")
+
+
+def _verified(src: ScoringSource, scores: DataFrame, cond: str) -> DataFrame:
+    """``scores`` restricted to the docs whose analyzer tokens ``_t``
+    satisfy ``cond`` (SQL over ``_t``, bound once per row by a one-element
+    ``exists``).  The test reads only the text, so Catalyst runs it inside
+    the docs scan, below the join: every stored text is tokenized once
+    and only the matching keys reach the join, with no exchange of text."""
+    k = src.key
+    tokens = tokenize_sql("text", src.config.analyzer)
+    return (
+        scores.join(src.docs.select(k, "text"), k)
+        .where(f"exists(array({tokens}), _t -> {cond})")
+        .selectExpr(k, "score")
+    )
 
 
 def _with_phrases(src: ScoringSource, scores: DataFrame, phrases: list[list[str]]) -> DataFrame:
     """``scores`` restricted to docs whose token stream contains every
-    phrase as a contiguous sequence.  Only the candidate rows' text is
-    re-tokenized (|candidates| ≪ |corpus| for selective phrases)."""
-    k = src.key
-    hay = F.concat(
-        F.lit(" "), F.array_join(tokenize(F.col("text"), src.config.analyzer), " "), F.lit(" ")
-    )
-    cond = None
-    for ph in phrases:
-        c = F.instr(hay, " " + " ".join(ph) + " ") > 0
-        cond = c if cond is None else (cond & c)
-    return scores.join(src.docs.select(k, "text"), k).where(cond).select(k, "score")
+    phrase as a contiguous sequence (``_verified``)."""
+    hay = "concat(' ', array_join(_t, ' '), ' ')"
+    return _verified(src, scores, " AND ".join(
+        f"instr({hay}, {sql_literal(' ' + ' '.join(ph) + ' ')}) > 0" for ph in phrases
+    ))
 
 
 def boolean_search(
@@ -315,31 +348,21 @@ def near_search(
     """Lucene SpanNearQuery for a term pair: docs where the two terms
     occur within ``slop`` token positions (``ordered=True`` also requires
     a before b), ranked by BM25 over both.  The candidates are a must over
-    {a, b}; only their text is re-tokenized, and the position stream is
-    filtered to the two terms before the per-doc self-join."""
+    {a, b}; the slop test is a per-row ``exists`` over the two terms'
+    token positions in each candidate (``_verified``), with no exchange."""
     _need_text(src, "near_search")
     a_terms = query_tokens(term_a, src.config)
     b_terms = query_tokens(term_b, src.config)
     if len(a_terms) != 1 or len(b_terms) != 1:
         raise ValueError("near_search takes exactly one term per side")
     ta, tb = a_terms[0], b_terms[0]
-    distinct = sorted({ta, tb})
-    k = src.key
-    cand = _all_of(src, distinct, doc_filter)
-    pos = (
-        cand.join(src.docs.select(k, "text"), k)
-        .select(k, F.posexplode(tokenize(F.col("text"), src.config.analyzer)).alias("pos", "tok"))
-        .where(in_list("tok", distinct))
-    )
-    pa = pos.where(F.col("tok") == ta).select(k, F.col("pos").alias("pa"))
-    pb = pos.where(F.col("tok") == tb).select(k, F.col("pos").alias("pb"))
-    gap = (
-        (F.col("pb") - F.col("pa")).between(1, slop)
-        if ordered
-        else F.abs(F.col("pa") - F.col("pb")).between(1, slop)
-    )
-    near_keys = pa.join(pb, k).where(gap).select(k).distinct()
-    return cand.join(near_keys, k, "left_semi")
+
+    def positions(t: str) -> str:
+        return f"array_compact(transform(_t, (x, p) -> IF(x = {sql_literal(t)}, p, NULL)))"
+
+    gap = "pb - pa" if ordered else "abs(pb - pa)"
+    near = f"exists({positions(ta)}, pa -> exists({positions(tb)}, pb -> {gap} BETWEEN 1 AND {int(slop)}))"
+    return _verified(src, _all_of(src, [ta, tb], doc_filter), near)
 
 
 def query(src: ScoringSource, qs: str, doc_filter: Column | None = None) -> DataFrame:
@@ -376,13 +399,13 @@ def query(src: ScoringSource, qs: str, doc_filter: Column | None = None) -> Data
 
 
 # ---------------------------------------------------------------- expansions
-def _by_df(src: ScoringSource, cond: Column, n: int) -> DataFrame:
-    """(term, df) of the ``n`` dictionary terms matching ``cond``, df desc
-    / term asc (a TakeOrderedAndProject)."""
+def _by_df(src: ScoringSource, cond: str, n: int) -> DataFrame:
+    """(term, df) of the ``n`` dictionary terms matching ``cond`` (SQL),
+    df desc / term asc (a TakeOrderedAndProject)."""
     return (
         src.dictionary()
         .where(cond)
-        .select("term", "df")
+        .selectExpr("term", "df")
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(n)
     )
@@ -391,7 +414,7 @@ def _by_df(src: ScoringSource, cond: Column, n: int) -> DataFrame:
 def suggest_terms(src: ScoringSource, prefix: str, n: int = 10) -> DataFrame:
     """(term, df) — autocomplete: dictionary terms starting with
     ``prefix`` (a range predicate on a sorted dictionary), by df."""
-    return _by_df(src, F.col("term").startswith(prefix), n)
+    return _by_df(src, f"startswith(term, {sql_literal(prefix)})", n)
 
 
 def prefix_terms(src: ScoringSource, prefix: str, max_expansions: int) -> list[tuple[str, float]]:
@@ -406,7 +429,7 @@ def regex_terms(src: ScoringSource, pattern: str, max_expansions: int) -> list[t
     matches (anchored: 'sc.n' matches 'scan', never a substring), df desc
     / term asc, capped; unit query weights.  A general regex cannot push
     down, so this scans the dictionary (|dictionary| ≪ |corpus|)."""
-    cond = F.col("term").rlike(f"^(?:{pattern})$")
+    cond = f"term RLIKE {sql_literal(f'^(?:{pattern})$')}"
     return [(r["term"], 1.0) for r in _by_df(src, cond, max_expansions).collect()]
 
 
@@ -424,12 +447,12 @@ def fuzzy_terms(
     lq = len(q)
     rows = (
         src.dictionary()
-        .where(F.length("term").between(lq - max_dist, lq + max_dist))
-        .withColumn("dist", F.levenshtein(F.col("term"), F.lit(q)))
-        .where(F.col("dist") <= max_dist)
+        .where(f"length(term) BETWEEN {lq - max_dist} AND {lq + max_dist}")
+        .selectExpr("term", "df", f"levenshtein(term, {sql_literal(q)}) AS dist")
+        .where(f"dist <= {int(max_dist)}")
         .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
         .limit(max_expansions)
-        .select("term", "dist")
+        .selectExpr("term", "dist")
         .collect()
     )
     return [(r["term"], 1.0 - r["dist"] / max(len(r["term"]), lq)) for r in rows]
@@ -443,22 +466,26 @@ def more_like_this_terms(
     its weight as the query weight.  Empty when the doc is missing or has
     no dictionary term.
 
-    One job, with no doc-grain lookup in the weights (on the index that
-    would scan every term bucket): tokenize the doc, count its terms,
-    broadcast those few rows against the dictionary's idf and weigh them
-    with the build's own ``bm25_weight_expr`` over the corpus ``avgdl``.
+    One collect (three small jobs: the one-row limit, the broadcast and
+    the dictionary scan), with no doc-grain lookup in the weights (on the
+    index that would scan every term bucket): tokenize the doc, count each
+    distinct term in its own token array (a per-row expression, no
+    exchange), broadcast those few rows against the dictionary's idf and
+    weigh them with the build's own ``bm25_weight_expr`` over the corpus
+    ``avgdl``.
     The cut ranks on round(weight, 9): raw doubles can differ in the last
     ulps between engines, and a flip at the LIMIT boundary would swap a
     query term; rounded ties fall to the term order everywhere."""
     _need_text(src, "more_like_this")
-    toks = tokenize(F.col("text"), src.config.analyzer)
     tf = (
         src.docs.where(source)
-        .select("text")
         .limit(1)
-        .select(F.explode(toks).alias("term"), F.size(toks).alias("_dl"))
-        .groupBy("term")
-        .agg(F.count("*").cast("int").alias("tf"), F.first("_dl").alias("_dl"))
+        .selectExpr(f"{tokenize_sql('text', src.config.analyzer)} AS _t")
+        .selectExpr(
+            "inline(transform(array_distinct(_t), u -> "
+            "named_struct('term', u, 'tf', size(filter(_t, x -> x = u)))))",
+            "size(_t) AS _dl",
+        )
     )
     rows = (
         src.dictionary()
@@ -478,46 +505,29 @@ def more_like_this_terms(
 
 
 # ---------------------------------------------------------------- snippets
-def snippets(
-    src: ScoringSource,
-    hits: DataFrame,
-    terms: list[tuple[str, float]],
-    top_k: int,
-    before: int,
-    width: int,
-    order_key: str,
-) -> DataFrame:
-    """KWIC highlighting for ranked ``hits``: ``pos`` is the earliest
-    1-based character position of any query term in the text (cased as
-    the analyzer cases its tokens, so every hit has one: tokens are
-    substrings of the text they were cut from), ``snippet`` the
-    ``width``-char window starting ``before`` chars earlier.  Runs on the
-    k result rows only; their text is joined in unless ``hits`` carries
-    it.  Ordered (score DESC, ``order_key`` ASC)."""
+def snippet_columns(
+    src: ScoringSource, terms: list[tuple[str, float]], before: int, width: int
+) -> list[str]:
+    """KWIC highlighting as two SQL projections over a hit's ``text``:
+    ``pos`` is the earliest 1-based character position of any query term
+    in the text (cased as the analyzer cases its tokens, so every hit has
+    one: tokens are substrings of the text they were cut from), and
+    ``snippet`` the ``width``-char window starting ``before`` chars
+    earlier.  Both front ends add them to the final projection of their
+    top-k, so they run on the k result rows only."""
     _need_text(src, "search_snippets")
-    k = src.key
-    if "text" not in hits.columns:
-        hits = hits.join(src.docs.select(k, "text"), k)
-    if terms:
-        hay = F.lower(F.col("text")) if src.config.analyzer.lowercase else F.col("text")
-        sentinel = 1 << 30
-        cands = [F.coalesce(F.nullif(F.instr(hay, t), F.lit(0)), F.lit(sentinel)) for t, _ in terms]
-        # F.least requires >=2 columns — a one-term query indexes directly
-        pos_raw = cands[0] if len(cands) == 1 else F.least(*cands)
-        # never surface the internal sentinel (a pre-analyzed term list may
-        # hold terms that are no substring of the text)
-        pos = F.when(pos_raw < sentinel, pos_raw.cast("int"))
-        snippet = F.when(
-            F.col("pos").isNotNull(),
-            F.expr(f"substring(text, greatest(pos - {before}, 1), {width})"),
-        )
-    else:
-        pos, snippet = F.lit(None).cast("int"), F.lit(None).cast("string")
-    keep = [c for c in hits.columns if c != "text"]
-    return (
-        hits.withColumn("pos", pos)
-        .withColumn("snippet", snippet)
-        .select(*keep, "pos", "snippet")
-        .orderBy(F.desc("score"), F.asc(order_key))
-        .limit(top_k)
+    if not terms:
+        return ["CAST(NULL AS INT) AS pos", "CAST(NULL AS STRING) AS snippet"]
+    hay = "lower(text)" if src.config.analyzer.lowercase else "text"
+    sentinel = 1 << 30
+    cands = [f"coalesce(nullif(instr({hay}, {sql_literal(t)}), 0), {sentinel})" for t, _ in terms]
+    # least() takes >= 2 arguments: a one-term query uses its one position
+    first = cands[0] if len(cands) == 1 else f"least({', '.join(cands)})"
+    # never surface the sentinel (a pre-analyzed term list may hold terms
+    # that are no substring of the text)
+    pos = f"CASE WHEN {first} < {sentinel} THEN CAST({first} AS INT) END"
+    snippet = (
+        f"CASE WHEN ({pos}) IS NOT NULL "
+        f"THEN substring(text, greatest(({pos}) - {int(before)}, 1), {int(width)}) END"
     )
+    return [f"{pos} AS pos", f"{snippet} AS snippet"]

@@ -578,7 +578,7 @@ def wand_search_many_scores(
     # projection lands in the scan).  The mask rows join, then each
     # segment's blocks are colocated: the kernel needs them together.
     cols = ["seg", "term_id", "n", "doc_min", "doc_max", mcol, "docs", wcol]
-    pruned = postings.where(in_list("term_id", [ids[t] for t in all_terms])).select(*cols)
+    pruned = postings.where(in_list("term_id", [ids[t] for t in all_terms])).selectExpr(*cols)
     for mask, sentinel in ((deleted, TOMB_TERM_ID), (allowed, ALLOW_TERM_ID)):
         if mask is not None:
             pruned = pruned.unionByName(

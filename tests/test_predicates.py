@@ -76,3 +76,28 @@ def test_case_weight_is_an_exact_lookup(spark):
     assert got == {**weights, "absent": None, None: None}
     empty = df.select(case_weight("t", {}).alias("w")).collect()
     assert all(r["w"] is None for r in empty)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=st.lists(st.one_of(st.sampled_from(_TRICKY), st.text(max_size=30)), max_size=8))
+def test_tokenize_sql_matches_tokenize(spark, texts):
+    """``tokenize_sql`` (the query verbs' SQL text) yields the tokens
+    ``tokenize`` (the build's Column) does, for the default analyzer, a
+    case-preserving one and a length-bounded one."""
+    from splade_easy_spark.config import AnalyzerConfig
+    from splade_easy_spark.functions.text import tokenize, tokenize_sql
+
+    df = spark.createDataFrame([(t,) for t in texts + ["Ab12 cd_EF gh", None]], "t STRING")
+    for a in (
+        AnalyzerConfig(),
+        AnalyzerConfig(lowercase=False),
+        AnalyzerConfig(min_token_len=2, max_token_len=3),
+    ):
+        rows = df.select(
+            tokenize(F.col("t"), a).alias("c"), F.expr(tokenize_sql("t", a)).alias("s")
+        ).collect()
+        assert all(r["c"] == r["s"] for r in rows), (a, rows)

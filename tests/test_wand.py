@@ -1019,3 +1019,34 @@ def test_mask_rows_generated_cases(spark, tmp_path):
         assert got["sql"], "the filter must leave hits"
         same(got["wand"], got["sql"], lambda r: (r["query_id"], r["rank"], r["doc_id"]))
         assert not {r["doc_id"] for r in got["wand"]} & {ids[d] for d in dead}
+
+
+def test_repeated_terms_one_rule_sql_wand(corpus, spark):
+    """Seeded pre-analyzed query lists with repeated terms at different
+    weights: the SQL path, the WAND path and the list deduplicated by hand
+    to each term's max weight return the same top-k (SQL exactly equal to
+    the deduplicated list, WAND within packed-float32 tolerance).  SQL used
+    to sum a repeated term's weights while WAND kept one of them."""
+    idx_dir, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    vocab = [r["term"] for r in s._read("term_stats").where("df >= 3").select("term").collect()]
+    rng = np.random.default_rng(2024)
+    for case in range(6):
+        picked = list(rng.choice(sorted(vocab), size=int(rng.integers(2, 6)), replace=False))
+        terms = [(str(t), float(rng.uniform(0.2, 2.0))) for t in picked]
+        repeats = [terms[i] for i in rng.choice(len(terms), size=2, replace=True)]
+        terms += [(t, float(rng.uniform(0.2, 2.0))) for t, _ in repeats]
+        rng.shuffle(terms)
+        dedup: dict[str, float] = {}
+        for t, w in terms:
+            dedup[t] = max(dedup.get(t, w), w)
+
+        def top(q, method="sql"):
+            return [(r["doc_id"], r["score"]) for r in s.search(q, top_k=8, method=method).collect()]
+
+        sql, want = top(terms), top(sorted(dedup.items()))
+        assert sql and sql == want, (case, terms)
+        wand = top(terms, "wand")
+        assert [d for d, _ in wand] == [d for d, _ in sql], (case, terms)
+        for (_, a), (_, b) in zip(sql, wand):
+            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))

@@ -2,8 +2,10 @@
 EXPLAIN.md — the plan-shape evidence behind the scale claims:
 
 - search (SQL path): tb partition pruning + term row-group pushdown must
-  reach the doc_terms scan (PartitionFilters / PushedFilters), the query
-  side must broadcast, and the top-k must be TakeOrderedAndProject.
+  reach the doc_terms scan (PartitionFilters / PushedFilters), a
+  unit-weight query must have no query table and a weighted one must
+  broadcast its LocalTableScan, and the top-k must be
+  TakeOrderedAndProject.
 - search (WAND path): postings scan pruned to the query's terms, one seg
   exchange, mapInPandas kernel, TakeOrderedAndProject.
 - point get: doc_id pushed to the docs scan.
@@ -62,9 +64,20 @@ def main() -> None:
         (
             "search — SQL path (BM25 top-k)",
             "doc_terms scan with PartitionFilters on `tb` and "
-            "PushedFilters on `term`; BroadcastHashJoin with the query side "
-            "build-side; HashAggregate partial/final; TakeOrderedAndProject.",
+            "PushedFilters on `term`; no query table (a unit-weight query "
+            "scores sum(weight)); HashAggregate partial/final; "
+            "TakeOrderedAndProject cut, broadcast against the docs scan; "
+            "TakeOrderedAndProject final order.",
             formatted(s.search("baba0 ceba1 diba2", top_k=10)),
+        )
+    )
+    sections.append(
+        (
+            "search — SQL path, weighted query list",
+            "the same pruned doc_terms scan joined to the query table: a "
+            "BroadcastExchange over a LocalTableScan (no Python RDD), "
+            "sum(weight * qweight) in the HashAggregate.",
+            formatted(s.search([("baba0", 0.5), ("ceba1", 1.25), ("diba2", 2.0)], top_k=10)),
         )
     )
     sections.append(
@@ -316,15 +329,20 @@ def main() -> None:
             formatted(s.facet_counts("baba0 ceba1 diba2", "role")),
         )
     )
+    # a doc with text (some turns are empty: an empty source seeds no search)
+    mlt_source = s.docs.where("length(text) > 40").orderBy("doc_int").select("doc_id").first()[0]
     sections.append(
         (
             "more_like_this — seeded search (source vector never scans doc_terms)",
-            "the returned plan is a plain term-pruned search over the "
-            "seeded terms; the seeding itself ran as one pushed point "
-            "lookup on docs + one term-pruned term_stats join (driver-side "
-            "tf, builder's own weight expr) — verify the doc_terms scan "
-            "below prunes to the 10 seeded terms, not the source doc.",
-            formatted(s.more_like_this("conv_00000001#2", query_terms=10, top_k=10)),
+            "the returned plan is a weighted term-pruned search over the "
+            "seeded terms (LocalTableScan query table broadcast), cut at "
+            "k+1 rows, with the source doc dropped by a NOT EqualTo on "
+            "doc_id in the docs scan below the final TakeOrderedAndProject; "
+            "the seeding itself ran as one collect (pushed point lookup on "
+            "docs, per-row tf over its token array, a join to term_stats' "
+            "idf with the builder's own weight expr) — verify the doc_terms "
+            "scan prunes to the 10 seeded terms, not the source doc.",
+            formatted(s.more_like_this(mlt_source, query_terms=10, top_k=10)),
         )
     )
     sections.append(
@@ -332,9 +350,10 @@ def main() -> None:
             "phrase_search — conjunctive candidates + sequence verify",
             "bucket-pruned doc_terms scan (PartitionFilters tb, "
             "PushedFilters In(term)), hash agg with count(distinct term) "
-            "conjunction, THEN the docs text join + instr verify — the "
-            "re-tokenize touches only candidate rows, downstream of the "
-            "candidate filter in the plan.",
+            "conjunction, joined to the docs whose text passes the instr "
+            "verify: Catalyst pushes the verify into the docs scan's "
+            "Filter (every stored text is tokenized once, only matching "
+            "doc_ints are broadcast), so no text crosses an exchange.",
             formatted(s.phrase_search("baba0 ceba1", top_k=10)),
         )
     )
@@ -342,10 +361,9 @@ def main() -> None:
         (
             "boolean_search — must/should/must_not in one pruned scan",
             "ONE bucket-pruned doc_terms scan serves all three clauses: "
-            "the must-conjunction is a count(DISTINCT CASE…) inside the "
-            "scoring HashAggregate (no second join), the must_not "
-            "exclusion a LeftAnti join on the same pruned scan, "
-            "TakeOrderedAndProject above.",
+            "the must-conjunction is a count(DISTINCT CASE…) and the "
+            "must_not exclusion a count(CASE…) = 0 inside the scoring "
+            "HashAggregate (no join), TakeOrderedAndProject above.",
             formatted(
                 s.boolean_search(
                     must=["baba0", "ceba1"], should=["diba2"], must_not=["foba3"],
@@ -375,12 +393,12 @@ def main() -> None:
     )
     sections.append(
         (
-            "near_search — positional verify on candidates only",
+            "near_search — per-row positional verify",
             "conjunctive candidate agg off the bucket-pruned doc_terms "
-            "scan; the PosExplode/tokenize subtree sits DOWNSTREAM of the "
-            "candidate join (only candidate docs re-tokenize) with the "
-            "two-term IN filter directly above it; the position self-join "
-            "is doc_int-grain.",
+            "scan, joined to the docs whose token positions pass the slop "
+            "test: one exists() over each term's positions in the docs "
+            "scan's Filter (tokenized once per row), no Generate, no "
+            "self-join, no exchange beyond the candidate agg's.",
             formatted(s.near_search("baba0", "ceba1", slop=3, top_k=10)),
         )
     )
@@ -402,13 +420,23 @@ def main() -> None:
             "'+baba0 \"baba0 ceba1\" -foba3 role:user diba2' compiles to "
             "ONE plan: a single bucket-pruned doc_terms scan feeds the "
             "scoring HashAggregate (must-conjunction as count(DISTINCT "
-            "CASE)), a LeftAnti on the same scan excludes -terms, the "
-            "role filter is pushed to the docs scan (EqualTo), and the "
-            "phrase verify's tokenize/instr sits downstream of the "
-            "candidate join.",
+            "CASE), -terms as count(CASE) = 0), the role filter is pushed "
+            "to the docs scan (EqualTo), and the phrase verify's "
+            "tokenize/instr runs in the docs scan's Filter (as in "
+            "phrase_search).",
             formatted(
                 s.query('+baba0 "baba0 ceba1" -foba3 role:user diba2', top_k=10)
             ),
+        )
+    )
+    sections.append(
+        (
+            "search_snippets — KWIC columns in the one top-k",
+            "a plain search plan whose final TakeOrderedAndProject "
+            "projects pos (least of instr over the query terms) and "
+            "snippet (substring) over the k joined rows; the docs scan "
+            "reads text; no second sort.",
+            formatted(s.search_snippets("baba0 ceba1 diba2", top_k=10)),
         )
     )
     out = ["# EXPLAIN — headline physical plans", ""]
