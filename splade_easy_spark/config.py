@@ -76,7 +76,6 @@ class IndexConfig:
     hot_term_df_quantile: float = 0.999
     hot_term_salt: int = 8
     segment_docs: int = 1 << 20  # docs per WAND segment (doc-sharded layout)
-    store_text: bool = True
     #: pack the doc-normalized weight stream (``nwts``/``max_nweight``) into
     #: posting blocks so cosine ranking runs through the WAND kernel.  It
     #: roughly doubles the weight bytes through the build's pack stage —

@@ -207,6 +207,13 @@ def _nothing(t0: float) -> dict:
     return {"appended_docs": 0, "new_terms": 0, "elapsed_sec": round(time.time() - t0, 3)}
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame.  ``unpersist()``
+    does not: the checkpoint is no cache-manager entry but a persisted
+    RDD, the one under the frame's ``LogicalRDD`` plan."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def _append_batch(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -266,10 +273,11 @@ def _append_batch(
     # stages would silently re-evaluate against the already-appended table
     # (anti-joining the batch out of existence).  localCheckpoint
     # materializes the batch (batch-sized, not index-sized) and cuts the
-    # plan off the docs path.
+    # plan off the docs path; its blocks are freed once docs commit.
     new_docs = new_docs.localCheckpoint(eager=True)
     n_new = new_docs.count()
     if n_new == 0:
+        _release_checkpoint(new_docs)
         return _nothing(t0)
     # journal the batch's doc_int range BEFORE any table write — the crash
     # repair's unit of work (module docstring: crash atomicity)
@@ -292,6 +300,7 @@ def _append_batch(
     _commit_docs(cat, new_docs.drop(*drop))
     weighted.unpersist()
     new_terms.unpersist()
+    _release_checkpoint(new_docs)
     # close the batch: clear the journal, advance the watermark, log the
     # append with its seq (maintenance._fresh_lineage orders appends
     # against stage commits by it)
@@ -344,7 +353,6 @@ def append_documents(
             .select(
                 "term",
                 F.col("batch_df").alias("df"),
-                F.lit(None).cast("int").alias("max_tf"),
                 "idf",
                 term_bucket_expr(F.col("term"), cfg.term_buckets).alias("tb"),
                 term_id_expr(F.col("term"), cfg.term_id_seed).alias("term_id"),

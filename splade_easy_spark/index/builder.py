@@ -178,10 +178,7 @@ def _stage_stats(spark: SparkSession, cat: IndexCatalog, ctx: dict | None = None
         term_tf = term_tf.persist(StorageLevel.MEMORY_AND_DISK)
         ctx["term_tf"] = term_tf
     # DF per term (term_tf is one row per (doc, term), so count(*) == df)
-    # plus max tf — used later for a per-term score upper bound.
-    tstats = term_tf.groupBy("term").agg(
-        F.count("*").alias("df"), F.max("tf").alias("max_tf")
-    )
+    tstats = term_tf.groupBy("term").agg(F.count("*").alias("df"))
     from splade_easy_spark.index.catalog import term_id_expr
 
     tstats = (

@@ -17,7 +17,7 @@ touching the build or query code (SURVEY.md §1.4).  Table names are fixed:
                    without ``pack_cosine``) — the WAND path
                    (``manifest.FORMAT_VERSION`` names this layout; older
                    ones are upgraded by ``maintenance.migrate_postings``)
-- ``term_stats``   term, df, max_tf, idf, tb, term_id
+- ``term_stats``   term, df, idf, tb, term_id (a vector index: no idf)
 - ``corpus_stats`` single row: n_docs, avgdl, total_tokens, n_terms
 - ``deleted``      doc_id, doc_int (tombstones; analog of deleted_ids.txt,
                    ``src/splade_easy/index.py:80-89``)

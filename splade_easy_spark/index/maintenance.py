@@ -482,9 +482,6 @@ def migrate_postings(
     * ``term_stats`` without ``term_id``: the id is added behind the
       build's exact collision gate, hashed with the index's recorded
       ``term_id_seed`` (this config's when it never recorded one);
-    * ``term_stats`` without ``max_tf`` (text indexes): a NULL column,
-      which is exact — ``Searcher._term_bounds`` reads NULL as the loose
-      tf→∞ bound;
     * a manifest without ``next_doc_int``: ``max(doc_int) + 1``.
 
     A ``reshard(keep_originals=True)`` backup is dropped: it holds
@@ -514,8 +511,6 @@ def migrate_postings(
     seed = cfg.term_id_seed
 
     ts = cat.read(spark, "term_stats").drop("term_id")
-    if "max_tf" not in ts.columns and man.data.get("identity", {}).get("mode") != "vector":
-        ts = ts.withColumn("max_tf", F.lit(None).cast("int"))
     ts = ts.withColumn("term_id", term_id_expr(F.col("term"), seed))
     _assert_no_term_id_collisions(ts, seed)
     ts.write.parquet(cat.table_dir("term_stats") + "__rewrite")

@@ -34,10 +34,12 @@ MANIFEST_NAME = "_manifest.json"
 #: on-disk format the readers and writers understand.  Format 2: postings
 #: keyed by ``term_id`` and always carrying the ``nwts``/``max_nweight``
 #: columns (empty when the index packs no cosine stream); ``term_stats``
-#: with ``term_id`` (and ``max_tf`` on text indexes); a manifest with
-#: ``next_doc_int`` and the build's ``layout`` (``IndexConfig.layout``).
-#: Older indexes are upgraded by ``migrate_postings``, the only code that
-#: knows the retired layouts.
+#: with ``term_id``; a manifest with ``next_doc_int`` and the build's
+#: ``layout`` (``IndexConfig.layout``).  ``term_stats`` columns that older
+#: builds and appends wrote and no reader reads (a per-term max tf or max
+#: weight) may be present in some files and absent in others.  Older
+#: indexes are upgraded by ``migrate_postings``, the only code that knows
+#: the retired layouts.
 FORMAT_VERSION = 2
 #: the layout fields that decide how the tables are laid out on disk
 #: (``IndexConfig.layout`` also records ``build_partitions``, which only

@@ -76,10 +76,10 @@ def _vector_weights(docs: DataFrame) -> DataFrame:
 
 
 def _vector_terms(weighted: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """term_stats rows of a vector index: df and max weight per term."""
+    """term_stats rows of a vector index: df per term."""
     return (
         weighted.groupBy("term")
-        .agg(F.count("*").alias("df"), F.max("weight").alias("max_weight"))
+        .agg(F.count("*").alias("df"))
         .withColumn("tb", term_bucket_expr(F.col("term"), cfg.term_buckets))
         .withColumn("term_id", term_id_expr(F.col("term"), cfg.term_id_seed))
     )

@@ -50,7 +50,9 @@ runs the same bodies over a raw corpus.  What stays here is what only an
 index has: the WAND fast path over packed postings (one branch,
 ``_wand_scores``, shared by ``search`` and ``search_many``), tombstones
 and the snapshot bound, and the finishing step that cuts on ``doc_int``
-and joins the docs columns (``_top_hits``, ``_ranked_many``).
+and joins the docs columns (``_top_hits``, ``_ranked_many``).  No
+vocabulary is kept on the driver: a query's terms reach the postings scan
+as given, and an out-of-vocabulary term selects no block.
 
 Opening a searcher runs the format gate (``Manifest.require_current``) and
 reads the recorded layout (segment width, term buckets, cosine stream,
@@ -61,7 +63,6 @@ reading.
 
 from __future__ import annotations
 
-import math
 import zlib
 from pathlib import Path
 
@@ -181,9 +182,6 @@ class Searcher:
             if Path(self.cat.table_dir(name)).exists():
                 self._read(name)
         self.mode = mode
-        #: driver-side {term: global doc-weight upper bound}; "unset" until
-        #: the first batch search materializes it (see ``_term_bounds``)
-        self._tb_cache: dict[str, float] | str | None = "unset"
         if mode == "memory":
             self.doc_terms = self.doc_terms.persist()
             self.docs = self.docs.persist()
@@ -238,63 +236,6 @@ class Searcher:
         # `doc_max < W` here and silently dropped those blocks' committed
         # pre-snapshot postings; round-5 ADVICE high).
         return self._read("postings").where(f"doc_min < {self._snapshot_max}")
-
-    #: skip the driver-side vocabulary map past this many distinct terms —
-    #: at web scale term_stats can hold 10^8+ rows and a driver collect of
-    #: it would be the exact anti-pattern this repo bans; below it the map
-    #: is a one-time vocab-sized collect amortized over the searcher's life
-    TERM_BOUNDS_MAX_VOCAB = 5_000_000
-
-    def _term_bounds(self) -> dict[str, float] | None:
-        """Driver-side ``{term: global BM25 doc-weight upper bound}`` from
-        ``term_stats`` (round-4 VERDICT #5).
-
-        The bound is exact from recorded stats: the BM25 tf component
-        ``tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))`` increases in ``tf`` and
-        decreases in ``dl``, so ``idf · max_tf·(k1+1)/(max_tf + k1·(1−b))``
-        (dl→0) dominates every packed weight of the term.  Used for (a) the
-        EXACT out-of-vocabulary drop — a query term with no ``term_stats``
-        row has no postings anywhere (append registers new vocabulary,
-        ``append.py:348``), so removing it from the pushed IN-list changes
-        no result — and (b) the opt-in approximate tail cut in
-        ``search_many``.  Orphan registrations from a crashed append and
-        terms whose postings are all post-snapshot stay in the map: keeping
-        a term is always exact, pruning is what needs proof.
-
-        On a vector index every registered term gets an unknown (``inf``)
-        bound: its weights are caller-supplied, and an append registers
-        only batch-new terms, so the recorded ``max_weight`` is not raised
-        when a batch brings a heavier weight for a known term.  The OOV drop
-        stays exact and ``prune_below`` never cuts a vector term.
-
-        Returns ``None`` (pruning disabled, behavior unchanged) when the
-        vocabulary exceeds ``TERM_BOUNDS_MAX_VOCAB`` — the footer-based row
-        count costs no Spark job.
-        """
-        if self._tb_cache != "unset":
-            return self._tb_cache  # type: ignore[return-value]
-        if self.cat.table_rows("term_stats") > self.TERM_BOUNDS_MAX_VOCAB:
-            self._tb_cache = None
-            return None
-        if self._vector:
-            ub = F.lit(None).cast("double")
-        else:
-            p = self.config.bm25
-            # append registers batch-new terms with max_tf=NULL, and migrate
-            # adds a NULL max_tf to older stats: the tf→∞ limit k1+1 is
-            # always an upper bound, so a NULL row falls back to it
-            mtf = F.col("max_tf").cast("double")
-            comp = F.coalesce(
-                mtf * (p.k1 + 1.0) / (mtf + p.k1 * (1.0 - p.b)), F.lit(p.k1 + 1.0)
-            )
-            ub = F.col("idf") * comp
-        rows = self._read("term_stats").select("term", ub.alias("ub")).collect()
-        # a null bound must KEEP the term (keeping is always exact)
-        self._tb_cache = {
-            r["term"]: (float("inf") if r["ub"] is None else float(r["ub"]))
-            for r in rows
-        }
-        return self._tb_cache
 
     def _top_hits(
         self,
@@ -375,10 +316,7 @@ class Searcher:
             method = "sql"  # no normalized weight stream: cosine via SQL
         if method == "sql":
             return verbs.search(self.source, terms, use_cosine, doc_filter)
-        # the exact OOV drop uses the vocabulary map only once a batch call
-        # has paid for it: one short IN-list is not worth a vocab collect
-        bounds = self._tb_cache if isinstance(self._tb_cache, dict) else None
-        scores = self._wand_scores({"": terms}, top_k, use_cosine, doc_filter, bounds)
+        scores = self._wand_scores({"": terms}, top_k, use_cosine, doc_filter)
         return None if scores is None else scores.selectExpr("doc_int", "score")
 
     # ------------------------------------------------------------------
@@ -427,7 +365,6 @@ class Searcher:
         top_k: int = 10,
         use_cosine: bool = False,
         method: str = "sql",
-        prune_below: float = 0.0,
         doc_filter: Column | None = None,
     ) -> DataFrame:
         """Batch evaluation of many queries in one plan (the bulk path
@@ -444,27 +381,6 @@ class Searcher:
         ``queries``: [{"query_id": ..., "text": ...}, ...]
         Returns (query_id, rank, doc_id, score, conv_id, turn_idx).
 
-        Term pruning (round-4 VERDICT #5): batch calls load a driver-side
-        per-term global weight bound once (``_term_bounds``) and always
-        apply the EXACT out-of-vocabulary drop — query terms with no
-        ``term_stats`` row have no postings, so the pushed IN-list and the
-        shipped postings shrink with zero result change and zero extra jobs
-        per batch.  ``prune_below > 0`` additionally drops, per query, the
-        terms whose bound falls under ``prune_below × (that query's best
-        term bound)`` — **APPROXIMATE**: a dropped in-vocabulary term's
-        contribution to matching docs is simply lost (scores shrink by at
-        most the dropped bounds' sum; ranks near ties can flip), the
-        standard quality/cost knob for SPLADE-style expansion queries whose
-        tail terms carry weights orders of magnitude below the head.  A
-        driver-side drop can never be exact for in-vocab terms — any doc
-        in the true top-k may contain one, and with its postings never
-        shipped the kernel's repair pass has nothing to repair with — so
-        exactness-preserving cuts live in the kernel (MaxScore + repair)
-        and this knob defaults off.  Pruning applies to ``method='wand'``
-        only; ``method='sql'`` stays the untouched oracle path.  On a
-        vector index every bound is unknown (see ``_term_bounds``), so
-        only the OOV drop applies there.
-
         ``doc_filter`` as in :func:`search`, one semi-join (SQL) or one
         set of mask rows (WAND) for the whole batch.
         """
@@ -477,13 +393,9 @@ class Searcher:
             method = "sql"  # no normalized weight stream: cosine via SQL
         if method == "sql":
             scores = verbs.search_many(self.source, rows, use_cosine, doc_filter)
-            return self._ranked_many(scores, top_k)
-        qt = {k: v for k, v in dict(analyzed).items() if v}
-        scores = self._wand_scores(
-            qt, top_k, use_cosine, doc_filter, self._term_bounds(), prune_below
-        )
-        if scores is None:
-            return self._ranked_many(verbs.search_many(self.source, []), top_k)
+        else:
+            qt = {k: v for k, v in analyzed if v}
+            scores = self._wand_scores(qt, top_k, use_cosine, doc_filter)
         return self._ranked_many(scores, top_k)
 
     def _wand_scores(
@@ -492,55 +404,34 @@ class Searcher:
         top_k: int,
         use_cosine: bool,
         doc_filter: Column | None,
-        bounds: dict[str, float] | None,
-        prune_below: float = 0.0,
     ) -> DataFrame | None:
         """The WAND branch of ``search`` and ``search_many``: (query_id,
         doc_int, score) per-segment top-k candidates of the one WAND
-        driver, or None when no query has a term left to scan.
+        driver, or None when no query is left to scan.
 
-        With ``bounds`` (``_term_bounds``) each query drops its
-        out-of-vocabulary terms, which is exact: a term absent from
-        ``term_stats`` has no postings.  ``prune_below`` is the
-        approximate tail cut of ``search_many``.  Cosine scores are
-        divided by the norm of the FULL analyzed query, as on the SQL path
-        (OOV terms count in ‖q‖ though never in the dot); queries whose
-        norm is 0 match nothing and are dropped first."""
+        Every query term is scanned as given: an out-of-vocabulary term
+        has no postings, so its ``term_id`` selects no block and the
+        kernel never scores it.  Cosine scores are divided by the norm of
+        the full query, as on the SQL path (OOV terms count in ‖q‖ though
+        never in the dot); queries whose norm is 0 match nothing and are
+        dropped first."""
         from splade_easy_spark.query.wand import wand_search_many_scores
 
         if use_cosine:
             qnorms = {q: sum(w * w for _, w in ts) ** 0.5 for q, ts in queries.items()}
             queries = {q: ts for q, ts in queries.items() if qnorms[q] > 0.0}
-        scan: dict[str, list[tuple[str, float]]] = {}
-        for qid, ts in queries.items():
-            kept = ts if bounds is None else [(t, w) for t, w in ts if t in bounds]
-            if kept and bounds is not None and prune_below > 0.0:
-                # per-query relative cut on qweight·global-bound (in cosine
-                # mode the BM25 bounds order terms heuristically).  Terms
-                # with an unknown (inf) bound never set the threshold and
-                # are never cut: one NULL-stat term must not make thr=inf
-                finite = [w * bounds[t] for t, w in kept if math.isfinite(bounds[t])]
-                if finite:
-                    thr = prune_below * max(finite)
-                    kept = [
-                        (t, w)
-                        for t, w in kept
-                        if not math.isfinite(bounds[t]) or w * bounds[t] >= thr
-                    ]
-            if kept:
-                scan[qid] = kept
-        if not scan:
+        if not queries:
             return None
         allowed = None if doc_filter is None else self.docs.where(doc_filter).select("doc_int")
         scores = wand_search_many_scores(
-            self.spark, self._postings(), scan, self.config.segment_docs, top_k,
+            self.spark, self._postings(), queries, self.config.segment_docs, top_k,
             self._deleted(), use_cosine, term_id_seed=self.term_id_seed,
             snapshot_max=self._snapshot_max, allowed=allowed,
         )
         if use_cosine:
             # kernel scores are Σ qw·(w/‖d‖): divide the monotone query-norm
             # factor out so values equal the SQL path's
-            qn = case_weight("query_id", {q: qnorms[q] for q in scan})
+            qn = case_weight("query_id", {q: qnorms[q] for q in queries})
             scores = scores.select("query_id", "doc_int", (F.col("score") / qn).alias("score"))
         return scores
 

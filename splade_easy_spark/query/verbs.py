@@ -70,17 +70,12 @@ def query_tokens(text: str, config: IndexConfig | None = None) -> list[str]:
     ]
 
 
-def analyze_query(
-    text: str, config: IndexConfig | None = None, weights: dict[str, float] | None = None
-) -> list[tuple[str, float]]:
+def analyze_query(text: str, config: IndexConfig | None = None) -> list[tuple[str, float]]:
     """Driver-side query analysis with the *same* analyzer rules as the
     build (the model-identity seam; mismatch is what the reference warns
-    about at ``src/splade_easy/retriever.py:137-145``).
-
-    Duplicate terms keep the **max** weight (:func:`dedup_max`).
-    """
-    w = weights or {}
-    return sorted(dedup_max((t, w.get(t, 1.0)) for t in query_tokens(text, config)))
+    about at ``src/splade_easy/retriever.py:137-145``): the sorted
+    distinct terms, each with qweight 1.0."""
+    return [(t, 1.0) for t in sorted(set(query_tokens(text, config)))]
 
 
 def dedup_max(terms) -> list[tuple[str, float]]:

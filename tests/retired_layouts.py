@@ -9,7 +9,8 @@ Shapes (any combination):
   for ``term`` through ``term_stats``), ``term_stats`` without
   ``term_id``, and no recorded ``term_id_seed``;
 - ``no_nwts``: postings without the ``nwts``/``max_nweight`` columns;
-- ``no_max_tf``: ``term_stats`` without ``max_tf`` and ``term_id``;
+- ``no_term_id``: ``term_stats`` without ``term_id``, the postings still
+  keyed by it;
 - ``no_next_doc_int``: a manifest without the ``next_doc_int`` watermark.
 """
 
@@ -21,7 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-SHAPES = ("string_keys", "no_nwts", "no_max_tf", "no_next_doc_int")
+SHAPES = ("string_keys", "no_nwts", "no_term_id", "no_next_doc_int")
 
 
 def _rewrite(spark, idx: str, table: str, fn, partition_by: str | None = None) -> None:
@@ -49,11 +50,8 @@ def retire(spark, idx: str, shapes) -> None:
         _rewrite(spark, idx, "postings", to_strings, "seg")
     if "no_nwts" in shapes:
         _rewrite(spark, idx, "postings", lambda p: p.drop("nwts", "max_nweight"), "seg")
-    ts_drop = (["term_id"] if shapes & {"string_keys", "no_max_tf"} else []) + (
-        ["max_tf"] if "no_max_tf" in shapes else []
-    )
-    if ts_drop:
-        _rewrite(spark, idx, "term_stats", lambda t: t.drop(*ts_drop))
+    if shapes & {"string_keys", "no_term_id"}:
+        _rewrite(spark, idx, "term_stats", lambda t: t.drop("term_id"))
     path = Path(idx) / "_manifest.json"
     man = json.loads(path.read_text())
     man["format_version"] = 1

@@ -99,6 +99,21 @@ def test_append_has_no_index_sized_rescan():
         assert src.count('cat.read(spark, "docs")') <= 1, name
 
 
+def test_appends_release_their_checkpoints(spark, tmp_path):
+    """Each append batch is materialized with ``localCheckpoint``; a
+    long-running appender must not keep one batch-sized block set per
+    batch, so three appends in one session leave no new persisted RDD."""
+    idx = str(tmp_path / "idx")
+    all_tx = generate_transcripts(spark, num_convs=8, seed=19)
+    build_index(spark, all_tx.where(F.col("conv_id") < "conv_00000005"), idx, CFG)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    for conv in ("conv_00000005", "conv_00000006", "conv_00000007"):
+        out = append_documents(spark, idx, all_tx.where(F.col("conv_id") == conv), CFG)
+        assert out["appended_docs"] > 0
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def test_refresh_stats_matches_oneshot(spark, tmp_path):
     """Append drifts stats; refresh_stats must make the index identical (to
     float tolerance) to a one-shot build over the full corpus."""

@@ -263,9 +263,10 @@ def test_index_artifact_identical_across_parallelism(spark, tmp_path):
             (r["doc_id"], r["doc_int"], r["doc_len"])
             for r in spark.read.parquet(f"{idx}/docs").select("doc_id", "doc_int", "doc_len").collect()
         )
+        ts = spark.read.parquet(f"{idx}/term_stats")
+        assert sorted(ts.columns) == ["df", "idf", "tb", "term", "term_id"], ts.columns
         tstats = sorted(
-            (r["term"], r["df"], r["max_tf"], round(r["idf"], 10), r["term_id"])
-            for r in spark.read.parquet(f"{idx}/term_stats").collect()
+            (r["term"], r["df"], round(r["idf"], 10), r["term_id"]) for r in ts.collect()
         )
         post = sorted(
             (
@@ -831,7 +832,7 @@ def test_plan_build_round_trips_flat(corpus, spark, py4j_calls):
         "adhoc.bm25_topk_multi": lambda qs: adhoc.bm25_topk_multi(spark, docs, qs, top_k=5),
     }
     for name, build in builds.items():
-        build(_many(texts[:4]))  # warm: term bounds loaded, modules imported
+        build(_many(texts[:4]))  # warm: modules imported
         small, _ = py4j_calls(lambda: build(_many(texts[:4])))
         large, df = py4j_calls(lambda: build(_many(texts)))
         assert large - small <= 10, f"{name}: {small} -> {large} py4j commands"

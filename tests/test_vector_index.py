@@ -96,10 +96,24 @@ def test_metadata_roundtrip(spark, trio_index):
     assert rows[0]["metadata"]["topic"] == "ml"
 
 
+def test_single_search_oov_token_wand_matches_sql(spark, trio_index):
+    """A single vector query with an out-of-vocabulary token id (999):
+    WAND scans its id, which selects no block, and agrees with SQL in dot
+    and cosine mode — the OOV weight counts in the cosine ‖q‖ on both."""
+    for cosine in (False, True):
+        out = {
+            m: _search(spark, trio_index, [1, 999, 4], [0.9, 0.5, 0.6], cosine=cosine, method=m)
+            for m in ("sql", "wand")
+        }
+        assert [d for d, _ in out["wand"]] == [d for d, _ in out["sql"]] == ["dl_doc", "ml_doc"]
+        for (_, w), (_, q) in zip(out["wand"], out["sql"]):
+            assert abs(w - q) < TOL
+    assert _search(spark, trio_index, [999], [1.0], method="wand") == []
+
+
 def test_search_many_wand_matches_sql(spark, trio_index):
-    """Batch WAND on a vector index: its term_stats carry no idf/max_tf,
-    so every term bound is unknown and only the exact OOV drop applies.
-    Dot and cosine agree with the SQL batch."""
+    """Batch WAND on a vector index, OOV token id (999) included: dot and
+    cosine agree with the SQL batch."""
     s = Searcher(spark, trio_index, CFG)
     queries = [
         {"query_id": "q1", "text": "1 4"},
@@ -109,9 +123,7 @@ def test_search_many_wand_matches_sql(spark, trio_index):
     for cosine in (False, True):
         out = {}
         for method in ("sql", "wand"):
-            rows = s.search_many(
-                queries, top_k=3, use_cosine=cosine, method=method, prune_below=0.5
-            ).collect()
+            rows = s.search_many(queries, top_k=3, use_cosine=cosine, method=method).collect()
             out[method] = [(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows]
         assert [r[:3] for r in out["wand"]] == [r[:3] for r in out["sql"]] != []
         for w, q in zip(out["wand"], out["sql"]):

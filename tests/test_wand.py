@@ -740,30 +740,11 @@ def test_batch_segment_exactness_property(case, n_queries):
         _check_exact(d_out, s_out, acc, alive, k)
 
 
-def test_term_bounds_dominate_every_packed_weight(corpus, spark):
-    """The driver-side per-term bound (idf · max_tf·(k1+1)/(max_tf+k1·(1−b)))
-    must dominate every doc-side weight actually indexed — the soundness
-    condition for both the exact OOV drop and the approximate tail cut."""
-    idx_dir, _ = corpus
-    s = Searcher(spark, idx_dir, CFG)
-    bounds = s._term_bounds()
-    assert bounds, "small fixture vocab must load"
-    from pyspark.sql import functions as F
-
-    actual = {
-        r["term"]: r["mx"]
-        for r in s.doc_terms.groupBy("term").agg(F.max("weight").alias("mx")).collect()
-    }
-    assert set(actual) <= set(bounds)
-    for t, mx in actual.items():
-        assert bounds[t] >= mx - 1e-9, (t, bounds[t], mx)
-
-
 def test_oov_drop_exact_batch_and_single(corpus, spark):
-    """Queries salted with out-of-vocabulary garbage: the driver-side drop
-    shrinks the scan list with results identical to the SQL path (which
-    ships the OOV terms and matches nothing), in both batch and — once the
-    vocab map is cached — single-query search."""
+    """Queries salted with out-of-vocabulary garbage: WAND scans the OOV
+    terms' ids, which select no block, and returns what the SQL path
+    (which matches nothing for them) returns, in batch and single-query
+    search."""
     idx_dir, _ = corpus
     s = Searcher(spark, idx_dir, CFG)
     base = generate_query_set(8, seed=77)
@@ -784,9 +765,6 @@ def test_oov_drop_exact_batch_and_single(corpus, spark):
         assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
         for (_, a), (_, b) in zip(sql[qid], wand[qid]):
             assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-    bounds = s._term_bounds()
-    assert "zzqx9" not in bounds and "plorvax" not in bounds
-    # cache is now hot: the single-query path applies the same exact drop
     q = base[0]["text"] + " zzqx9 plorvax"
     sql1 = [(r["doc_id"], r["score"]) for r in s.search(q, top_k=5).collect()]
     wand1 = [
@@ -805,8 +783,7 @@ def test_oov_drop_exact_batch_and_single(corpus, spark):
 
 def test_oov_drop_exact_cosine_qnorm(corpus, spark):
     """Cosine mode divides by the FULL query norm (OOV terms contribute to
-    ‖q‖ in the SQL path though never to the dot) — the drop must shrink
-    only the scan list, not the norm."""
+    ‖q‖ in the SQL path though never to the dot), and so does WAND."""
     idx_dir, _ = corpus
     s = Searcher(spark, idx_dir, CFG)
     queries = [
@@ -827,79 +804,6 @@ def test_oov_drop_exact_cosine_qnorm(corpus, spark):
         assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
         for (_, a), (_, b) in zip(sql[qid], wand[qid]):
             assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-
-
-def test_term_bounds_vocab_cap_disables_pruning(corpus, spark):
-    """Past TERM_BOUNDS_MAX_VOCAB the map is never collected (no driver-
-    sized vocab at web scale) and batch results are unchanged."""
-    idx_dir, _ = corpus
-    s = Searcher(spark, idx_dir, CFG)
-    s.TERM_BOUNDS_MAX_VOCAB = 0  # instance override
-    assert s._term_bounds() is None
-    queries = [
-        {"query_id": f"q{i}", "text": q["text"]}
-        for i, q in enumerate(generate_query_set(6, seed=88))
-    ]
-
-    def collect(method):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]]
-
-
-def test_prune_below_approximate_tail_cut(corpus, spark):
-    """prune_below>0 is the documented APPROXIMATE knob: it must cut terms
-    (fewer shipped), never raise a returned doc's score above its exact
-    value, and converge to the exact result as the threshold → 0."""
-    from splade_easy_spark.data.transcripts import make_vocab
-
-    idx_dir, _ = corpus
-    s = Searcher(spark, idx_dir, CFG)
-    vocab = make_vocab()
-    queries = [
-        {"query_id": f"lq{i}", "text": " ".join(vocab[i * 5 % 40 : i * 5 % 40 + 14])}
-        for i in range(6)
-    ]
-
-    def collect(method, **kw):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method, **kw).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    exact = collect("wand")
-    # threshold below any realistic ratio: nothing cut, exactly equal
-    eps = collect("wand", prune_below=1e-12)
-    assert exact == eps
-    # aggressive cut still returns well-formed results with scores never
-    # exceeding the exact score of the same (query, doc)
-    exact_scores = {(q, d): sc for q, rows in exact.items() for d, sc in rows}
-    rough = collect("wand", prune_below=0.5)
-    for qid, rows in rough.items():
-        assert len(rows) <= 5
-        for d, sc in rows:
-            full = exact_scores.get((qid, d))
-            if full is not None:
-                assert sc <= full + 1e-6
-    # the knob really prunes: per-query kept-term count shrinks
-    bounds = s._term_bounds()
-    from splade_easy_spark.query.searcher import analyze_query
-
-    cut_any = False
-    for q in queries:
-        ts = [(t, w) for t, w in analyze_query(q["text"], CFG) if t in bounds]
-        if not ts:
-            continue
-        thr = 0.5 * max(w * bounds[t] for t, w in ts)
-        if sum(1 for t, w in ts if w * bounds[t] < thr):
-            cut_any = True
-    assert cut_any, "fixture queries must exercise the cut"
 
 
 def test_kernel_allow_mask_composes_with_deletes_and_watermark():
