@@ -177,8 +177,11 @@ def main() -> None:
         searcher.more_like_this(mlt_seed, query_terms=10, top_k=10).collect()
         timings["more_like_this"] = round(time.time() - t0, 3)
 
-        # block-max pruning effectiveness: blocks decoded vs blocks matching
-        # the query's terms (instrumented run of the same exact kernel)
+        # one query's share of matched blocks left packed (instrumented run
+        # of the live kernel).  The kernel decodes a term whole or not at
+        # all, so only MaxScore-cut terms with no candidate in any of their
+        # block ranges stay packed: about 0 (it was ~0.02 at this scale
+        # while single queries were decoded block by block)
         from splade_easy_spark.query.searcher import analyze_query
         from splade_easy_spark.query.wand import wand_profile
 
@@ -195,8 +198,8 @@ def main() -> None:
         extra["wand_blocks_decoded"] = bd
         extra["wand_block_skip_ratio"] = round(1 - bd / bt, 4) if bt else 0.0
 
-        # batch kernel's lazy decode cache: blocks no query in the batch
-        # needed stay packed (round 2 decoded the whole query-term union)
+        # the same kernel over the whole query set: blocks of terms no
+        # query in the batch scattered or repaired through stay packed
         from splade_easy_spark.query.wand import wand_batch_profile
 
         qt = {q["query_id"]: analyze_query(q["text"], cfg) for q in qset}

@@ -17,8 +17,8 @@ Layout
 - ``functions``  tokenization / BM25 / text-analysis column expressions
 - ``index``      build pipeline, postings compression, manifest, maintenance
 - ``query``      the full-text verbs written once over a scoring source;
-                 searcher (the index as a source + WAND), block-max WAND
-                 kernel, point lookups
+                 searcher (the index as a source + WAND), the WAND
+                 kernel (MaxScore over block metadata), point lookups
 - ``adhoc``      the same verbs over a raw corpus (the DuckDB-gated path)
 - ``ops``        large-scale training-data ops: dedup, similarity, text stats
 - ``streaming``  incremental index appender (Structured Streaming)

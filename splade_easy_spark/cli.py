@@ -217,7 +217,7 @@ def cmd_search(args) -> int:
     from splade_easy_spark.query import Searcher
 
     spark = _spark(args)
-    s = Searcher(spark, args.index, mode=args.mode)
+    s = Searcher(spark, args.index)
     t0 = time.time()
     # --filter is a SQL boolean expression over the stored doc columns
     # (role, tool, conv_id, turn_idx, ts, doc_len), e.g. "role = 'user'";
@@ -492,7 +492,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--top-k", type=int, default=10)
     s.add_argument("--cosine", action="store_true")
     s.add_argument("--text", action="store_true")
-    s.add_argument("--mode", default="disk", choices=["disk", "memory"])
     s.add_argument("--method", default="sql", choices=["sql", "wand"])
     s.add_argument(
         "--filter",

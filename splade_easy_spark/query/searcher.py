@@ -115,13 +115,9 @@ class _IndexSource:
 
 
 class Searcher:
-    """Read-only view over an index directory.
-
-    ``mode='disk'`` streams parquet per query; ``mode='memory'`` persists
-    the snapshot-bounded ``doc_terms`` and ``docs`` tables (the reference's
-    two retriever modes, ``src/splade_easy/retriever.py:31-67``).  Nothing
-    unpersists them, and Spark's cache manager also serves a later
-    disk-mode reader's plans over the same files from them.
+    """Read-only view over an index directory, as of open.  Every call
+    scans the parquet tables and the searcher caches none of them (a
+    caller that wants one in memory can ``persist()`` its own frame).
     """
 
     def __init__(
@@ -129,7 +125,6 @@ class Searcher:
         spark: SparkSession,
         index_dir: str,
         config: IndexConfig | None = None,
-        mode: str = "disk",
     ):
         self.spark = spark
         self.cat = IndexCatalog(index_dir, config)
@@ -181,12 +176,6 @@ class Searcher:
         for name in ("postings", "term_stats"):
             if Path(self.cat.table_dir(name)).exists():
                 self._read(name)
-        self.mode = mode
-        if mode == "memory":
-            self.doc_terms = self.doc_terms.persist()
-            self.docs = self.docs.persist()
-            self.doc_terms.count()
-            self.docs.count()
         # the docs side of every single-query result (``_top_hits``):
         # transcript-mode docs carry (conv_id..ts), vector-mode docs carry
         # (metadata) — project whatever exists (reference SearchResult
@@ -333,7 +322,7 @@ class Searcher:
         mode vs the reference's ``compute_splade_score(use_cosine=False)``.
 
         ``method='sql'``: postings join + hash agg (Catalyst end to end,
-        ``verbs.search``).  ``method='wand'``: packed-postings block-max
+        ``verbs.search``).  ``method='wand'``: packed-postings MaxScore
         kernel — identical results, pruned physical work (see
         query/wand.py).  Cosine mode runs the same kernel over the
         normalized weight stream packed at build time (an index built with

@@ -8,30 +8,22 @@ segmented* layout:
   segment) → parquet scan pruned to the query's terms (predicate pushdown;
   ``builder._postings_layout`` sorts every file by term id, so row-group
   stats prune) → mapInPandas kernel: per segment, exact BM25 scores via a dense
-  NumPy scatter-add accumulator with **block-max pruning** → per-segment
+  NumPy scatter-add accumulator with **MaxScore pruning** → per-segment
   top-k candidates → global ``orderBy(desc).limit(k)``
   (TakeOrderedAndProject: partial top-k per partition + driver merge, the
   reference's exact merge topology).
 
-Pruning inside ``_score_segment`` is a vectorized block-max MaxScore/WAND
-hybrid, exact by construction:
-
-  phase 1 (essential terms, descending score upper bound): every block is
-  decoded into the dense accumulator — except that once a running top-k
-  threshold θ exists, a block is skipped when even its best possible
-  outcome, ``max(acc over its doc range) + qw·block_max_weight +
-  Σ remaining-term upper bounds``, stays below θ (per-block max_weight
-  skipping, the block-max part).  Docs in a skipped block are *proven*
-  unable to reach the final top-k, so their understated partial scores can
-  never surface (see the invariant note in ``_score_segment``).
-
-  phase 2 (candidate mode): once the remaining terms' upper-bound sum falls
-  below θ, no new doc can enter the top-k; the surviving candidate set is
-  tracked explicitly with **per-candidate remaining upper bounds computed
-  from each candidate's covering block** (searchsorted over block ranges —
-  tighter than the global per-term bound), only blocks containing a live
-  candidate are decoded, and θ keeps rising from the candidates' exact
-  partial scores.
+Pruning inside ``_score_segment`` is per-query MaxScore over block
+metadata, exact by construction.  Each term's score upper bound is
+``qw · max(block max_weight)``; terms are scattered in descending bound
+order into a dense accumulator until the bounds of the terms left sum
+below a running top-k threshold θ.  From then on no untouched doc can
+enter the top-k: the surviving candidates are filtered with that bound
+sum and repaired exactly from the cut terms, and a cut term none of
+whose block ranges (``doc_min``/``doc_max``, searchsorted, no decode)
+holds a candidate is never decoded at all.  A term that is decoded is
+decoded once, all its blocks in one vectorized call
+(``postings.unpack_blocks``), however many queries of the call use it.
 
 Tombstones never pass through the driver: the ``deleted`` table becomes
 mask rows (``_tombstone_blocks``) that ride the same seg-colocation
@@ -47,21 +39,22 @@ by tests/test_wand.py on every fixture.  Per-segment k-boundary ties are
 all kept (everything scoring >= the kth value survives the segment cut) so
 the global (score DESC, doc_id ASC) ordering resolves them deterministically.
 
-Both score modes run through the same kernels: dot (BM25) over the raw
+Both score modes run through the same kernel: dot (BM25) over the raw
 packed weights, cosine over the doc-normalized weight stream packed
 alongside (``nwts`` = w/‖d‖ with per-block ``max_nweight``) — cosine is a
 plain dot product over that stream up to the query-norm factor, which the
 caller divides out (monotone: pruning and ranking are unaffected).
 
 One driver, ``wand_search_many_scores``, serves a single query and a
-batch.  Its ``mapInPandas`` kernel is the call's only Python stage: it
-sets up each segment's masks once, then runs ``_score_segment`` for one
-query (block-level skipping) or ``_batch_segment`` for several
-(decode-once per term).  The block counters (blocks matching the query
-terms, blocks decoded) live in that kernel: ``wand_profile`` and
-``wand_batch_profile`` run it with a pair of Spark accumulators attached.
+batch, and one segment kernel, ``_score_segment``, serves any number of
+queries.  The driver's ``mapInPandas`` kernel is the call's only Python
+stage: it sets up each segment's masks once, then runs
+``_score_segment`` over the call's queries.  The block counters (blocks
+matching the query terms, blocks decoded) live in that kernel:
+``wand_profile`` and ``wand_batch_profile`` run it with a pair of Spark
+accumulators attached.
 
-The kernels read one postings layout, the current format
+The kernel reads one postings layout, the current format
 (``manifest.FORMAT_VERSION``): int64 ``term_id`` keys and both weight
 streams.  ``Searcher`` refuses an older index at open (``migrate_postings``
 upgrades it), so nothing here inspects a frame's columns per call.
@@ -83,7 +76,7 @@ from splade_easy_spark.index.catalog import (
     TOMB_TERM_ID,
     term_id_py,
 )
-from splade_easy_spark.index.postings import unpack_block, unpack_blocks
+from splade_easy_spark.index.postings import unpack_blocks
 from splade_easy_spark.session import local_frame
 
 
@@ -149,8 +142,8 @@ def _mask_ids(pdf: pd.DataFrame, sentinel: int, segment_docs: int) -> dict[int, 
 
 
 class _TermIndex:
-    """One segment's posting blocks as numpy columns, shared by both
-    kernels: the frame's columns are pulled out once and lexsorted by
+    """One segment's posting blocks as numpy columns: the frame's
+    columns are pulled out once and lexsorted by
     ``(term_id, doc_min)``, so term ``i``'s blocks are the run
     ``starts[i]:ends[i]`` between two ``term_id`` changes, doc_min
     ascending.  Block ranges within a term never overlap (pack_postings
@@ -161,7 +154,7 @@ class _TermIndex:
     and, on appended indexes, from several parquet files read in an order
     Spark picks by size, so raw partition order is NOT ascending.
 
-    ``terms`` are the run keys in key order (the kernels' deterministic
+    ``terms`` are the run keys in key order (the kernel's deterministic
     tiebreak); ``tmax`` is each term's max block weight (one
     ``np.maximum.reduceat``); ``bmin``/``bmax`` are segment-local."""
 
@@ -176,8 +169,8 @@ class _TermIndex:
         self.terms = term[self.starts].tolist()
         self.bmin = dmin[order] - base
         self.bmax = g["doc_max"].to_numpy(dtype=np.int64)[order] - base
-        self.bmw = g[mcol].to_numpy(dtype=np.float64)[order]
-        self.tmax = np.maximum.reduceat(self.bmw, self.starts)
+        bmw = g[mcol].to_numpy(dtype=np.float64)[order]
+        self.tmax = np.maximum.reduceat(bmw, self.starts)
         self.docs = g["docs"].to_numpy()[order]
         self.wts = g[wcol].to_numpy()[order]
         self.ns = g["n"].to_numpy(dtype=np.int64)[order]
@@ -190,11 +183,6 @@ class _TermIndex:
         d, w = unpack_blocks(self.docs[s:e], self.wts[s:e], self.ns[s:e])
         return d - self.base, w
 
-    def decode_block(self, j: int) -> tuple[np.ndarray, np.ndarray]:
-        """Block row ``j`` alone (local idx, weights)."""
-        d, w = unpack_block(self.docs[j], self.wts[j], int(self.ns[j]))
-        return d - self.base, w
-
 
 def _alive_mask(
     seg_docs: int,
@@ -203,7 +191,7 @@ def _alive_mask(
     allow: np.ndarray | None = None,
     allow_active: bool = False,
 ) -> np.ndarray | None:
-    """The eligibility mask every kernel applies BEFORE θ/candidates/output.
+    """The eligibility mask the kernel applies BEFORE θ/candidates/output.
 
     ``allow_active`` distinguishes "no filter" (None mask possible) from
     "filter excludes this whole segment" (an active filter whose allow rows
@@ -228,163 +216,6 @@ def _alive_mask(
 
 def _score_segment(
     g: pd.DataFrame,
-    qw_map: dict[int, float],
-    seg_base: int,
-    seg_docs: int,
-    top_k: int,
-    dead_local: np.ndarray | None = None,
-    wcol: str = "wts",
-    mcol: str = "max_weight",
-    wm_local: int | None = None,
-    allow_local: np.ndarray | None = None,
-    allow_active: bool = False,
-) -> tuple[np.ndarray, np.ndarray, int, int]:
-    """Exact top-k for one segment.
-
-    Returns (doc_ints, scores, blocks_total, blocks_decoded); ties at the
-    k-boundary are all kept (caller's global order resolves them).
-
-    ``wm_local`` is the reader's as-of-open snapshot watermark in segment-
-    local coordinates: docs at local index >= wm_local belong to batches
-    not yet acknowledged when the reader opened and are masked exactly
-    like tombstones (they never touch θ, candidates, or the output).
-    Only blocks SPANNING the watermark reach here with post-watermark
-    docs — all-post-watermark blocks are dropped by the pushed
-    ``doc_min < W`` predicate (searcher._postings).
-
-    Exactness invariant for block skipping: a block is only skipped when
-    every doc in it provably cannot reach the final top-k — at the FIRST
-    skip touching a doc its accumulated score is still exact, and the skip
-    condition bounds its total potential (exact acc + this block's
-    qw·max_weight + all remaining terms' upper bounds) strictly below θ,
-    which only grows toward the final kth score.  A doc with an understated
-    score therefore always ranks strictly below the exact top-k and can
-    never be emitted (the per-segment cut keeps >= kth, and understated
-    docs are < θ <= kth).
-    """
-    acc = np.zeros(seg_docs, dtype=np.float64)
-    touched = np.zeros(seg_docs, dtype=bool)
-    # filtered retrieval rides the same mask as deletes/snapshot: ineligible
-    # docs never touch θ, candidates, or the output, and the block-max
-    # bounds stay conservative (a block's max over ALL docs ≥ its max over
-    # allowed docs), so the exactness invariant below is unchanged
-    alive = _alive_mask(seg_docs, dead_local, wm_local, allow_local, allow_active)
-
-    ti = _TermIndex(g, seg_base, wcol, mcol)
-    qws = np.array([qw_map[t] for t in ti.terms], dtype=np.float64)
-    # per-block score bounds qw·max_weight, one multiply for the segment
-    bubs_all = ti.bmw * np.repeat(qws, ti.ends - ti.starts)
-    terms = []
-    for i, term in enumerate(ti.terms):
-        s, e = ti.starts[i], ti.ends[i]
-        terms.append(
-            (float(qws[i] * ti.tmax[i]), term, float(qws[i]),
-             ti.bmin[s:e], ti.bmax[s:e], bubs_all[s:e], int(s))
-        )
-    blocks_total = len(ti.ns)
-    # descending upper bound; term as tiebreak for determinism
-    terms.sort(key=lambda t: (-t[0], t[1]))
-    ubs = np.array([t[0] for t in terms], dtype=np.float64)
-    suffix = np.concatenate((np.cumsum(ubs[::-1])[::-1], [0.0]))
-
-    blocks_decoded = 0
-    theta = 0.0
-    theta_set = False
-    candidates: np.ndarray | None = None  # sorted local indices, None = phase 1
-    rem_ub: np.ndarray | None = None  # per-candidate remaining block-max bound
-
-    def covering_ub(bmin_t, bmax_t, bubs_t, cand):
-        """Per-candidate upper bound from the covering block of one term
-        (0 where no block covers the candidate)."""
-        pos = np.searchsorted(bmin_t, cand, side="right") - 1
-        cov = pos >= 0
-        cov[cov] = cand[cov] <= bmax_t[pos[cov]]
-        out = np.zeros(len(cand), dtype=np.float64)
-        out[cov] = bubs_t[pos[cov]]
-        return out
-
-    for i, (ub, term, qw, bmin, bmax, bubs, row0) in enumerate(terms):
-        remaining_after = float(suffix[i + 1])
-        if candidates is None:
-            for j in range(len(bmin)):
-                if theta_set:
-                    lo, hi = int(bmin[j]), int(bmax[j]) + 1
-                    if acc[lo:hi].max() + bubs[j] + remaining_after < theta:
-                        continue  # block-max skip (phase-1)
-                idx, w = ti.decode_block(row0 + j)
-                blocks_decoded += 1
-                acc[idx] += qw * w
-                if alive is None:
-                    touched[idx] = True
-                else:
-                    touched[idx] = alive[idx]
-            t_idx = np.flatnonzero(touched)
-            if len(t_idx) >= top_k:
-                scores = acc[t_idx]
-                kth = np.partition(scores, len(scores) - top_k)[len(scores) - top_k]
-                theta = max(theta, float(kth))
-                theta_set = True
-                if remaining_after < theta:
-                    # no untouched doc can reach θ — freeze the candidate set
-                    keep = t_idx[acc[t_idx] + remaining_after >= theta]
-                    candidates = np.sort(keep)
-                    rem_ub = np.zeros(len(candidates), dtype=np.float64)
-                    for (_, _, _, bmin2, bmax2, bubs2, _) in terms[i + 1 :]:
-                        rem_ub += covering_ub(bmin2, bmax2, bubs2, candidates)
-                    sel = acc[candidates] + rem_ub >= theta
-                    candidates, rem_ub = candidates[sel], rem_ub[sel]
-        else:
-            if len(candidates) == 0:
-                break
-            # decode only blocks containing >=1 surviving candidate
-            pos_lo = np.searchsorted(candidates, bmin)
-            has_c = pos_lo < len(candidates)
-            needed = has_c.copy()
-            needed[has_c] = candidates[pos_lo[has_c]] <= bmax[has_c]
-            for j in np.flatnonzero(needed):
-                idx, w = ti.decode_block(row0 + int(j))
-                blocks_decoded += 1
-                acc[idx] += qw * w
-            # retire this term's per-candidate bound, tighten θ, re-filter.
-            # Repeated subtraction leaves a float residue that can be
-            # slightly negative, and `cs + rem_ub >= θ` would then drop the
-            # candidate whose score IS θ: clamp at 0, and exactly 0 once no
-            # term remains
-            if i + 1 < len(terms):
-                rem_ub = np.maximum(
-                    rem_ub - covering_ub(bmin, bmax, bubs, candidates), 0.0
-                )
-            else:
-                rem_ub = np.zeros(len(candidates), dtype=np.float64)
-            cs = acc[candidates]
-            if len(cs) >= top_k:
-                kth = np.partition(cs, len(cs) - top_k)[len(cs) - top_k]
-                theta = max(theta, float(kth))
-            sel = cs + rem_ub >= theta
-            candidates, rem_ub = candidates[sel], rem_ub[sel]
-
-    if candidates is not None:
-        live = candidates[acc[candidates] > 0]
-    else:
-        live = np.flatnonzero(touched & (acc > 0))
-    if len(live) == 0:
-        return (
-            np.zeros(0, dtype=np.int64),
-            np.zeros(0, dtype=np.float64),
-            blocks_total,
-            blocks_decoded,
-        )
-    scores = acc[live]
-    if len(live) > top_k:
-        kth = np.partition(scores, len(scores) - top_k)[len(scores) - top_k]
-        sel = scores >= kth  # keep k-boundary ties for the global tiebreak
-        live, scores = live[sel], scores[sel]
-    order = np.lexsort((live, -scores))
-    return (live + seg_base)[order], scores[order], blocks_total, blocks_decoded
-
-
-def _batch_segment(
-    g: pd.DataFrame,
     queries: list[tuple[str, list[tuple[int, float]]]],
     base: int,
     segment_docs: int,
@@ -396,27 +227,34 @@ def _batch_segment(
     allow: np.ndarray | None = None,
     allow_active: bool = False,
 ) -> tuple[list, list, list, int, int]:
-    """Exact top-k for one segment and a batch of queries: the driver's
-    kernel when a call carries two or more.  ``wm_local`` masks
-    post-snapshot docs exactly like tombstones (see ``_score_segment``).
+    """Exact top-k for one segment and every query of a call, one or
+    many: the WAND driver's only segment kernel.
 
-    Returns (query_ids, doc_ints, scores, blocks_total, blocks_decoded).
+    Returns (query_ids, doc_ints, scores, blocks_total, blocks_decoded);
+    ties at the k-boundary are all kept (the caller's global order
+    resolves them).
+
+    ``wm_local`` is the reader's as-of-open snapshot watermark in segment-
+    local coordinates: docs at local index >= wm_local belong to batches
+    not yet acknowledged when the reader opened and are masked exactly
+    like tombstones (they never touch θ, candidates, or the output).  Only
+    blocks SPANNING the watermark reach here with post-watermark docs —
+    all-post-watermark blocks are dropped by the pushed ``doc_min < W``
+    predicate (searcher._postings).
 
     Decode policy is **one vectorized call per term, on first use**: a
     term's blocks are decoded together (``unpack_blocks``: one varbyte
     decode over the joined buffers, one segmented cumsum) the first time
-    ANY query scatters it or repairs through it, then every later use is
-    one vectorized scatter/gather.  Block-level laziness does not pay at
-    batch scale: rare terms carry the highest idf, so every query scatters
-    its rare (thin) terms first and cuts its common (fat) ones, and across
-    even a modest batch some query ends up needing each matched term.
+    a query scatters it or repairs through it, then every later use is
+    one vectorized scatter/gather.  There is no per-block probe inside a
+    term: one call over all of a term's blocks costs less than a call per
+    block, even where a per-block bound would leave most blocks packed
+    (BENCH.md, "One WAND kernel").
 
-    What still stays packed: terms MaxScore-cut by every query that
-    carries them whose block ranges (checked against candidate doc ids
-    with metadata only — searchsorted over bmin/bmax, no decode) never
-    cover a surviving candidate.  Single queries keep block-level skipping
-    in ``_score_segment``; that is the right tool for k≈1–5 queries, this
-    kernel is the right tool for batches.
+    What stays packed: terms MaxScore-cut by every query that carries
+    them whose block ranges (checked against candidate doc ids with
+    metadata only — searchsorted over bmin/bmax, no decode) never cover a
+    surviving candidate.
 
     Block rows may arrive in any order; ``_TermIndex`` sorts them.
     """
@@ -533,14 +371,13 @@ def wand_search_many_scores(
     every query in one pass: the one WAND driver, for a single query and
     for a batch; the global merge is left to the caller.
 
-    Per segment it runs ``_score_segment`` when the call carries one query
-    (block-level skipping, the right tool for k≈1–5 queries) and
-    ``_batch_segment`` when it carries more (decode-once per term: the SQL
-    batch path multiplies each posting row by every query sharing its
-    term, a Zipfian head term × 100 queries → 10^8 joined rows, while here
-    each segment's blocks for the union of query terms are decoded at most
-    once and scattered into per-query dense accumulators).  Only
-    per-segment top-k rows leave the kernel.
+    Per segment it runs ``_score_segment`` over all the call's queries,
+    one or many (decode-once per term: the SQL batch path multiplies each
+    posting row by every query sharing its term, a Zipfian head term × 100
+    queries → 10^8 joined rows, while here each segment's blocks for the
+    union of query terms are decoded at most once and scattered into
+    per-query dense accumulators).  Only per-segment top-k rows leave the
+    kernel.
 
     ``deleted``/``allowed``: (doc_int) frames of the tombstoned docs and
     of the docs a filter permits (shared by every query), shipped as mask
@@ -553,7 +390,7 @@ def wand_search_many_scores(
     merged across the watermark by a concurrent optimize are decoded and
     row-filtered, never dropped whole; see searcher._postings).
 
-    ``use_cosine`` runs the same kernels over the normalized weight stream.
+    ``use_cosine`` runs the same kernel over the normalized weight stream.
 
     ``term_id_seed`` must be the index's recorded seed (manifest layout).
 
@@ -602,18 +439,10 @@ def wand_search_many_scores(
             base = seg * segment_docs
             alw, dl = allow.get(seg), dead.get(seg)
             wm = None if snapshot_max is None else int(snapshot_max) - base
-            if len(queries) == 1:
-                qid, qterms = queries[0]
-                d, s, total, decoded = _score_segment(
-                    g, dict(qterms), base, segment_docs, top_k, dl, wcol, mcol,
-                    wm_local=wm, allow_local=alw, allow_active=filter_active,
-                )
-                q = [qid] * len(d)
-            else:
-                q, d, s, total, decoded = _batch_segment(
-                    g, queries, base, segment_docs, top_k, dl, wcol, mcol,
-                    wm_local=wm, allow=alw, allow_active=filter_active,
-                )
+            q, d, s, total, decoded = _score_segment(
+                g, queries, base, segment_docs, top_k, dl, wcol, mcol,
+                wm_local=wm, allow=alw, allow_active=filter_active,
+            )
             if _counters is not None:
                 _counters[0].add(total)
                 _counters[1].add(decoded)
@@ -669,8 +498,14 @@ def wand_profile(
     snapshot_max: int | None = None,
 ) -> DataFrame:
     """Blocks matching one query's terms and blocks ``_score_segment``
-    decoded for them, counted inside a live run — the probe behind the
-    ``wand.block_skip_ratio`` figure."""
+    decoded for them, counted inside a live one-query run — the probe
+    behind the ``wand.block_skip_ratio`` figure.
+
+    The kernel decodes a term whole or not at all, so ``1 - decoded /
+    total`` is the share of the query's matched blocks that belong to
+    MaxScore-cut terms with no candidate in any of their block ranges.
+    That is rare for one query: the ratio measured 0 on 512-doc and on
+    1M-doc segments alike."""
     return _block_counts(spark, lambda c: wand_search_many_scores(
         spark, postings, {"": terms}, segment_docs, top_k, deleted, use_cosine,
         term_id_seed, snapshot_max, _counters=c,

@@ -98,14 +98,6 @@ def test_scores_descending_and_tiebreak(corpus, spark):
         )
 
 
-def test_memory_mode_parity(corpus, spark):
-    idx_dir, _, _ = corpus
-    d = Searcher(spark, idx_dir, CFG, mode="disk")
-    m = Searcher(spark, idx_dir, CFG, mode="memory")
-    q = "baba0 ceba1 diba2"
-    assert _engine_topk(d, q, 10) == _engine_topk(m, q, 10)  # cf. test_retriever.py:50-74
-
-
 def test_duplicate_and_case_query_robustness(corpus, spark):
     """cf. test_retriever.py:210-230 — duplicated/unsorted query tokens."""
     idx_dir, _, _ = corpus
@@ -760,9 +752,9 @@ def test_warm_call_job_budget(corpus, spark, spark_jobs):
     from splade_easy_spark import adhoc
 
     idx_dir, _, _ = corpus
-    # frames an earlier test persisted (a memory-mode searcher over this
-    # index) would serve these plans from the cache and change their job
-    # count (near_search: 7 -> 10); measure the plans as a fresh session runs them
+    # a frame over this index that anything earlier in the session
+    # persisted would serve these plans from Spark's cache and change their
+    # job counts; measure the plans as a fresh session runs them
     spark.catalog.clearCache()
     s = Searcher(spark, idx_dir, CFG)
     qs = generate_query_set()[:4]
