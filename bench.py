@@ -178,10 +178,9 @@ def main() -> None:
         timings["more_like_this"] = round(time.time() - t0, 3)
 
         # one query's share of matched blocks left packed (instrumented run
-        # of the live kernel).  The kernel decodes a term whole or not at
-        # all, so only MaxScore-cut terms with no candidate in any of their
-        # block ranges stay packed: about 0 (it was ~0.02 at this scale
-        # while single queries were decoded block by block)
+        # of the live kernel): the blocks of MaxScore-cut terms whose
+        # ranges hold no surviving candidate, since a repair decodes only
+        # the blocks that cover one
         from splade_easy_spark.query.searcher import analyze_query
         from splade_easy_spark.query.wand import wand_profile
 

@@ -19,11 +19,12 @@ metadata, exact by construction.  Each term's score upper bound is
 order into a dense accumulator until the bounds of the terms left sum
 below a running top-k threshold θ.  From then on no untouched doc can
 enter the top-k: the surviving candidates are filtered with that bound
-sum and repaired exactly from the cut terms, and a cut term none of
-whose block ranges (``doc_min``/``doc_max``, searchsorted, no decode)
-holds a candidate is never decoded at all.  A term that is decoded is
-decoded once, all its blocks in one vectorized call
-(``postings.unpack_blocks``), however many queries of the call use it.
+sum and repaired exactly from the cut terms.  A repair decodes only
+the cut term's blocks whose ranges (``doc_min``/``doc_max``, searchsorted,
+no decode) hold a candidate, so a cut term with no candidate in any block
+stays packed.  A scattered term is decoded whole in one vectorized call
+(``postings.unpack_blocks``); either way a block is decoded at most once,
+however many queries of the call use it.
 
 Tombstones never pass through the driver: the ``deleted`` table becomes
 mask rows (``_tombstone_blocks``) that ride the same seg-colocation
@@ -176,11 +177,11 @@ class _TermIndex:
         self.ns = g["n"].to_numpy(dtype=np.int64)[order]
         self.base = base
 
-    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """Term ``i``'s whole posting list (local idx ascending, weights)
-        in one vectorized decode."""
-        s, e = self.starts[i], self.ends[i]
-        d, w = unpack_blocks(self.docs[s:e], self.wts[s:e], self.ns[s:e])
+    def decode(self, rows) -> tuple[np.ndarray, np.ndarray]:
+        """The postings of block rows ``rows`` (a slice or ascending row
+        indices within one term): local idx ascending, weights, in one
+        vectorized decode."""
+        d, w = unpack_blocks(self.docs[rows], self.wts[rows], self.ns[rows])
         return d - self.base, w
 
 
@@ -242,19 +243,18 @@ def _score_segment(
     all-post-watermark blocks are dropped by the pushed ``doc_min < W``
     predicate (searcher._postings).
 
-    Decode policy is **one vectorized call per term, on first use**: a
-    term's blocks are decoded together (``unpack_blocks``: one varbyte
-    decode over the joined buffers, one segmented cumsum) the first time
-    a query scatters it or repairs through it, then every later use is
-    one vectorized scatter/gather.  There is no per-block probe inside a
-    term: one call over all of a term's blocks costs less than a call per
-    block, even where a per-block bound would leave most blocks packed
-    (BENCH.md, "One WAND kernel").
+    Decode policy is **one vectorized call per use, each block at most
+    once**.  A query that scatters a term decodes all of its blocks not
+    yet decoded together (``unpack_blocks``: one varbyte decode over the
+    joined buffers, one segmented cumsum).  A repair through a cut term
+    decodes only the blocks whose ranges (checked against candidate doc
+    ids with metadata only — searchsorted over bmin/bmax, no decode)
+    cover a surviving candidate, also in one call.  There is no per-block
+    bound probe inside a scatter: one call over all of a term's blocks
+    costs less than a call per block (BENCH.md, "One WAND kernel").
 
-    What stays packed: terms MaxScore-cut by every query that carries
-    them whose block ranges (checked against candidate doc ids with
-    metadata only — searchsorted over bmin/bmax, no decode) never cover a
-    surviving candidate.
+    What stays packed: blocks of terms MaxScore-cut by every query that
+    carries them that cover no surviving candidate.
 
     Block rows may arrive in any order; ``_TermIndex`` sorts them.
     """
@@ -265,15 +265,40 @@ def _score_segment(
     tmax = ti.tmax.tolist()
     blocks_total = len(ti.ns)
     decoded: list[tuple[np.ndarray, np.ndarray] | None] = [None] * len(tmax)
+    # term -> (its blocks decoded so far, their postings): cut terms
+    # repaired through some of their blocks only
+    part: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     n_decoded = 0
 
-    def full(i: int) -> tuple[np.ndarray, np.ndarray]:
-        """Term ``i``'s whole posting list (idx ascending), decoded once."""
+    def postings(i: int, rows: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+        """Term ``i``'s postings (idx ascending) in block rows ``rows``,
+        all of them if None; a superset may come back, never a block
+        decoded twice."""
         nonlocal n_decoded
-        if decoded[i] is None:
-            decoded[i] = ti.decode(i)
-            n_decoded += int(ti.ends[i] - ti.starts[i])
-        return decoded[i]
+        if decoded[i] is not None:
+            return decoded[i]
+        s, e = ti.starts[i], ti.ends[i]
+        if rows is None and i not in part:
+            decoded[i] = ti.decode(slice(s, e))
+            n_decoded += int(e - s)
+            return decoded[i]
+        done, idx, wts = part.pop(i, (np.zeros(e - s, dtype=bool), None, None))
+        new = np.arange(s, e) if rows is None else rows
+        new = new[~done[new - s]]
+        if len(new):
+            d, w = ti.decode(new)
+            n_decoded += len(new)
+            done[new - s] = True
+            if idx is not None:  # blocks never overlap: one sort merges them
+                d, w = np.concatenate((idx, d)), np.concatenate((wts, w))
+                order = np.argsort(d, kind="stable")
+                d, w = d[order], w[order]
+            idx, wts = d, w
+        if done.all():
+            decoded[i] = (idx, wts)
+        else:
+            part[i] = (done, idx, wts)
+        return idx, wts
 
     acc = np.zeros(segment_docs, dtype=np.float64)
     out_q: list[str] = []
@@ -304,7 +329,7 @@ def _score_segment(
             if theta_set and suffix[i] < theta:
                 cut = i  # remaining terms cannot create new top-k docs
                 break
-            sidx, swts = full(j)
+            sidx, swts = postings(j)
             acc[sidx] += qw * swts
             # cheap θ lower bound: kth largest of the LIVE accs on the
             # postings scattered so far (a subset's kth is ≤ the global
@@ -325,20 +350,21 @@ def _score_segment(
             # candidate filter with the skipped tail's ub, then exact
             # repair of those terms on survivors only.  The coverage test
             # runs on block METADATA (searchsorted over the sorted
-            # non-overlapping ranges): a cut term none of whose blocks
-            # contains a surviving candidate is never decoded at all.
+            # non-overlapping ranges): only blocks that contain a
+            # surviving candidate are decoded.
             rem = float(suffix[cut])
             live = live[acc[live] + rem >= theta]
             for _, j, qw in present[cut:]:
                 if decoded[j] is None:
                     s, e = ti.starts[j], ti.ends[j]
-                    bmin, bmax = ti.bmin[s:e], ti.bmax[s:e]
-                    pos = np.searchsorted(bmin, live, side="right") - 1
+                    pos = np.searchsorted(ti.bmin[s:e], live, side="right") - 1
                     cov = pos >= 0
-                    cov[cov] = live[cov] <= bmax[pos[cov]]
+                    cov[cov] = live[cov] <= ti.bmax[s:e][pos[cov]]
                     if not cov.any():
                         continue  # no candidate in any block range: skip
-                fidx, fwts = full(j)
+                    fidx, fwts = postings(j, s + np.unique(pos[cov]))
+                else:
+                    fidx, fwts = decoded[j]
                 p = np.searchsorted(fidx, live)
                 ok = p < len(fidx)
                 ok[ok] = fidx[p[ok]] == live[ok]
@@ -501,11 +527,9 @@ def wand_profile(
     decoded for them, counted inside a live one-query run — the probe
     behind the ``wand.block_skip_ratio`` figure.
 
-    The kernel decodes a term whole or not at all, so ``1 - decoded /
-    total`` is the share of the query's matched blocks that belong to
-    MaxScore-cut terms with no candidate in any of their block ranges.
-    That is rare for one query: the ratio measured 0 on 512-doc and on
-    1M-doc segments alike."""
+    ``1 - decoded / total`` is the share of the query's matched blocks
+    that belong to MaxScore-cut terms and hold no surviving candidate in
+    their range: a repair decodes only the blocks that cover one."""
     return _block_counts(spark, lambda c: wand_search_many_scores(
         spark, postings, {"": terms}, segment_docs, top_k, deleted, use_cosine,
         term_id_seed, snapshot_max, _counters=c,

@@ -1,9 +1,13 @@
 """SparkSession factory.
 
-Local-mode defaults sized for the sandbox (local[32], 128 GiB); on a real
-cluster every knob here is overridable via spark-submit --conf.  Arrow is
-mandatory (all Python crossings are pandas/Arrow UDFs — no per-row Python
-anywhere, per the engine contract), AQE is on for runtime skew handling.
+Local-mode defaults: ``local[cores]`` with ``cores`` from
+``SPARK_GRAFT_CPUS`` (else 32), ``max(cores, 8)`` shuffle partitions and an
+8 GiB driver (``SPARK_DRIVER_MEMORY``); ``extra_conf`` overrides any of it,
+and on a real cluster so does spark-submit --conf.  Arrow is mandatory (all
+Python crossings are pandas/Arrow UDFs — no per-row Python anywhere, per
+the engine contract), AQE is on for runtime skew handling.  Python workers
+fork from ``splade_easy_spark.daemon``, which stops each task re-reading
+every zip archive on the worker path (see that module).
 """
 
 from __future__ import annotations
@@ -11,6 +15,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -47,8 +53,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "splade_easy_spark.daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    # the daemon imports this package before any task can ship it, so the
+    # package root goes on the workers' path, ahead of the caller's entries
+    extra_conf = dict(extra_conf or {})
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(p for p in (_ROOT, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")) if p),
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

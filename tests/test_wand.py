@@ -228,8 +228,8 @@ def test_kernel_keeps_theta_doc_after_last_term():
 def test_wand_profile_blocks_skipped(corpus, spark):
     """The instrumented one-query run counts the blocks it decoded, never
     more than the query's matched blocks, and stays exact (wand_profile
-    runs the live driver's kernel).  The kernel decodes a term whole or
-    not at all, so the count need not fall below the total here."""
+    runs the live driver's kernel).  The count need not fall below the
+    total here: ``test_repair_decodes_only_covering_blocks`` pins that."""
     idx_dir, _ = corpus
     from splade_easy_spark.data.transcripts import make_vocab
     from splade_easy_spark.query.wand import wand_profile
@@ -246,6 +246,37 @@ def test_wand_profile_blocks_skipped(corpus, spark):
     sql = [(r["doc_id"], r["score"]) for r in s.search(text, top_k=3).collect()]
     wand = [(r["doc_id"], r["score"]) for r in s.search(text, top_k=3, method="wand").collect()]
     assert [d for d, _ in wand] == [d for d, _ in sql]
+    for (_, a), (_, b) in zip(wand, sql):
+        assert abs(a - b) <= 1e-5 * max(1.0, abs(b))
+
+
+def test_repair_decodes_only_covering_blocks(spark, tmp_path):
+    """One query over a long multi-block list: the MaxScore-cut term is
+    repaired through the few blocks that hold a candidate, not decoded
+    whole, and the result stays WAND == SQL."""
+    import datetime
+
+    from splade_easy_spark.data.transcripts import TRANSCRIPT_SCHEMA
+    from splade_easy_spark.query.searcher import analyze_query
+    from splade_easy_spark.query.wand import wand_profile
+
+    cfg = IndexConfig(build_partitions=2, term_buckets=4, segment_docs=256, block_size=8)
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("c", i, "user", "common " * (1 + i % 3) + ("rare rare" if i in (5, 100, 200) else ""), None, ts)
+        for i in range(240)
+    ]
+    idx_dir = str(tmp_path / "index")
+    build_index(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), idx_dir, cfg)
+    s = Searcher(spark, idx_dir, cfg)
+    terms = analyze_query("rare common", cfg)
+    prof = wand_profile(spark, s.cat.read(spark, "postings"), terms, cfg.segment_docs, top_k=2).collect()
+    total = sum(r["blocks_total"] for r in prof)
+    decoded = sum(r["blocks_decoded"] for r in prof)
+    assert total >= 30 and 0 < decoded < total, (decoded, total)
+    sql = [(r["doc_id"], r["score"]) for r in s.search("rare common", top_k=2).collect()]
+    wand = [(r["doc_id"], r["score"]) for r in s.search("rare common", top_k=2, method="wand").collect()]
+    assert len(sql) == 2 and [d for d, _ in wand] == [d for d, _ in sql]
     for (_, a), (_, b) in zip(wand, sql):
         assert abs(a - b) <= 1e-5 * max(1.0, abs(b))
 

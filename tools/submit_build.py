@@ -28,6 +28,9 @@ def main() -> None:
     p.add_argument("--resume", action="store_true")
     args = p.parse_args()
 
+    # Not session.get_spark: it names splade_easy_spark.daemon as the worker
+    # daemon, and a --py-files zip reaches the workers only after their
+    # daemon has started, so here the daemon stays PySpark's own.
     spark = SparkSession.builder.appName("ses-submit-build").getOrCreate()
     from splade_easy_spark.data import generate_transcripts
     from splade_easy_spark.index import build_index
